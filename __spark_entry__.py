@@ -203,7 +203,7 @@ _SCALAR_UDFS: dict = {}
 
 
 def _tile_udf_cols():
-    """Process-cached scalar-UDF dict (rebuilding five pandas_udf
+    """Process-cached scalar-UDF dict (rebuilding four pandas_udf
     wrappers per query call is wasted work — r4 review)."""
     if not _SCALAR_UDFS:
         from mosaic_engine.udfs import make_scalar_udfs

@@ -224,7 +224,8 @@ def read_snapshot_manifest(
     checkpoint lineage and write_table(mode='ignore') — already have a
     defined no-manifest behavior, and a torn file should degrade to
     that, not crash the resume path. A NON-corruption IO error that
-    persists across the retry while the object provably EXISTS raises
+    persists across the retry while the object provably EXISTS (or
+    while the existence probe fails too) raises
     instead (r7, ADVICE r6): that is an outage, and degrading it to
     'absent' would let write_table(mode='ignore') re-commit a fresh
     snapshot over a healthy manifest; corruption signatures
@@ -284,10 +285,9 @@ def read_snapshot_manifest(
             )
             if corrupt:
                 return None
-            try:
-                exists = fs.exists(jpath)
-            except Exception:
-                exists = False
-            if exists:
+            # an existence probe that fails too cannot tell absence
+            # from outage: its error propagates, since degrading would
+            # reopen the mode='ignore' re-commit hazard
+            if fs.exists(jpath):
                 raise
             return None

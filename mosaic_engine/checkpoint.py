@@ -314,19 +314,18 @@ def build_with_checkpoint(
                 json.dump(manifest, f)
             os.replace(tmp, os.path.join(_manifest_dir(out_dir), f"{pfx}.json"))
 
-        # assemble the document from the checkpointed table (not a recompute)
-        filtered = ops.filter_scenes(scenes, cfg)
-        bounds = ops.mosaic_bounds(filtered, result)
-        rows = result.select("quadkey", "assets").collect()
-        tiles_map = {r["quadkey"]: list(r["assets"]) for r in rows}
-        doc = mz.assemble_mosaic_doc(tiles_map, bounds, cfg)
+        # assemble the document from the checkpointed table (not a
+        # recompute); prefixes written before the table carried the
+        # used-scene bounds raise ops.LegacyStateError — rebuild with
+        # resume=False
+        doc = mz.collect_mosaic_doc(result, cfg)
 
         with open(os.path.join(out_dir, "mosaic.json"), "w") as f:
             f.write(mz.canonical_json(doc))
         metrics = {
             "n_scenes_pruned_on_resume": int(n_scenes_pruned),
-            "n_tiles": len(tiles_map),
-            "n_assignments": int(sum(len(v) for v in tiles_map.values())),
+            "n_tiles": len(doc["tiles"]),
+            "n_assignments": int(sum(len(v) for v in doc["tiles"].values())),
             "n_prefixes": len(counts),
             "n_prefixes_skipped": len(done),
             "config_hash": cfg_hash,

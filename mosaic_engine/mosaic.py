@@ -2,12 +2,17 @@
 
 Spark-first equivalent of [ref: landsat_cogeo_mosaic/mosaic.py#
 features_to_mosaicJSON] + the `create` CLI entry
-([ref: cli.py#create]): declarative filters (Catalyst pushdown) → fused
-footprint→quadkey explode (one Arrow stage, no shuffle) → salted
-two-phase selection aggregation → bounded driver-side collect
-(≤ 4^quadkey_zoom rows) → canonical JSON (SURVEY.md §7.3 byte-equality
+([ref: cli.py#create]), run as ONE Spark action: declarative filters
+(Catalyst pushdown) → fused footprint→cell explode (one Arrow stage,
+no shuffle) → salted two-phase selection aggregation whose selection
+struct also carries each scene's bbox → one bounded driver-side
+collect (≤ 4^quadkey_zoom rows) that yields both the tile map and the
+used-scene bounds → canonical JSON (SURVEY.md §7.3 byte-equality
 rules — the serializer is shared character-for-character with
-tests/oracle.py, which generates the committed goldens).
+tests/oracle.py, which generates the committed goldens). Quadkey
+strings are a JVM expression over the packed cell id
+(ops.cell_quadkey_col); nothing is persisted, the scene table is read
+once, and no join looks up the used scenes.
 """
 
 from __future__ import annotations
@@ -57,29 +62,49 @@ def assemble_mosaic_doc(
     }
 
 
+def collect_mosaic_doc(assign: DataFrame, cfg: MosaicConfig) -> dict:
+    """Assignments table → mosaicJSON document in ONE driver collect:
+    the tile map and the bounds (min/max of the per-cell used-scene
+    bounds ops.assignments emits) come from the same rows, bounded by
+    4^quadkey_zoom; past quadkey_zoom 10 the rows stream through
+    toLocalIterator instead. Empty table → world bounds. A table
+    without the bounds columns, or with a cell whose bounds are NULL,
+    is state written before the selection carried bounds: raises
+    ops.LegacyStateError rather than emit wrong bounds."""
+    bcols = ["min_lon", "min_lat", "max_lon", "max_lat"]
+    missing = [c for c in bcols if c not in assign.columns]
+    if missing:
+        raise ops.LegacyStateError(
+            f"assignments lack the used-scene bounds columns {missing} "
+            "— the state predates bounds in the selection; rebuild it"
+        )
+    sel = assign.select("quadkey", "assets", *bcols)
+    rows = sel.toLocalIterator() if cfg.quadkey_zoom > 10 else sel.collect()
+    tiles_map: dict[str, list[str]] = {}
+    w = s = float("inf")
+    e = n = float("-inf")
+    for qk, assets, cw, cs, ce, cn in rows:
+        if cw is None:
+            raise ops.LegacyStateError(
+                f"cell {qk} has no used-scene bounds — the state "
+                "predates bounds in the selection; rebuild it"
+            )
+        tiles_map[qk] = list(assets)
+        w, s, e, n = min(w, cw), min(s, cs), max(e, ce), max(n, cn)
+    bounds = [w, s, e, n] if tiles_map else [-180.0, -90.0, 180.0, 90.0]
+    return assemble_mosaic_doc(tiles_map, bounds, cfg)
+
+
 def build_mosaic(scenes: DataFrame, cfg: MosaicConfig) -> tuple[dict, DataFrame]:
     """Full E1: returns (mosaicJSON document dict, assignments DataFrame).
 
-    Only the final (quadkey, assets) table crosses to the driver —
-    bounded by 4^quadkey_zoom regardless of input scale; for
-    quadkey_zoom > 10 assemble via toLocalIterator instead of collect.
+    One Spark action (collect_mosaic_doc): only the final tile table
+    crosses to the driver — bounded by 4^quadkey_zoom regardless of
+    input scale. The returned assignments DataFrame is lazy; using it
+    recomputes the pipeline.
     """
-    # two actions consume `assign` (the bounds semi-join and the tile
-    # collect) — persist across them so the expensive explode+selection
-    # pipeline runs once, not twice (r4 review); released afterwards so
-    # the session doesn't accumulate cached builds
-    assign = quadkey_assignments(scenes, cfg).persist()
-    try:
-        filtered = ops.filter_scenes(scenes, cfg)
-        bounds = ops.mosaic_bounds(filtered, assign)
-        if cfg.quadkey_zoom > 10:
-            rows = assign.select("quadkey", "assets").toLocalIterator()
-        else:
-            rows = assign.select("quadkey", "assets").collect()
-        tiles_map = {r["quadkey"]: list(r["assets"]) for r in rows}
-    finally:
-        assign.unpersist(blocking=False)
-    return assemble_mosaic_doc(tiles_map, bounds, cfg), assign
+    assign = quadkey_assignments(scenes, cfg)
+    return collect_mosaic_doc(assign, cfg), assign
 
 
 def missing_quadkeys_geojson(

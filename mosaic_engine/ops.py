@@ -25,7 +25,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from . import udfs
@@ -133,6 +133,18 @@ def filter_scenes(df: DataFrame, cfg: MosaicConfig) -> DataFrame:
     return out
 
 
+def cell_quadkey_col(cell: Column) -> Column:
+    """Packed cell id → quadkey string as a JVM expression (no Python
+    hop): a cell's quadkey is its morton code (bits 6..63, read
+    unsigned so negative level-29 ids work) in base 4, left-padded with
+    '0' to its level (bits 0..5); lpad to 0 gives level 0's ''."""
+    return F.lpad(
+        F.conv(F.shiftrightunsigned(cell, 6).cast("string"), 10, 4),
+        cell.bitwiseAND(F.lit(63)).cast("int"),
+        "0",
+    )
+
+
 # ---------------------------------------------------------------- ranking
 def pref_key(cfg: MosaicConfig) -> Column:
     """Numeric ascending-sort preference key (SURVEY.md §2.5 A2).
@@ -159,11 +171,25 @@ def _sel_struct(cfg: MosaicConfig) -> Column:
     usable in min()/sort_array() with map-side partial aggregation.
     NULL cloud_cover (kept by the no-cloud-filter path) coalesces to
     101 so unknown quality ranks BELOW any measured value on ties —
-    struct ordering would otherwise sort NULL first."""
+    struct ordering would otherwise sort NULL first.
+
+    The scene's bbox trails the key as (min_lon, min_lat, max_lon,
+    max_lat) so the selection carries the used-scene bounds without a
+    second scan; image_id already makes the order total, so these
+    fields never decide it. A crossing scene (stored wrapped,
+    min_lon > max_lon) genuinely spans both sides of ±180 and
+    contributes the full [-180, 180] lon interval, which keeps the
+    mosaic bounds spec-valid and covering every emitted tile (twin:
+    tests/oracle.py.features_to_mosaic)."""
+    crossing = F.col("min_lon") > F.col("max_lon")
     return F.struct(
         pref_key(cfg).alias("pref_key"),
         F.coalesce(F.col("cloud_cover"), F.lit(101.0)).alias("cloud_cover"),
         F.col("image_id").alias("image_id"),
+        F.when(crossing, -180.0).otherwise(F.col("min_lon")).alias("min_lon"),
+        F.col("min_lat").alias("min_lat"),
+        F.when(crossing, 180.0).otherwise(F.col("max_lon")).alias("max_lon"),
+        F.col("max_lat").alias("max_lat"),
     ).alias("sel")
 
 
@@ -185,7 +211,14 @@ def assignments(tiles: DataFrame, cfg: MosaicConfig) -> DataFrame:
     Salted two-phase aggregation (§4.3): phase-1 collects per
     (quadkey, salt) with optional local top-k prune; phase-2 merges the
     ≤S partial lists per quadkey and finalizes order. Returns
-    (quadkey, assets array<string>, n_assets int).
+    (cell, quadkey, assets array<string>, n_assets int, min_lon,
+    min_lat, max_lon, max_lat): the last four are the cell's min/max
+    over the bboxes of the scenes it selected (after any cap or
+    optimized-selection dedupe, crossing scenes as ±180 — see
+    _sel_struct), so the mosaic bounds reduce from the tile table
+    itself. A cell whose selection holds a scene row without a bbox
+    (state written before these columns existed) gets NULL bounds,
+    which mosaic_bounds and mosaic.collect_mosaic_doc reject.
     """
     cap = cfg.max_assets_per_tile
     if cap is not None and cap < 1:
@@ -217,13 +250,22 @@ def assignments(tiles: DataFrame, cfg: MosaicConfig) -> DataFrame:
         F.sort_array(F.flatten(F.collect_list("part"))).alias("sels")
     )
     sels = F.slice("sels", 1, cap) if cap is not None else F.col("sels")
-    u = udfs.make_scalar_udfs()
+    unbounded = F.exists(sels, lambda s: s["min_lon"].isNull())
+
+    def reduce_field(name, agg):
+        vals = F.transform(sels, lambda s: s[name])
+        return F.when(~unbounded, agg(vals)).alias(name)
+
     # quadkey strings only materialize here — bounded by 4^quadkey_zoom
     return merged.select(
         "cell",
-        u["cell_quadkey"](F.col("cell")).alias("quadkey"),
+        cell_quadkey_col(F.col("cell")).alias("quadkey"),
         F.transform(sels, lambda s: s["image_id"]).alias("assets"),
         F.size(sels).alias("n_assets"),
+        reduce_field("min_lon", F.array_min),
+        reduce_field("min_lat", F.array_min),
+        reduce_field("max_lon", F.array_max),
+        reduce_field("max_lat", F.array_max),
     )
 
 
@@ -235,32 +277,41 @@ def assignments_relational(assign: DataFrame) -> DataFrame:
     ).select("quadkey", "asset", (F.col("pos") + 1).alias("rank"))
 
 
-def mosaic_bounds(scenes: DataFrame, assign: DataFrame) -> list[float]:
-    """A4 over scenes actually used in the mosaic (left_semi join).
+class LegacyStateError(ValueError):
+    """Persisted mosaic state (a tiles log or checkpoint table) lacks
+    the used-scene bounds columns: it was written before assignments
+    carried them, and its bounds cannot be derived without rescanning
+    the scenes. Rebuild the state."""
 
-    Antimeridian (r4 review): a crossing scene stores a WRAPPED bbox
-    (min_lon > max_lon) — raw min/max would treat those as ordinary
-    longitudes and either exclude the scene's true extent or emit
-    invalid w > e bounds. A crossing scene genuinely spans both sides
-    of ±180, so it contributes the full [-180, 180] lon interval —
-    bounds stay spec-valid and always cover every emitted tile (the
-    lat axis is unaffected). Mirrored scalar logic in
-    tests/oracle.py.features_to_mosaic keeps goldens byte-equal."""
-    used = scenes.join(
-        assign.select(F.explode("assets").alias("image_id")).distinct(),
-        "image_id",
-        "left_semi",
-    )
-    crossing = F.col("min_lon") > F.col("max_lon")
-    row = used.agg(
-        F.min(F.when(crossing, -180.0).otherwise(F.col("min_lon"))),
-        F.min("min_lat"),
-        F.max(F.when(crossing, 180.0).otherwise(F.col("max_lon"))),
-        F.max("max_lat"),
-    ).first()
-    if row is None or row[0] is None:
+
+def mosaic_bounds(scenes: DataFrame, assign: DataFrame) -> list[float]:
+    """A4: bbox of the scenes the mosaic actually uses — one aggregate
+    row over assign's used-scene bounds columns (see assignments), no
+    scene scan and no join. `scenes` is no longer read; the parameter
+    is kept for existing callers. Empty mosaic → world bounds.
+
+    The row is observed metrics of one pass over `assign` (the noop
+    sink writes nothing): a plain agg() would add a single-partition
+    exchange, which adaptive execution runs as a second job."""
+    obs = Observation()
+    assign.observe(
+        obs,
+        F.min("min_lon").alias("w"),
+        F.min("min_lat").alias("s"),
+        F.max("max_lon").alias("e"),
+        F.max("max_lat").alias("n"),
+        F.count("*").alias("cells"),
+        F.count("min_lon").alias("bounded"),
+    ).write.format("noop").mode("overwrite").save()
+    row = obs.get
+    if row["cells"] != row["bounded"]:
+        raise LegacyStateError(
+            "assignments hold cells without used-scene bounds — the "
+            "state predates bounds in the selection; rebuild it"
+        )
+    if row["cells"] == 0:
         return [-180.0, -90.0, 180.0, 90.0]
-    return [row[0], row[1], row[2], row[3]]
+    return [row["w"], row["s"], row["e"], row["n"]]
 
 
 # ------------------------------------------------------------- gap check
@@ -287,8 +338,7 @@ def missing_quadkeys(
         "cell"
     ).distinct()
     miss = land_qk.join(assign.select("cell"), "cell", "left_anti")
-    u = udfs.make_scalar_udfs()
-    return miss.select(u["cell_quadkey"](F.col("cell")).alias("quadkey"))
+    return miss.select(cell_quadkey_col(F.col("cell")).alias("quadkey"))
 
 
 def coverage_quadkeys(
@@ -682,14 +732,12 @@ def knn_index_load(spark, path: str) -> KnnIndex:
 # ---- numpy twins of the cascade bound math (r6): the coarse cascade
 # stages moved from DataFrame cross-join + window-sort into ONE
 # Arrow-batched mapInPandas kernel (see knn_join docstring).
-# _cell_rect_np/_bounds_np mirror _with_bounds/_cell_rect_cols
-# op-for-op (they remain the meter-space oracle the bracket pytest
-# checks); the kernel itself runs the r7 fast path (_bounds_fast_np):
-# identical mathematical bounds in haversine-argument space over
-# per-cell precomputed trig. Pruning EXACTNESS does not require
-# bit-equality between any of these (any valid lower/upper bound
-# preserves the R* guarantee — the margins absorb FP drift either
-# way).
+# _cell_rect_np mirrors _cell_rect_cols; the kernel bounds
+# (_bounds_fast_np, the bracket pytest's subject) are the mathematical
+# min/max rect distances of _with_bounds in haversine-argument space
+# over per-cell precomputed trig. Pruning EXACTNESS does not require
+# bit-equality between them (any valid lower/upper bound preserves
+# the R* guarantee — the margins absorb FP drift either way).
 FINE_COLLECT_ROWS = 300_000  # cap for collecting fine stats driver-side
 # in-kernel refinement step: 1 level (4 children/parent). r6 used 2
 # (16 children); the 16× expansion made the mid-chain pair tables the
@@ -731,70 +779,6 @@ def _cell_rect_np(cells: "np.ndarray", level: int):
     return cw, cs, ce, cn
 
 
-def _bounds_np(lon, lat, cw, cs, ce, cn):
-    """(mind, maxd) twin of _with_bounds. np.fmin mirrors Spark
-    least()'s NaN-last ordering at the cos(Δλ)=0 stationary point (the
-    two edge-latitude candidates are always finite).
-
-    maxd is the EXACT max distance from the probe to any point of the
-    rect (r6; previously mind + a perimeter-sum "diameter", ~2× slack
-    at mid-latitudes): distance is monotone in Δλ ∈ [0, 180], so the
-    max sits at Δλ_max (180 when the probe's antimeridian falls inside
-    the cell, else the farther lon edge), and over φ the same
-    stationary-latitude family as the min — tan φ* = tan φ_p /
-    cos Δλ_max, clamped to the cell — but taking the MAX of the
-    stationary and the two edge-latitude candidates (np.fmax: NaN at
-    the cos Δλ_max = 0 pole sorts last, finite edges always present).
-    A tighter maxd shrinks R* and therefore every cascade level's
-    survivor set AND the scored candidate join — pruning stays exact
-    (maxd still upper-bounds every scene in the cell)."""
-    import numpy as np
-
-    def wrapdeg(a, b):
-        return np.abs((a - b + 540.0) % 360.0 - 180.0)
-
-    inside = (lon >= cw) & (lon <= ce)
-    dl = np.where(inside, 0.0, np.minimum(wrapdeg(lon, cw), wrapdeg(lon, ce)))
-    DL = np.radians(dl)
-    p1 = np.radians(lat)
-    s_r = np.radians(cs)
-    n_r = np.radians(cn)
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        phi_star = np.arctan(np.tan(p1) / np.cos(DL))
-    phi_c = np.maximum(np.minimum(phi_star, n_r), s_r)
-
-    def hav(pa_, pb_, dlam):
-        a = (
-            np.sin((pb_ - pa_) / 2.0) ** 2
-            + np.cos(pa_) * np.cos(pb_) * np.sin(dlam / 2.0) ** 2
-        )
-        return 2.0 * EARTH_R_M * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
-
-    with np.errstate(invalid="ignore"):
-        mind_raw = np.fmin(
-            np.fmin(hav(p1, phi_c, DL), hav(p1, s_r, DL)), hav(p1, n_r, DL)
-        )
-    # probe antimeridian in [-180, 180): lon + 180 wrapped. A cell can
-    # hold it only strictly interior (no cell's interior crosses ±180);
-    # when it coincides with a cell EDGE the edge wrapdeg is 180
-    # anyway, so one representation suffices.
-    anti = (lon + 360.0) % 360.0 - 180.0
-    anti_in = (anti >= cw) & (anti <= ce)
-    dl_max = np.where(
-        anti_in, 180.0, np.maximum(wrapdeg(lon, cw), wrapdeg(lon, ce))
-    )
-    DLX = np.radians(dl_max)
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        phi_star_x = np.arctan(np.tan(p1) / np.cos(DLX))
-    phi_cx = np.maximum(np.minimum(phi_star_x, n_r), s_r)
-    with np.errstate(invalid="ignore"):
-        maxd_raw = np.fmax(
-            np.fmax(hav(p1, phi_cx, DLX), hav(p1, s_r, DLX)),
-            hav(p1, n_r, DLX),
-        )
-    return mind_raw * (1.0 - 1e-9) - 1e-3, maxd_raw * (1.0 + 1e-9) + 1e-3
-
-
 def _cell_attrs_np(cells: "np.ndarray", level: int):
     """Per-cell trig attributes for the fast a-space bounds
     (_bounds_fast_np): lon edges in degrees plus sin/cos of the
@@ -821,7 +805,7 @@ def _bounds_fast_np(lon, lat, sin_p, cos_p, tan_p, attrs):
     """(a_lo, a_hi) bounds in HAVERSINE-ARGUMENT space (the monotone
     a = sin²(Δφ/2) + cosφ₁cosφ₂sin²(Δλ/2) of the great-circle
     distance) — the same mathematical min/max rect bounds as
-    _bounds_np, reformulated so the per-pair work is two sin() calls
+    _with_bounds, reformulated so the per-pair work is two sin() calls
     plus algebra over per-cell/per-probe precomputed trig:
 
       * sin²(Δφ/2) = (1 − (cosφ₁cosφ₂ + sinφ₁sinφ₂))/2 — products of
@@ -1395,7 +1379,7 @@ def knn_join(
         mind_raw = F.least(
             _hav_m(p1, phi_c, DL), _hav_m(p1, s_r, DL), _hav_m(p1, n_r, DL)
         )
-        # exact max distance to the rect (r6, twin of _bounds_np —
+        # exact max distance to the rect (r6, twin of _bounds_fast_np —
         # replaces the perimeter-sum diameter bound): monotone in Δλ,
         # so evaluate at Δλ_max (180 when the probe's antimeridian sits
         # inside the cell) over the max-stationary latitude and the two
@@ -1794,6 +1778,7 @@ def knn_bruteforce_points(
     import numpy as np
 
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
     from . import geometry as geo
 
@@ -1820,7 +1805,9 @@ def knn_bruteforce_points(
     qx_np = np.array([float(r[1]) for r in prows], dtype=np.float64)
     qy_np = np.array([float(r[2]) for r in prows], dtype=np.float64)
     bc = spark.sparkContext.broadcast((pid_np, qx_np, qy_np))
-    qid_type = q_fields[probe_id]
+    # the ids array's numpy dtype need not match the declared column
+    # (an int32 id collects as int64) — mapInArrow needs the exact type
+    qid_type = to_arrow_type(q_fields[probe_id])
 
     def kern(batches):
         import pyarrow as pa
@@ -1877,7 +1864,7 @@ def knn_bruteforce_points(
             pidx = t.column("__p").to_numpy(zero_copy_only=False)
             out = pa.table(
                 {
-                    probe_id: pa.array(ids[pidx]),
+                    probe_id: pa.array(ids[pidx]).cast(qid_type),
                     point_id: t.column(point_id),
                     "dist_m": t.column("dist_m"),
                 }
@@ -1976,9 +1963,8 @@ def raster_vector_join(
         ).alias("salt"),
     )
     joined = s_qk.join(v_qk, ["cell", "salt"])
-    u = udfs.make_scalar_udfs()
     return joined.select(
-        u["cell_quadkey"](F.col("cell")).alias("quadkey"),
+        cell_quadkey_col(F.col("cell")).alias("quadkey"),
         "image_id",
         "feature_id",
     )

@@ -1362,7 +1362,11 @@ def finalize(
     spark: SparkSession, scenes_dir: str, cfg: MosaicConfig, work_dir: str,
     fs: StorageClient | None = None,
 ) -> dict:
-    """Aggregate the accumulated tiles log into the current mosaicJSON."""
+    """Aggregate the accumulated tiles log into the current mosaicJSON
+    in one Spark action. The bounds come from the bbox the log's rows
+    carry, so `scenes_dir` is no longer read (the parameter is kept for
+    existing callers). A log written before rows carried the bbox
+    raises ops.LegacyStateError: rebuild it in a fresh work_dir."""
     paths = _tiles_paths(work_dir, fs or LOCAL_FS)
     if not paths:
         raise ValueError(
@@ -1370,9 +1374,11 @@ def finalize(
             "run_incremental first"
         )
     tiles = spark.read.parquet(*paths)
-    assign = ops.assignments(tiles, cfg)
-    scenes = ops.filter_scenes(spark.read.parquet(scenes_dir), cfg)
-    bounds = ops.mosaic_bounds(scenes, assign)
-    rows = assign.select("quadkey", "assets").collect()
-    tiles_map = {r["quadkey"]: list(r["assets"]) for r in rows}
-    return mz.assemble_mosaic_doc(tiles_map, bounds, cfg)
+    missing = [c for c in EXPLODE_PASSTHROUGH if c not in tiles.columns]
+    if missing:
+        raise ops.LegacyStateError(
+            f"tiles log in {work_dir} lacks columns {missing} — it was "
+            "written before the log carried scene bounds; rebuild it in "
+            "a fresh work_dir"
+        )
+    return mz.collect_mosaic_doc(ops.assignments(tiles, cfg), cfg)

@@ -28,8 +28,19 @@ from . import imageops as im
 from . import tilemath as tm
 
 # the default scene columns carried through the fused explode — the ONE
-# definition (mosaic.py re-exports it)
-EXPLODE_PASSTHROUGH = ["image_id", "path", "row", "acquisition_date", "cloud_cover"]
+# definition (mosaic.py re-exports it): the selection key's inputs plus
+# the bbox the selection carries for the used-scene bounds
+EXPLODE_PASSTHROUGH = [
+    "image_id",
+    "path",
+    "row",
+    "acquisition_date",
+    "cloud_cover",
+    "min_lon",
+    "min_lat",
+    "max_lon",
+    "max_lat",
+]
 
 EXPLODE_GEOM_COLS = [
     "min_lon",
@@ -50,7 +61,7 @@ def _explode_flat(
     quadkey string: at z10 a 1M-scene batch set emits ~67M rows, and
     allocating that many Python string objects dominated the kernel
     (~40% wall). Strings appear only at bounded output edges
-    (cell_to_quadkey over the aggregated tiles)."""
+    (ops.cell_quadkey_col over the aggregated tiles)."""
     n = len(pdf)
     if n == 0:
         return np.empty(0, np.int64), np.empty(0, np.int64)
@@ -283,22 +294,11 @@ def make_scalar_udfs():
             out[m] = tm.tile_to_quadkey(xs[m], ys[m], int(zoom))
         return pd.Series(out)
 
-    @pandas_udf(T.StringType())
-    def cell_quadkey(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(np.int64)
-        xs, ys, lv = cl.unpack_cell(c)
-        out = np.empty(len(c), dtype=object)
-        for z in np.unique(lv):
-            m = lv == z
-            out[m] = tm.tile_to_quadkey(xs[m], ys[m], int(z))
-        return pd.Series(out)
-
     return {
         "cell_id": cell_id,
         "cell_neighbors": cell_neighbors,
         "haversine_m": haversine_m,
         "tile_quadkey": tile_quadkey,
-        "cell_quadkey": cell_quadkey,
     }
 
 

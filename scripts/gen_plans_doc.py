@@ -103,7 +103,11 @@ def main():
             "dense quadkeys never concentrate before reduction. Stage 2: "
             "per-(cell,salt) partial collect, stage 3: per-cell merge of "
             "≤S small sorted lists. Quadkey strings materialize only in "
-            "the final bounded projection.",
+            "the final bounded projection, as a JVM expression over the "
+            "packed cell (no ArrowEvalPython), next to the per-cell "
+            "min/max of the selected scenes' bboxes the selection "
+            "struct carries — the mosaic bounds reduce from the same "
+            "rows the build collects.",
             formatted(assign),
         ),
         (

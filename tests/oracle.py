@@ -332,7 +332,7 @@ def features_to_mosaic(
     if used:
         # a crossing scene (wrapped bbox, min_lon > max_lon) spans both
         # sides of ±180 → contributes the full lon interval (the exact
-        # twin of ops.mosaic_bounds — r4 review)
+        # twin of the bbox fields of ops._sel_struct)
         bounds = [
             min(
                 -180.0 if s["min_lon"] > s["max_lon"] else s["min_lon"]

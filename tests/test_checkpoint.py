@@ -50,6 +50,27 @@ def test_partial_resume_after_kill(spark, scenes_df, tmp_path):
     assert mz.canonical_json(doc2) == mz.canonical_json(doc1)
 
 
+def test_resume_over_table_without_bounds_fails_closed(spark, scenes_df, tmp_path):
+    """A checkpointed prefix written before the assignments carried the
+    used-scene bounds is reused on resume, and the document assembly
+    raises LegacyStateError instead of emitting partial bounds."""
+    import pytest
+
+    from mosaic_engine import ops
+
+    out = str(tmp_path / "ckpt_legacy")
+    _build(spark, scenes_df, out)
+    victim = sorted(checkpoint.read_manifests(out))[0]
+    pdir = os.path.join(out, "assignments", f"qk_prefix={victim}")
+    old = spark.read.parquet(pdir).drop(
+        "min_lon", "min_lat", "max_lon", "max_lat"
+    ).collect()
+    shutil.rmtree(pdir)
+    spark.createDataFrame(old).write.parquet(pdir)
+    with pytest.raises(ops.LegacyStateError, match="rebuild"):
+        _build(spark, scenes_df, out, resume=True)
+
+
 def test_config_change_invalidates(spark, scenes_df, tmp_path):
     out = str(tmp_path / "ckpt3")
     _build(spark, scenes_df, out)
@@ -240,6 +261,39 @@ def test_torn_snapshot_manifest_degrades_not_crashes(spark, tmp_path):
     # mode='ignore' sees no (valid) manifest and re-commits one
     catalog.write_table(spark.range(5), src, mode="ignore")
     assert catalog.read_snapshot_manifest(spark, src) is not None
+
+
+def test_snapshot_manifest_outage_raises(spark, tmp_path, monkeypatch):
+    """Both manifest reads fail with a non-corruption error and the
+    existence probe fails too: absence cannot be told from an outage,
+    so read_snapshot_manifest raises instead of answering 'absent'
+    (which would let write_table(mode='ignore') re-commit over a
+    healthy manifest)."""
+    import pytest
+
+    from mosaic_engine import catalog
+
+    class OutageFS:
+        probes = 0
+
+        def exists(self, path):
+            self.probes += 1
+            if self.probes > 1:
+                raise OSError("object store unreachable")
+            return True
+
+        def open(self, path):
+            raise OSError("connection reset")
+
+    src = str(tmp_path / "outage_tbl")
+    catalog.write_table(spark.range(3), src)
+    real = catalog._fs_and_path
+    monkeypatch.setattr(
+        catalog, "_fs_and_path",
+        lambda sp, loc: (OutageFS(), real(sp, loc)[1]),
+    )
+    with pytest.raises(OSError, match="unreachable"):
+        catalog.read_snapshot_manifest(spark, src)
 
 
 def test_lineage_and_guard_edges(spark, scenes_df, tmp_path):

@@ -278,15 +278,13 @@ def test_knn_pick_level_heuristic_shape():
 
 
 def test_knn_rect_bounds_bracket_sampled_distances():
-    """_bounds_np's (mind, maxd) must bracket the true min/max distance
-    from the probe to ANY point of the cell rect — the R* pruning rule
-    is exact only under that invariant. maxd is the r6 exact rect
-    maximum (Δλ_max + max-stationary latitude), replacing the slack
-    perimeter-sum diameter; adversarial probe modes: uniform, near the
-    cell's antipodal meridian (Δλ_max = 180 interior case), inside the
-    cell, and near-polar."""
-    from mosaic_engine.geometry import haversine_m
-
+    """The cascade kernel's bounds (_bounds_fast_np over the per-cell
+    attributes of _cell_attrs_np) must bracket the haversine argument
+    a = sin²(d/2R) from the probe to ANY point of the cell rect — the
+    R* pruning rule is exact only under that invariant (a is monotone
+    in distance). Adversarial probe modes: uniform, near the cell's
+    antipodal meridian (Δλ_max = 180 interior case), inside the cell,
+    and near-polar."""
     rng = np.random.default_rng(1234)
     for trial in range(200):
         level = int(rng.integers(1, 14))
@@ -313,19 +311,24 @@ def test_knn_rect_bounds_bracket_sampled_distances():
         else:
             lon = float(rng.uniform(-180, 180))
             lat = float(rng.choice([-89.95, 89.95]))
-        mind, maxd = ops._bounds_np(
-            np.array([lon]), np.array([lat]), cw, cs, ce, cn
+        p = np.radians(lat)
+        a_lo, a_hi = ops._bounds_fast_np(
+            np.array([lon]), np.array([lat]),
+            np.array([np.sin(p)]), np.array([np.cos(p)]),
+            np.array([np.tan(p)]), ops._cell_attrs_np(cell, level),
         )
         gs = np.linspace(0, 1, 21)
         GL, GP = np.meshgrid(
             cw[0] + gs * (ce[0] - cw[0]), cs[0] + gs * (cn[0] - cs[0])
         )
-        d = haversine_m(
-            np.full(GL.size, lon), np.full(GL.size, lat),
-            GL.ravel(), GP.ravel(),
+        p2 = np.radians(GP.ravel())
+        a = (
+            np.sin((p2 - p) / 2.0) ** 2
+            + np.cos(p) * np.cos(p2)
+            * np.sin(np.radians(GL.ravel() - lon) / 2.0) ** 2
         )
-        assert mind[0] <= d.min() + 1e-6, (level, x, y, lon, lat)
-        assert maxd[0] >= d.max() - 1e-6, (level, x, y, lon, lat)
+        assert a_lo[0] <= a.min() + 1e-15, (level, x, y, lon, lat)
+        assert a_hi[0] >= a.max() - 1e-15, (level, x, y, lon, lat)
 
 
 def test_knn_index_reuse_matches_brute(spark, scenes_df):
@@ -672,3 +675,26 @@ def test_knn_random_corpora_match_brute(spark, tmp_path, corpus_seed, hotspot):
     assert [g[:3] for g in got] == [e[:3] for e in exp]
     for g, e in zip(got, exp):
         assert g[3] == pytest.approx(e[3], rel=1e-12)
+
+
+def test_knn_bruteforce_points_int32_probe_ids(spark):
+    """knn_bruteforce_points emits probe ids in the probe column's own
+    type: an int32 id column collects to an int64 numpy array, and the
+    kernel must cast it back to the declared Arrow type."""
+    rng = np.random.default_rng(3)
+    pts = [(i, float(rng.uniform(-20, 20)), float(rng.uniform(-20, 20)))
+           for i in range(300)]
+    prb = [(q, float(rng.uniform(-20, 20)), float(rng.uniform(-20, 20)))
+           for q in range(7)]
+    points = spark.createDataFrame(pts, "pid long, x double, y double")
+    probes = spark.createDataFrame(prb, "qid int, qx double, qy double")
+    res = ops.knn_bruteforce_points(
+        points, probes, 3, "pid", "x", "y", "qid", "qx", "qy"
+    )
+    assert dict(res.dtypes)["qid"] == "int"
+    got = sorted((r["qid"], r["rank"], r["pid"]) for r in res.collect())
+    want = []
+    for q, qx, qy in prb:
+        near = sorted((oracle.haversine_m(qx, qy, x, y), i) for i, x, y in pts)
+        want += [(q, rank + 1, i) for rank, (_, i) in enumerate(near[:3])]
+    assert got == sorted(want)

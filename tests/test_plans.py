@@ -61,6 +61,33 @@ def test_assignments_shuffles_only_on_cell_keys(spark, scenes_df):
     assert "partial_min" in plan, "dedupe must pre-aggregate map-side"
 
 
+def test_build_is_one_action_with_jvm_quadkeys(spark, scenes_df, monkeypatch):
+    """build_mosaic runs ONE DataFrame action over a plan with no
+    Python quadkey hop (ArrowEvalPython) and no used-scene semi join,
+    and persists nothing."""
+    cfg = MosaicConfig(quadkey_zoom=7, max_assets_per_tile=3)
+    DataFrame = type(scenes_df)
+    calls = []
+    for name in ("collect", "toLocalIterator", "first", "count", "take",
+                 "toPandas", "persist", "cache"):
+        real = getattr(DataFrame, name)
+
+        def spy(self, *a, _real=real, _name=name, **kw):
+            calls.append((_name, _plan(self)))
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+    jsc = spark.sparkContext._jsc
+    n_persisted = jsc.getPersistentRDDs().size()
+    doc, _ = mz.build_mosaic(scenes_df, cfg)
+    monkeypatch.undo()
+    assert doc["tiles"]
+    assert [c[0] for c in calls] == ["collect"], [c[0] for c in calls]
+    assert "LeftSemi" not in calls[0][1], calls[0][1]
+    assert "ArrowEvalPython" not in calls[0][1], calls[0][1]
+    assert jsc.getPersistentRDDs().size() == n_persisted
+
+
 def test_partial_aggregation_runs_map_side(spark, scenes_df):
     cfg = MosaicConfig(quadkey_zoom=7, optimized_selection=True)
     tiles = udfs.explode_to_quadkeys(scenes_df, cfg.quadkey_zoom)

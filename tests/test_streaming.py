@@ -91,6 +91,41 @@ def test_streaming_batch_redelivery_is_idempotent(spark, tmp_path):
     assert not mz.validate_mosaic(doc_retry)
 
 
+def test_legacy_tiles_log_without_bounds_fails_closed(spark, tmp_path):
+    """A tiles log written before rows carried the scene bbox cannot
+    yield the used-scene bounds: finalize raises LegacyStateError for a
+    log holding only such batches and for one mixing them with current
+    batches, instead of returning partial or world bounds."""
+    import shutil
+
+    import pytest
+
+    from mosaic_engine import ops, udfs
+
+    scenes_dir = str(tmp_path / "scenes")
+    work = str(tmp_path / "work")
+    os.makedirs(scenes_dir)
+    datagen.write_parquet(
+        datagen.gen_scenes(n_scenes=30, paths=3, rows=3, seed=8),
+        os.path.join(scenes_dir, "p.parquet"),
+    )
+    cfg = MosaicConfig(quadkey_zoom=7)
+    assert streaming.run_incremental(spark, scenes_dir, cfg, work) == 1
+    streaming.finalize(spark, scenes_dir, cfg, work)  # current log: fine
+
+    legacy_cols = ["image_id", "path", "row", "acquisition_date", "cloud_cover"]
+    legacy = udfs.explode_to_quadkeys(
+        ops.filter_scenes(spark.read.parquet(scenes_dir), cfg),
+        cfg.quadkey_zoom, passthrough=legacy_cols,
+    )
+    legacy.write.parquet(os.path.join(work, "tiles_log", "batch_id=1"))
+    with pytest.raises(ops.LegacyStateError, match="rebuild"):
+        streaming.finalize(spark, scenes_dir, cfg, work)
+    shutil.rmtree(os.path.join(work, "tiles_log", "batch_id=0"))
+    with pytest.raises(ops.LegacyStateError, match="fresh work_dir"):
+        streaming.finalize(spark, scenes_dir, cfg, work)
+
+
 def test_windowed_counts_watermark_matches_batch(spark, tmp_path):
     """§2.10 watermarked tumbling windows: once the watermark passes a
     window (later data arrives), its appended row equals the batch

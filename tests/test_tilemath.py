@@ -123,3 +123,25 @@ def test_cover_ranges_clamped_poles():
 def test_parent_tile():
     xs, ys, z = tm.parent_tile([655], [1583], 12, 4)
     assert (xs[0], ys[0], z) == (655 >> 4, 1583 >> 4, 8)
+
+
+def test_jvm_cell_quadkey_matches_tilemath(spark):
+    """ops.cell_quadkey_col (the JVM quadkey of a packed cell) equals
+    tilemath.tile_to_quadkey at the edge levels, including the corner
+    tiles and level 29, whose high tiles pack to NEGATIVE ids."""
+    from pyspark.sql import functions as F
+
+    from mosaic_engine import cells, ops
+
+    rng = np.random.default_rng(7)
+    rows, want = [], []
+    for z in (0, 1, 8, 12, 28, 29):
+        n = 1 << z
+        xs = np.r_[0, n - 1, 0, n - 1, rng.integers(0, n, 40)]
+        ys = np.r_[0, n - 1, n - 1, 0, rng.integers(0, n, 40)]
+        rows += [int(c) for c in cells.pack_cell(xs, ys, z)]
+        want += list(tm.tile_to_quadkey(xs, ys, z))
+    assert min(rows) < 0  # level-29 ids past bit 63 are exercised
+    df = spark.createDataFrame([(i, c) for i, c in enumerate(rows)], "i long, cell long")
+    got = df.select("i", ops.cell_quadkey_col(F.col("cell")).alias("qk")).collect()
+    assert [r["qk"] for r in sorted(got)] == want
