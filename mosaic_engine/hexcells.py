@@ -39,14 +39,16 @@ arithmetic — no bit tricks — so a DuckDB oracle can compute the same
 id with *, +. res ≤ 24 keeps every term under 2^63.
 
 All kernels are vectorized numpy over float64/int64 arrays (Arrow
-batch-friendly, zero per-row Python), mirroring cells.py/tilemath.py.
+batch-friendly), mirroring cells.py/tilemath.py. The one exception is
+the sin/log of the mercator projection in _axial_float, which calls
+the C library per element (see _libm).
 """
 
 from __future__ import annotations
 
-import numpy as np
+import math
 
-from . import tilemath as tm
+import numpy as np
 
 __all__ = [
     "SQRT3_3",
@@ -73,17 +75,40 @@ def _check_res(res: int) -> None:
         raise ValueError(f"hex res must be in [0, {HEX_MAX_RES}] (got {res})")
 
 
+def _libm(fn, v: np.ndarray) -> np.ndarray:
+    """`fn` (a `math` function) applied elementwise.
+
+    numpy's SIMD sin/log loops may differ from the C library by an ulp,
+    while DuckDB's sin/ln call the C library. On the lon = -180 seam the
+    meridian runs along hex edges, so the cube-round tie there is
+    decided by the last bit of my: an ulp off picks the other hex."""
+    out = np.fromiter(map(fn, v.ravel().tolist()), np.float64, count=v.size)
+    return out.reshape(v.shape)
+
+
 def _axial_float(lons, lats, res: int) -> tuple[np.ndarray, np.ndarray]:
     """Fractional axial coords of each point's position on the lattice.
 
-    Op-for-op the expression the SQL oracle runs: mx/my from
-    tilemath._xy_norm's published formulas, then one multiply-subtract
-    per axis. Non-finite my (poles) raises — a NaN would cube-round
-    into a wrong-but-well-formed id (the pack_cell convention)."""
+    Op-for-op the expression the SQL oracle runs: mx/my from the
+    published mercator formulas of tilemath._xy_norm (sin and log from
+    the C library, bit-identical to the oracle), then one
+    multiply-subtract per axis. Non-finite my (poles) raises — a NaN
+    would cube-round into a wrong-but-well-formed id (the pack_cell
+    convention)."""
     _check_res(res)
-    mx, my = tm._xy_norm(lons, lats)
-    if mx.size and not np.isfinite(my).all():
-        raise ValueError("hex_encode: latitude at/beyond mercator pole")
+    lons = np.asarray(lons, dtype=np.float64)
+    lats = np.asarray(lats, dtype=np.float64)
+    mx = lons / 360.0 + 0.5
+    pole = ValueError("hex_encode: latitude at/beyond mercator pole")
+    if not np.isfinite(lats).all():
+        raise pole
+    sinlat = _libm(math.sin, np.radians(lats))
+    with np.errstate(divide="ignore"):
+        ratio = (1.0 + sinlat) / (1.0 - sinlat)
+    # ratio 0 / inf is lat = -90 / +90, where my would be ±inf
+    if not (np.isfinite(ratio) & (ratio > 0.0)).all():
+        raise pole
+    my = 0.5 - 0.25 * _libm(math.log, ratio) / np.pi
     scale = float(1 << res)
     qf = (SQRT3_3 * mx - my / 3.0) * scale
     rf = (my * (2.0 / 3.0)) * scale

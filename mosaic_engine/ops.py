@@ -22,7 +22,6 @@ Design notes (scale-first, SURVEY.md §4):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, Window
@@ -34,12 +33,6 @@ DEFAULT_SALT_BUCKETS = 16
 # above this probe count the kNN scoring join stops force-broadcasting
 # the (probe, cell) candidate table (see knn_join)
 KNN_PROBE_BROADCAST_LIMIT = 50_000
-# introspection hook: when MOSAIC_KNN_DEBUG=1, knn_join drops its
-# (pruned candidate, scoring join) DataFrames here so plan/volume
-# diagnostics need no replumbing. Off by default — the hook would
-# otherwise pin the last call's full plan lineage in module scope for
-# the life of the process.
-_KNN_DEBUG: dict = {}
 
 SEASON_MONTHS = {
     "winter": (12, 1, 2),
@@ -801,7 +794,7 @@ def _cell_attrs_np(cells: "np.ndarray", level: int):
     )
 
 
-def _bounds_fast_np(lon, lat, sin_p, cos_p, tan_p, attrs):
+def _bounds_fast_np(lon, sin_p, cos_p, tan_p, attrs):
     """(a_lo, a_hi) bounds in HAVERSINE-ARGUMENT space (the monotone
     a = sin²(Δφ/2) + cosφ₁cosφ₂sin²(Δλ/2) of the great-circle
     distance) — the same mathematical min/max rect bounds as
@@ -887,33 +880,86 @@ def _bounds_fast_np(lon, lat, sin_p, cos_p, tan_p, attrs):
     return a_min * (1.0 - 1e-9) - 1e-14, a_max * (1.0 + 1e-9) + 1e-14
 
 
+def _packed_keys(code, nseg: int, val):
+    """One uint64 sort key per row ordering by (segment, value): the
+    segment code (0 <= code < nseg) in the high bits, the value's
+    order-preserving IEEE bit pattern ROUNDED DOWN to the remaining low
+    bits below it. The pattern flips the sign bit of non-negative
+    values and every bit of negative ones; -0.0 folds onto +0.0 and
+    every NaN maps to the all-ones pattern, so NaN sorts last in its
+    segment. Rounding down is monotone: a < b implies key(a) <= key(b),
+    and values closer than the quantum (2^-(52 - shift) relative) may
+    share a key. Returns (keys, shift), shift = bits dropped from the
+    pattern = bits spent on the segment code."""
+    import numpy as np
+
+    shift = max(int(nseg) - 1, 1).bit_length()
+    v = np.asarray(val, dtype=np.float64) + 0.0
+    b = v.view(np.uint64)
+    # arithmetic shift: all ones for negative values, zero otherwise
+    o = b ^ ((v.view(np.int64) >> 63).view(np.uint64) | np.uint64(1 << 63))
+    o[np.isnan(v)] = np.uint64(0xFFFF_FFFF_FFFF_FFFF)
+    key = np.asarray(code).astype(np.uint64) << np.uint64(64 - shift)
+    key |= o >> np.uint64(shift)
+    return key, shift
+
+
+def _key_ceiling(key, shift: int):
+    """Largest double whose packed key (_packed_keys, same shift) equals
+    `key` — never below any value that rounds to it. A bucket reaching
+    into the NaN patterns (the one holding +inf) yields +inf."""
+    import numpy as np
+
+    o = (key << np.uint64(shift)) | np.uint64((1 << shift) - 1)
+    b = np.where(
+        o >> np.uint64(63) == 1, o ^ np.uint64(1 << 63), ~o
+    ).view(np.float64)
+    return np.where(np.isnan(b), np.inf, b)
+
+
+def _rstar_values(pid, maxd, n, kreq_row):
+    """Per-probe R* (indexed by pid; +inf where the probe's cells never
+    reach k): one argsort of the packed (pid, maxd) keys, the running
+    count of `n` per probe in that order, and R* = the largest double
+    whose key equals the first reaching key (_key_ceiling). Keys round
+    maxd down, so ties inside a key bucket may reorder, but every row
+    with key <= that key has maxd <= R* and their count reaches k —
+    R* is a valid radius and never below the exact one."""
+    import numpy as np
+
+    nseg = int(pid.max()) + 1
+    key, shift = _packed_keys(pid, nseg, maxd)
+    order = np.argsort(key)
+    pid_s = pid[order]
+    n_s = n[order]
+    cum = np.cumsum(n_s)
+    new_seg = np.empty(len(pid_s), dtype=bool)
+    new_seg[0] = True
+    np.not_equal(pid_s[1:], pid_s[:-1], out=new_seg[1:])
+    starts = np.flatnonzero(new_seg)
+    base = np.repeat(
+        cum[starts] - n_s[starts], np.diff(np.r_[starts, len(pid_s)])
+    )
+    reach = np.flatnonzero((cum - base) >= kreq_row[order])
+    rstar = np.full(nseg, np.inf)
+    if len(reach):
+        first = reach[np.r_[True, pid_s[reach[1:]] != pid_s[reach[:-1]]]]
+        rstar[pid_s[first]] = _key_ceiling(key[order[first]], shift)
+    return rstar
+
+
 def _rstar_np(pid, mind, maxd, n, kreq_row):
-    """Surviving pair indices under the per-probe R* rule (twin of
-    _rstar_filter): order each probe's cells by maxd, R* = smallest
-    maxd whose running count reaches k, keep mind <= R* (all cells
-    kept when the corpus never reaches k — R* stays +inf)."""
+    """Surviving pair indices (ascending) under the per-probe R* rule
+    (twin of _rstar_filter): R* = the smallest maxd whose running count
+    over the probe's cells in maxd order reaches k (_rstar_values),
+    keep mind <= R* (all cells kept when the corpus never reaches k —
+    R* stays +inf). R* may exceed the exact one by one key quantum,
+    which keeps a superset: pruning stays sound."""
     import numpy as np
 
     if len(pid) == 0:
         return np.empty(0, dtype=np.int64)
-    order = np.lexsort((maxd, pid))
-    pid_s = pid[order]
-    maxd_s = maxd[order]
-    n_s = n[order]
-    new_seg = np.empty(len(pid_s), dtype=bool)
-    new_seg[0] = True
-    np.not_equal(pid_s[1:], pid_s[:-1], out=new_seg[1:])
-    seg_id = np.cumsum(new_seg) - 1
-    cum = np.cumsum(n_s)
-    starts = np.flatnonzero(new_seg)
-    seg_len = np.diff(np.r_[starts, len(pid_s)])
-    base = np.repeat(cum[starts] - n_s[starts], seg_len)
-    reach = (cum - base) >= kreq_row[order]
-    rstar_row = np.where(reach, maxd_s, np.inf)
-    rstar_seg = np.full(len(starts), np.inf)
-    np.minimum.at(rstar_seg, seg_id, rstar_row)
-    keep = mind[order] <= rstar_seg[seg_id]
-    return order[keep]
+    return np.flatnonzero(mind <= _rstar_values(pid, maxd, n, kreq_row)[pid])
 
 
 def _ranges_gather(starts, ends):
@@ -1054,8 +1100,7 @@ def _make_cascade_prune(bc, out_cols: list[str]):
             attrs = tuple(np.tile(a, P) for a in attrs0)
             for i, lv in enumerate(chain):
                 a_lo, a_hi = _bounds_fast_np(
-                    lon[pid], lat[pid],
-                    sin_pb[pid], cos_pb[pid], tan_pb[pid], attrs,
+                    lon[pid], sin_pb[pid], cos_pb[pid], tan_pb[pid], attrs
                 )
                 keep = _rstar_np(pid, a_lo, a_hi, nn, kreq[pid])
                 pid, cell = pid[keep], cell[keep]
@@ -1082,34 +1127,59 @@ def _make_cascade_prune(bc, out_cols: list[str]):
     return prune
 
 
-def _rank_keep_mask(qid, dist, gk):
-    """Boolean keep-mask of rows whose distance min-rank within their
-    query group is < gk (a scalar, or a per-ROW k array — the union
-    kernel passes each row's own k_req, which keeps strictly fewer
-    rows than the global max k), ties at the boundary ALL retained — a
-    provable SUPERSET of the exact per-query top-k, computed with one
-    numeric lexsort (object qid arrays sort fine, just slower). Shared
-    by the small-batch _score_partial combiner and the bulk
-    union-score kernel so the tie convention can never desynchronize."""
+def _rank_keep_seg(code, nseg: int, dist, k):
+    """Boolean keep-mask over rows grouped by dense segment codes
+    (0 <= code < nseg): keep a row when its packed key (_packed_keys)
+    is <= its segment's k-th smallest key, read from ONE np.sort of the
+    keys at the segment start found by searchsorted. `k` is a scalar
+    or a per-ROW integer array (null → 0); k <= 0 keeps nothing, and a
+    segment with fewer than k rows keeps all of them.
+
+    Keys round values down monotonically, so at most k-1 keys of a
+    segment lie below the key of any row whose exact distance min-rank
+    is < k: the kept set is a SUPERSET of the exact rank-min<k set, the
+    same set whenever values differ by more than the key quantum, and
+    every boundary tie is kept."""
     import numpy as np
 
-    n = len(qid)
-    order = np.lexsort((dist, qid))
-    qs, ds = qid[order], dist[order]
-    pos = np.arange(n)
-    grp_start = np.empty(n, dtype=bool)
-    grp_start[0] = True
-    np.not_equal(qs[1:], qs[:-1], out=grp_start[1:])
-    grp_first = np.maximum.accumulate(np.where(grp_start, pos, 0))
-    run_start = grp_start.copy()
-    run_start[1:] |= ds[1:] != ds[:-1]
-    run_first = np.maximum.accumulate(np.where(run_start, pos, 0))
-    rank_min = run_first - grp_first
-    gk_sorted = gk[order] if isinstance(gk, np.ndarray) else gk
-    keep_sorted = rank_min < gk_sorted
-    keep = np.empty(n, dtype=bool)
-    keep[order] = keep_sorted
-    return keep
+    n = len(code)
+    if n == 0:
+        return np.zeros(0, dtype=bool)
+    key, shift = _packed_keys(code, nseg, dist)
+    s = np.sort(key)
+    starts = np.searchsorted(
+        s, np.arange(nseg, dtype=np.uint64) << np.uint64(64 - shift)
+    )
+    counts = np.diff(np.r_[starts, n])
+    # the k-th key of a segment, or its last one when it holds fewer
+    # than k rows (empty segments are never looked up)
+    if np.ndim(k) == 0:
+        k = int(k)
+        if k <= 0:
+            return np.zeros(n, dtype=bool)
+        kth = s[np.maximum(starts + np.minimum(k, counts) - 1, 0)]
+        return key <= kth[code]
+    kk = np.asarray(k)
+    if kk.dtype.kind == "f":
+        kk = np.nan_to_num(kk, nan=0.0).astype(np.int64)
+    kth = s[starts[code] + np.clip(kk, 1, counts[code]) - 1]
+    return (kk > 0) & (key <= kth)
+
+
+def _rank_keep_mask(qid, dist, k):
+    """Boolean keep-mask of rows whose distance min-rank within their
+    query group is < k (a scalar or a per-ROW k array), ties at the
+    boundary ALL retained — a provable SUPERSET of the exact per-query
+    top-k. Query ids (numeric or object) become dense segment codes via
+    np.unique, then _rank_keep_seg ranks with one packed-key sort. The
+    small-batch _score_partial combiner, the brute-force point kernel
+    and the cosine top-k kernel share it, and the bulk union-score
+    kernel calls _rank_keep_seg on its own codes, so the tie convention
+    can never desynchronize."""
+    import numpy as np
+
+    uniq, code = np.unique(qid, return_inverse=True)
+    return _rank_keep_seg(code, len(uniq), dist, k)
 
 
 # expansion chunk for the union-score kernel: bound the in-flight
@@ -1128,18 +1198,23 @@ UNION_SCORE_CHUNK = 4_000_000
 UNION_SCORE_PARENT_DROP = 2
 
 
-def _make_union_score(gk: int):
+def _make_union_score():
     """mapInArrow closure for knn_join's bulk scoring path: one
     cell-hashed partition holds BOTH the corpus members (side=0: cell,
     image_id, slon, slat) and the probe candidates (side=1: cell,
     query_id, plon, plat, k_req) for its cells; the kernel equi-joins
     them in numpy (sort members by cell + searchsorted ranges), scores
     with the identical haversine kernel the brute oracle path uses,
-    and emits only the per-task rank<gk superset — the JVM boundary
+    and emits only the per-task rank<k_req superset — the JVM boundary
     carries each input row once instead of the joined blow-up, and the
-    final exact aggregation receives ≤ queries-in-task × gk rows.
-    Pair expansion runs in bounded chunks with the same
-    doubling-compaction idea as _score_partial."""
+    final exact aggregation receives ≤ queries-in-task × k rows.
+
+    Materialisation is late: the expanded pairs stay numeric
+    (candidate row, member row, dist) arrays through the bounded
+    doubling-compaction loop (the same idea as _score_partial), ranked
+    by _rank_keep_seg on segment codes taken once from the candidate
+    rows (the small side); query_id, k_req and image_id are gathered
+    only for the surviving pairs."""
 
     def score(batches):
         import numpy as np
@@ -1180,11 +1255,20 @@ def _make_union_score(gk: int):
         pcell = p.column("cell").to_numpy(zero_copy_only=False)
         plon = p.column("plon").to_numpy(zero_copy_only=False)
         plat = p.column("plat").to_numpy(zero_copy_only=False)
-        qid = p.column("query_id").to_numpy(zero_copy_only=False)
         kreq = p.column("k_req").to_numpy(zero_copy_only=False)
+        uniq, pcode = np.unique(
+            p.column("query_id").to_numpy(zero_copy_only=False),
+            return_inverse=True,
+        )
         lo = np.searchsorted(mc_s, pcell, "left")
         hi = np.searchsorted(mc_s, pcell, "right")
         counts = hi - lo
+
+        def compact(parts):
+            row, mem, dist = (np.concatenate(a) for a in zip(*parts))
+            keep = _rank_keep_seg(pcode[row], len(uniq), dist, kreq[row])
+            return row[keep], mem[keep], dist[keep]
+
         # chunk probe rows so Σ counts per chunk stays bounded
         cum = np.cumsum(counts)
         acc: list = []
@@ -1204,42 +1288,23 @@ def _make_union_score(gk: int):
                 dist = geo.haversine_m(
                     plon[rep], plat[rep], mlon[gat], mlat[gat]
                 )
-                img_idx = order_m[gat]
-                acc.append(
-                    pa.table(
-                        {
-                            "query_id": pa.array(qid[rep]).cast(
-                                p.schema.field("query_id").type
-                            ),
-                            "k_req": pa.array(kreq[rep]).cast(
-                                p.schema.field("k_req").type
-                            ),
-                            "image_id": m.column("image_id").take(
-                                pa.array(img_idx)
-                            ),
-                            "dist_m": pa.array(dist, pa.float64()),
-                        }
-                    )
-                )
+                acc.append((rep, order_m[gat], dist))
                 rows += len(gat)
                 if rows >= max(UNION_SCORE_CHUNK, 2 * last) and len(acc) > 1:
-                    t = pa.concat_tables(acc)
-                    keep = _rank_keep_mask(
-                        t.column("query_id").to_numpy(zero_copy_only=False),
-                        t.column("dist_m").to_numpy(zero_copy_only=False),
-                        t.column("k_req").to_numpy(zero_copy_only=False),
-                    )
-                    acc = [t.filter(pa.array(keep))]
-                    last = rows = acc[0].num_rows
+                    acc = [compact(acc)]
+                    last = rows = len(acc[0][0])
             start = end
         if acc:
-            t = pa.concat_tables(acc)
-            keep = _rank_keep_mask(
-                t.column("query_id").to_numpy(zero_copy_only=False),
-                t.column("dist_m").to_numpy(zero_copy_only=False),
-                t.column("k_req").to_numpy(zero_copy_only=False),
+            row, mem, dist = compact(acc)
+            out = pa.table(
+                {
+                    "query_id": p.column("query_id").take(pa.array(row)),
+                    "k_req": p.column("k_req").take(pa.array(row)),
+                    "image_id": m.column("image_id").take(pa.array(mem)),
+                    "dist_m": pa.array(dist, pa.float64()),
+                }
             )
-            yield from t.filter(pa.array(keep)).to_batches()
+            yield from out.to_batches()
 
     return score
 
@@ -1586,7 +1651,7 @@ def knn_join(
             _parent_cell_col(F.col("cell"), UNION_SCORE_PARENT_DROP)
         )
         pruned = both.mapInArrow(
-            _make_union_score(gk),
+            _make_union_score(),
             schema=T.StructType(
                 [
                     T.StructField("query_id", qf2["query_id"]),
@@ -1596,8 +1661,6 @@ def knn_join(
                 ]
             ),
         )
-        if os.environ.get("MOSAIC_KNN_DEBUG"):
-            _KNN_DEBUG.update(cand=cand, joined=both, pruned=pruned)
         topk = pruned.groupBy("query_id").agg(
             F.slice(
                 F.sort_array(
@@ -1619,14 +1682,12 @@ def knn_join(
         )
 
     joined = sc.join(probe_bcast(cand), ["scell", "cell"])
-    if os.environ.get("MOSAIC_KNN_DEBUG"):
-        _KNN_DEBUG.update(cand=cand, joined=joined)
     # ---- fused score + partial top-k (r5, replacing the salted
     # collect_list two-phase of r4): ONE Arrow stage computes the exact
     # numpy haversine (the identical geometry.haversine_m kernel the
     # brute oracle path uses — bit-identical distances) AND reduces each
     # input partition to its local top-gk rows per query, vectorized
-    # (sort + groupby-head, the topk_by_key combiner). Properties that
+    # (one packed-key sort, _rank_keep_mask). Properties that
     # matter at scale:
     #   * per-task OUTPUT is ≤ |queries-in-task| × gk rows, so the
     #     shuffle to the final merge is tiny regardless of candidate
@@ -1701,9 +1762,9 @@ def knn_join(
 
     # output schema DERIVED from the inputs (r5 review): a hardcoded
     # "query_id long" crashed mid-job for int32/string probe ids that
-    # knn_bruteforce (the documented oracle twin) accepts; numpy's
-    # lexsort orders object arrays fine, just slower — the id type is
-    # the caller's choice
+    # knn_bruteforce (the documented oracle twin) accepts;
+    # _rank_keep_mask codes object ids with np.unique (fine, just
+    # slower) — the id type is the caller's choice
     from pyspark.sql import types as T
 
     in_fields = {f.name: f.dataType for f in scored_in.schema.fields}
@@ -2135,79 +2196,3 @@ def assets_for_tiles(
         "ty",
         F.coalesce("assets", F.array().cast("array<string>")).alias("assets"),
     )
-
-
-def topk_by_key(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    k: int,
-) -> DataFrame:
-    """Exact top-k rows per key with a MANUAL map-side combine.
-
-    collect_list-based top-k shuffles every input row (partial
-    collect_list still carries them all); this op cuts the exchange to
-    ≤ partitions x keys x k rows: an Arrow stage emits each input
-    partition's local top-k per key (pandas nsmallest semantics over
-    the lexicographic order_cols), then one small groupBy finalizes.
-    Ascending order; order_cols must start with the ranking measure and
-    end with a total tiebreak. Returns key_cols + order_cols + rank.
-
-    Null keys are kept (groupby dropna=False, matching Spark groupBy).
-    order_cols must be non-null and non-NaN: Spark orders null < values
-    < NaN while pandas cannot distinguish null from NaN, so no single
-    na_position reproduces Spark's order — rows violating this raise.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from collections.abc import Iterator
-
-    src = df.select(*key_cols, *order_cols)
-    schema = T.StructType([src.schema[c] for c in key_cols + order_cols])
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def compact(chunks):
-            m = pd.concat(chunks, ignore_index=True)
-            return (
-                m.sort_values(order_cols, kind="mergesort")
-                .groupby(key_cols, sort=False, dropna=False)
-                .head(k)
-            )
-
-        # doubling compaction bounds memory to ≈ 2 × (keys-in-task × k)
-        # instead of buffering every batch head (see knn_join's
-        # _score_partial — same combiner, same rationale)
-        acc: list[pd.DataFrame] = []
-        rows = 0
-        last = 0
-        for pdf in batches:
-            if pdf[order_cols].isna().any().any():
-                raise ValueError(
-                    "topk_by_key: null/NaN in order_cols "
-                    f"{order_cols} — ordering would diverge from Spark"
-                )
-            acc.append(
-                pdf.sort_values(order_cols, kind="mergesort")
-                .groupby(key_cols, sort=False, dropna=False)
-                .head(k)
-            )
-            rows += len(acc[-1])
-            if rows >= max(1_000_000, 2 * last) and len(acc) > 1:
-                acc = [compact(acc)]
-                last = rows = len(acc[0])
-        if acc:
-            yield compact(acc)
-
-    pruned = src.mapInPandas(partial, schema=schema)
-    sel = F.struct(*[F.col(c) for c in order_cols]).alias("sel")
-    topk = pruned.groupBy(*key_cols).agg(
-        F.slice(F.sort_array(F.collect_list(sel)), 1, k).alias("nn")
-    )
-    out = topk.select(
-        *key_cols, F.posexplode("nn").alias("pos", "nn")
-    )
-    cols = [F.col(c) for c in key_cols]
-    cols.append((F.col("pos") + 1).alias("rank"))
-    cols.extend(F.col(f"nn.{c}").alias(c) for c in order_cols)
-    return out.select(*cols)

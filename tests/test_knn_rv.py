@@ -313,7 +313,7 @@ def test_knn_rect_bounds_bracket_sampled_distances():
             lat = float(rng.choice([-89.95, 89.95]))
         p = np.radians(lat)
         a_lo, a_hi = ops._bounds_fast_np(
-            np.array([lon]), np.array([lat]),
+            np.array([lon]),
             np.array([np.sin(p)]), np.array([np.cos(p)]),
             np.array([np.tan(p)]), ops._cell_attrs_np(cell, level),
         )

@@ -352,65 +352,6 @@ def test_coverage_quadkeys_semi_join(spark, scenes_df):
     assert got == set(qks)
 
 
-def test_topk_by_key_matches_collect_list(spark):
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    rng = np.random.default_rng(3)
-    rows = [
-        (int(k), float(v), int(i))
-        for i, (k, v) in enumerate(
-            zip(rng.integers(0, 20, 5000), rng.uniform(0, 1, 5000))
-        )
-    ]
-    df = spark.createDataFrame(rows, ["key", "val", "id"]).repartition(16)
-    got = {
-        (r["key"], r["rank"]): (r["val"], r["id"])
-        for r in ops.topk_by_key(df, ["key"], ["val", "id"], 3).collect()
-    }
-    exp_rows = (
-        df.groupBy("key")
-        .agg(
-            F.slice(
-                F.sort_array(F.collect_list(F.struct("val", "id"))), 1, 3
-            ).alias("nn")
-        )
-        .select("key", F.posexplode("nn").alias("pos", "nn"))
-        .collect()
-    )
-    exp = {
-        (r["key"], r["pos"] + 1): (r["nn"]["val"], r["nn"]["id"])
-        for r in exp_rows
-    }
-    assert got == exp
-
-
-def test_topk_by_key_null_keys_kept_and_nan_order_rejected(spark):
-    """Null keys group like Spark groupBy (not silently dropped); NaN in
-    an order column is rejected rather than mis-ordered (ADVICE r1)."""
-    from pyspark.sql import Row
-
-    df = spark.createDataFrame(
-        [
-            Row(key=None, val=2.0, id=1),
-            Row(key=None, val=1.0, id=2),
-            Row(key="a", val=3.0, id=3),
-        ]
-    )
-    got = sorted(
-        ((r["key"], r["rank"], r["id"])
-         for r in ops.topk_by_key(df, ["key"], ["val", "id"], 2).collect()),
-        key=lambda t: (t[0] or "", t[1]),
-    )
-    assert (None, 1, 2) in got and (None, 2, 1) in got and ("a", 1, 3) in got
-
-    bad = spark.createDataFrame([Row(key="a", val=float("nan"), id=1)])
-    import pytest as _pt
-
-    with _pt.raises(Exception, match="order_cols"):
-        ops.topk_by_key(bad, ["key"], ["val", "id"], 1).collect()
-
-
 def test_checkpoint_hash_tracks_content_rewrite(spark, tmp_path):
     """Rewriting a source file in place (same path, new bytes) must
     change the lineage hash so resume doesn't reuse stale prefixes."""
