@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from . import udfs
@@ -342,9 +342,6 @@ def coverage_quadkeys(
 
 
 # ------------------------------------------------------------------- kNN
-EARTH_R_M = 6371008.8
-
-
 KNN_MIN_LEVEL = 3
 # cap for the occupancy-verified bump (knn_index): the stats dim is
 # bounded by NONEMPTY cells (≤ corpus rows) at any level, and the
@@ -384,7 +381,7 @@ class KnnIndex:
 
     level: int
     cent: DataFrame  # (image_id, slon, slat, cell, scell)
-    stats: DataFrame  # (cell, n_in_cell, cw, cs, ce, cn), checkpointed
+    stats: DataFrame  # (cell, n_in_cell), checkpointed
     # lazily-filled _cascade_prep result (bounded numpy rollups/CSRs
     # for the in-kernel coarse cascade): repeated serve batches reuse
     # one driver-side collect instead of re-aggregating per batch
@@ -425,30 +422,6 @@ def _tile_xy_cols(lon: Column, lat: Column, level: int) -> tuple[Column, Column]
         clamp(F.floor(xn * z2).cast("long")),
         clamp(F.floor(yn * z2).cast("long")),
     )
-
-
-def _cell_rect_cols(key: str, zoom: int) -> list[Column]:
-    """Native inverse: (x<<30)|y key at `zoom` → rect columns
-    (cw, cs, ce, cn) via the mercator gudermannian. The top/bottom
-    tile rows also receive points whose centroid lat exceeds the
-    mercator clamp (±85.05..), so those rects stretch to the poles
-    — every point mapped into a cell must lie INSIDE its rect or
-    maxd is not a valid upper bound and pruning goes wrong."""
-    import math
-
-    zz = float(1 << zoom)
-    nm = (1 << zoom) - 1
-    x = F.shiftright(F.col(key), 30)
-    y = F.col(key) - F.shiftleft(x, 30)
-    merc = lambda yy: F.degrees(  # noqa: E731
-        F.atan(F.sinh(math.pi * (1.0 - 2.0 * yy / zz)))
-    )
-    return [
-        (x / zz * 360.0 - 180.0).alias("cw"),
-        F.when(y == nm, F.lit(-90.0)).otherwise(merc(y + 1)).alias("cs"),
-        ((x + 1) / zz * 360.0 - 180.0).alias("ce"),
-        F.when(y == 0, F.lit(90.0)).otherwise(merc(y)).alias("cn"),
-    ]
 
 
 def _scene_centroids(scenes: DataFrame) -> DataFrame:
@@ -564,8 +537,7 @@ def knn_index(
                 if rw_by_lv.get(level, 0.0) <= 2.0 * target:
                     break
                 level += 1
-        # final stats by rollup — no second corpus-wide aggregation;
-        # rect columns derive from the key alone
+        # final stats by rollup — no second corpus-wide aggregation
         stats = (
             fine.groupBy(
                 _parent_cell_col(
@@ -573,14 +545,12 @@ def knn_index(
                 ).alias("cell")
             )
             .agg(F.sum("n").alias("n_in_cell"))
-            .select("cell", "n_in_cell", *_cell_rect_cols("cell", level))
             .localCheckpoint(eager=True)
         )
     else:
         stats = (
             cent.groupBy(key_at(level).alias("cell"))
             .agg(F.count("*").alias("n_in_cell"))
-            .select("cell", "n_in_cell", *_cell_rect_cols("cell", level))
             # stats is bounded (≤ 4^level rows) but its lineage scans
             # the whole corpus; several downstream branches reference
             # it, so materialize the small result once in executor
@@ -722,15 +692,13 @@ def knn_index_load(spark, path: str) -> KnnIndex:
     return idx
 
 
-# ---- numpy twins of the cascade bound math (r6): the coarse cascade
-# stages moved from DataFrame cross-join + window-sort into ONE
-# Arrow-batched mapInPandas kernel (see knn_join docstring).
-# _cell_rect_np mirrors _cell_rect_cols; the kernel bounds
-# (_bounds_fast_np, the bracket pytest's subject) are the mathematical
-# min/max rect distances of _with_bounds in haversine-argument space
-# over per-cell precomputed trig. Pruning EXACTNESS does not require
-# bit-equality between them (any valid lower/upper bound preserves
-# the R* guarantee — the margins absorb FP drift either way).
+# ---- kNN pruning math, numpy only: knn_join's cascade kernel and its
+# fine refinement both prune (probe, cell) pairs with _prune_step —
+# the rect bounds of _bounds_fast_np (the bracket pytest's subject)
+# over per-cell trig from _cell_attrs_np, then the per-probe R* rule
+# of _rstar_np. Pruning EXACTNESS needs only valid bounds: any lower/
+# upper bracket preserves the R* guarantee, and the margins in
+# _bounds_fast_np absorb FP rounding.
 FINE_COLLECT_ROWS = 300_000  # cap for collecting fine stats driver-side
 # in-kernel refinement step: 1 level (4 children/parent). r6 used 2
 # (16 children); the 16× expansion made the mid-chain pair tables the
@@ -751,8 +719,12 @@ def _parent_np(cells: "np.ndarray", drop: int) -> "np.ndarray":
 
 
 def _cell_rect_np(cells: "np.ndarray", level: int):
-    """(cw, cs, ce, cn) of packed keys at `level` (twin of
-    _cell_rect_cols, incl. the pole-stretched edge rows)."""
+    """(cw, cs, ce, cn) degree rects of packed (x<<30)|y keys at
+    `level` via the mercator gudermannian. The top/bottom tile rows
+    also receive centroids beyond the mercator clamp (±85.05..), so
+    their rects stretch to the poles — every point mapped into a cell
+    must lie INSIDE its rect or the upper bound is invalid and pruning
+    goes wrong."""
     import math
 
     import numpy as np
@@ -797,9 +769,9 @@ def _cell_attrs_np(cells: "np.ndarray", level: int):
 def _bounds_fast_np(lon, sin_p, cos_p, tan_p, attrs):
     """(a_lo, a_hi) bounds in HAVERSINE-ARGUMENT space (the monotone
     a = sin²(Δφ/2) + cosφ₁cosφ₂sin²(Δλ/2) of the great-circle
-    distance) — the same mathematical min/max rect bounds as
-    _with_bounds, reformulated so the per-pair work is two sin() calls
-    plus algebra over per-cell/per-probe precomputed trig:
+    distance) from a probe to the nearest and farthest point of a
+    cell rect, with the per-pair work at two sin() calls plus algebra
+    over per-cell/per-probe precomputed trig:
 
       * sin²(Δφ/2) = (1 − (cosφ₁cosφ₂ + sinφ₁sinφ₂))/2 — products of
         precomputed values, no per-pair transcendental;
@@ -819,9 +791,8 @@ def _bounds_fast_np(lon, sin_p, cos_p, tan_p, attrs):
     cancellation in (1−cosΔφ)/2 is bounded by the term errors, not
     amplified), so 1e-9 relative + 1e-14 absolute keeps ≥10× slack —
     a_lo never exceeds the true min, a_hi never undercuts the true
-    max, which is all R* exactness needs (bit-equality with the JVM
-    twin was never required; any valid bracket preserves the
-    superset)."""
+    max, which is all R* exactness needs (any valid bracket preserves
+    the superset)."""
     import numpy as np
 
     cw, ce, sin_s, cos_s, sin_n, cos_n = attrs
@@ -841,34 +812,24 @@ def _bounds_fast_np(lon, sin_p, cos_p, tan_p, attrs):
             cos_p * cos_c
         ) * t2
 
-    def three_min(t2):
+    def three(t2, pick):
+        # pick (fmin/fmax) over the clamped stationary latitude and the
+        # two edge latitudes
         c = 1.0 - 2.0 * t2
         sin_st, cos_st = stationary(c)
         sin_cl = np.minimum(np.maximum(sin_st, sin_s), sin_n)
         cos_cl = np.where(
             sin_st < sin_s, cos_s, np.where(sin_st > sin_n, cos_n, cos_st)
         )
-        return np.fmin(
-            np.fmin(cand_a(sin_cl, cos_cl, t2), cand_a(sin_s, cos_s, t2)),
-            cand_a(sin_n, cos_n, t2),
-        )
-
-    def three_max(t2):
-        c = 1.0 - 2.0 * t2
-        sin_st, cos_st = stationary(c)
-        sin_cl = np.minimum(np.maximum(sin_st, sin_s), sin_n)
-        cos_cl = np.where(
-            sin_st < sin_s, cos_s, np.where(sin_st > sin_n, cos_n, cos_st)
-        )
-        return np.fmax(
-            np.fmax(cand_a(sin_cl, cos_cl, t2), cand_a(sin_s, cos_s, t2)),
+        return pick(
+            pick(cand_a(sin_cl, cos_cl, t2), cand_a(sin_s, cos_s, t2)),
             cand_a(sin_n, cos_n, t2),
         )
 
     inside = (lon >= cw) & (lon <= ce)
     dl = np.where(inside, 0.0, np.minimum(wrapdeg(lon, cw), wrapdeg(lon, ce)))
     sdl = np.sin(np.radians(dl) / 2.0)
-    a_min = three_min(sdl * sdl)
+    a_min = three(sdl * sdl, np.fmin)
 
     anti = (lon + 360.0) % 360.0 - 180.0
     anti_in = (anti >= cw) & (anti <= ce)
@@ -876,7 +837,7 @@ def _bounds_fast_np(lon, sin_p, cos_p, tan_p, attrs):
         anti_in, 180.0, np.maximum(wrapdeg(lon, cw), wrapdeg(lon, ce))
     )
     sdlx = np.sin(np.radians(dl_max) / 2.0)
-    a_max = three_max(sdlx * sdlx)
+    a_max = three(sdlx * sdlx, np.fmax)
     return a_min * (1.0 - 1e-9) - 1e-14, a_max * (1.0 + 1e-9) + 1e-14
 
 
@@ -949,17 +910,41 @@ def _rstar_values(pid, maxd, n, kreq_row):
 
 
 def _rstar_np(pid, mind, maxd, n, kreq_row):
-    """Surviving pair indices (ascending) under the per-probe R* rule
-    (twin of _rstar_filter): R* = the smallest maxd whose running count
-    over the probe's cells in maxd order reaches k (_rstar_values),
-    keep mind <= R* (all cells kept when the corpus never reaches k —
-    R* stays +inf). R* may exceed the exact one by one key quantum,
-    which keeps a superset: pruning stays sound."""
+    """Surviving pair indices (ascending) under the per-probe R* rule:
+    R* = the smallest maxd whose running count over the probe's cells
+    in maxd order reaches k (_rstar_values), keep mind <= R* (all
+    cells kept when the corpus never reaches k — R* stays +inf). R*
+    may exceed the exact one by one key quantum, which keeps a
+    superset: pruning stays sound."""
     import numpy as np
 
     if len(pid) == 0:
         return np.empty(0, dtype=np.int64)
     return np.flatnonzero(mind <= _rstar_values(pid, maxd, n, kreq_row)[pid])
+
+
+def _probe_trig(lon, lat):
+    """Per-probe (lon, sinφ, cosφ, tanφ) for _bounds_fast_np (tan via
+    the quotient, so no extra transcendental)."""
+    import numpy as np
+
+    p = np.radians(lat)
+    sin_p, cos_p = np.sin(p), np.cos(p)
+    return lon, sin_p, cos_p, sin_p / cos_p
+
+
+def _prune_step(pid, trig, kreq, attrs, n):
+    """One pruning step over (probe, cell) pairs: _bounds_fast_np of
+    each pair's probe against its cell rect, then the per-probe R*
+    rule (_rstar_np). `pid` holds dense probe codes into the per-probe
+    `trig` (_probe_trig) and `kreq`; `attrs` (_cell_attrs_np) and the
+    scene counts `n` are per pair. Returns the surviving pair indices,
+    ascending."""
+    lon, sin_p, cos_p, tan_p = trig
+    a_lo, a_hi = _bounds_fast_np(
+        lon[pid], sin_p[pid], cos_p[pid], tan_p[pid], attrs
+    )
+    return _rstar_np(pid, a_lo, a_hi, n, kreq[pid])
 
 
 def _ranges_gather(starts, ends):
@@ -1087,22 +1072,15 @@ def _make_cascade_prune(bc, out_cols: list[str]):
             lon = pdf["lon"].to_numpy(np.float64)
             lat = pdf["lat"].to_numpy(np.float64)
             kreq = pdf["k_req"].to_numpy(np.int64)
-            # per-probe trig, computed once per batch (tan via the
-            # quotient so no extra transcendental)
-            p1 = np.radians(lat)
-            sin_pb, cos_pb = np.sin(p1), np.cos(p1)
-            tan_pb = sin_pb / cos_pb
+            trig = _probe_trig(lon, lat)
             c0 = len(cells0)
             pid = np.repeat(np.arange(P, dtype=np.int64), c0)
             cell = np.tile(cells0, P)
             nn = np.tile(n0, P)
             # per-pair gathered cell attrs (entry: tiled level arrays)
             attrs = tuple(np.tile(a, P) for a in attrs0)
-            for i, lv in enumerate(chain):
-                a_lo, a_hi = _bounds_fast_np(
-                    lon[pid], sin_pb[pid], cos_pb[pid], tan_pb[pid], attrs
-                )
-                keep = _rstar_np(pid, a_lo, a_hi, nn, kreq[pid])
+            for i in range(len(chain)):
+                keep = _prune_step(pid, trig, kreq, attrs, nn)
                 pid, cell = pid[keep], cell[keep]
                 if i == len(chain) - 1:
                     break
@@ -1125,6 +1103,52 @@ def _make_cascade_prune(bc, out_cols: list[str]):
             yield pd.DataFrame({c: out[c] for c in out_cols})
 
     return prune
+
+
+def _make_fine_refine(level: int, out_cols: list[str]):
+    """mapInArrow closure for the refinement past the cascade cap: its
+    input is the (probe, fine cell, n_in_cell) pairs under each
+    probe's surviving level-cap cells, clustered by query_id, and each
+    probe's pairs get one _prune_step at `level`. A probe's pairs may
+    straddle Arrow batches, so the trailing probe of every batch is
+    carried into the next: memory stays at one batch plus one probe's
+    pairs."""
+
+    def refine(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        def prune(tbl):
+            def col(c):
+                return tbl.column(c).to_numpy(zero_copy_only=False)
+
+            qid = col("query_id")
+            new = np.r_[True, qid[1:] != qid[:-1]]
+            first = np.flatnonzero(new)
+            keep = _prune_step(
+                np.cumsum(new) - 1,
+                _probe_trig(col("lon")[first], col("lat")[first]),
+                col("k_req")[first],
+                _cell_attrs_np(col("cell"), level),
+                col("n_in_cell"),
+            )
+            return tbl.select(out_cols).take(pa.array(keep)).to_batches()
+
+        carry: list = []
+        for rb in batches:
+            tbl = pa.Table.from_batches(carry + [rb])
+            if tbl.num_rows == 0:
+                continue
+            qid = tbl.column("query_id").to_numpy(zero_copy_only=False)
+            head = np.flatnonzero(qid != qid[-1])
+            last = int(head[-1]) + 1 if len(head) else 0
+            if last:
+                yield from prune(tbl.slice(0, last))
+            carry = tbl.slice(last).to_batches()
+        if carry:
+            yield from prune(pa.Table.from_batches(carry))
+
+    return refine
 
 
 def _rank_keep_seg(code, nseg: int, dist, k):
@@ -1180,6 +1204,84 @@ def _rank_keep_mask(qid, dist, k):
 
     uniq, code = np.unique(qid, return_inverse=True)
     return _rank_keep_seg(code, len(uniq), dist, k)
+
+
+def _make_score_partial(gk: int):
+    """mapInArrow closure for knn_join's small-batch scoring: ONE Arrow
+    stage computes the exact numpy haversine (the identical
+    geometry.haversine_m kernel the brute oracle path uses —
+    bit-identical distances) over the joined (candidate, member) rows
+    AND reduces each input partition to its local top-gk rows per
+    query, vectorized (one packed-key sort, _rank_keep_mask).
+    Properties that matter at scale:
+      * per-task OUTPUT is ≤ |queries-in-task| × gk rows, so the
+        shuffle to the final merge is tiny regardless of candidate
+        fan-out — no aggregation key ever materializes a cell's whole
+        candidate list;
+      * a hot task (probe batches concentrate in few storage-region
+        file splits) streams its rows through numpy at vector speed
+        instead of building millions of per-row agg objects — the
+        measured 10k-probe GC storm came from exactly that."""
+
+    def score_partial(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        from . import geometry as geo
+
+        def rank_min_keep(tbl: "pa.Table") -> "pa.Table":
+            # keep every row whose distance ranks ≤ gk within its query
+            # (ties at the boundary ALL retained) — a provable SUPERSET
+            # of the exact top-gk (see _rank_keep_mask): no pandas
+            # frames and no Python string materialization ever touch
+            # the multi-million-row stream (image_id stays an Arrow
+            # buffer end to end); the final JVM aggregation applies the
+            # exact (dist_m, image_id) total order to the tiny superset
+            keep = _rank_keep_mask(
+                tbl.column("query_id").to_numpy(zero_copy_only=False),
+                tbl.column("dist_m").to_numpy(zero_copy_only=False),
+                gk,
+            )
+            return tbl.filter(pa.array(keep))
+
+        # bounded-memory accumulation (a hot task can stream tens of
+        # millions of candidate rows): raw batches buffer until the
+        # doubling threshold, then compact — amortized O(n log n) rank
+        # work with peak memory ≈ 2 × max(1M, queries-in-task × gk),
+        # never the full candidate stream
+        parts: list = []
+        rows = 0
+        floor_ = 1_000_000
+        last = 0
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            cols = {name: rb.column(name) for name in rb.schema.names}
+            dist = geo.haversine_m(
+                cols["lon"].to_numpy(zero_copy_only=False),
+                cols["lat"].to_numpy(zero_copy_only=False),
+                cols["slon"].to_numpy(zero_copy_only=False),
+                cols["slat"].to_numpy(zero_copy_only=False),
+            )
+            parts.append(
+                pa.table(
+                    {
+                        "query_id": cols["query_id"],
+                        "k_req": cols["k_req"],
+                        "image_id": cols["image_id"],
+                        "dist_m": pa.array(dist, pa.float64()),
+                    }
+                )
+            )
+            rows += rb.num_rows
+            if rows >= max(floor_, 2 * last) and len(parts) > 1:
+                parts = [rank_min_keep(pa.concat_tables(parts))]
+                last = rows = parts[0].num_rows
+        if parts:
+            out = rank_min_keep(pa.concat_tables(parts))
+            yield from out.to_batches()
+
+    return score_partial
 
 
 # expansion chunk for the union-score kernel: bound the in-flight
@@ -1328,16 +1430,17 @@ def knn_join(
     One-pass cell-stats pruning — no iteration, no driver-side loop:
 
       1. Scene centroids key to web-mercator cells at ``level``; a tiny
-         per-cell stats dim (count + exact tile bounds) is derived with
-         one groupBy. Nonempty cells are bounded by corpus geometry
-         (≤ 4^level), so the stats side broadcasts.
-      2. probes × stats: per pair, a provable LOWER bound on the
+         per-cell stats dim (cell, scene count) is derived with one
+         groupBy. Nonempty cells are bounded by corpus geometry
+         (≤ 4^level); the cell rects derive from the key alone.
+      2. per (probe, cell) pair, a provable LOWER bound on the
          distance from the probe to anywhere in the cell rect (wrapped
          lon clamp; the candidate latitudes on a meridian edge are its
          endpoints plus the stationary point atan(tan(lat)/cos(Δλ)) —
          the min over those is the exact point-to-spherical-rect
-         distance) and an UPPER bound (lower bound + meridian+parallel
-         traversal of the rect; triangle inequality).
+         distance) and an UPPER bound (the max over the same
+         candidates at the largest lon gap), both in haversine-argument
+         space (_bounds_fast_np).
       3. per probe, R* = the smallest upper bound whose running scene
          count reaches k (cells ordered by upper bound): ≥ k scenes
          provably lie within R*, so any cell whose lower bound exceeds
@@ -1350,23 +1453,25 @@ def knn_join(
          image_id) total-order top-k, pre-reduced per (probe, cell) so
          no hotspot cell concentrates in a single final-agg key.
 
-    Millimeter/1e-9-relative margins on both bounds absorb JVM-vs-numpy
-    trig ULP drift, so the pruning never excludes a true neighbor.
-    Stage 2's |probes| × |cells| pair table is the scaling knob: the
-    SAME pruning runs as a coarse-to-fine walk (2-level steps from
-    level 3/4 down) INSIDE one Arrow-batched mapInPandas kernel over
-    bounded rollups of the stats dim — exact at every step (parent
-    rects contain their children and counts aggregate), and no
-    |probes| × |cells| table ever reaches a shuffle (r6; the r5
-    DataFrame-stage chain shuffled ~60 GB at 1M probes). The kernel
-    descends to `level` itself when the fine stats dim fits
-    FINE_COLLECT_ROWS, else to the 4^9-bounded level-9 rollup with a
-    distributed pcell equi-join refining the rest.
+    1e-9-relative + 1e-14-absolute margins on both bounds absorb FP
+    rounding, so the pruning never excludes a true neighbor. Stage 2's
+    |probes| × |cells| pair table is the scaling knob: steps 2-3 run
+    as a coarse-to-fine walk (one-level steps from KNN_MIN_LEVEL down;
+    a single step when `level` ≤ KNN_MIN_LEVEL) INSIDE one
+    Arrow-batched mapInPandas kernel over bounded rollups of the stats
+    dim — exact at every step (parent rects contain their children
+    and counts aggregate), and no |probes| × |cells| table ever
+    reaches a shuffle (r6; the r5 DataFrame-stage chain shuffled
+    ~60 GB at 1M probes). The kernel descends to `level` itself when
+    the fine stats dim fits FINE_COLLECT_ROWS, else to the 4^9-bounded
+    level-9 rollup; the survivors' fine cells then join from the
+    distributed stats dim and a second Arrow kernel, grouped by probe,
+    runs the same pruning step at `level` (_make_fine_refine).
     """
     # element_at/slice ordinals must be INT (queries may carry k as long)
     kcol = (F.lit(k) if k is not None else F.col("k")).cast("int")
     # ONE aggregate job over the (narrow) probe table supplies the row
-    # count (broadcast-flip decision), the global max k (scoring
+    # count (scoring-path choice), the global max k (scoring
     # partial bound AND the auto-level k_hint) — merged so the probe
     # table is scanned once per call, not once per consumer
     prow = queries.agg(
@@ -1382,208 +1487,88 @@ def knn_join(
             index = knn_index(scenes, level=level)
     level, sc, stats = index.level, index.cent, index.stats
     # normalize probe lon into [-180, 180): haversine is 360-periodic
-    # (knn_bruteforce scores lon=190 correctly) but the rect lower bound
-    # below tests `cw <= lon <= ce` literally — an out-of-range probe
-    # could report a positive lower bound for the very cell it sits in
-    # and R* pruning would drop the true nearest cell.
+    # (knn_bruteforce scores lon=190 correctly) but the rect lower
+    # bound (_bounds_fast_np) tests `cw <= lon <= ce` literally — an
+    # out-of-range probe could report a positive lower bound for the
+    # very cell it sits in and R* pruning would drop the true nearest
+    # cell.
     lon_n = F.pmod(F.col("lon") + 180.0, F.lit(360.0)) - 180.0
     q = queries.select(
         "query_id", lon_n.alias("lon"), "lat", kcol.alias("k_req")
     )
-    # probe-side broadcast flip (r5 — VERDICT r4 #5): the scoring join
-    # force-broadcasts the pruned (probe, cell) pair table for dynamic
-    # partition pruning on a stored index — sound only while that table
-    # is bounded (|probes| × ~cells-per-probe). A 100k-probe batch
-    # would push a multi-hundred-MB broadcast through every executor,
-    # so past the limit the hint is dropped: the scoring join becomes a
-    # plain shuffle equi-join on (scell, cell) — the right plan when
-    # the probe batch itself is cluster-scale data. The flip consumes
-    # the probe-table aggregate computed once above (an eager job at
-    # plan-construction time — deliberate: gk and the join strategy
-    # must be known before the plan exists, and the probe table is the
-    # narrow side by contract).
-    probe_bcast = (
-        F.broadcast
-        if probe_rows <= KNN_PROBE_BROADCAST_LIMIT
-        else (lambda df: df)
-    )
-
-    # ---- distance bounds (all native trig → whole-stage codegen) ----
-    def _wrapdeg(a: Column, b: Column) -> Column:
-        # |a-b| wrapped into [0, 180] degrees
-        return F.abs(F.pmod(a - b + 540.0, F.lit(360.0)) - 180.0)
-
-    def _hav_m(phi_a: Column, phi_b: Column, dlam: Column) -> Column:
-        # haversine with lat/lon deltas already in radians
-        a = (
-            F.sin((phi_b - phi_a) / 2) * F.sin((phi_b - phi_a) / 2)
-            + F.cos(phi_a) * F.cos(phi_b) * F.sin(dlam / 2) * F.sin(dlam / 2)
-        )
-        return 2.0 * EARTH_R_M * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
-
-    def _with_bounds(pairs: DataFrame) -> DataFrame:
-        """Attach (mind, maxd) to a probes × cell-rect pair table with
-        (lon, lat, cw, cs, ce, cn) columns."""
-        inside_lon = (F.col("lon") >= F.col("cw")) & (
-            F.col("lon") <= F.col("ce")
-        )
-        dl = F.when(inside_lon, F.lit(0.0)).otherwise(
-            F.least(
-                _wrapdeg(F.col("lon"), F.col("cw")),
-                _wrapdeg(F.col("lon"), F.col("ce")),
-            )
-        )
-        DL = F.radians(dl)
-        p1 = F.radians(F.col("lat"))
-        s_r, n_r = F.radians(F.col("cs")), F.radians(F.col("cn"))
-        # stationary latitude of the point-to-meridian distance (NaN/Inf
-        # at cos(Δλ)=0 is harmless: Spark's least() sorts NaN last, and
-        # the two edge-latitude candidates are always evaluated)
-        phi_star = F.atan(F.tan(p1) / F.cos(DL))
-        phi_c = F.greatest(F.least(phi_star, n_r), s_r)
-        mind_raw = F.least(
-            _hav_m(p1, phi_c, DL), _hav_m(p1, s_r, DL), _hav_m(p1, n_r, DL)
-        )
-        # exact max distance to the rect (r6, twin of _bounds_fast_np —
-        # replaces the perimeter-sum diameter bound): monotone in Δλ,
-        # so evaluate at Δλ_max (180 when the probe's antimeridian sits
-        # inside the cell) over the max-stationary latitude and the two
-        # edges. greatest() sorts NaN last like least(), and the edge
-        # candidates are always finite.
-        anti = F.pmod(F.col("lon") + 360.0, F.lit(360.0)) - 180.0
-        anti_in = (anti >= F.col("cw")) & (anti <= F.col("ce"))
-        dl_max = F.when(anti_in, F.lit(180.0)).otherwise(
-            F.greatest(
-                _wrapdeg(F.col("lon"), F.col("cw")),
-                _wrapdeg(F.col("lon"), F.col("ce")),
-            )
-        )
-        DLX = F.radians(dl_max)
-        phi_star_x = F.atan(F.tan(p1) / F.cos(DLX))
-        phi_cx = F.greatest(F.least(phi_star_x, n_r), s_r)
-        maxd_raw = F.greatest(
-            _hav_m(p1, phi_cx, DLX),
-            _hav_m(p1, s_r, DLX),
-            _hav_m(p1, n_r, DLX),
-        )
-        return pairs.withColumn(
-            "mind", mind_raw * (1.0 - 1e-9) - 1e-3
-        ).withColumn("maxd", maxd_raw * (1.0 + 1e-9) + 1e-3)
-
-    def _rstar_filter(pairs: DataFrame, key: str, keep: list[str]) -> DataFrame:
-        """Per-probe pruning radius R* (two windows over one partition —
-        no rejoin): keep cells whose lower bound can still hold a top-k
-        scene. Corpus smaller than k → R* null → keep every cell."""
-        wcum = (
-            Window.partitionBy("query_id")
-            .orderBy("maxd", key)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        wall = Window.partitionBy("query_id").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        cum = pairs.withColumn("cum", F.sum("n_in_cell").over(wcum))
-        rstar_col = F.min(
-            F.when(F.col("cum") >= F.col("k_req"), F.col("maxd"))
-        ).over(wall)
-        return (
-            cum.withColumn("rstar", rstar_col)
-            .filter(
-                F.col("mind")
-                <= F.coalesce(F.col("rstar"), F.lit(float("inf")))
-            )
-            .select(*keep)
-        )
-
-    # ---- coarse-to-fine prefilter CASCADE, in-kernel (r6 rework of
-    # the r5 DataFrame chain): the |probes| × |cells| pair tables the
-    # cascade walks are the scaling knob, and as DataFrame stages each
-    # one paid a shuffle + window sort — ~700M rows / ~60 GB of
-    # shuffle at 1M probes × level-5 entry, measured as the lane's
-    # dominant cost and its N→4N efficiency ceiling. The coarse
-    # levels' rollups are BOUNDED BY CONSTRUCTION (≤ 4^9 rows at
-    # level ≤ 9, regardless of corpus size), so the entire coarse
-    # walk now runs inside ONE Arrow-batched mapInPandas kernel over
-    # the probe table: per 10k-probe batch, numpy computes the same
-    # rect bounds and per-probe R* rule level by level (2-level
-    # steps, 16 children/parent) and emits only the surviving
-    # (probe, cell) pairs — a few rows per probe, ZERO shuffles.
-    # Exactness is preserved: the bound formulas are twins of
-    # _with_bounds/_rstar_filter and any valid bounds keep the R*
-    # superset guarantee (final scoring is exact over candidates).
-    # When the FINE stats dim itself fits FINE_COLLECT_ROWS the
-    # kernel walks all the way to `level` and the scoring join
-    # consumes its output directly; on a corpus whose fine dim is too
-    # big to collect (the 100-TB case) the kernel stops at the
-    # 4^9-bounded level-9 rollup and the fine refinement stays a
-    # distributed equi-join on pcell — the unbounded side never
-    # leaves the cluster.
-    if level > KNN_MIN_LEVEL:
-        spark = queries.sparkSession
-        if index is not None and index.prep is not None:
-            prep, bc = index.prep
-        else:
-            # one-shot (no index) calls rebuild prep and register a
-            # fresh broadcast per call, reclaimed only when Python GC
-            # drops the result's references (PySpark's normal
-            # broadcast lifecycle) — repeated serving should pass a
-            # knn_index, which pins ONE prep+broadcast across batches
-            prep = _cascade_prep(stats, level)
-            bc = spark.sparkContext.broadcast(prep)
-            if index is not None:
-                # cache prep AND its broadcast: a long-lived serving
-                # session re-uses one executor-side copy across batches
-                index.prep = (prep, bc)
-        sel = q
-        if probe_rows > KNN_PROBE_BROADCAST_LIMIT:
-            # bulk batches arrive in however many files the producer
-            # wrote; the kernel is embarrassingly parallel over probes,
-            # so spread them (narrow rows — a tiny exchange)
-            sel = sel.repartition(spark.sparkContext.defaultParallelism)
-        from pyspark.sql import types as T
-
-        qf = {f.name: f.dataType for f in q.schema.fields}
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", qf["query_id"]),
-                T.StructField("lon", T.DoubleType()),
-                T.StructField("lat", T.DoubleType()),
-                T.StructField("k_req", qf["k_req"]),
-                T.StructField("cell", T.LongType()),
-            ]
-        )
-        coarse_out = sel.mapInPandas(
-            _make_cascade_prune(
-                bc, ["query_id", "lon", "lat", "k_req", "cell"]
-            ),
-            schema=out_schema,
-        )
-        if prep["cap"] == level:
-            # k_req <= 0 probes can contribute no rows (rank <= 0 never
-            # holds) — drop them before the scoring join. Doubles as the
-            # selective predicate Spark's PartitionPruning rule needs on
-            # this side to insert the DPP subquery that prunes a stored
-            # index's scell partitions (mapInPandas output alone carries
-            # no Filter, so the rule would otherwise decline).
-            cand = coarse_out.filter(F.col("k_req") > 0)
-        else:
-            sel2 = coarse_out.withColumnRenamed("cell", "pcell")
-            stats_p = stats.withColumn(
-                "pcell", _parent_cell_col(F.col("cell"), level - prep["cap"])
-            )
-            # the stats side is corpus-sized here (that is WHY the
-            # kernel stopped at the rollup): no broadcast hint — AQE
-            # picks broadcast at runtime iff it actually fits
-            pairs = _with_bounds(sel2.join(stats_p, "pcell"))
-            cand = _rstar_filter(
-                pairs, "cell", ["query_id", "lon", "lat", "k_req", "cell"]
-            )
+    # ---- coarse-to-fine prefilter CASCADE, in-kernel: the
+    # |probes| × |cells| pair tables the cascade walks are the scaling
+    # knob (as shuffled DataFrame stages they measured ~60 GB at 1M
+    # probes). The coarse levels' rollups are BOUNDED BY CONSTRUCTION
+    # (≤ 4^9 rows at level ≤ 9, regardless of corpus size), so the
+    # walk runs inside ONE Arrow-batched mapInPandas kernel over the
+    # probe table: per batch of probes, numpy prunes level by level
+    # (_prune_step) and emits only the surviving (probe, cell) pairs —
+    # a few rows per probe, ZERO shuffles. When the FINE stats dim
+    # fits FINE_COLLECT_ROWS the kernel walks all the way to `level`;
+    # on a corpus whose fine dim is too big to collect (the 100-TB
+    # case) it stops at the level-9 rollup, and the fine refinement
+    # joins the distributed stats dim on pcell — the unbounded side
+    # never leaves the cluster.
+    spark = queries.sparkSession
+    if index.prep is not None:
+        prep, bc = index.prep
     else:
-        # level ≤ KNN_MIN_LEVEL: ≤ 4^3 nonempty cells — one broadcast
-        # cross + R* filter is already minimal
-        pairs = _with_bounds(q.join(F.broadcast(stats)))
-        cand = _rstar_filter(
-            pairs, "cell", ["query_id", "lon", "lat", "k_req", "cell"]
+        # cache prep AND its broadcast on the index: a long-lived
+        # serving session re-uses one executor-side copy across
+        # batches; a one-shot call's inline index (and so its
+        # broadcast) is reclaimed when Python GC drops the result's
+        # references — PySpark's normal broadcast lifecycle
+        prep = _cascade_prep(stats, level)
+        bc = spark.sparkContext.broadcast(prep)
+        index.prep = (prep, bc)
+    sel = q
+    if probe_rows > KNN_PROBE_BROADCAST_LIMIT:
+        # bulk batches arrive in however many files the producer
+        # wrote; the kernel is embarrassingly parallel over probes,
+        # so spread them (narrow rows — a tiny exchange)
+        sel = sel.repartition(spark.sparkContext.defaultParallelism)
+    from pyspark.sql import types as T
+
+    cand_cols = ["query_id", "lon", "lat", "k_req", "cell"]
+    qf = {f.name: f.dataType for f in q.schema.fields}
+    cand_schema = T.StructType(
+        [
+            T.StructField("query_id", qf["query_id"]),
+            T.StructField("lon", T.DoubleType()),
+            T.StructField("lat", T.DoubleType()),
+            T.StructField("k_req", qf["k_req"]),
+            T.StructField("cell", T.LongType()),
+        ]
+    )
+    # k_req <= 0 probes can contribute no rows (rank <= 0 never holds)
+    # — drop them before the scoring join. Doubles as the selective
+    # predicate Spark's PartitionPruning rule needs on this side to
+    # insert the DPP subquery that prunes a stored index's scell
+    # partitions (mapInPandas output alone carries no Filter, so the
+    # rule would otherwise decline).
+    cand = sel.mapInPandas(
+        _make_cascade_prune(bc, cand_cols), schema=cand_schema
+    ).filter(F.col("k_req") > 0)
+    if prep["cap"] < level:
+        # the stats side is corpus-sized here (that is WHY the kernel
+        # stopped at the rollup): no broadcast hint — AQE picks
+        # broadcast at runtime iff it actually fits
+        fine = stats.select(
+            "cell",
+            "n_in_cell",
+            _parent_cell_col(F.col("cell"), level - prep["cap"]).alias(
+                "pcell"
+            ),
+        )
+        cand = (
+            cand.withColumnRenamed("cell", "pcell")
+            .join(fine, "pcell")
+            .repartition("query_id")
+            .sortWithinPartitions("query_id")
+            .mapInArrow(
+                _make_fine_refine(level, cand_cols), schema=cand_schema
+            )
         )
 
     # ---- exact scoring over the pruned candidate cells ----
@@ -1591,8 +1576,20 @@ def knn_join(
     # partitioned on-disk index (knn_index_save) gets dynamic partition
     # pruning: only the storage regions holding candidate cells are read
     cand = cand.withColumn("scell", _storage_cell_col(F.col("cell"), level))
-    from pyspark.sql import types as T
-
+    # output schema DERIVED from the inputs (r5 review): a hardcoded
+    # "query_id long" crashed mid-job for int32/string probe ids that
+    # knn_bruteforce (the documented oracle twin) accepts;
+    # _rank_keep_seg codes object ids with np.unique (fine, just
+    # slower) — the id type is the caller's choice
+    sc_fields = {f.name: f.dataType for f in sc.schema.fields}
+    score_schema = T.StructType(
+        [
+            T.StructField("query_id", qf["query_id"]),
+            T.StructField("k_req", qf["k_req"]),
+            T.StructField("image_id", sc_fields["image_id"]),
+            T.StructField("dist_m", T.DoubleType()),
+        ]
+    )
     if probe_rows > KNN_PROBE_BROADCAST_LIMIT:
         # ---- bulk scoring, union-kernel form (r7, guide §8/§4) ----
         # The r6 bulk plan materialized the (candidate cell × cell
@@ -1620,165 +1617,41 @@ def knn_join(
         # cand, and a cluster-scale probe batch touches nearly every
         # storage region by nature; the small-batch branch below keeps
         # the DPP-pruned join for selective serving.
-        qf2 = {f.name: f.dataType for f in q.schema.fields}
-        sc_fields = {f.name: f.dataType for f in sc.schema.fields}
         members = sc.select(
             "cell",
             "image_id",
             "slon",
             "slat",
-            F.lit(None).cast(qf2["query_id"]).alias("query_id"),
-            F.lit(None).cast("double").alias("plon"),
-            F.lit(None).cast("double").alias("plat"),
-            F.lit(None).cast(qf2["k_req"]).alias("k_req"),
             F.lit(0).cast("tinyint").alias("side"),
         )
         probes_u = cand.select(
             "cell",
-            F.lit(None).cast(sc_fields["image_id"]).alias("image_id"),
-            F.lit(None).cast("double").alias("slon"),
-            F.lit(None).cast("double").alias("slat"),
             "query_id",
             F.col("lon").alias("plon"),
             F.col("lat").alias("plat"),
             "k_req",
             F.lit(1).cast("tinyint").alias("side"),
         )
+        # each side's missing columns union in as typed nulls;
         # keyless-column repartition: partition count comes from
         # spark.sql.shuffle.partitions (scale it with the cluster, not
         # a constant), and AQE may coalesce small outputs
-        both = members.unionByName(probes_u).repartition(
-            _parent_cell_col(F.col("cell"), UNION_SCORE_PARENT_DROP)
-        )
-        pruned = both.mapInArrow(
-            _make_union_score(),
-            schema=T.StructType(
-                [
-                    T.StructField("query_id", qf2["query_id"]),
-                    T.StructField("k_req", qf2["k_req"]),
-                    T.StructField("image_id", sc_fields["image_id"]),
-                    T.StructField("dist_m", T.DoubleType()),
-                ]
-            ),
-        )
-        topk = pruned.groupBy("query_id").agg(
-            F.slice(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(F.col("dist_m"), F.col("image_id"))
-                    )
-                ),
-                1,
-                F.max("k_req"),
-            ).alias("nn")
-        )
-        return topk.select(
-            "query_id", F.posexplode("nn").alias("pos", "nn")
-        ).select(
-            "query_id",
-            (F.col("pos") + 1).cast("int").alias("rank"),
-            F.col("nn.image_id").alias("image_id"),
-            F.col("nn.dist_m").alias("dist_m"),
-        )
-
-    joined = sc.join(probe_bcast(cand), ["scell", "cell"])
-    # ---- fused score + partial top-k (r5, replacing the salted
-    # collect_list two-phase of r4): ONE Arrow stage computes the exact
-    # numpy haversine (the identical geometry.haversine_m kernel the
-    # brute oracle path uses — bit-identical distances) AND reduces each
-    # input partition to its local top-gk rows per query, vectorized
-    # (one packed-key sort, _rank_keep_mask). Properties that
-    # matter at scale:
-    #   * per-task OUTPUT is ≤ |queries-in-task| × gk rows, so the
-    #     shuffle to the final merge is tiny regardless of candidate
-    #     fan-out — no aggregation key ever materializes a cell's whole
-    #     candidate list (the r4 salt addressed the same risk but still
-    #     shuffled every partial struct);
-    #   * a hot task (probe batches concentrate in few storage-region
-    #     file splits) streams its rows through numpy at vector speed
-    #     instead of building millions of per-row agg objects — the
-    #     measured 10k-probe GC storm came from exactly that.
-    scored_in = joined.select(
-        "query_id", "k_req", "image_id", "lon", "lat", "slon", "slat"
-    )
-
-    def _score_partial(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from . import geometry as geo
-
-        def rank_min_keep(tbl: "pa.Table") -> "pa.Table":
-            # keep every row whose distance ranks ≤ gk within its query
-            # (ties at the boundary ALL retained) — a provable SUPERSET
-            # of the exact top-gk (see _rank_keep_mask): no pandas
-            # frames and no Python string materialization ever touch
-            # the multi-million-row stream (image_id stays an Arrow
-            # buffer end to end); the final JVM aggregation applies the
-            # exact (dist_m, image_id) total order to the tiny superset
-            keep = _rank_keep_mask(
-                tbl.column("query_id").to_numpy(zero_copy_only=False),
-                tbl.column("dist_m").to_numpy(zero_copy_only=False),
-                gk,
+        both = members.unionByName(
+            probes_u, allowMissingColumns=True
+        ).repartition(_parent_cell_col(F.col("cell"), UNION_SCORE_PARENT_DROP))
+        pruned = both.mapInArrow(_make_union_score(), schema=score_schema)
+    else:
+        # the pruned pair table is bounded here (≤
+        # KNN_PROBE_BROADCAST_LIMIT probes × a few cells), so it
+        # broadcasts; on a stored index (knn_index_save) the join's
+        # scell key then gets dynamic partition pruning
+        pruned = (
+            sc.join(F.broadcast(cand), ["scell", "cell"])
+            .select(
+                "query_id", "k_req", "image_id", "lon", "lat", "slon", "slat"
             )
-            return tbl.filter(pa.array(keep))
-
-        # bounded-memory accumulation (a hot task can stream tens of
-        # millions of candidate rows): raw batches buffer until the
-        # doubling threshold, then compact — amortized O(n log n) rank
-        # work with peak memory ≈ 2 × max(1M, queries-in-task × gk),
-        # never the full candidate stream
-        parts: list = []
-        rows = 0
-        floor_ = 1_000_000
-        last = 0
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {name: rb.column(name) for name in rb.schema.names}
-            dist = geo.haversine_m(
-                cols["lon"].to_numpy(zero_copy_only=False),
-                cols["lat"].to_numpy(zero_copy_only=False),
-                cols["slon"].to_numpy(zero_copy_only=False),
-                cols["slat"].to_numpy(zero_copy_only=False),
-            )
-            parts.append(
-                pa.table(
-                    {
-                        "query_id": cols["query_id"],
-                        "k_req": cols["k_req"],
-                        "image_id": cols["image_id"],
-                        "dist_m": pa.array(dist, pa.float64()),
-                    }
-                )
-            )
-            rows += rb.num_rows
-            if rows >= max(floor_, 2 * last) and len(parts) > 1:
-                parts = [rank_min_keep(pa.concat_tables(parts))]
-                last = rows = parts[0].num_rows
-        if parts:
-            out = rank_min_keep(pa.concat_tables(parts))
-            yield from out.to_batches()
-
-    # output schema DERIVED from the inputs (r5 review): a hardcoded
-    # "query_id long" crashed mid-job for int32/string probe ids that
-    # knn_bruteforce (the documented oracle twin) accepts;
-    # _rank_keep_mask codes object ids with np.unique (fine, just
-    # slower) — the id type is the caller's choice
-    from pyspark.sql import types as T
-
-    in_fields = {f.name: f.dataType for f in scored_in.schema.fields}
-    pruned = scored_in.mapInArrow(
-        _score_partial,
-        schema=T.StructType(
-            [
-                T.StructField("query_id", in_fields["query_id"]),
-                T.StructField("k_req", in_fields["k_req"]),
-                T.StructField("image_id", in_fields["image_id"]),
-                T.StructField("dist_m", T.DoubleType()),
-            ]
-        ),
-    )
+            .mapInArrow(_make_score_partial(gk), schema=score_schema)
+        )
     topk = pruned.groupBy("query_id").agg(
         F.slice(
             F.sort_array(

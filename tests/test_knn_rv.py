@@ -206,6 +206,53 @@ def test_knn_random_global_probes_match_brute(spark, scenes_df):
             assert g[3] == pytest.approx(e[3], rel=1e-12)
 
 
+@pytest.mark.parametrize("level", [11, 13])
+def test_knn_past_cap_refinement_matches_brute(spark, monkeypatch, level):
+    """Past FINE_COLLECT_ROWS the cascade kernel stops at the level-9
+    rollup and a second pass refines its survivors down to `level`.
+    Forcing that path (a zero collect cap) on a hotspot corpus with
+    pole/antimeridian edge scenes must stay exact vs brute force, for
+    seeded global probes and for probes dropped next to scene
+    centroids, where the fine cells are dense."""
+    from pyspark.sql import Row
+
+    monkeypatch.setattr(ops, "FINE_COLLECT_ROWS", 0)
+    t = datagen.gen_scenes(
+        n_scenes=4000, paths=10, rows=10, seed=11, payload=False,
+        edge_cases=True, hotspot_frac=0.7,
+    ).select(["image_id", "min_lon", "max_lon", "min_lat", "max_lat"])
+    df = spark.createDataFrame(t.to_pandas())
+    idx = ops.knn_index(df, level=level)
+    assert ops._prep_cap(idx.stats, level) == 9
+
+    rng = np.random.default_rng(level)
+    n = 200
+    lons = rng.uniform(-180.0, 180.0, n)
+    lats = rng.uniform(-89.0, 89.0, n)
+    ks = rng.integers(1, 12, n)
+    near = n // 2
+    pick = rng.integers(0, t.num_rows, near)
+    mid_lon = (t["min_lon"].to_numpy() + t["max_lon"].to_numpy()) / 2
+    mid_lat = (t["min_lat"].to_numpy() + t["max_lat"].to_numpy()) / 2
+    jitter = rng.normal(0.0, 0.3, (2, near))
+    lons[:near] = (mid_lon[pick] + jitter[0] + 180.0) % 360.0 - 180.0
+    lats[:near] = np.clip(mid_lat[pick] + jitter[1], -89.0, 89.0)
+    queries = spark.createDataFrame(
+        [Row(query_id=i, lon=float(lons[i]), lat=float(lats[i]), k=int(ks[i]))
+         for i in range(n)]
+    )
+    exp = sorted(map(tuple, ops.knn_bruteforce(df, queries).collect()))
+    # small-batch (broadcast join) scoring, then bulk (union kernel)
+    for limit in (ops.KNN_PROBE_BROADCAST_LIMIT, 0):
+        monkeypatch.setattr(ops, "KNN_PROBE_BROADCAST_LIMIT", limit)
+        got = sorted(
+            map(tuple, ops.knn_join(None, queries, index=idx).collect())
+        )
+        assert [g[:3] for g in got] == [e[:3] for e in exp], limit
+        for g, e in zip(got, exp):
+            assert g[3] == pytest.approx(e[3], rel=1e-12)
+
+
 @pytest.mark.parametrize("level", [6, 9])
 def test_knn_scene_beyond_mercator_clamp_stays_exact(spark, level):
     """A scene centroid poleward of the mercator clamp (±85.05°) maps
@@ -262,6 +309,24 @@ def test_knn_auto_level_exact_on_dense_and_sparse(spark, scenes_df):
     )
     got = sorted(map(tuple, ops.knn_join(sparse, queries).collect()))
     exp = sorted(map(tuple, ops.knn_bruteforce(sparse, queries).collect()))
+    assert [g[:3] for g in got] == [e[:3] for e in exp]
+
+    # an empty corpus serves no rows at the auto-picked (clamped) level
+    # and at levels at or below the clamp
+    empty = spark.createDataFrame(
+        [],
+        "image_id string, min_lon double, max_lon double, "
+        "min_lat double, max_lat double",
+    )
+    for lv in (None, 2, 3):
+        assert ops.knn_join(empty, queries, level=lv).count() == 0, lv
+
+    # a corpus smaller than k returns every scene for every probe
+    two = spark.createDataFrame(sparse.take(2))
+    got = sorted(map(tuple, ops.knn_join(two, queries, k=3).collect()))
+    exp = sorted(map(tuple, ops.knn_bruteforce(two, queries, k=3).collect()))
+    assert len(got) == 2 * 3
+    assert {g[2] for g in got} == {"S0", "S1"}
     assert [g[:3] for g in got] == [e[:3] for e in exp]
 
 
@@ -547,8 +612,11 @@ def test_knn_index_rollup_stats_match_direct_build(spark):
     df = spark.createDataFrame(t.to_pandas())
     rolled = ops.knn_index(df, k_hint=4)  # auto → rollup-built stats
     direct = ops.knn_index(df, level=rolled.level)  # corpus groupBy
+    assert rolled.stats.columns == ["cell", "n_in_cell"]
+    assert direct.stats.columns == ["cell", "n_in_cell"]
     got = sorted(map(tuple, rolled.stats.collect()))
     want = sorted(map(tuple, direct.stats.collect()))
+    assert len(got) > 1 and sum(n for _, n in got) == t.num_rows
     assert got == want
 
 
@@ -628,6 +696,43 @@ def test_knn_index_save_generation_commit(spark, scenes_df, tmp_path):
     b = sorted(map(tuple, ops.knn_join(
         None, queries, index=ops.knn_index(scenes_df, level=6)).collect()))
     assert a == b
+
+
+@pytest.mark.parametrize("level", [6, 11])
+def test_knn_index_with_rect_stats_columns_still_serves(
+    spark, scenes_df, tmp_path, monkeypatch, level
+):
+    """Indexes saved by earlier versions carry four cell-rect columns
+    (cw, cs, ce, cn) in their stats dim. Such an index must still load
+    and serve the rows a fresh index serves, both where the cascade
+    kernel reaches `level` and (zero collect cap, level 11) where it
+    stops at the level-9 rollup and the refinement reads the stats."""
+    monkeypatch.setattr(ops, "FINE_COLLECT_ROWS", 0)
+    fresh = ops.knn_index(scenes_df, level=level)
+    pdf = fresh.stats.toPandas()
+    cw, cs, ce, cn = ops._cell_rect_np(pdf["cell"].to_numpy(np.int64), level)
+    legacy = ops.KnnIndex(
+        level,
+        fresh.cent,
+        spark.createDataFrame(pdf.assign(cw=cw, cs=cs, ce=ce, cn=cn)),
+    )
+    path = str(tmp_path / "legacy_idx")
+    ops.knn_index_save(legacy, path)
+    loaded = ops.knn_index_load(spark, path)
+    assert {"cw", "cs", "ce", "cn"} <= set(loaded.stats.columns)
+
+    queries = spark.createDataFrame(
+        [(0, -120.0, 34.0, 3), (1, 179.9, -4.0, 2), (2, -40.0, 86.0, 3),
+         (3, 60.0, -70.0, 1), (4, -118.5, 36.0, 5)],
+        "query_id long, lon double, lat double, k int",
+    )
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    got = rows(ops.knn_join(None, queries, index=loaded))
+    assert got == rows(ops.knn_join(None, queries, index=fresh))
+    brute = rows(ops.knn_bruteforce(scenes_df, queries))
+    assert [g[:3] for g in got] == [b[:3] for b in brute]
 
 
 def test_knn_join_accepts_non_long_query_ids(spark, scenes_df):

@@ -105,7 +105,9 @@ def test_knn_broadcasts_probe_side(spark, scenes_df, fixture_dir):
     assert "Broadcast" in plan
 
 
-def test_knn_join_plan_is_distributed(spark, scenes_df, fixture_dir):
+def test_knn_join_plan_is_distributed(
+    spark, scenes_df, fixture_dir, monkeypatch
+):
     """Cell-stats kNN: one DataFrame plan end-to-end — candidate side
     broadcast, scenes never cartesian-joined, no driver materialization
     (the result is lazy, unlike the old per-round collect loop)."""
@@ -118,6 +120,16 @@ def test_knn_join_plan_is_distributed(spark, scenes_df, fixture_dir):
     assert "CartesianProduct" not in plan
     # scoring joins scenes↔candidates on the packed cell key
     assert "cell" in plan
+
+    # pruning runs in the Arrow cascade kernel at every level — below
+    # the cascade's entry level and past the driver collect cap (where
+    # the kernel stops at the level-9 rollup) too: no JVM window
+    plans = [plan, _plan(ops.knn_join(scenes_df, queries, level=2))]
+    monkeypatch.setattr(ops, "FINE_COLLECT_ROWS", 0)
+    plans.append(_plan(ops.knn_join(scenes_df, queries, level=11)))
+    for p in plans:
+        assert "Window" not in p
+        assert "MapInPandas" in p
 
 
 def test_missing_quadkeys_uses_anti_join(spark, scenes_df, fixture_dir):
