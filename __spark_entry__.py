@@ -31,7 +31,7 @@ if _REPO not in _prev.split(os.pathsep):
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mosaic_engine import annops, textops
+from mosaic_engine import annops, ops, textops
 from mosaic_engine.geometry import EARTH_RADIUS_M
 from mosaic_engine.textops import P, POW31, token_code_sql
 from mosaic_engine.tilemath import LL_EPSILON
@@ -165,7 +165,7 @@ def _supplier_points_sql(x: str = "qx", y: str = "qy") -> str:
 
 def _hav_sql(qx: str, qy: str, px: str, py: str) -> str:
     """radians() FIRST, subtract AFTER — the exact op order of
-    ops.haversine_expr / geometry.haversine_m. radians(a - b) differs
+    geometry.haversine_m. radians(a - b) differs
     in the last ULP for ~43% of pairs, which could flip a near-tie
     rank or a round(_, 3) boundary (r4 review; factored r5)."""
     return (
@@ -199,26 +199,12 @@ def _quadkey_sql(x: str, y: str, z: int) -> str:
     return f"({digits})"
 
 
-_SCALAR_UDFS: dict = {}
-
-
-def _tile_udf_cols():
-    """Process-cached scalar-UDF dict (rebuilding four pandas_udf
-    wrappers per query call is wasted work — r4 review)."""
-    if not _SCALAR_UDFS:
-        from mosaic_engine.udfs import make_scalar_udfs
-
-        _SCALAR_UDFS.update(make_scalar_udfs())
-    return _SCALAR_UDFS
-
-
 _TILE_XY_UDFS: dict = {}
 
 
 def _tile_xy_udf(z: int):
-    """Per-zoom cached tile-assign pandas_udf (r5 review: the r4 cache
-    covered only the scalar-UDF dict; this wrapper was still rebuilt on
-    every _tile_assign_df call)."""
+    """Per-zoom cached lon/lat → (tx, ty) pandas_udf, so repeated query
+    calls reuse one wrapper instead of rebuilding it each time."""
     if z not in _TILE_XY_UDFS:
         import pandas as pd
         from pyspark.sql import types as T
@@ -240,14 +226,13 @@ def _tile_xy_udf(z: int):
 
 def _tile_assign_df(spark, sf_dir, z=Z_TILE, source="events"):
     tile_xy = _tile_xy_udf(z)
-    u = _tile_udf_cols()
     if source != "events":
         raise ValueError(f"unknown point source {source!r}")
     pts = _event_points(spark, sf_dir)
     d = pts.withColumn("t", tile_xy("lon", "lat")).select(
         "event_id", "lon", "lat", F.col("t.tx").alias("tx"), F.col("t.ty").alias("ty")
     )
-    return d.withColumn("quadkey", u["tile_quadkey"]("tx", "ty", F.lit(z)))
+    return d.withColumn("quadkey", ops.tile_quadkey_col("tx", "ty", z))
 
 
 # --------------------------------------------------------------------------
@@ -359,21 +344,16 @@ def sql_geo_bbox_filter():
 
 def q_geo_anti_join(spark, sf_dir):
     """J5 anti join: event quadkeys not covered by customer quadkeys (z6)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
+    tile_xy = _tile_xy_udf(Z_ANTI)
 
-    from mosaic_engine import tilemath as tm
+    def quadkeys(pts, lon, lat):
+        t = pts.select(tile_xy(lon, lat).alias("t"))
+        return t.select(
+            ops.tile_quadkey_col("t.tx", "t.ty", Z_ANTI).alias("quadkey")
+        ).distinct()
 
-    @pandas_udf(T.StringType())
-    def qk6(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        xs, ys = tm.lonlat_to_tile(lon.to_numpy(), lat.to_numpy(), Z_ANTI)
-        return pd.Series(tm.tile_to_quadkey(xs, ys, Z_ANTI))
-
-    ev = _event_points(spark, sf_dir).select(qk6("lon", "lat").alias("quadkey")).distinct()
-    cu = _customer_points(spark, sf_dir).select(
-        qk6("px", "py").alias("quadkey")
-    ).distinct()
+    ev = quadkeys(_event_points(spark, sf_dir), "lon", "lat")
+    cu = quadkeys(_customer_points(spark, sf_dir), "px", "py")
     return ev.join(cu, "quadkey", "left_anti")
 
 
@@ -470,15 +450,13 @@ def q_geo_knn_brute(spark, sf_dir):
     (~5 s at sf0.1, almost entirely transfer); now only the customer
     rows cross and the distance matrix + rank<k pruning run blockwise
     in numpy (same oracle-exact haversine kernel, identical rows)."""
-    from mosaic_engine import ops as _ops
-
     s = _supplier_points(spark, sf_dir)
     # the fact-table side must be spread across cores
     # (driver parquet is a single small file → 1 input partition)
     c = _customer_points(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism
     )
-    topk = _ops.knn_bruteforce_points(
+    topk = ops.knn_bruteforce_points(
         c, s, 3,
         point_id="c_custkey", px="px", py="py",
         probe_id="s_suppkey", qx="qx", qy="qy",
@@ -1834,7 +1812,6 @@ def q_mosaic_assignments(spark, sf_dir):
     → fused explode (exact polygon∩tile on the rect ring) → salted
     two-phase newest-first selection → (quadkey, asset, rank)."""
     from mosaic_engine import mosaic as mz
-    from mosaic_engine import ops
 
     cfg = ops.MosaicConfig(
         quadkey_zoom=Z_MOSAIC, preference="newest", optimized_selection=False
@@ -1882,8 +1859,6 @@ def q_rv_join(spark, sf_dir):
     """J4 raster↔vector quadkey equi-join: part-derived scene footprints
     × supplier-derived vector features, both through the fused explode
     kernel, joined on the packed cell key."""
-    from mosaic_engine import ops
-
     return ops.raster_vector_join(
         _part_scenes(spark, sf_dir), _vector_boxes(spark, sf_dir), Z_TILE
     )
@@ -1906,8 +1881,6 @@ def q_knn_banded(spark, sf_dir):
     part-derived scene centroids per supplier probe point; oracle =
     brute-force SQL (valid because the operator is provably exact —
     pytest asserts equality with knn_bruteforce on adversarial probes)."""
-    from mosaic_engine import ops
-
     scenes = _part_scenes(spark, sf_dir)
     probes = _supplier_points(spark, sf_dir, x="lon", y="lat").select(
         F.col("s_suppkey").alias("query_id"), "lon", "lat"
@@ -1960,7 +1933,6 @@ def q_missing_quadkeys(spark, sf_dir):
     """J5/E3 anti-join gap detection: land-covered quadkeys with no
     scene in the part-derived mosaic."""
     from mosaic_engine import mosaic as mz
-    from mosaic_engine import ops
 
     cfg = ops.MosaicConfig(quadkey_zoom=Z_MOSAIC)
     assign = mz.quadkey_assignments(_part_scenes(spark, sf_dir), cfg)

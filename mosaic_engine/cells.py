@@ -20,14 +20,10 @@ from __future__ import annotations
 
 import numpy as np
 
-from . import tilemath as tm
-
 __all__ = [
     "pack_cell",
     "unpack_cell",
-    "encode_cells",
     "cell_parent",
-    "neighbor_cells_3x3",
 ]
 
 
@@ -86,12 +82,6 @@ def unpack_cell(cells) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return xs, ys, level
 
 
-def encode_cells(lons, lats, level: int) -> np.ndarray:
-    """(lon, lat) → packed cell id at `level` (bit-exact tilemath)."""
-    xs, ys = tm.lonlat_to_tile(lons, lats, level)
-    return pack_cell(xs, ys, level)
-
-
 def cell_parent(cells, levels: int = 1) -> np.ndarray:
     c = np.asarray(cells, dtype=np.int64).astype(np.uint64)
     level = (c & np.uint64(0x3F)).astype(np.int64) - levels
@@ -102,20 +92,3 @@ def cell_parent(cells, levels: int = 1) -> np.ndarray:
         )
     morton = (c >> np.uint64(6)) >> np.uint64(2 * levels)
     return ((morton << np.uint64(6)) | level.astype(np.uint64)).astype(np.int64)
-
-
-def neighbor_cells_3x3(lons, lats, level: int) -> np.ndarray:
-    """(n, 9) packed ids of the 3x3 tile neighborhood around each point.
-
-    X wraps around the antimeridian; y is clamped at the poles (the
-    world edge rows have no northern/southern neighbors — clamping
-    repeats the center row, which dedupes away in the join). This is the
-    H3-kRing-style banding used by the kNN join (SURVEY.md §2.4 J3).
-    """
-    xs, ys = tm.lonlat_to_tile(lons, lats, level)
-    n = xs.shape[0] if xs.ndim else 1
-    z2 = np.int64(1 << level)
-    dx, dy = np.meshgrid([-1, 0, 1], [-1, 0, 1])
-    nx = (xs.reshape(-1, 1) + dx.ravel()[None, :]) % z2
-    ny = np.clip(ys.reshape(-1, 1) + dy.ravel()[None, :], 0, z2 - 1)
-    return pack_cell(nx.ravel(), ny.ravel(), level).reshape(n, 9)

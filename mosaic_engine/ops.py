@@ -24,9 +24,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pandas as pd  # module-level: pandas_udf resolves the stringified
+# pd.Series hints of _haversine_m_udf against this module's globals
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
+from . import geometry as geo
 from . import udfs
 
 DEFAULT_SALT_BUCKETS = 16
@@ -136,6 +141,20 @@ def cell_quadkey_col(cell: Column) -> Column:
         cell.bitwiseAND(F.lit(63)).cast("int"),
         "0",
     )
+
+
+def tile_quadkey_col(tx, ty, z: int) -> Column:
+    """Tile (tx, ty) at zoom `z` → quadkey string as a JVM expression:
+    pack the cell as cells.pack_cell does, then render it with
+    cell_quadkey_col. A coordinate's binary digits read as base-4
+    digits spread its bits to the even positions (the morton
+    interleave). tx and ty must lie in [0, 2^z)."""
+
+    def spread(c):
+        return F.conv(F.bin(c), 4, 10).cast("long")
+
+    cell = F.shiftleft(spread(tx) + 2 * spread(ty), 6) + F.lit(z)
+    return cell_quadkey_col(cell)
 
 
 # ---------------------------------------------------------------- ranking
@@ -1528,7 +1547,6 @@ def knn_join(
         # wrote; the kernel is embarrassingly parallel over probes,
         # so spread them (narrow rows — a tiny exchange)
         sel = sel.repartition(spark.sparkContext.defaultParallelism)
-    from pyspark.sql import types as T
 
     cand_cols = ["query_id", "lon", "lat", "k_req", "cell"]
     qf = {f.name: f.dataType for f in q.schema.fields}
@@ -1711,10 +1729,7 @@ def knn_bruteforce_points(
     oracle-exact formula (radians first, subtract after)."""
     import numpy as np
 
-    from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_type
-
-    from . import geometry as geo
 
     spark = points.sparkSession
     p_fields = {f.name: f.dataType for f in points.schema.fields}
@@ -1827,16 +1842,29 @@ def knn_bruteforce_points(
     )
 
 
+@pandas_udf(T.DoubleType())
+def _haversine_m_udf(
+    lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series
+) -> pd.Series:
+    return pd.Series(
+        geo.haversine_m(
+            lon1.to_numpy("float64"),
+            lat1.to_numpy("float64"),
+            lon2.to_numpy("float64"),
+            lat2.to_numpy("float64"),
+        )
+    )
+
+
 def knn_bruteforce(
     scenes: DataFrame, queries: DataFrame, k: int | None = None
 ) -> DataFrame:
     """Exact kNN oracle path: broadcast cross join + sorted-struct top-k."""
-    u = udfs.make_scalar_udfs()
     cent = _scene_centroids(scenes)
     # element_at/slice ordinals must be INT (queries may carry k as long)
     kcol = (F.lit(k) if k is not None else F.col("k")).cast("int")
     scored = cent.crossJoin(F.broadcast(queries)).withColumn(
-        "dist_m", u["haversine_m"]("lon", "lat", "slon", "slat")
+        "dist_m", _haversine_m_udf("lon", "lat", "slon", "slat")
     )
     topk = scored.groupBy("query_id").agg(
         F.slice(
@@ -1948,18 +1976,6 @@ def mosaic_rollup(tiles: DataFrame, levels: int = 4) -> DataFrame:
     )
 
 
-def haversine_expr(lon1, lat1, lon2, lat2) -> Column:
-    """G9 as a pure Column expression — stays in whole-stage codegen
-    (no Arrow hop); same float64 formula as geometry.haversine_m."""
-    l1, p1 = F.radians(lon1), F.radians(lat1)
-    l2, p2 = F.radians(lon2), F.radians(lat2)
-    a = (
-        F.sin((p2 - p1) / 2) * F.sin((p2 - p1) / 2)
-        + F.cos(p1) * F.cos(p2) * F.sin((l2 - l1) / 2) * F.sin((l2 - l1) / 2)
-    )
-    return 2.0 * 6371008.8 * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
-
-
 def assets_for_tile(
     assign: DataFrame, tx: int, ty: int, z: int, quadkey_zoom: int
 ) -> list[str]:
@@ -1970,6 +1986,12 @@ def assets_for_tile(
     and de-duplicating assets on first appearance."""
     from . import tilemath as tm
 
+    n = 1 << z
+    if not (0 <= tx < n and 0 <= ty < n):
+        raise ValueError(
+            f"assets_for_tile: tile ({tx}, {ty}) is outside the zoom-{z} "
+            f"grid [0, {n})"
+        )
     if z >= quadkey_zoom:
         px, py, _ = tm.parent_tile([tx], [ty], z, z - quadkey_zoom)
         qk = tm.tile_to_quadkey(px, py, quadkey_zoom)[0]
@@ -2007,14 +2029,25 @@ def assets_for_tiles(
     array_distinct, which keeps first occurrences). Requests with no
     coverage get an empty asset list. One zoom level per call — the
     batch-render contract — so every join is a broadcast equi-join."""
-    u = udfs.make_scalar_udfs()
-    req = requests.select("tx", "ty")
+    n = 1 << z
+    in_grid = F.col("tx").between(0, n - 1) & F.col("ty").between(0, n - 1)
+    # a tile outside the grid would alias onto a real tile once its
+    # bits are packed, so fail loudly (the mosaic_rollup guard idiom)
+    req = requests.select(
+        F.when(
+            F.assert_true(
+                in_grid,
+                f"assets_for_tiles: a tile request is outside the zoom-{z} "
+                f"grid [0, {n})",
+            ).isNull(),
+            F.col("tx"),
+        ).alias("tx"),
+        "ty",
+    )
     if z >= quadkey_zoom:
         shift = z - quadkey_zoom
-        qk = u["tile_quadkey"](
-            F.shiftright(F.col("tx"), shift).cast("long"),
-            F.shiftright(F.col("ty"), shift).cast("long"),
-            F.lit(quadkey_zoom),
+        qk = tile_quadkey_col(
+            F.shiftright("tx", shift), F.shiftright("ty", shift), quadkey_zoom
         )
         keyed = req.withColumn("quadkey", qk)
         # outer joins can only broadcast the NON-preserved side, so a
@@ -2034,14 +2067,7 @@ def assets_for_tiles(
                 "assets", F.array().cast("array<string>")
             ).alias("assets"),
         )
-    prefix = (
-        u["tile_quadkey"](
-            F.col("tx").cast("long"), F.col("ty").cast("long"), F.lit(z)
-        )
-        if z > 0
-        else F.lit("")
-    )
-    keyed = req.withColumn("prefix", prefix)
+    keyed = req.withColumn("prefix", tile_quadkey_col("tx", "ty", z))
     pref_assign = assign.select(
         F.substring("quadkey", 1, z).alias("prefix"), "quadkey", "assets"
     )

@@ -236,72 +236,6 @@ def ring_to_quadkeys(
     )
 
 
-# ------------------------------------------------------------ scalar UDFs
-def make_scalar_udfs():
-    """Construct the pandas_udf column functions (lazy: needs a JVM)."""
-    from pyspark.sql.functions import pandas_udf
-
-    # level/zoom args are grouped per UNIQUE value within each Arrow
-    # batch (r4 review): engine call sites pass F.lit(...) so the loop
-    # runs once, but a user-supplied level COLUMN with mixed values
-    # must not silently encode every row at the first row's level
-
-    @pandas_udf(T.LongType())
-    def cell_id(lon: pd.Series, lat: pd.Series, level: pd.Series) -> pd.Series:
-        lv = level.to_numpy(np.int64)
-        lons, lats = lon.to_numpy(), lat.to_numpy()
-        out = np.empty(len(lv), dtype=np.int64)
-        for z in np.unique(lv):
-            m = lv == z
-            out[m] = cl.encode_cells(lons[m], lats[m], int(z))
-        return pd.Series(out)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def cell_neighbors(
-        lon: pd.Series, lat: pd.Series, level: pd.Series
-    ) -> pd.Series:
-        lv = level.to_numpy(np.int64)
-        lons, lats = lon.to_numpy(), lat.to_numpy()
-        out = np.empty(len(lv), dtype=object)
-        for z in np.unique(lv):
-            m = lv == z
-            nb = cl.neighbor_cells_3x3(lons[m], lats[m], int(z))
-            idx = np.flatnonzero(m)
-            for j, row in zip(idx, nb):
-                out[j] = row
-        return pd.Series(out)
-
-    @pandas_udf(T.DoubleType())
-    def haversine_m(
-        lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series
-    ) -> pd.Series:
-        return pd.Series(
-            geo.haversine_m(
-                lon1.to_numpy(np.float64),
-                lat1.to_numpy(np.float64),
-                lon2.to_numpy(np.float64),
-                lat2.to_numpy(np.float64),
-            )
-        )
-
-    @pandas_udf(T.StringType())
-    def tile_quadkey(tx: pd.Series, ty: pd.Series, z: pd.Series) -> pd.Series:
-        zv = z.to_numpy(np.int64)
-        xs, ys = tx.to_numpy(np.int64), ty.to_numpy(np.int64)
-        out = np.empty(len(zv), dtype=object)
-        for zoom in np.unique(zv):
-            m = zv == zoom
-            out[m] = tm.tile_to_quadkey(xs[m], ys[m], int(zoom))
-        return pd.Series(out)
-
-    return {
-        "cell_id": cell_id,
-        "cell_neighbors": cell_neighbors,
-        "haversine_m": haversine_m,
-        "tile_quadkey": tile_quadkey,
-    }
-
-
 QUADKEY_BOUNDS_SCHEMA = T.StructType(
     [
         T.StructField("quadkey", T.StringType()),

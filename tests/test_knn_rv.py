@@ -58,15 +58,6 @@ def test_cells_roundtrip_and_parent():
             assert (pl == level - 1).all()
 
 
-def test_cell_neighbors_wrap_and_clamp():
-    nb = cells.neighbor_cells_3x3(np.array([-179.9]), np.array([0.0]), 4)
-    xs, ys, _ = cells.unpack_cell(nb[0])
-    assert 15 in xs and 0 in xs  # antimeridian x-wrap
-    nb = cells.neighbor_cells_3x3(np.array([0.0]), np.array([84.9]), 4)
-    _, ys, _ = cells.unpack_cell(nb[0])
-    assert ys.min() == 0  # clamped at the top row
-
-
 @pytest.mark.parametrize("mode", ["banded", "brute"])
 def test_knn_matches_oracle(spark, scenes_df, scene_records, fixture_dir, mode):
     queries = spark.read.parquet(os.path.join(fixture_dir, "knn_queries.parquet"))

@@ -289,33 +289,6 @@ def test_create_from_db_path_e2e(spark, scenes_df, scene_records):
     assert mz.canonical_json(doc) == oracle.canonical_json(odoc)
 
 
-def test_haversine_expr_matches_kernel(spark):
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from mosaic_engine import geometry as geo
-
-    rng = np.random.default_rng(2)
-    rows = [
-        (float(a), float(b), float(c), float(d))
-        for a, b, c, d in zip(
-            rng.uniform(-180, 180, 50),
-            rng.uniform(-85, 85, 50),
-            rng.uniform(-180, 180, 50),
-            rng.uniform(-85, 85, 50),
-        )
-    ]
-    df = spark.createDataFrame(rows, ["lon1", "lat1", "lon2", "lat2"])
-    got = [
-        r["d"]
-        for r in df.select(
-            ops.haversine_expr("lon1", "lat1", "lon2", "lat2").alias("d")
-        ).collect()
-    ]
-    exp = geo.haversine_m(*(np.array(c) for c in zip(*rows)))
-    assert np.allclose(got, exp, rtol=1e-12)
-
-
 def test_assets_for_tile_lookup(spark, scenes_df, scene_records):
     from tests import oracle
 
@@ -399,10 +372,31 @@ def test_assets_for_tiles_batched_matches_scalar(spark, scenes_df):
             (a, b): ops.assets_for_tile(assign, a, b, z, 7) for a, b in reqs
         }
         assert got == exp, f"z={z}"
-    plan = ops.assets_for_tiles(
-        assign, spark.createDataFrame([Row(tx=1, ty=1)]), 5, 7
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    for z in (9, 5):
+        plan = ops.assets_for_tiles(
+            assign, spark.createDataFrame([Row(tx=1, ty=1)]), z, 7
+        )._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan
+        assert "ArrowEvalPython" not in plan, f"z={z}"
+
+
+def test_tile_requests_outside_grid_fail_loudly(spark, scenes_df):
+    """A tile outside [0, 2^z) must not alias onto a real tile (packing
+    drops its high bits, so (131, 5, 7) would read tile (3, 5, 7) and
+    tx = -1 the far-east tile): both tile-read paths check the
+    request's own zoom, above and below quadkey_zoom."""
+    from pyspark.errors import SparkRuntimeException
+    from pyspark.sql import Row
+
+    assign = mz.quadkey_assignments(scenes_df, MosaicConfig(quadkey_zoom=7))
+    for tx, ty, z in (
+        (131, 5, 7), (-1, 5, 7), (5, 512, 9), (3, -2, 9), (32, 0, 5), (0, -1, 5),
+    ):
+        with pytest.raises(ValueError, match=f"zoom-{z} grid"):
+            ops.assets_for_tile(assign, tx, ty, z, 7)
+        req = spark.createDataFrame([Row(tx=1, ty=1), Row(tx=tx, ty=ty)])
+        with pytest.raises(SparkRuntimeException, match=f"zoom-{z} grid"):
+            ops.assets_for_tiles(assign, req, z, 7).collect()
 
 
 def test_iceberg_path_e2e_or_documented_failure(spark, tmp_path):

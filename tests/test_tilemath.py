@@ -126,12 +126,27 @@ def test_parent_tile():
 
 
 def test_jvm_cell_quadkey_matches_tilemath(spark):
-    """ops.cell_quadkey_col (the JVM quadkey of a packed cell) equals
-    tilemath.tile_to_quadkey at the edge levels, including the corner
-    tiles and level 29, whose high tiles pack to NEGATIVE ids."""
+    """ops.cell_quadkey_col (the JVM quadkey of a packed cell) and
+    ops.tile_quadkey_col (the JVM quadkey of a tile) equal
+    tilemath.tile_to_quadkey: every tile at z <= 8, and the corner and
+    sampled tiles at the edge levels, including level 29, whose high
+    tiles pack to NEGATIVE ids."""
     from pyspark.sql import functions as F
 
     from mosaic_engine import cells, ops
+
+    for z in range(9):
+        n = 1 << z
+        tiles = spark.range(n * n).select(
+            "id", (F.col("id") % n).alias("tx"), F.shiftright("id", z).alias("ty")
+        )
+        got = (
+            tiles.select("id", ops.tile_quadkey_col("tx", "ty", z).alias("qk"))
+            .orderBy("id")
+            .toPandas()["qk"]
+        )
+        ids = np.arange(n * n)
+        assert list(got) == list(tm.tile_to_quadkey(ids % n, ids >> z, z)), z
 
     rng = np.random.default_rng(7)
     rows, want = [], []
@@ -139,9 +154,21 @@ def test_jvm_cell_quadkey_matches_tilemath(spark):
         n = 1 << z
         xs = np.r_[0, n - 1, 0, n - 1, rng.integers(0, n, 40)]
         ys = np.r_[0, n - 1, n - 1, 0, rng.integers(0, n, 40)]
-        rows += [int(c) for c in cells.pack_cell(xs, ys, z)]
+        packed = cells.pack_cell(xs, ys, z)
+        rows += [(int(c), int(x), int(y), z) for c, x, y in zip(packed, xs, ys)]
         want += list(tm.tile_to_quadkey(xs, ys, z))
-    assert min(rows) < 0  # level-29 ids past bit 63 are exercised
-    df = spark.createDataFrame([(i, c) for i, c in enumerate(rows)], "i long, cell long")
+    assert min(r[0] for r in rows) < 0  # level-29 ids past bit 63 are exercised
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)],
+        "i long, cell long, tx long, ty long, z int",
+    )
     got = df.select("i", ops.cell_quadkey_col(F.col("cell")).alias("qk")).collect()
     assert [r["qk"] for r in sorted(got)] == want
+    for z in (12, 28, 29):
+        got = (
+            df.filter(F.col("z") == z)
+            .select("i", ops.tile_quadkey_col("tx", "ty", z).alias("qk"))
+            .collect()
+        )
+        exp = [w for w, r in zip(want, rows) if r[3] == z]
+        assert [r["qk"] for r in sorted(got)] == exp, z
