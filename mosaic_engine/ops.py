@@ -293,7 +293,8 @@ class LegacyStateError(ValueError):
     """Persisted mosaic state (a tiles log or checkpoint table) lacks
     the used-scene bounds columns: it was written before assignments
     carried them, and its bounds cannot be derived without rescanning
-    the scenes. Rebuild the state."""
+    the scenes. A streaming work_dir compacted by the pre-manifest
+    scheme (compacted_batches.json) is such state too. Rebuild it."""
 
 
 def mosaic_bounds(scenes: DataFrame, assign: DataFrame) -> list[float]:

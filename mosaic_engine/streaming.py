@@ -3,24 +3,31 @@
 The reference is a batch CLI; its closest streaming analog is "new
 scenes keep arriving, keep the mosaic current". Shape:
 
-  scene files → readStream → foreachBatch: fused explode (the expensive
-  spatial work, done ONCE per arriving scene) → append-only tiles log →
-  finalize: salted selection aggregation over the log → mosaicJSON.
+  scene files → file stream → per micro-batch: fused explode (the
+  expensive spatial work, done ONCE per arriving scene) → append-only
+  tiles log → finalize: salted selection aggregation over the log →
+  mosaicJSON.
 
-foreachBatch is at-least-once: a batch that fails mid-write is retried
-with the SAME batch_id, so the sink makes itself idempotent by writing
-each batch to its own tiles_log/batch_id=<id> partition with overwrite
-— a retry replaces the partial partition instead of appending
-duplicates. The selection aggregation re-runs over the bounded tiles
-log at finalize time — the cheap, shuffle-light tail of the pipeline.
-No watermark/state store is needed because scene selection is a pure
-aggregation with a total-order key (late scenes simply merge in).
+The micro-batch sink is at-least-once: a batch that fails mid-write is
+retried with the SAME batch_id, so the sink makes itself idempotent by
+writing each batch to its own <log>_log/batch_id=<id> partition with
+overwrite — a retry replaces the partial partition instead of
+appending duplicates. The selection aggregation re-runs over the
+bounded tiles log at finalize time — the cheap, shuffle-light tail of
+the pipeline. No watermark/state store is needed because scene
+selection is a pure aggregation with a total-order key (late scenes
+simply merge in).
 
-Log layout (all state commits through ONE small manifest file, so the
-scheme works on object stores — no directory renames anywhere):
+Both incremental entries — run_incremental (one log: tiles) and
+run_incremental_dedup (two logs: bands, pairs) — run ONE batch-log
+lifecycle (_run_batch_log): replay guard, first-use records, an
+availableNow stream that skips folded batch ids, and compaction through
+shared GC / fold-rule / commit helpers. Log layout (all state commits
+through ONE small manifest file, so the scheme works on object stores —
+no directory renames anywhere):
 
-  work_dir/tiles_log/batch_id=<id>/   per-batch append dirs (sink)
-  work_dir/tiles_compacted/gen=<k>/   compacted generations
+  work_dir/<log>_log/batch_id=<id>/   per-batch append dirs (sink)
+  work_dir/<log>_compacted/gen=<k>/   compacted generations
   work_dir/tiles_manifest.json        {"gen", "folded", "chk_id"}
 
 Readers resolve the live data set as [gen dir if any] + [batch dirs
@@ -29,15 +36,24 @@ dir, then commits by replacing the manifest (tmp file + rename here —
 on HDFS/S3 this maps to a single atomic PUT/rename of one small
 object); stale dirs left by a crash on either side of the commit are
 invisible to readers and garbage-collected by the next compaction.
+
 `chk_id` records the streaming checkpoint's query id at compaction
-time: a work_dir whose _chk was deleted/reset while the manifest still
-holds folded batch ids would replay NEW input under recycled batch ids
-and silently skip it, so run_incremental refuses that state instead.
+time. There is ONE replay guard (_replay_guard), run by both entries
+before their stream starts: when the manifest holds folded batch ids,
+the _chk query id must be present and equal to the recorded chk_id.
+A deleted or recreated _chk would replay input under recycled batch
+ids that the sink then skips as folded, silently dropping it, so a
+missing _chk, a missing chk_id or a mismatch is refused.
+
+A work_dir compacted by the pre-manifest scheme (compacted_batches.json)
+fails closed: every manifest read raises ops.LegacyStateError and
+deletes nothing. Its log predates the scene-bounds columns and can no
+longer produce a mosaic; rebuild it in a fresh work_dir.
 
 Storage seam (r5 — VERDICT r4 #3): the COMMIT SCHEME above is
 object-store-safe by construction (single-small-object commit, no
 directory renames on the read path), and the manifest/GC bookkeeping
-now routes EVERY list/read/write/delete through an injectable
+routes EVERY list/read/write/delete through an injectable
 StorageClient — LocalFS (the default) binds to POSIX; an S3/GCS
 deployment supplies a client whose write_text_atomic is one PUT and
 whose delete_tree is a prefix delete. The Spark-side writers and
@@ -48,9 +64,14 @@ over mem:// paths that cannot resolve on the local filesystem).
 
 from __future__ import annotations
 
+import functools
+import json
 import os
+import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.errors.exceptions.captured import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from . import mosaic as mz
 from . import ops, textops, udfs
@@ -60,7 +81,7 @@ from .ops import MosaicConfig
 
 class StorageClient:
     """Small-object storage interface for the streaming bookkeeping
-    (manifest, config-hash, _chk lineage reads, dead-dir GC). Paths are
+    (manifest, first-use records, _chk reads, dead-dir GC). Paths are
     opaque strings composed with '/' separators; an object-store client
     treats them as key prefixes (makedirs becomes a no-op, canonical
     the identity)."""
@@ -83,9 +104,6 @@ class StorageClient:
         object store: a single PUT)."""
         raise NotImplementedError
 
-    def delete(self, path: str) -> None:
-        raise NotImplementedError
-
     def delete_tree(self, path: str) -> None:
         raise NotImplementedError
 
@@ -93,7 +111,7 @@ class StorageClient:
         raise NotImplementedError
 
     def canonical(self, path: str) -> str:
-        """Resolve to the canonical form used for containment checks
+        """Resolve to the canonical form used for identity checks
         (POSIX: realpath; object store: the key itself)."""
         raise NotImplementedError
 
@@ -131,12 +149,7 @@ class LocalFS(StorageClient):
         finally:
             os.close(dfd)
 
-    def delete(self, path: str) -> None:
-        os.remove(path)
-
     def delete_tree(self, path: str) -> None:
-        import shutil
-
         shutil.rmtree(path, ignore_errors=True)
 
     def makedirs(self, path: str) -> None:
@@ -164,167 +177,139 @@ def run_incremental(
     (checkpointed source offsets).
     """
     fs = fs or LOCAL_FS
-    fs.makedirs(work_dir)
-    _check_config_hash(work_dir, cfg, fs)
-    _check_input_dir(work_dir, scenes_dir, fs)
-    man = _read_manifest(work_dir, fs)
-    if man["folded"]:
-        qid = _chk_query_id(work_dir, fs)
-        if qid is None or (man["chk_id"] is not None and qid != man["chk_id"]):
-            raise ValueError(
-                f"work_dir {work_dir} has compacted (folded) batches but its "
-                "streaming checkpoint (_chk) is missing or belongs to a "
-                "different query — replayed input would reuse folded batch "
-                "ids and be silently dropped. Restore the original _chk or "
-                "start a fresh work_dir."
-            )
-        if man["chk_id"] is None:
-            # legacy-migrated manifest that never learned its offset
-            # log's identity: a _chk RECREATED by a different query
-            # after migration would restart batch ids at 0 — exactly
-            # the silent-skip this guard exists to prevent (ADVICE r3).
-            # Adopt the observed qid only when (a) its offset log
-            # covers every folded batch id (sequential ids → coverage
-            # = max recorded offset >= max folded id) AND (b) its
-            # file-source log shows each folded batch was assigned
-            # from THIS scenes_dir — id coverage alone would accept a
-            # checkpoint restored from a sibling run over different
-            # input, whose seen-files set would then suppress delivery
-            # of files this work_dir never processed (r4 review).
-            odir = os.path.join(work_dir, "_chk", "offsets")
-            recorded = [
-                int(f) for f in (
-                    fs.listdir(odir) if fs.isdir(odir) else []
-                ) if f.isdigit()
-            ]
-            if not recorded or max(recorded) < max(man["folded"]):
-                raise ValueError(
-                    f"work_dir {work_dir} has folded batches up to "
-                    f"{max(man['folded'])} but the _chk offset log only "
-                    f"covers up to {max(recorded) if recorded else 'none'}"
-                    " — this checkpoint did not assign the folded batch "
-                    "ids, so replayed input would recycle them and be "
-                    "silently dropped. Restore the original _chk or "
-                    "start a fresh work_dir."
-                )
-            if not _sources_log_covers(work_dir, man["folded"], scenes_dir, fs):
-                raise ValueError(
-                    f"work_dir {work_dir}'s _chk file-source log does "
-                    "not show the folded batch ids being assigned from "
-                    f"{scenes_dir} — the checkpoint appears to belong "
-                    "to a different input/run; adopting it would "
-                    "silently skip input. Restore the original _chk or "
-                    "start a fresh work_dir."
-                )
-            man["chk_id"] = qid
-            _write_manifest(work_dir, man, fs)
-    schema = spark.read.parquet(scenes_dir).schema
-    reader = spark.readStream.schema(schema)
+
+    def write_batch(batch_df, bid):
+        tiles = udfs.explode_to_quadkeys(
+            ops.filter_scenes(batch_df, cfg),
+            cfg.quadkey_zoom,
+            passthrough=EXPLODE_PASSTHROUGH,
+        )
+        tiles.write.mode("overwrite").parquet(
+            _batch_dir(work_dir, "tiles", bid)
+        )
+
+    return _run_batch_log(
+        spark, scenes_dir, work_dir, fs, max_files_per_trigger,
+        lambda: _check_config_hash(work_dir, cfg, fs), write_batch,
+    )
+
+
+def _file_stream(
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """A parquet file stream over input_dir, with the schema read from
+    the files already there."""
+    reader = spark.readStream.schema(spark.read.parquet(input_dir).schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(scenes_dir)
+    return reader.parquet(input_dir)
 
-    tiles_dir = os.path.join(work_dir, "tiles_log")
-    n_batches = {"n": 0}
+
+def _run_batch_log(
+    spark, input_dir, work_dir, fs, max_files_per_trigger, check_config,
+    write_batch,
+) -> int:
+    """The lifecycle both incremental entries share. Before the stream
+    starts: the replay guard, then the first-use records (input_dir and
+    the entry's own config via check_config()). Then an availableNow
+    foreachBatch stream over input_dir that calls write_batch(batch_df,
+    batch_id) for every batch not folded by compaction. Delivery is
+    at-least-once, so write_batch must overwrite its own batch_id=<id>
+    partitions. Returns the number of micro-batches executed."""
+    _replay_guard(work_dir, fs)
+    fs.makedirs(work_dir)
+    # pointing an existing work_dir at a MOVED or different input makes
+    # every file unseen by the source checkpoint, so the whole corpus
+    # would re-ingest as new batches next to the old ones
+    _record_or_compare(
+        work_dir, "input_dir", fs.canonical(input_dir), fs,
+        "re-ingesting a different (or moved) directory would duplicate "
+        "the corpus in the log",
+    )
+    check_config()
+    n_batches = 0
 
     def handle(batch_df, batch_id):
-        # a batch folded by compact_tiles_log must NOT be rewritten on
-        # redelivery — its rows already live in the manifest's current
-        # tiles_compacted/gen=<k> generation
-        if int(batch_id) in _folded_batches(work_dir, fs):
-            n_batches["n"] += 1
-            return
-        filtered = ops.filter_scenes(batch_df, cfg)
-        tiles = udfs.explode_to_quadkeys(
-            filtered, cfg.quadkey_zoom, passthrough=EXPLODE_PASSTHROUGH
-        )
-        # exactly-once effect under foreachBatch's at-least-once retry
-        # contract: the batch_id keys its own partition dir, overwrite
-        # replaces any partial output from a failed earlier attempt
-        tiles.write.mode("overwrite").parquet(
-            os.path.join(tiles_dir, f"batch_id={batch_id}")
-        )
-        n_batches["n"] += 1
+        nonlocal n_batches
+        # a folded batch's rows already live in the manifest's current
+        # compacted generation: a redelivery must not rewrite them
+        if int(batch_id) not in _folded_batches(work_dir, fs):
+            write_batch(batch_df, int(batch_id))
+        n_batches += 1
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
+    (
+        _file_stream(spark, input_dir, max_files_per_trigger)
+        .writeStream.foreachBatch(handle)
         .option("checkpointLocation", os.path.join(work_dir, "_chk"))
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
-    return n_batches["n"]
+    return n_batches
 
 
-def _check_input_dir(
-    work_dir: str, input_dir: str, fs: StorageClient
+def _record_or_compare(
+    work_dir: str, name: str, value: str, fs: StorageClient, why: str
 ) -> None:
-    """Bind a work_dir to its input directory (r5 review): pointing an
-    existing work_dir at a MOVED or different input makes every file
-    unseen by the source checkpoint, so the whole corpus re-ingests as
-    new batches and appends a duplicate corpus into the log — with no
-    error. The identity is recorded on first use; a later mismatch
-    fails loud."""
-    f = os.path.join(work_dir, "input_dir")
-    cur = fs.canonical(input_dir)
-    if fs.exists(f):
-        prev = fs.read_text(f).strip()
-        if prev != cur:
-            raise ValueError(
-                f"work_dir {work_dir} was built from input {prev!r}; "
-                f"current input is {cur!r} — re-ingesting a different "
-                "(or moved) directory would duplicate the corpus in "
-                "the log. Use a fresh work_dir."
-            )
-    else:
-        fs.write_text_atomic(f, cur)
+    """Bind work_dir to `value` under the record file `name`: written on
+    first use, and any later run with a different value raises."""
+    f = os.path.join(work_dir, name)
+    if not fs.exists(f):
+        fs.write_text_atomic(f, value)
+        return
+    prev = fs.read_text(f).strip()
+    if prev != value:
+        raise ValueError(
+            f"work_dir {work_dir} was built with {name} {prev!r}; this "
+            f"run has {value!r} — {why}. Use a fresh work_dir."
+        )
 
 
 def _check_config_hash(
     work_dir: str, cfg: MosaicConfig, fs: StorageClient
 ) -> None:
     """The tiles log is config-specific: appending explodes from a
-    different quadkey_zoom/filters would silently corrupt it."""
-    cfg_file = os.path.join(work_dir, "config_hash")
-    h = cfg.config_hash()
-    if fs.exists(cfg_file):
-        prev = fs.read_text(cfg_file).strip()
-        if prev != h:
-            raise ValueError(
-                f"work_dir {work_dir} was built with config {prev}; "
-                f"current config is {h} — use a fresh work_dir"
-            )
-    else:
-        fs.write_text_atomic(cfg_file, h)
+    different quadkey_zoom/filters would silently corrupt it, and
+    finalizing it under another config would label its quadkeys with
+    the wrong zoom and skip the filters its rows never went through."""
+    _record_or_compare(
+        work_dir, "config_hash", cfg.config_hash(), fs,
+        "the tiles log only holds rows built under that config",
+    )
 
 
-def _manifest_path(work_dir: str) -> str:
-    return os.path.join(work_dir, "tiles_manifest.json")
+def _replay_guard(work_dir: str, fs: StorageClient) -> None:
+    """Refuse to stream into a work_dir whose folded batch ids are not
+    bound to the current checkpoint. Folded ids protect redelivery only
+    under the offset log that named them: a missing or recreated _chk
+    restarts batch ids at 0, and the sink would skip the replayed input
+    as folded, returning success. With folded batches, the _chk query id
+    must therefore be present and equal to the manifest's chk_id."""
+    man = _read_manifest(work_dir, fs)
+    if not man["folded"]:
+        return
+    qid = _chk_query_id(work_dir, fs)
+    if qid is None or qid != man["chk_id"]:
+        raise ValueError(
+            f"work_dir {work_dir} has compacted (folded) batches recorded "
+            f"under streaming query {man['chk_id']!r}, but its checkpoint "
+            f"(_chk) query is {qid!r} — replayed input would reuse folded "
+            "batch ids and be silently dropped. Restore the original _chk "
+            "or start a fresh work_dir."
+        )
 
 
 def _read_manifest(work_dir: str, fs: StorageClient = LOCAL_FS) -> dict:
-    import json as _json
-
-    p = _manifest_path(work_dir)
+    if fs.exists(os.path.join(work_dir, "compacted_batches.json")):
+        raise ops.LegacyStateError(
+            f"work_dir {work_dir} was compacted by the pre-manifest scheme "
+            "(compacted_batches.json): its log predates the scene-bounds "
+            "columns and cannot produce a mosaic — rebuild it in a fresh "
+            "work_dir"
+        )
+    p = os.path.join(work_dir, "tiles_manifest.json")
     if fs.exists(p):
-        return _json.loads(fs.read_text(p))
-    # migrate a work_dir compacted by the pre-manifest scheme
-    # (compacted_batches.json + tiles_log/batch_id=-1): its folded set
-    # must keep protecting against redelivery, and batch_id=-1 stays a
-    # live batch dir until the next compaction folds it into gen=0
-    legacy = os.path.join(work_dir, "compacted_batches.json")
-    if fs.exists(legacy):
-        # chk_id stays None on migration (r5 review): stamping whatever
-        # _chk happens to be present would blindly trust an impostor
-        # checkpoint recreated by a different query/input — leaving it
-        # None routes the next run_incremental through the VALIDATED
-        # adoption path (offset coverage + sources lineage), which
-        # earns the id or refuses.
-        man = {"gen": None, "folded": sorted(_json.loads(fs.read_text(legacy))),
-               "chk_id": None}
-        _write_manifest(work_dir, man, fs)
-        fs.delete(legacy)
-        return man
+        return json.loads(fs.read_text(p))
     return {"gen": None, "folded": [], "chk_id": None}
 
 
@@ -335,126 +320,32 @@ def _write_manifest(
     StorageClient.write_text_atomic (POSIX: tmp+rename+fsync; object
     store: one atomic PUT; no directory moves are ever needed by this
     scheme)."""
-    import json as _json
-
-    fs.write_text_atomic(_manifest_path(work_dir), _json.dumps(man, sort_keys=True))
-
-
-def _sources_log_covers(
-    work_dir: str, folded: list, scenes_dir: str,
-    fs: StorageClient = LOCAL_FS,
-) -> bool:
-    """True iff the _chk file-source log has an entry for every folded
-    batch id and every file it records lives under `scenes_dir` — the
-    lineage evidence that THIS checkpoint assigned the folded batches
-    from this work_dir's input (see the adoption guard)."""
-    import json as _json
-    from urllib.parse import unquote, urlparse
-
-    sdir = os.path.join(work_dir, "_chk", "sources", "0")
-    root = fs.canonical(scenes_dir)
-    if not fs.isdir(sdir):
-        return False
-    # Spark compacts this log every N batches into "<n>.compact" files
-    # that carry ALL entries up to n (older per-batch files are GC'd),
-    # so a batch id resolves to its own file or the first compact at
-    # or past it — a legitimate old checkpoint must not be refused
-    # just because its early per-batch files were compacted away.
-    names = fs.listdir(sdir)
-    compacts = sorted(
-        int(n.split(".")[0]) for n in names if n.endswith(".compact")
+    fs.write_text_atomic(
+        os.path.join(work_dir, "tiles_manifest.json"),
+        json.dumps(man, sort_keys=True),
     )
-
-    def _entries(bid: int):
-        """(covered, json_lines) for one batch id. `covered` means the
-        log ACCOUNTS for the batch — its own per-batch file exists, or a
-        compact at/past it does — even when it records zero new files (a
-        zero-new-files micro-batch writes a log file holding only the
-        'v1' header; that is positive evidence of this checkpoint's
-        lineage, not a reason to refuse adoption — ADVICE r4)."""
-        if str(bid) in names:
-            return True, [
-                ln.strip()
-                for ln in fs.read_text(
-                    os.path.join(sdir, str(bid))
-                ).splitlines()
-                if ln.strip().startswith("{")
-            ]
-        for c in compacts:
-            if c >= bid:
-                out = []
-                text = fs.read_text(os.path.join(sdir, f"{c}.compact"))
-                for line in text.splitlines():
-                    line = line.strip()
-                    if not line.startswith("{"):
-                        continue  # "v1" header
-                    try:
-                        if _json.loads(line).get("batchId") == bid:
-                            out.append(line)
-                    except ValueError:
-                        continue
-                return True, out
-        return False, []  # no evidence for this batch id
-
-    for bid in folded:
-        covered, lines = _entries(int(bid))
-        if not covered:
-            return False
-        for line in lines:
-            try:
-                p = _json.loads(line).get("path", "")
-            except ValueError:
-                return False
-            # normalize the RECORDED uri and the root with the SAME
-            # convention (r5 review): strip the scheme from the record
-            # only when the root is scheme-less (the local case); when
-            # the root itself is URI-form (object store / file: URI),
-            # compare the full uris — stripping only one side made
-            # adoption always refuse. Separator is "/" (these are
-            # Hadoop/object-store keys, never os.sep-dependent).
-            root_is_uri = "://" in root or root.startswith("file:")
-            if ("://" in p or p.startswith("file:")) and not root_is_uri:
-                # unquote AFTER extracting the path (r6 review): Spark
-                # percent-encodes the recorded URI ('my scenes' →
-                # 'my%20scenes'), and comparing the encoded form to the
-                # raw filesystem root made adoption always refuse for
-                # any input dir with a URI-escapable character
-                p = unquote(urlparse(p).path)
-            if not fs.canonical(p).startswith(root.rstrip("/") + "/"):
-                return False
-    return True
 
 
 def _committed_batches(
     work_dir: str, fs: StorageClient = LOCAL_FS
 ) -> set[int]:
-    """Batch ids the streaming engine COMMITTED (_chk/commits entries;
-    the log compacts like the sources log — a <n>.compact covers every
-    id ≤ n). Compaction must fold only committed batches (r5 review): a
-    batch dir left by a crash mid-write is uncommitted, will be
-    REDELIVERED, and folding it would both capture partial output and
-    make the redelivery skip — permanent silent data loss."""
+    """Batch ids the streaming engine COMMITTED (_chk/commits entries).
+    Compaction must fold only committed batches (r5 review): a batch
+    dir left by a crash mid-write is uncommitted, will be REDELIVERED,
+    and folding it would both capture partial output and make the
+    redelivery skip — permanent silent data loss."""
     cdir = os.path.join(work_dir, "_chk", "commits")
-    if not fs.isdir(cdir):
-        return set()
-    names = fs.listdir(cdir)
-    out = {int(n) for n in names if n.isdigit()}
-    compacts = [
-        int(n.split(".")[0]) for n in names if n.endswith(".compact")
+    ids = [
+        int(n.removesuffix(".compact"))
+        for n in (fs.listdir(cdir) if fs.isdir(cdir) else [])
+        if n.removesuffix(".compact").isdigit()
     ]
-    if compacts:
-        out |= set(range(0, max(compacts) + 1))
     # Commits are monotonic for a single query: batch N committed
-    # implies every id < N committed. Relying on the RETAINED entries
-    # alone (r6 advice) leaves batches older than
-    # spark.sql.streaming.minBatchesToRetain permanently unfoldable
-    # once Spark purges their commit files — the commits log (unlike
-    # offsets/sources) never writes .compact markers, so a long
-    # incremental run would silently stop compacting its oldest
-    # batches and the small-dir accumulation would return.
-    if out:
-        out |= set(range(0, max(out) + 1))
-    return out
+    # implies every id < N committed (a <n>.compact covers every id
+    # ≤ n). Relying on the RETAINED entries alone (r6 advice) would
+    # leave batches older than spark.sql.streaming.minBatchesToRetain
+    # permanently unfoldable once Spark purges their commit files.
+    return set(range(max(ids) + 1)) if ids else set()
 
 
 def _chk_query_id(
@@ -465,9 +356,7 @@ def _chk_query_id(
     meta = os.path.join(work_dir, "_chk", "metadata")
     if not fs.exists(meta):
         return None
-    import json as _json
-
-    return _json.loads(fs.read_text(meta)).get("id")
+    return json.loads(fs.read_text(meta)).get("id")
 
 
 def _folded_batches(
@@ -476,25 +365,17 @@ def _folded_batches(
     return set(_read_manifest(work_dir, fs)["folded"])
 
 
-def _batch_dirs(work_dir: str, fs: StorageClient = LOCAL_FS) -> list[str]:
-    """tiles_log batch partitions — delegates to _named_batch_dirs so
-    there is ONE listing/sort definition (r5 review)."""
-    return _named_batch_dirs(os.path.join(work_dir, "tiles_log"), fs)
-
-
 def _manifest_chk_id(
     work_dir: str, man: dict, fs: StorageClient
 ) -> str | None:
     """The chk_id to stamp into a compaction manifest. The recorded id
     binds the folded-batch set to the offset log that NAMED those ids;
     adopting the current _chk's id is only legitimate when none was
-    recorded yet. Overwriting a mismatched one (r6 review — the old
-    `current or recorded` expression did exactly that) would launder an
-    impostor checkpoint past run_incremental's replay guard: fold under
-    query A, recreate _chk as query B, compact → manifest says B, the
-    next run passes the guard and silently drops replayed input under
-    recycled folded ids. Mismatch is therefore a refusal, same as the
-    run-side guard."""
+    recorded yet. Overwriting a mismatched one (r6 review) would launder
+    an impostor checkpoint past the replay guard: fold under query A,
+    recreate _chk as query B, compact → manifest says B, the next run
+    passes the guard and silently drops replayed input under recycled
+    folded ids. Mismatch is therefore a refusal, same as the guard."""
     qid = _chk_query_id(work_dir, fs)
     if man["chk_id"] is None:
         return qid
@@ -510,12 +391,132 @@ def _manifest_chk_id(
     return man["chk_id"]
 
 
-def _tiles_paths(work_dir: str, fs: StorageClient = LOCAL_FS) -> list[str]:
-    """Live tiles-log data as resolved through the manifest: the
-    current compacted generation (if any) plus every batch partition
-    not folded into it. Delegates to _log_paths so the mosaic and
-    dedup read paths share ONE resolution rule (r6 review)."""
-    return _log_paths(work_dir, "tiles", fs)
+def _named_batch_dirs(
+    log_dir: str, fs: StorageClient = LOCAL_FS
+) -> list[str]:
+    """Sorted batch_id=<id> partition names under a per-batch log dir."""
+    if not fs.isdir(log_dir):
+        return []
+    return sorted(
+        (d for d in fs.listdir(log_dir) if d.startswith("batch_id=")),
+        key=lambda d: int(d.split("=", 1)[1]),
+    )
+
+
+def _batch_ids(work_dir: str, log: str, fs: StorageClient) -> list[int]:
+    return [
+        int(d.split("=", 1)[1])
+        for d in _named_batch_dirs(os.path.join(work_dir, f"{log}_log"), fs)
+    ]
+
+
+def _batch_dir(work_dir: str, log: str, bid: int) -> str:
+    return os.path.join(work_dir, f"{log}_log", f"batch_id={bid}")
+
+
+def _gen_dir(work_dir: str, log: str, gen: int) -> str:
+    return os.path.join(work_dir, f"{log}_compacted", f"gen={gen}")
+
+
+def _gen_and_batch_paths(
+    work_dir: str, log: str, man: dict, bids: list[int]
+) -> list[str]:
+    """The manifest's committed generation of `log` (if any) first, then
+    the batch dirs `bids`."""
+    gen = [] if man["gen"] is None else [_gen_dir(work_dir, log, man["gen"])]
+    return gen + [_batch_dir(work_dir, log, b) for b in bids]
+
+
+def _log_paths(
+    work_dir: str,
+    log: str,
+    fs: StorageClient,
+    before_batch: int | None = None,
+) -> list[str]:
+    """Live data paths of a manifest-governed per-batch log: the
+    committed compacted generation (if any) first, then every
+    non-folded batch partition — optionally only batches with id <
+    before_batch (the incremental-dedup 'previous state' view; the
+    compacted generation always qualifies because compaction only folds
+    batches that ran before the current one)."""
+    man = _read_manifest(work_dir, fs)
+    folded = set(man["folded"])
+    return _gen_and_batch_paths(work_dir, log, man, [
+        b for b in _batch_ids(work_dir, log, fs)
+        if b not in folded and (before_batch is None or b < before_batch)
+    ])
+
+
+def _gc_dead_state(
+    work_dir: str, man: dict, logs: tuple[str, ...], fs: StorageClient
+) -> None:
+    """Compaction prelude: drop what earlier crashes left dead to
+    readers — batch dirs already folded, and generation dirs other than
+    the committed one."""
+    folded = set(man["folded"])
+    for log in logs:
+        for b in _batch_ids(work_dir, log, fs):
+            if b in folded:
+                fs.delete_tree(_batch_dir(work_dir, log, b))
+        comp_root = os.path.join(work_dir, f"{log}_compacted")
+        for g in fs.listdir(comp_root) if fs.isdir(comp_root) else []:
+            if g.startswith("gen=") and g != f"gen={man['gen']}":
+                fs.delete_tree(os.path.join(comp_root, g))
+
+
+def _foldable(
+    work_dir: str, man: dict, logs: tuple[str, ...], fs: StorageClient
+) -> list[int]:
+    """The fold rule: batch ids present in EVERY log, committed by the
+    streaming engine (_chk/commits), and not folded yet.
+    - An uncommitted dir (crash mid-write) or a dir present in only some
+      logs (crash between a handler's writes) is still owed by its
+      redelivery; folding it would mark it done with partial output and
+      make the redelivery skip — silent data loss. Such dirs stay live
+      for the redelivered batch to overwrite-complete.
+    - Best-effort GC can leave a folded dir behind; re-folding it would
+      duplicate its rows next to the generation that already holds
+      them."""
+    ids = _committed_batches(work_dir, fs)
+    for log in logs:
+        ids &= set(_batch_ids(work_dir, log, fs))
+    return sorted(ids - set(man["folded"]))
+
+
+def _next_gen(man: dict) -> int:
+    return 0 if man["gen"] is None else man["gen"] + 1
+
+
+def _commit_fold(
+    work_dir: str,
+    man: dict,
+    logs: tuple[str, ...],
+    fold: list[int],
+    fs: StorageClient,
+    **extra,
+) -> int:
+    """Commit the already-written next generation of every log by ONE
+    manifest replace, then drop the folded batch dirs and the previous
+    generation (best-effort: a crash here only leaves garbage the
+    manifest never references; the next compaction GCs it). Returns the
+    number of batch partitions folded."""
+    _write_manifest(
+        work_dir,
+        {
+            "gen": _next_gen(man),
+            "folded": sorted(set(man["folded"]) | set(fold)),
+            # bind the folded set to the offset log that named the ids
+            "chk_id": _manifest_chk_id(work_dir, man, fs),
+            **extra,
+        },
+        fs,
+    )
+    for log in logs:
+        for b in fold:
+            fs.delete_tree(_batch_dir(work_dir, log, b))
+        if man["gen"] is not None:
+            fs.delete_tree(_gen_dir(work_dir, log, man["gen"]))
+    return len(fold)
 
 
 def compact_tiles_log(
@@ -528,89 +529,27 @@ def compact_tiles_log(
     generation of `target_partitions` files, committing via the
     manifest (see module docstring — object-store-safe, no dir moves).
 
-    Exactly-once is preserved against foreachBatch REDELIVERY of a
-    folded batch: the folded batch_ids are recorded in the manifest and
-    the sink skips them (their rows already live in the compacted
-    generation). Crash on either side of the manifest commit leaves
-    only invisible garbage, GC'd on the next invocation.
+    Exactly-once is preserved against REDELIVERY of a folded batch: the
+    folded batch_ids are recorded in the manifest and the sink skips
+    them (their rows already live in the compacted generation). Crash
+    on either side of the manifest commit leaves only invisible
+    garbage, GC'd on the next invocation.
 
     Contract: run between run_incremental invocations, never while a
-    stream is writing. Returns the number of live partitions folded.
+    stream is writing. Returns the number of batch partitions folded.
     """
     fs = fs or LOCAL_FS
+    logs = ("tiles",)
     man = _read_manifest(work_dir, fs)
-    comp_root = os.path.join(work_dir, "tiles_compacted")
-    tiles_dir = os.path.join(work_dir, "tiles_log")
-    folded = set(man["folded"])
-    # GC garbage from earlier crashes: batch dirs already folded and
-    # generation dirs other than the committed one are dead to readers
-    for d in _batch_dirs(work_dir, fs):
-        if int(d.split("=", 1)[1]) in folded:
-            fs.delete_tree(os.path.join(tiles_dir, d))
-    if fs.isdir(comp_root):
-        for g in fs.listdir(comp_root):
-            if g.startswith("gen=") and (
-                man["gen"] is None or g != f"gen={man['gen']}"
-            ):
-                fs.delete_tree(os.path.join(comp_root, g))
-    # fold ONLY batches the streaming engine committed (r5 review): an
-    # uncommitted batch dir (crash mid-write) will be REDELIVERED —
-    # folding it would capture partial output and make the redelivery
-    # skip. Uncommitted dirs stay live for their redelivery to replace.
-    committed = _committed_batches(work_dir, fs)
-    foldable = sorted(
-        b
-        for b in (
-            int(d.split("=", 1)[1]) for d in _batch_dirs(work_dir, fs)
-        )
-        if b not in folded and b in committed
-    )
-    live = ([
-        os.path.join(comp_root, f"gen={man['gen']}")
-    ] if man["gen"] is not None else []) + [
-        os.path.join(tiles_dir, f"batch_id={b}") for b in foldable
-    ]
+    _gc_dead_state(work_dir, man, logs, fs)
+    fold = _foldable(work_dir, man, logs, fs)
+    live = _gen_and_batch_paths(work_dir, "tiles", man, fold)
     if len(live) <= 1:
         return 0
-    new_gen = 0 if man["gen"] is None else man["gen"] + 1
-    gen_dir = os.path.join(comp_root, f"gen={new_gen}")
     spark.read.parquet(*live).repartition(target_partitions).write.parquet(
-        gen_dir
+        _gen_dir(work_dir, "tiles", _next_gen(man))
     )
-    new_folded = folded | set(foldable)
-    _write_manifest(
-        work_dir,
-        {
-            "gen": new_gen,
-            "folded": sorted(new_folded),
-            # bind the folded set to the offset log that named the ids
-            "chk_id": _manifest_chk_id(work_dir, man, fs),
-        },
-        fs,
-    )
-    # post-commit cleanup (best-effort: a crash here only leaves
-    # garbage that the manifest never references; next call GCs it)
-    for b in foldable:
-        fs.delete_tree(os.path.join(tiles_dir, f"batch_id={b}"))
-    if man["gen"] is not None:
-        fs.delete_tree(os.path.join(comp_root, f"gen={man['gen']}"))
-    # count BATCH partitions folded (r6 advice): len(live) also counted
-    # the previous compacted generation as a "batch folded" — off by
-    # one every time gen was not None
-    return len(foldable)
-
-
-def _named_batch_dirs(
-    log_dir: str, fs: StorageClient = LOCAL_FS
-) -> list[str]:
-    """Sorted batch_id=<id> partition names under any per-batch log dir
-    (the _batch_dirs pattern generalized beyond tiles_log)."""
-    if not fs.isdir(log_dir):
-        return []
-    return sorted(
-        (d for d in fs.listdir(log_dir) if d.startswith("batch_id=")),
-        key=lambda d: int(d.split("=", 1)[1]),
-    )
+    return _commit_fold(work_dir, man, logs, fold, fs)
 
 
 # storage buckets for the COMPACTED band state (r7 — VERDICT r6 #1):
@@ -637,8 +576,6 @@ _DEDUP_ISIN_MAX = 4096
 
 
 def _band_bucket_col(p: int):
-    from pyspark.sql import functions as F
-
     return F.pmod(F.xxhash64("band", "key"), F.lit(p)).cast("int")
 
 
@@ -650,15 +587,11 @@ def _read_prev_bands(spark, work_dir, fs, before_batch, nb):
     generations read whole — detected by the absence of the _bucket
     partition column, so pre-r7 work_dirs keep working). Returns None
     when no previous state exists."""
-    from pyspark.sql import functions as F
-
     man = _read_manifest(work_dir, fs)
-    folded = set(man["folded"])
+    paths = _log_paths(work_dir, "bands", fs, before_batch)
     parts = []
     if man["gen"] is not None:
-        comp = spark.read.parquet(
-            os.path.join(work_dir, "bands_compacted", f"gen={man['gen']}")
-        )
+        comp = spark.read.parquet(paths.pop(0))
         if "_bucket" in comp.columns:
             p = int(man.get("band_buckets") or DEDUP_BAND_BUCKETS)
             buckets = nb.select(_band_bucket_col(p).alias("_bucket"))
@@ -681,21 +614,9 @@ def _read_prev_bands(spark, work_dir, fs, before_batch, nb):
                 )
             comp = comp.drop("_bucket")
         parts.append(comp)
-    log_dir = os.path.join(work_dir, "bands_log")
-    batch_paths = [
-        os.path.join(log_dir, d)
-        for d in _named_batch_dirs(log_dir, fs)
-        if int(d.split("=", 1)[1]) not in folded
-        and int(d.split("=", 1)[1]) < before_batch
-    ]
-    if batch_paths:
-        parts.append(spark.read.parquet(*batch_paths))
-    if not parts:
-        return None
-    prev = parts[0]
-    for p in parts[1:]:
-        prev = prev.unionByName(p)
-    return prev
+    if paths:
+        parts.append(spark.read.parquet(*paths))
+    return functools.reduce(DataFrame.unionByName, parts) if parts else None
 
 
 def _cumulative_bucket_stats(nb, prev):
@@ -712,10 +633,8 @@ def _cumulative_bucket_stats(nb, prev):
     (bounded by the micro-batch), so AQE plans it as a BROADCAST semi
     (plan-asserted in test_streaming) and prev is scanned and filtered
     map-side; only rows in touched buckets reach the aggregation
-    shuffle. Factored out of the foreachBatch handle so the plan shape
-    is testable."""
-    from pyspark.sql import functions as F
-
+    shuffle. Factored out of the batch writer so the plan shape is
+    testable."""
     new_stats = nb.groupBy("band", "key").agg(
         F.count("*").alias("_new_n"),
         F.min("doc_id").alias("_new_min"),
@@ -758,9 +677,10 @@ def run_incremental_dedup(
     collisions plus new-vs-persisted-state collisions via a (band, key)
     equi-join), and appends its bands to the persisted signature/band
     state — the arriving 1% of a corpus never re-shingles the other
-    99%. Same manifest-machinery guarantees as run_incremental:
-    per-batch overwrite partitions make foreachBatch redelivery
-    idempotent, and manifest-folded batch ids are skipped.
+    99%. It runs the same batch-log lifecycle as run_incremental:
+    per-batch overwrite partitions make redelivery idempotent,
+    manifest-folded batch ids are skipped, and the same replay guard
+    runs before the stream starts.
 
     With ``max_bucket=None`` semantics are exhaustive: every pair
     surfaces exactly once — at the batch where its later member
@@ -803,34 +723,18 @@ def run_incremental_dedup(
 
     Layout: work_dir/{bands_log,pairs_log}/batch_id=<id>/ + _chk.
     Returns the number of micro-batches executed this invocation."""
-    from . import textops
-
     fs = fs or LOCAL_FS
-    fs.makedirs(work_dir)
-    _check_input_dir(work_dir, docs_dir, fs)
-    # the band state and pairs log are max_bucket-specific (r6 review,
-    # the dedup twin of _check_config_hash): batches appended under a
-    # different cap mix guard regimes — the accumulated pairs would be
-    # batch-equivalent to NO single one-shot semantics, with no error.
-    # Recorded on first use; later mismatch fails loud.
-    cap_file = os.path.join(work_dir, "dedup_config")
-    cap = f"max_bucket={max_bucket}"
-    if fs.exists(cap_file):
-        prev = fs.read_text(cap_file).strip()
-        if prev != cap:
-            raise ValueError(
-                f"work_dir {work_dir} was built with {prev}; current "
-                f"run passes {cap} — mixing mega-bucket guard regimes "
-                "across batches breaks the pairs log's equivalence "
-                "contract. Use a fresh work_dir."
-            )
-    else:
-        # refuse a work_dir that already holds band batches but no
-        # recorded cap (r7, ADVICE r6): such state predates the
-        # config record (exhaustive-era semantics unknown), and
-        # silently stamping the CURRENT cap would mix guard regimes —
-        # exactly the drift this file exists to refuse.
-        if _named_batch_dirs(os.path.join(work_dir, "bands_log"), fs):
+
+    def check_config():
+        # the band state and pairs log are max_bucket-specific (r6
+        # review): batches appended under a different cap would make
+        # the pairs log batch-equivalent to NO single one-shot run.
+        # A work_dir holding band batches but no record predates the
+        # record (ADVICE r6): its regime is unknown, and stamping the
+        # current cap would mix regimes.
+        if not fs.exists(os.path.join(work_dir, "dedup_config")) and (
+            _batch_ids(work_dir, "bands", fs)
+        ):
             raise ValueError(
                 f"work_dir {work_dir} holds bands_log batches but no "
                 "dedup_config record — its mega-bucket guard regime "
@@ -838,41 +742,14 @@ def run_incremental_dedup(
                 "regimes. Use a fresh work_dir (or restore the "
                 "original dedup_config)."
             )
-        fs.write_text_atomic(cap_file, cap)
-    man = _read_manifest(work_dir, fs)
-    if man["folded"]:
-        # the same silent-skip hazard run_incremental guards (r5
-        # review): folded batch ids only protect redelivery under the
-        # OFFSET LOG that named them — a missing/recreated _chk would
-        # replay all input under recycled ids and the folded-skip would
-        # drop the new documents' pairs with a success return
-        qid = _chk_query_id(work_dir, fs)
-        if qid is None or man["chk_id"] is None or qid != man["chk_id"]:
-            raise ValueError(
-                f"work_dir {work_dir} has compacted (folded) dedup "
-                "batches but its streaming checkpoint (_chk) is "
-                "missing or belongs to a different query — replayed "
-                "input would reuse folded batch ids and be silently "
-                "dropped. Restore the original _chk or start a fresh "
-                "work_dir."
-            )
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir)
-    bands_dir = os.path.join(work_dir, "bands_log")
-    pairs_dir = os.path.join(work_dir, "pairs_log")
-    n_batches = {"n": 0}
+        _record_or_compare(
+            work_dir, "dedup_config", f"max_bucket={max_bucket}", fs,
+            "mixing mega-bucket guard regimes across batches breaks the "
+            "pairs log's equivalence contract",
+        )
 
-    def handle(batch_df, batch_id):
-        from pyspark.sql import functions as F
-
-        bid = int(batch_id)
-        if bid in _folded_batches(work_dir, fs):
-            n_batches["n"] += 1
-            return
-        band_path = os.path.join(bands_dir, f"batch_id={bid}")
+    def write_batch(batch_df, bid):
+        band_path = _batch_dir(work_dir, "bands", bid)
         textops.minhash_banded(batch_df).write.mode("overwrite").parquet(
             band_path
         )
@@ -884,10 +761,8 @@ def run_incremental_dedup(
         # compacted generation's scan PRUNED to this batch's touched
         # storage buckets (see _read_prev_bands)
         prev = _read_prev_bands(spark, work_dir, fs, bid, nb)
-        if max_bucket is None:
-            within = textops.banded_candidate_pairs(nb, max_bucket=None)
-            nb_ok, prev_ok, star = nb, prev, None
-        else:
+        nb_ok, prev_ok, star = nb, prev, None
+        if max_bucket is not None:
             # Incremental star guard: per (band, key), cumulative rows
             # = persisted prev count + this batch's count. The stats
             # frame is one row per bucket TOUCHED BY THIS BATCH (the
@@ -895,9 +770,9 @@ def run_incremental_dedup(
             # bounded by the batch, not by the persisted state; it is
             # pinned because three branches (ok, over, and the joins
             # they feed) would otherwise each re-scan prev. Decisions
-            # are deterministic under foreachBatch redelivery: they
-            # derive only from state persisted BEFORE this batch id
-            # plus the batch content itself.
+            # are deterministic under redelivery: they derive only
+            # from state persisted BEFORE this batch id plus the batch
+            # content itself.
             stats = _cumulative_bucket_stats(nb, prev).select(
                 "band", "key", "_total", "_root"
             ).localCheckpoint(eager=True)
@@ -908,10 +783,8 @@ def run_incremental_dedup(
                 "band", "key", "_root"
             )
             nb_ok = nb.join(ok, ["band", "key"])
-            prev_ok = (
-                prev.join(ok, ["band", "key"]) if prev is not None else None
-            )
-            within = textops.banded_candidate_pairs(nb_ok, max_bucket=None)
+            if prev is not None:
+                prev_ok = prev.join(ok, ["band", "key"])
             # star edges: O(new docs in bucket) per overflow bucket —
             # the quadratic new-vs-prev join never touches these keys
             star = (
@@ -922,8 +795,9 @@ def run_incremental_dedup(
                     F.greatest("doc_id", "_root").alias("doc_b"),
                 )
             )
+        pairs = textops.banded_candidate_pairs(nb_ok, max_bucket=None)
         if prev_ok is not None:
-            cross = (
+            pairs = pairs.unionByName(
                 nb_ok.alias("n")
                 .join(prev_ok.alias("p"), ["band", "key"])
                 .select(
@@ -933,54 +807,16 @@ def run_incremental_dedup(
                 .filter(F.col("doc_a") != F.col("doc_b"))
                 .distinct()
             )
-            pairs = within.unionByName(cross)
-        else:
-            pairs = within
         if star is not None:
             pairs = pairs.unionByName(star)
         pairs.distinct().write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"batch_id={bid}")
+            _batch_dir(work_dir, "pairs", bid)
         )
-        n_batches["n"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(work_dir, "_chk"))
-        .trigger(availableNow=True)
-        .start()
+    return _run_batch_log(
+        spark, docs_dir, work_dir, fs, max_files_per_trigger, check_config,
+        write_batch,
     )
-    q.awaitTermination()
-    return n_batches["n"]
-
-
-def _log_paths(
-    work_dir: str,
-    log: str,
-    fs: StorageClient,
-    before_batch: int | None = None,
-) -> list[str]:
-    """Live data paths of a manifest-governed per-batch log: the
-    committed compacted generation (if any) plus every non-folded
-    batch partition — optionally only batches with id < before_batch
-    (the incremental-dedup 'previous state' view; the compacted
-    generation always qualifies because compaction only folds batches
-    that ran before the current one)."""
-    man = _read_manifest(work_dir, fs)
-    folded = set(man["folded"])
-    paths: list[str] = []
-    if man["gen"] is not None:
-        paths.append(
-            os.path.join(work_dir, f"{log}_compacted", f"gen={man['gen']}")
-        )
-    log_dir = os.path.join(work_dir, f"{log}_log")
-    for d in _named_batch_dirs(log_dir, fs):
-        bid = int(d.split("=", 1)[1])
-        if bid in folded:
-            continue
-        if before_batch is not None and bid >= before_batch:
-            continue
-        paths.append(os.path.join(log_dir, d))
-    return paths
 
 
 def compact_dedup_logs(
@@ -1002,162 +838,66 @@ def compact_dedup_logs(
     Contract: run between run_incremental_dedup invocations. Returns
     the number of live batch partitions folded (0 = nothing to do)."""
     fs = fs or LOCAL_FS
+    logs = ("bands", "pairs")
     man = _read_manifest(work_dir, fs)
-    folded = set(man["folded"])
-    # GC garbage from earlier crashes for both logs
-    for log in ("bands", "pairs"):
-        log_dir = os.path.join(work_dir, f"{log}_log")
-        for d in _named_batch_dirs(log_dir, fs):
-            if int(d.split("=", 1)[1]) in folded:
-                fs.delete_tree(os.path.join(log_dir, d))
-        comp_root = os.path.join(work_dir, f"{log}_compacted")
-        if fs.isdir(comp_root):
-            for g in fs.listdir(comp_root):
-                if g.startswith("gen=") and (
-                    man["gen"] is None or g != f"gen={man['gen']}"
-                ):
-                    fs.delete_tree(os.path.join(comp_root, g))
-
-    def _ids(log: str) -> set[int]:
-        return {
-            int(d.split("=", 1)[1])
-            for d in _named_batch_dirs(
-                os.path.join(work_dir, f"{log}_log"), fs
-            )
-        }
-
-    # fold ONLY batches whose BANDS AND PAIRS both committed AND that
-    # the streaming engine itself committed (_chk/commits): a handle()
-    # that crashed between its two writes leaves a bands-only dir, and
-    # a crash after both writes but before the engine commit leaves
-    # two possibly-partial dirs — folding either would mark the batch
-    # done while redelivery still owes it, silently losing every pair
-    # whose later member arrived in that batch. One-sided/uncommitted
-    # dirs are left for the redelivered batch to overwrite-complete.
-    # minus already-folded ids (r6 review): best-effort GC can leave a
-    # folded dir behind (delete_tree swallows errors), and re-folding
-    # it would duplicate its rows into the new generation next to the
-    # previous gen that already holds them — inflating star-guard
-    # cumulative counts and breaking the pairs log's distinctness.
-    complete = (
-        _ids("bands") & _ids("pairs") & _committed_batches(work_dir, fs)
-    ) - folded
-    new_gen = 0 if man["gen"] is None else man["gen"] + 1
-    folded_now = 0
-    for log in ("bands", "pairs"):
-        live = ([
-            os.path.join(work_dir, f"{log}_compacted", f"gen={man['gen']}")
-        ] if man["gen"] is not None else []) + [
-            os.path.join(work_dir, f"{log}_log", f"batch_id={b}")
-            for b in sorted(complete)
-        ]
-        if log == "bands":
-            # count BATCH partitions folded, not len(live): the live
-            # list also holds the previous compacted generation when
-            # gen is not None — off by one vs the docstring (r6 advice)
-            folded_now = len(complete)
-            if not live:
-                return 0
-            if len(live) == 1 and not complete:
-                # nothing new to fold — still REWRITE when the bucket
-                # layout is stale (a legacy flat generation, or a
-                # bucket_rows target that now yields a different
-                # bucket count for the grown state): resizing the
-                # bucketing is exactly compaction's job, and skipping
-                # here would pin the layout chosen at the first
-                # compaction forever (r7).
-                df0 = spark.read.parquet(live[0])
-                rows0 = df0.count()
-                target_p = min(
-                    DEDUP_BAND_BUCKETS_MAX,
-                    max(
-                        DEDUP_BAND_BUCKETS,
-                        -(-rows0 // max(bucket_rows, 1)),
-                    ),
-                )
-                if "_bucket" in df0.columns and (
-                    int(man.get("band_buckets") or 0) == target_p
-                ):
-                    return 0
-        gen_dir = os.path.join(
-            work_dir, f"{log}_compacted", f"gen={new_gen}"
-        )
-        # per-dir reads: the previous bands generation may carry the
-        # _bucket partition column while batch dirs are flat — a
-        # single multi-path read would fail partition discovery
-        dfs = []
-        for p in live:
-            df = spark.read.parquet(p)
-            if "_bucket" in df.columns:
-                df = df.drop("_bucket")
-            dfs.append(df)
-        merged = dfs[0]
-        for df in dfs[1:]:
-            merged = merged.unionByName(df)
-        if log == "bands":
-            # bucket-partitioned band state (r7 — VERDICT r6 #1): the
-            # next batches' new-vs-all joins prune their scan to
-            # touched buckets (_read_prev_bands). The bucket count
-            # scales with the state (≈ bucket_rows rows per bucket,
-            # floored/capped) — see the DEDUP_BAND_* notes — and is
-            # recorded in the manifest committed below, next to the
-            # generation it describes. Repartitioning BY the bucket
-            # column keeps it ~one file per task-bucket instead of
-            # target_partitions × buckets small files.
-            state_rows = merged.count()
-            band_buckets = min(
-                DEDUP_BAND_BUCKETS_MAX,
-                max(
-                    DEDUP_BAND_BUCKETS,
-                    -(-state_rows // max(bucket_rows, 1)),
-                ),
-            )
-            (
-                merged.withColumn(
-                    "_bucket", _band_bucket_col(band_buckets)
-                )
-                .repartition(target_partitions, "_bucket")
-                .write.partitionBy("_bucket")
-                .parquet(gen_dir)
-            )
-        else:
-            merged.repartition(target_partitions).write.parquet(gen_dir)
-    new_folded = folded | complete
-    _write_manifest(
-        work_dir,
-        {
-            "gen": new_gen,
-            "folded": sorted(new_folded),
-            "chk_id": _manifest_chk_id(work_dir, man, fs),
-            "band_buckets": int(band_buckets),
-        },
-        fs,
+    _gc_dead_state(work_dir, man, logs, fs)
+    fold = _foldable(work_dir, man, logs, fs)
+    live = _gen_and_batch_paths(work_dir, "bands", man, fold)
+    if not live:
+        return 0
+    # per-dir reads: the previous bands generation may carry the
+    # _bucket partition column while batch dirs are flat — a single
+    # multi-path read would fail partition discovery
+    frames = [spark.read.parquet(p) for p in live]
+    bands = functools.reduce(
+        DataFrame.unionByName, [df.drop("_bucket") for df in frames]
     )
-    # post-commit cleanup (best-effort; next call GCs leftovers). Only
-    # the FOLDED (two-sided) batch dirs are removed — a one-sided dir
-    # from a mid-handle crash stays for its redelivery to complete.
-    for log in ("bands", "pairs"):
-        log_dir = os.path.join(work_dir, f"{log}_log")
-        for b in complete:
-            fs.delete_tree(os.path.join(log_dir, f"batch_id={b}"))
-        if man["gen"] is not None:
-            fs.delete_tree(
-                os.path.join(
-                    work_dir, f"{log}_compacted", f"gen={man['gen']}"
-                )
-            )
-    return folded_now
+    # bucket-partitioned band state (r7 — VERDICT r6 #1): the next
+    # batches' new-vs-all joins prune their scan to touched buckets
+    # (_read_prev_bands). The bucket count scales with the state
+    # (≈ bucket_rows rows per bucket, floored/capped) — see the
+    # DEDUP_BAND_* notes — and is recorded in the manifest next to the
+    # generation it describes.
+    band_buckets = min(
+        DEDUP_BAND_BUCKETS_MAX,
+        max(DEDUP_BAND_BUCKETS, -(-bands.count() // max(bucket_rows, 1))),
+    )
+    if not fold and "_bucket" in frames[0].columns and (
+        man.get("band_buckets") == band_buckets
+    ):
+        # nothing new to fold and the bucket layout still fits. A stale
+        # layout (a legacy flat generation, or a bucket_rows target that
+        # now yields a different bucket count for the grown state) is
+        # rewritten even with nothing to fold: resizing the bucketing
+        # is exactly compaction's job (r7).
+        return 0
+    new_gen = _next_gen(man)
+    # repartitioning BY the bucket column keeps it ~one file per
+    # task-bucket instead of target_partitions × buckets small files
+    (
+        bands.withColumn("_bucket", _band_bucket_col(band_buckets))
+        .repartition(target_partitions, "_bucket")
+        .write.partitionBy("_bucket")
+        .parquet(_gen_dir(work_dir, "bands", new_gen))
+    )
+    spark.read.parquet(
+        *_gen_and_batch_paths(work_dir, "pairs", man, fold)
+    ).repartition(target_partitions).write.parquet(
+        _gen_dir(work_dir, "pairs", new_gen)
+    )
+    return _commit_fold(
+        work_dir, man, logs, fold, fs, band_buckets=band_buckets
+    )
 
 
 def incremental_dedup_pairs(
     spark: SparkSession, work_dir: str, fs: StorageClient | None = None
-) -> "DataFrame":
+) -> DataFrame:
     """The accumulated near-dup candidate pairs of a
     run_incremental_dedup work_dir (distinct by construction — each
     pair is emitted by exactly one batch), resolved through the
     manifest (compacted generation + live batch partitions)."""
-    fs = fs or LOCAL_FS
-    dirs = _log_paths(work_dir, "pairs", fs)
+    dirs = _log_paths(work_dir, "pairs", fs or LOCAL_FS)
     if not dirs:
         raise ValueError(
             f"work_dir {work_dir} holds no pairs — run "
@@ -1166,19 +906,48 @@ def incremental_dedup_pairs(
     return spark.read.parquet(*dirs)
 
 
-def _read_sink(spark: SparkSession, path: str, schema: str) -> "DataFrame":
-    """Read a streaming parquet sink back. A drain that emitted ZERO
-    rows (every event still inside the watermark horizon) commits a
-    metadata log with no data files — or no directory at all when no
-    batch ran — and a plain read raises; that is a valid outcome, so
-    return an empty frame with the sink's known schema instead (r5
-    review)."""
-    from pyspark.errors.exceptions.captured import AnalysisException
+def _event_stream(
+    spark: SparkSession,
+    events_dir: str,
+    watermark: str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """The events file stream with its event-time watermark on `ts`.
+    Watermarks require TIMESTAMP; parquet often scans as TIMESTAMP_NTZ,
+    so ts is cast before the watermark is declared."""
+    return (
+        _file_stream(spark, events_dir, max_files_per_trigger)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", watermark)
+    )
 
+
+def _drain_to_sink(
+    spark: SparkSession, df: DataFrame, out_dir: str, name: str, schema: str
+) -> DataFrame:
+    """Drain the append-mode stream `df` (availableNow: everything
+    currently on disk) into the parquet sink out_dir/<name> and read it
+    back. Each sink has its own checkpoint out_dir/_chk_<name>: queries
+    sharing one out_dir must not share (and corrupt) one checkpoint.
+    A drain that emitted ZERO rows (every event still inside the
+    watermark horizon) commits a metadata log with no data files — or
+    no directory at all when no batch ran — and a plain read raises;
+    that is a valid outcome, so it returns an empty frame with the
+    sink's known schema instead (r5 review)."""
+    path = os.path.join(out_dir, name)
+    (
+        df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", os.path.join(out_dir, f"_chk_{name}"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     try:
-        df = spark.read.parquet(path)
-        df.schema  # force resolution
-        return df
+        out = spark.read.parquet(path)
+        out.schema  # force resolution
+        return out
     except AnalysisException:
         return spark.createDataFrame([], schema)
 
@@ -1190,25 +959,15 @@ def windowed_event_counts(
     window: str = "1 hour",
     watermark: str = "2 hours",
     max_files_per_trigger: int | None = None,
-) -> "DataFrame":
+) -> DataFrame:
     """Watermarked tumbling-window aggregation over an event stream
     (§2.10's windowed-agg shape): per (window, event_type) counts and
     value sums in append mode — a window only emits once its watermark
     passes, so late events inside the watermark still merge in while
     state stays bounded. availableNow drains everything currently on
     disk; returns the result read back from the sink."""
-    from pyspark.sql import functions as F
-
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(events_dir)
-    # event-time watermarks require TIMESTAMP; parquet often scans as
-    # TIMESTAMP_NTZ — cast before the watermark is declared
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        stream.withWatermark("ts", watermark)
+        _event_stream(spark, events_dir, watermark, max_files_per_trigger)
         .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -1221,21 +980,8 @@ def windowed_event_counts(
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "counts"))
-        # per-query checkpoint subdir: sharing one out_dir between
-        # windowed_event_counts and run_streaming_sessions must not
-        # share (and corrupt) a single streaming checkpoint
-        .option("checkpointLocation", os.path.join(out_dir, "_chk_counts"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _read_sink(
-        spark,
-        os.path.join(out_dir, "counts"),
+    return _drain_to_sink(
+        spark, agg, out_dir, "counts",
         "window_epoch long, event_type string, n_events long, "
         "sum_value double",
     )
@@ -1248,7 +994,7 @@ def run_streaming_sessions(
     gap_sec: int = 1800,
     watermark: str = "2 hours",
     max_files_per_trigger: int | None = None,
-) -> "DataFrame":
+) -> DataFrame:
     """Custom stateful streaming operator (§2.10's
     applyInPandasWithState shape): event-time sessionization with a
     gap timeout.
@@ -1267,16 +1013,11 @@ def run_streaming_sessions(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from pyspark.sql import functions as F
-
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(events_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+    stream = _event_stream(
+        spark, events_dir, watermark, max_files_per_trigger
+    ).select(
+        "user_id",
+        "ts",
         # epoch computed JVM-side (r6 review): Arrow hands the pandas
         # kernel ts as NAIVE datetimes in the SESSION timezone, so a
         # datetime64→int64 cast there is off by the tz offset whenever
@@ -1284,7 +1025,8 @@ def run_streaming_sessions(
         # getCurrentWatermarkMs() is true UTC epoch. Comparing the two
         # closed sessions hours early (split sessions, double emit).
         # unix_timestamp() is true epoch by definition, at any tz.
-        .select("user_id", "ts", F.unix_timestamp("ts").alias("ep"), "value")
+        F.unix_timestamp("ts").alias("ep"),
+        "value",
     )
 
     def fn(key, pdfs, state: GroupState):
@@ -1341,19 +1083,8 @@ def run_streaming_sessions(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "sessions"))
-        # per-query checkpoint subdir (see windowed_event_counts)
-        .option("checkpointLocation", os.path.join(out_dir, "_chk_sessions"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _read_sink(
-        spark,
-        os.path.join(out_dir, "sessions"),
+    return _drain_to_sink(
+        spark, sessions, out_dir, "sessions",
         "user_id long, session_start long, n_events int, sum_value double",
     )
 
@@ -1365,14 +1096,19 @@ def finalize(
     """Aggregate the accumulated tiles log into the current mosaicJSON
     in one Spark action. The bounds come from the bbox the log's rows
     carry, so `scenes_dir` is no longer read (the parameter is kept for
-    existing callers). A log written before rows carried the bbox
-    raises ops.LegacyStateError: rebuild it in a fresh work_dir."""
-    paths = _tiles_paths(work_dir, fs or LOCAL_FS)
+    existing callers). `cfg` must be the config the log was built with
+    (the same config_hash check as run_incremental): the rows carry
+    that config's quadkey zoom and passed its filters, so another
+    config raises ValueError. A log written before rows carried the
+    bbox raises ops.LegacyStateError: rebuild it in a fresh work_dir."""
+    fs = fs or LOCAL_FS
+    paths = _log_paths(work_dir, "tiles", fs)
     if not paths:
         raise ValueError(
             f"work_dir {work_dir} holds no tiles-log data — run "
             "run_incremental first"
         )
+    _check_config_hash(work_dir, cfg, fs)
     tiles = spark.read.parquet(*paths)
     missing = [c for c in EXPLODE_PASSTHROUGH if c not in tiles.columns]
     if missing:

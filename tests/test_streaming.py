@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 import pyarrow.parquet as pq
+import pytest
 
 from mosaic_engine import datagen, mosaic as mz, streaming
 from mosaic_engine.ops import MosaicConfig
@@ -289,8 +290,8 @@ def test_compact_tiles_log_preserves_mosaic(spark, tmp_path):
     folded = streaming.compact_tiles_log(spark, work, target_partitions=2)
     assert folded == 3
     # batch dirs are gone; the live data is one compacted generation
-    assert streaming._batch_dirs(work) == []
-    assert streaming._tiles_paths(work) == [
+    assert streaming._named_batch_dirs(os.path.join(work, "tiles_log")) == []
+    assert streaming._log_paths(work, "tiles", streaming.LOCAL_FS) == [
         os.path.join(work, "tiles_compacted", "gen=0")]
     after = streaming.finalize(spark, scenes_dir, cfg, work)
     assert mz.canonical_json(after) == mz.canonical_json(before)
@@ -331,7 +332,8 @@ def test_compaction_survives_redelivery_and_crash(spark, tmp_path):
     if os.path.exists(crc):  # local-fs checksum shadow of the marker
         os.remove(crc)
     streaming.run_incremental(spark, scenes_dir, cfg, work)
-    assert streaming._batch_dirs(work) == []  # no duplicate partition
+    # no duplicate partition
+    assert streaming._named_batch_dirs(os.path.join(work, "tiles_log")) == []
     after = streaming.finalize(spark, scenes_dir, cfg, work)
     assert mz.canonical_json(after) == mz.canonical_json(before)
     assert not mz.validate_mosaic(after)
@@ -342,7 +344,7 @@ def test_compaction_survives_redelivery_and_crash(spark, tmp_path):
     os.makedirs(stray)
     with open(os.path.join(stray, "garbage"), "w") as f:
         f.write("partial write")
-    assert streaming._tiles_paths(work) == [
+    assert streaming._log_paths(work, "tiles", streaming.LOCAL_FS) == [
         os.path.join(work, "tiles_compacted", "gen=0")]
     healed = streaming.finalize(spark, scenes_dir, cfg, work)
     assert mz.canonical_json(healed) == mz.canonical_json(before)
@@ -356,7 +358,7 @@ def test_compaction_survives_redelivery_and_crash(spark, tmp_path):
     # ONE batch partition folded (gen=0 merges in but is not a batch —
     # the r6 advice fix; the old return said 2 here)
     assert streaming.compact_tiles_log(spark, work, target_partitions=2) == 1
-    assert streaming._tiles_paths(work) == [
+    assert streaming._log_paths(work, "tiles", streaming.LOCAL_FS) == [
         os.path.join(work, "tiles_compacted", "gen=1")]
     assert mz.canonical_json(
         streaming.finalize(spark, scenes_dir, cfg, work)
@@ -369,121 +371,155 @@ def test_compaction_survives_redelivery_and_crash(spark, tmp_path):
         streaming.run_incremental(spark, scenes_dir, cfg, work)
 
 
-def test_legacy_compacted_batches_migrates_to_manifest(tmp_path):
+def test_pre_manifest_work_dir_fails_closed(spark, tmp_path):
     """A work_dir compacted by the pre-manifest scheme
-    (compacted_batches.json + tiles_log/batch_id=-1) keeps its folded
-    set on first read under the new scheme — redelivery protection and
-    the lost-checkpoint refusal must survive the upgrade."""
+    (compacted_batches.json) predates the scene-bounds columns, so it
+    can no longer produce a mosaic. Every entry refuses it with
+    LegacyStateError before writing or deleting anything."""
     import json
 
-    work = str(tmp_path / "w")
+    from mosaic_engine import ops
+
+    scenes_dir = str(tmp_path / "scenes")
+    os.makedirs(scenes_dir)
+    datagen.write_parquet(
+        datagen.gen_scenes(n_scenes=20, paths=2, rows=2, seed=3),
+        os.path.join(scenes_dir, "p.parquet"),
+    )
+    work = str(tmp_path / "work")
     os.makedirs(os.path.join(work, "tiles_log", "batch_id=-1"))
-    with open(os.path.join(work, "compacted_batches.json"), "w") as f:
+    legacy = os.path.join(work, "compacted_batches.json")
+    with open(legacy, "w") as f:
         json.dump([0, 1], f)
-    assert streaming._folded_batches(work) == {0, 1}
-    # migration is one-shot: legacy file replaced by the manifest
-    assert not os.path.exists(os.path.join(work, "compacted_batches.json"))
-    assert os.path.exists(streaming._manifest_path(work))
-    # the legacy compacted partition stays live (not in the folded set)
-    assert streaming._tiles_paths(work) == [
-        os.path.join(work, "tiles_log", "batch_id=-1")]
+    cfg = MosaicConfig(quadkey_zoom=7)
+    calls = [
+        lambda: streaming.run_incremental(spark, scenes_dir, cfg, work),
+        lambda: streaming.compact_tiles_log(spark, work),
+        lambda: streaming.finalize(spark, scenes_dir, cfg, work),
+        lambda: streaming.run_incremental_dedup(spark, scenes_dir, work),
+        lambda: streaming.compact_dedup_logs(spark, work),
+        lambda: streaming.incremental_dedup_pairs(spark, work),
+    ]
+    for call in calls:
+        with pytest.raises(ops.LegacyStateError, match="fresh work_dir"):
+            call()
+    # nothing deleted, nothing recorded
+    assert os.path.exists(legacy)
+    assert sorted(os.listdir(work)) == ["compacted_batches.json", "tiles_log"]
+    assert os.listdir(os.path.join(work, "tiles_log")) == ["batch_id=-1"]
 
 
-def test_orphaned_manifest_adopts_or_refuses_checkpoint(spark, tmp_path):
-    """ADVICE r3: a manifest whose chk_id is None (legacy migration
-    while _chk was missing) must not trust ANY later _chk. Adopt the
-    observed query id only when its offset log provably covers every
-    folded batch id; refuse otherwise — a checkpoint recreated by a
-    different query restarts batch ids at 0 and would silently skip
-    new input."""
+def test_finalize_refuses_config_the_log_was_not_built_with(spark, tmp_path):
+    """finalize must run under the config the tiles log was built with:
+    a different quadkey_zoom would label z7 quadkeys as z8, and a
+    tighter max_cloud would return the unfiltered tile map, because the
+    filters ran at ingest. Both raise, like run_incremental does."""
+    scenes_dir = str(tmp_path / "scenes")
+    os.makedirs(scenes_dir)
+    datagen.write_parquet(
+        datagen.gen_scenes(n_scenes=40, paths=3, rows=3, seed=9),
+        os.path.join(scenes_dir, "p.parquet"),
+    )
+    work = str(tmp_path / "work")
+    cfg = MosaicConfig(quadkey_zoom=7)
+    assert streaming.run_incremental(spark, scenes_dir, cfg, work) == 1
+    for other in (
+        MosaicConfig(quadkey_zoom=8),
+        MosaicConfig(quadkey_zoom=7, max_cloud=10),
+    ):
+        with pytest.raises(ValueError, match="fresh work_dir"):
+            streaming.finalize(spark, scenes_dir, other, work)
+    doc = streaming.finalize(spark, scenes_dir, cfg, work)
+    assert not mz.validate_mosaic(doc)
+    assert {len(qk) for qk in doc["tiles"]} == {7}
+
+
+def _compacted_work(spark, entry, base):
+    """A work_dir of `entry` with two folded batches and a third input
+    file waiting; returns (input_dir, work_dir, run)."""
+    import pyarrow.compute as pc
+
+    in_dir = os.path.join(base, "in")
+    work = os.path.join(base, "work")
+    os.makedirs(in_dir)
+    if entry == "tiles":
+        full = datagen.gen_scenes(n_scenes=30, paths=3, rows=3, seed=13)
+        parts = [full.slice(0, 10), full.slice(10, 10), full.slice(20)]
+        cfg = MosaicConfig(quadkey_zoom=6)
+
+        def run(work_dir):
+            return streaming.run_incremental(spark, in_dir, cfg, work_dir)
+
+        compact = streaming.compact_tiles_log
+    else:
+        t = pq.read_table("/root/testdata/sf0.001/documents.parquet")
+        parts = [
+            t.filter(pc.equal(pc.bit_wise_and(t["doc_id"], 3), i))
+            for i in range(3)
+        ]
+
+        def run(work_dir):
+            return streaming.run_incremental_dedup(spark, in_dir, work_dir)
+
+        compact = streaming.compact_dedup_logs
+    for i, part in enumerate(parts[:2]):
+        datagen.write_parquet(part, os.path.join(in_dir, f"p{i}.parquet"))
+        assert run(work) == 1
+    assert compact(spark, work, target_partitions=1) == 2
+    datagen.write_parquet(parts[2], os.path.join(in_dir, "p2.parquet"))
+    return in_dir, work, run
+
+
+@pytest.fixture(scope="module")
+def compacted_works(spark, tmp_path_factory):
+    cache = {}
+
+    def get(entry):
+        if entry not in cache:
+            cache[entry] = _compacted_work(
+                spark, entry, str(tmp_path_factory.mktemp(f"replay_{entry}"))
+            )
+        return cache[entry]
+
+    return get
+
+
+@pytest.mark.parametrize("case", ["chk_deleted", "chk_foreign", "chk_id_none"])
+@pytest.mark.parametrize("entry", ["tiles", "dedup"])
+def test_replay_guard_refuses_unbound_checkpoint(
+    compacted_works, tmp_path, entry, case
+):
+    """Folded batch ids protect redelivery only under the offset log
+    that named them. With folded batches, both incremental entries
+    refuse to start when _chk is gone, when it belongs to another
+    query, or when the manifest never recorded a chk_id — a replay
+    would reuse folded ids and the sink would silently skip the new
+    input. The refusal comes before any new batch dir is written."""
     import json
     import shutil
 
-    import pytest
-
-    full = datagen.gen_scenes(n_scenes=40, paths=3, rows=3, seed=7)
-    scenes_dir = str(tmp_path / "scenes")
+    _, base_work, run = compacted_works(entry)
     work = str(tmp_path / "work")
-    os.makedirs(scenes_dir)
-    cfg = MosaicConfig(quadkey_zoom=7)
-    for i, sl in enumerate((full.slice(0, 20), full.slice(20))):
-        datagen.write_parquet(sl, os.path.join(scenes_dir, f"p{i}.parquet"))
-        streaming.run_incremental(spark, scenes_dir, cfg, work)
-    assert streaming.compact_tiles_log(spark, work, target_partitions=1) == 2
-    man = streaming._read_manifest(work)
-    real_qid = man["chk_id"]
-    assert real_qid
-    # simulate the legacy-migrated manifest that never learned its qid
-    man["chk_id"] = None
-    streaming._write_manifest(work, man)
-    # original _chk intact → its offsets cover the folded ids → the
-    # manifest adopts the qid and processing continues
-    datagen.write_parquet(
-        full.slice(0, 10), os.path.join(scenes_dir, "p2.parquet")
-    )
-    assert streaming.run_incremental(spark, scenes_dir, cfg, work) >= 1
-    assert streaming._read_manifest(work)["chk_id"] == real_qid
-
-    # a RECREATED _chk from a different query whose offset log does NOT
-    # cover the folded ids → refusal before the stream ever starts
-    man = streaming._read_manifest(work)
-    man["chk_id"] = None
-    streaming._write_manifest(work, man)
+    shutil.copytree(base_work, work)
     chk = os.path.join(work, "_chk")
-    real_chk = chk + ".bak"
-    shutil.move(chk, real_chk)
-    os.makedirs(os.path.join(chk, "offsets"))
-    with open(os.path.join(chk, "metadata"), "w") as f:
-        json.dump({"id": "imposter"}, f)
-    with open(os.path.join(chk, "offsets", "0"), "w") as f:
-        f.write("v1")
-    with pytest.raises(ValueError, match="offset log"):
-        streaming.run_incremental(spark, scenes_dir, cfg, work)
-
-    # a FOREIGN _chk whose batch ids DO cover the folded set but whose
-    # file-source log shows the batches were assigned from a different
-    # input directory → refusal on lineage, not just id coverage
-    # (r4 review: id coverage alone would adopt a sibling run's
-    # checkpoint and silently suppress this work_dir's own input)
-    for bid in (0, 1, 2):
-        with open(os.path.join(chk, "offsets", str(bid)), "w") as f:
-            f.write("v1")
-    os.makedirs(os.path.join(chk, "sources", "0"))
-    for bid in (0, 1, 2):
-        with open(os.path.join(chk, "sources", "0", str(bid)), "w") as f:
-            f.write(
-                "v1\n"
-                + json.dumps(
-                    {"path": "file:///somewhere/else/p.parquet",
-                     "timestamp": 0, "batchId": bid}
-                )
-            )
-    with pytest.raises(ValueError, match="file-source log"):
-        streaming.run_incremental(spark, scenes_dir, cfg, work)
-
-    # restoring the ORIGINAL _chk makes adoption succeed again (its
-    # sources entries point under scenes_dir) — and it still succeeds
-    # after Spark-style log compaction replaces the per-batch sources
-    # files with one "<n>.compact" carrying all entries
-    shutil.rmtree(chk)
-    shutil.move(real_chk, chk)
-    srcdir = os.path.join(chk, "sources", "0")
-    per_batch = sorted(
-        f for f in os.listdir(srcdir) if f.isdigit()
-    )
-    lines = ["v1"]
-    for f in per_batch:
-        with open(os.path.join(srcdir, f)) as fh:
-            lines += [l.strip() for l in fh if l.strip().startswith("{")]
-        os.remove(os.path.join(srcdir, f))
-    with open(os.path.join(srcdir, f"{max(map(int, per_batch))}.compact"),
-              "w") as fh:
-        fh.write("\n".join(lines))
     man = streaming._read_manifest(work)
-    man["chk_id"] = None
-    streaming._write_manifest(work, man)
-    assert streaming.run_incremental(spark, scenes_dir, cfg, work) == 0
-    assert streaming._read_manifest(work)["chk_id"] == real_qid
+    assert man["folded"] == [0, 1] and man["chk_id"]
+    if case == "chk_deleted":
+        shutil.rmtree(chk)
+    elif case == "chk_foreign":
+        shutil.rmtree(chk)
+        os.makedirs(chk)
+        with open(os.path.join(chk, "metadata"), "w") as f:
+            json.dump({"id": "another-query"}, f)
+    else:
+        man["chk_id"] = None
+        streaming._write_manifest(work, man)
+    logs = [d for d in os.listdir(work) if d.endswith("_log")]
+    assert logs
+    with pytest.raises(ValueError, match="folded"):
+        run(work)
+    for log in logs:
+        assert streaming._named_batch_dirs(os.path.join(work, log)) == []
 
 
 class MemFS(streaming.StorageClient):
@@ -517,9 +553,6 @@ class MemFS(streaming.StorageClient):
     def write_text_atomic(self, p, text):
         self.files[self._key(p)] = text
 
-    def delete(self, p):
-        del self.files[self._key(p)]
-
     def delete_tree(self, p):
         k = self._key(p)
         for dead in [x for x in self.files if x == k or x.startswith(k + "/")]:
@@ -537,7 +570,7 @@ def test_bookkeeping_runs_through_storage_seam():
     through the injected StorageClient: run it against MemFS paths that
     cannot resolve on the local filesystem and assert the real FS is
     never touched."""
-    import json
+    from mosaic_engine import ops
 
     fs = MemFS()
     work = "/mem/work"
@@ -548,17 +581,19 @@ def test_bookkeeping_runs_through_storage_seam():
     assert streaming._read_manifest(work, fs)["gen"] == 1
     assert streaming._folded_batches(work, fs) == {0, 2}
 
-    # legacy migration consumes the old file through the seam
+    # a pre-manifest work_dir fails closed through the seam, and its
+    # compacted_batches.json is left in place
     legacy_work = "/mem/legacy"
-    fs.files[os.path.join(legacy_work, "compacted_batches.json")] = "[3, 1]"
-    fs.files[os.path.join(legacy_work, "_chk", "metadata")] = json.dumps(
-        {"id": "qid-7"}
-    )
-    man = streaming._read_manifest(legacy_work, fs)
-    # migration leaves chk_id None (r5 review): the present _chk could
-    # be an impostor; the validated adoption path must earn the id
-    assert man == {"gen": None, "folded": [1, 3], "chk_id": None}
-    assert os.path.join(legacy_work, "compacted_batches.json") not in fs.files
+    legacy = os.path.join(legacy_work, "compacted_batches.json")
+    fs.files[legacy] = "[3, 1]"
+    before = dict(fs.files)
+    for call in (
+        lambda: streaming._read_manifest(legacy_work, fs),
+        lambda: streaming.compact_tiles_log(None, legacy_work, fs=fs),
+    ):
+        with pytest.raises(ops.LegacyStateError, match="fresh work_dir"):
+            call()
+    assert fs.files == before
 
     # config-hash guard through the seam
     cfg = MosaicConfig(quadkey_zoom=7)
@@ -576,27 +611,13 @@ def test_bookkeeping_runs_through_storage_seam():
     fs.files[os.path.join(work, "tiles_log", "batch_id=0", "part-0")] = "d"
     fs.files[os.path.join(work, "tiles_log", "batch_id=2", "part-0")] = "d"
     fs.files[os.path.join(work, "tiles_compacted", "gen=0", "part-0")] = "d"
-    assert streaming._tiles_paths(work, fs) == [
+    assert streaming._log_paths(work, "tiles", fs) == [
         os.path.join(work, "tiles_compacted", "gen=1")
     ]
     assert streaming.compact_tiles_log(None, work, fs=fs) == 0
-    assert streaming._batch_dirs(work, fs) == []  # folded dirs GC'd
+    # folded dirs GC'd
+    assert streaming._named_batch_dirs(os.path.join(work, "tiles_log"), fs) == []
     assert not fs.isdir(os.path.join(work, "tiles_compacted", "gen=0"))
-
-    # _chk lineage evidence through the seam, incl. the zero-new-files
-    # batch whose log file holds only the 'v1' header (ADVICE r4)
-    chk = os.path.join(work, "_chk", "sources", "0")
-    scenes = "/mem/scenes"
-    entry = json.dumps({"path": scenes + "/p1.parquet", "batchId": 0})
-    fs.files[os.path.join(chk, "0")] = "v1\n" + entry + "\n"
-    fs.files[os.path.join(chk, "2")] = "v1\n"  # zero-new-files batch
-    assert streaming._sources_log_covers(work, [0, 2], scenes, fs)
-    # a file outside scenes_dir refuses adoption
-    bad = json.dumps({"path": "/mem/other/p9.parquet", "batchId": 5})
-    fs.files[os.path.join(chk, "5")] = "v1\n" + bad + "\n"
-    assert not streaming._sources_log_covers(work, [0, 2, 5], scenes, fs)
-    # an unaccounted batch id refuses adoption
-    assert not streaming._sources_log_covers(work, [0, 9], scenes, fs)
 
     assert not os.path.exists("/mem")  # nothing escaped to the real FS
 
@@ -921,28 +942,6 @@ def test_compactor_refuses_mismatched_chk_id(tmp_path):
     set_qid("imposter")
     with pytest.raises(ValueError, match="wrong offset log"):
         streaming._manifest_chk_id(work, {"chk_id": "qA"}, streaming.LOCAL_FS)
-
-
-def test_sources_log_covers_unquotes_uris(tmp_path):
-    """(r6 review) Spark percent-encodes recorded source URIs; the
-    adoption check must compare the DECODED path or an input dir with
-    any URI-escapable character is always refused."""
-    import json
-
-    scenes = str(tmp_path / "my scenes")
-    os.makedirs(scenes)
-    work = str(tmp_path / "work")
-    sdir = os.path.join(work, "_chk", "sources", "0")
-    os.makedirs(sdir)
-    rec = json.dumps(
-        {
-            "path": "file:" + scenes.replace(" ", "%20") + "/p1.parquet",
-            "batchId": 0,
-        }
-    )
-    with open(os.path.join(sdir, "0"), "w") as f:
-        f.write("v1\n" + rec + "\n")
-    assert streaming._sources_log_covers(work, [0], scenes)
 
 
 def test_incremental_dedup_refuses_max_bucket_drift(spark, tmp_path):
