@@ -105,10 +105,12 @@ def _cosine_topk_arrow(cand: DataFrame, k: int) -> DataFrame:
     dot per ROW; the kernel does one int64 row-wise multiply-sum per
     batch — the SAME exact-integer dot (products/sums within the
     module's 2^53 bound, float64 cast + IEEE sqrt/divide identical to
-    the JVM expression, so scores are bit-identical) — and keeps the
-    per-task rank<k superset under the (−score, vec_id) order (ties
-    retained; ops._rank_keep_mask). That in-kernel reduction replaces
-    the r6 salted phase-1 aggregation: per-task output is ≤
+    the JVM expression, so scores are bit-identical) — and reduces
+    each task with the rank-k reduction every kNN kernel shares: the
+    per-query rank<k superset under the (−score, vec_id) order (ties
+    retained; ops._compact_topk), then the one exact finalizer
+    (ops._exact_topk) on (ns, vec_id). That in-kernel reduction
+    replaces the r6 salted phase-1 aggregation: per-task output is ≤
     queries-in-task × k BY CONSTRUCTION, so the single final exchange
     carries k-sized partials regardless of candidate fan-out — one
     aggregation phase instead of two, and no aggregation key ever
@@ -116,66 +118,55 @@ def _cosine_topk_arrow(cand: DataFrame, k: int) -> DataFrame:
     fails loud (dimension mismatch), matching dot_long/IVF."""
     from pyspark.sql import types as T
 
-    from .ops import _rank_keep_mask
+    from .ops import (
+        TOPK_COMPACT_ROWS, _compact_topk, _exact_topk, _rank_keep_tables,
+    )
 
     src = cand.select("query_id", "vec_id", "q", "norm2", "qq", "qn2")
     in_f = {f.name: f.dataType for f in src.schema.fields}
+    floor = TOPK_COMPACT_ROWS
 
     def kern(batches):
         import pyarrow as pa
 
-        acc: list = []
-        rows = 0
-        last = 0
-
-        def compact(parts):
-            t = pa.concat_tables(parts)
-            keep = _rank_keep_mask(
-                t.column("query_id").to_numpy(zero_copy_only=False),
-                t.column("ns").to_numpy(zero_copy_only=False),
-                k,
-            )
-            return [t.filter(pa.array(keep))]
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qo = tbl.column("q").to_numpy(zero_copy_only=False)
-            qqo = tbl.column("qq").to_numpy(zero_copy_only=False)
-            ql = np.fromiter((len(v) for v in qo), np.int64, len(qo))
-            qql = np.fromiter((len(v) for v in qqo), np.int64, len(qqo))
-            if (ql != qql).any():
-                i = int(np.flatnonzero(ql != qql)[0])
-                raise ValueError(
-                    f"cosine topk: embedding dimension mismatch "
-                    f"({ql[i]} vs {qql[i]})"
+        def scored():
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                tbl = pa.Table.from_batches([rb])
+                qo = tbl.column("q").to_numpy(zero_copy_only=False)
+                qqo = tbl.column("qq").to_numpy(zero_copy_only=False)
+                ql = np.fromiter((len(v) for v in qo), np.int64, len(qo))
+                qql = np.fromiter((len(v) for v in qqo), np.int64, len(qqo))
+                if (ql != qql).any():
+                    i = int(np.flatnonzero(ql != qql)[0])
+                    raise ValueError(
+                        f"cosine topk: embedding dimension mismatch "
+                        f"({ql[i]} vs {qql[i]})"
+                    )
+                Q = np.vstack(qo).astype(np.int64)
+                QQ = np.vstack(qqo).astype(np.int64)
+                dots = (Q * QQ).sum(axis=1)
+                n2 = tbl.column("norm2").to_numpy(zero_copy_only=False)
+                qn2 = tbl.column("qn2").to_numpy(zero_copy_only=False)
+                ns = -(
+                    dots.astype(np.float64)
+                    / (np.sqrt(n2.astype(np.float64))
+                       * np.sqrt(qn2.astype(np.float64)))
                 )
-            Q = np.vstack(qo).astype(np.int64)
-            QQ = np.vstack(qqo).astype(np.int64)
-            dots = (Q * QQ).sum(axis=1)
-            n2 = tbl.column("norm2").to_numpy(zero_copy_only=False)
-            qn2 = tbl.column("qn2").to_numpy(zero_copy_only=False)
-            ns = -(
-                dots.astype(np.float64)
-                / (np.sqrt(n2.astype(np.float64))
-                   * np.sqrt(qn2.astype(np.float64)))
-            )
-            acc.append(
-                pa.table(
+                yield pa.table(
                     {
                         "query_id": tbl.column("query_id"),
                         "vec_id": tbl.column("vec_id"),
                         "ns": pa.array(ns, pa.float64()),
                     }
                 )
-            )
-            rows += rb.num_rows
-            if rows >= max(1_000_000, 2 * last) and len(acc) > 1:
-                acc = compact(acc)
-                last = rows = acc[0].num_rows
-        if acc:
-            yield from compact(acc)[0].to_batches()
+
+        out = _compact_topk(
+            scored(), _rank_keep_tables("query_id", "ns", k), floor
+        )
+        if out is not None:
+            yield from out.to_batches()
 
     pruned = src.mapInArrow(
         kern,
@@ -187,22 +178,11 @@ def _cosine_topk_arrow(cand: DataFrame, k: int) -> DataFrame:
             ]
         ),
     )
-    topk = pruned.groupBy("query_id").agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("ns"), F.col("vec_id")))
-            ),
-            1,
-            k,
-        ).alias("nn")
-    )
-    return topk.select(
-        "query_id", F.posexplode("nn").alias("pos", "nn")
-    ).select(
+    return _exact_topk(pruned, "query_id", "ns", "vec_id", k).select(
         "query_id",
-        (F.col("pos") + 1).alias("rank"),
-        F.col("nn.vec_id").alias("neighbor_id"),
-        (-F.col("nn.ns")).alias("score"),
+        "rank",
+        F.col("vec_id").alias("neighbor_id"),
+        (-F.col("ns")).alias("score"),
     )
 
 
@@ -551,14 +531,10 @@ def ivf_index_save(idx: IvfIndex, path: str) -> None:
     generations). All I/O goes
     through Spark's Hadoop FS layer, so `path` may be local, HDFS, or
     s3a."""
-    from .ops import _gc_superseded_generations
+    from .ops import _gc_superseded_generations, _next_generation
 
     spark = idx.corpus.sparkSession
-    try:
-        prev = spark.read.parquet(f"{path}/meta").first()
-        gen = int(prev["gen"]) + 1
-    except Exception:
-        gen = 0
+    gen = _next_generation(spark, path)
     spark.createDataFrame(
         [(int(c), [int(x) for x in v]) for c, v in idx.cents],
         "cid long, c array<long>",

@@ -599,11 +599,7 @@ def knn_index_save(idx: KnnIndex, path: str) -> None:
     next save. All I/O goes through Spark's Hadoop FS layer — no
     POSIX-only ops — so `path` may be local, HDFS, or s3a."""
     spark = idx.cent.sparkSession
-    try:
-        prev = spark.read.parquet(f"{path}/meta").first()
-        gen = int(prev["gen"]) + 1 if "gen" in prev.asDict() else 0
-    except Exception:
-        gen = 0
+    gen = _next_generation(spark, path)
     idx.stats.write.mode("overwrite").parquet(f"{path}/stats_g{gen}")
     # the (corpus-sized) centroid table is written PARTITIONED BY its
     # coarse storage region (≤ 4^KNN_STORE_LEVELS dirs) and
@@ -631,6 +627,22 @@ def knn_index_save(idx: KnnIndex, path: str) -> None:
     ).write.mode("overwrite").parquet(f"{path}/meta")
     # GC superseded generations (best-effort; readers follow meta)
     _gc_superseded_generations(spark, path, ("stats", "cent", "prep"), gen)
+
+
+def _next_generation(spark, path: str) -> int:
+    """The generation a save over `path` writes, shared by
+    knn_index_save and annops.ivf_index_save: 0 when ``path/meta``
+    does not exist (or is a legacy meta without a gen field), else the
+    committed gen + 1. An unreadable meta RAISES — guessing 0 would
+    write g0 and let the post-commit GC delete the live generation
+    and the predecessor a loaded handle still reads."""
+    from .catalog import _fs_and_path
+
+    fs, jpath = _fs_and_path(spark, f"{path}/meta")
+    if not fs.exists(jpath):
+        return 0
+    prev = spark.read.parquet(f"{path}/meta").first().asDict()
+    return int(prev["gen"]) + 1 if "gen" in prev else 0
 
 
 def _gc_superseded_generations(
@@ -1216,25 +1228,105 @@ def _rank_keep_mask(qid, dist, k):
     boundary ALL retained — a provable SUPERSET of the exact per-query
     top-k. Query ids (numeric or object) become dense segment codes via
     np.unique, then _rank_keep_seg ranks with one packed-key sort. The
-    small-batch _score_partial combiner, the brute-force point kernel
-    and the cosine top-k kernel share it, and the bulk union-score
-    kernel calls _rank_keep_seg on its own codes, so the tie convention
-    can never desynchronize."""
+    Arrow-table compact (_rank_keep_tables) of the small-batch scoring,
+    brute-force point and cosine top-k kernels calls it, and the bulk
+    union-score kernel calls _rank_keep_seg on its own codes, so the
+    tie convention can never desynchronize."""
     import numpy as np
 
     uniq, code = np.unique(qid, return_inverse=True)
     return _rank_keep_seg(code, len(uniq), dist, k)
 
 
-def _make_score_partial(gk: int):
+# ---- the rank-k reduction every top-k kernel shares: each task keeps
+# a per-query rank<k superset (_compact_topk), then ONE exact JVM
+# aggregation keeps the top k (_exact_topk).
+# _compact_topk buffers a task's scored rows until it holds this many
+# (or twice the last compaction's survivors): peak memory ≈
+# 2 × max(TOPK_COMPACT_ROWS, queries-in-task × k), never the whole
+# candidate stream
+TOPK_COMPACT_ROWS = 1_000_000
+# cap on the (probe, point) distance pairs one numpy call holds in
+# flight (≈ 32 MB of float64 per temporary) in the union-score and
+# brute-force point kernels
+SCORE_BLOCK_PAIRS = 4_000_000
+
+
+def _compact_topk(parts, compact, floor: int):
+    """Bounded doubling compaction over a stream of scored `parts`:
+    buffer them until rows >= max(floor, 2 × the last compaction's
+    survivors), then replace the buffer with compact(buffer) —
+    amortized O(n log n) rank work. Returns compact() of what remains,
+    or None for an empty stream. A part is an Arrow table or a tuple
+    of equal-length arrays; len(part[0]) (a table's first column) is
+    its row count either way. Kernel factories read `floor` when they
+    build their closure, so the value ships with the kernel."""
+    acc: list = []
+    rows = last = 0
+    for part in parts:
+        acc.append(part)
+        rows += len(part[0])
+        if rows >= max(floor, 2 * last) and len(acc) > 1:
+            acc = [compact(acc)]
+            last = rows = len(acc[0][0])
+    return compact(acc) if acc else None
+
+
+def _rank_keep_tables(key: str, value: str, k):
+    """_compact_topk's compact for Arrow tables: concatenate, keep each
+    `key` group's rank<k superset by `value` (_rank_keep_mask), filter.
+    `k` is an int or the name of a per-row k column. No pandas frame
+    and no Python string touches the stream: ids stay Arrow buffers."""
+
+    def compact(parts):
+        import pyarrow as pa
+
+        t = pa.concat_tables(parts)
+
+        def col(c):
+            return t.column(c).to_numpy(zero_copy_only=False)
+
+        keep = _rank_keep_mask(
+            col(key), col(value), col(k) if isinstance(k, str) else k
+        )
+        return t.filter(pa.array(keep))
+
+    return compact
+
+
+def _exact_topk(
+    df: DataFrame, key: str, value: str, item: str, k
+) -> DataFrame:
+    """The one exact top-k finalizer of the production top-k paths:
+    per `key`, the first k (an int or a Column) of the sorted
+    (value, item) structs — the exact total order, ties broken by
+    item — as (key, rank int, item, value) rows. Its input is the
+    kernels' per-task rank<k supersets, so each key's list is small.
+    knn_bruteforce keeps its own copy: it is the reference this is
+    checked against."""
+    top = df.groupBy(key).agg(
+        F.slice(
+            F.sort_array(F.collect_list(F.struct(F.col(value), F.col(item)))),
+            1,
+            k,
+        ).alias("nn")
+    )
+    return top.select(key, F.posexplode("nn").alias("pos", "nn")).select(
+        key,
+        (F.col("pos") + 1).cast("int").alias("rank"),
+        F.col(f"nn.{item}").alias(item),
+        F.col(f"nn.{value}").alias(value),
+    )
+
+
+def _make_score_partial():
     """mapInArrow closure for knn_join's small-batch scoring: ONE Arrow
     stage computes the exact numpy haversine (the identical
     geometry.haversine_m kernel the brute oracle path uses —
     bit-identical distances) over the joined (candidate, member) rows
-    AND reduces each input partition to its local top-gk rows per
-    query, vectorized (one packed-key sort, _rank_keep_mask).
-    Properties that matter at scale:
-      * per-task OUTPUT is ≤ |queries-in-task| × gk rows, so the
+    AND reduces each task to its per-query rank<k_req superset
+    (_compact_topk). Properties that matter at scale:
+      * per-task OUTPUT is ≤ |queries-in-task| × k rows, so the
         shuffle to the final merge is tiny regardless of candidate
         fan-out — no aggregation key ever materializes a cell's whole
         candidate list;
@@ -1242,49 +1334,25 @@ def _make_score_partial(gk: int):
         file splits) streams its rows through numpy at vector speed
         instead of building millions of per-row agg objects — the
         measured 10k-probe GC storm came from exactly that."""
+    floor = TOPK_COMPACT_ROWS
 
     def score_partial(batches):
-        import numpy as np
         import pyarrow as pa
 
         from . import geometry as geo
 
-        def rank_min_keep(tbl: "pa.Table") -> "pa.Table":
-            # keep every row whose distance ranks ≤ gk within its query
-            # (ties at the boundary ALL retained) — a provable SUPERSET
-            # of the exact top-gk (see _rank_keep_mask): no pandas
-            # frames and no Python string materialization ever touch
-            # the multi-million-row stream (image_id stays an Arrow
-            # buffer end to end); the final JVM aggregation applies the
-            # exact (dist_m, image_id) total order to the tiny superset
-            keep = _rank_keep_mask(
-                tbl.column("query_id").to_numpy(zero_copy_only=False),
-                tbl.column("dist_m").to_numpy(zero_copy_only=False),
-                gk,
-            )
-            return tbl.filter(pa.array(keep))
-
-        # bounded-memory accumulation (a hot task can stream tens of
-        # millions of candidate rows): raw batches buffer until the
-        # doubling threshold, then compact — amortized O(n log n) rank
-        # work with peak memory ≈ 2 × max(1M, queries-in-task × gk),
-        # never the full candidate stream
-        parts: list = []
-        rows = 0
-        floor_ = 1_000_000
-        last = 0
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {name: rb.column(name) for name in rb.schema.names}
-            dist = geo.haversine_m(
-                cols["lon"].to_numpy(zero_copy_only=False),
-                cols["lat"].to_numpy(zero_copy_only=False),
-                cols["slon"].to_numpy(zero_copy_only=False),
-                cols["slat"].to_numpy(zero_copy_only=False),
-            )
-            parts.append(
-                pa.table(
+        def scored():
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                cols = {name: rb.column(name) for name in rb.schema.names}
+                dist = geo.haversine_m(
+                    cols["lon"].to_numpy(zero_copy_only=False),
+                    cols["lat"].to_numpy(zero_copy_only=False),
+                    cols["slon"].to_numpy(zero_copy_only=False),
+                    cols["slat"].to_numpy(zero_copy_only=False),
+                )
+                yield pa.table(
                     {
                         "query_id": cols["query_id"],
                         "k_req": cols["k_req"],
@@ -1292,22 +1360,16 @@ def _make_score_partial(gk: int):
                         "dist_m": pa.array(dist, pa.float64()),
                     }
                 )
-            )
-            rows += rb.num_rows
-            if rows >= max(floor_, 2 * last) and len(parts) > 1:
-                parts = [rank_min_keep(pa.concat_tables(parts))]
-                last = rows = parts[0].num_rows
-        if parts:
-            out = rank_min_keep(pa.concat_tables(parts))
+
+        out = _compact_topk(
+            scored(), _rank_keep_tables("query_id", "dist_m", "k_req"), floor
+        )
+        if out is not None:
             yield from out.to_batches()
 
     return score_partial
 
 
-# expansion chunk for the union-score kernel: bound the in-flight
-# (pair-expanded) arrays per task regardless of how many candidate
-# rows a partition holds
-UNION_SCORE_CHUNK = 4_000_000
 # the union-score exchange hashes on the PARENT cell this many levels
 # up (4^2 = 16 sibling cells per key): a probe's ~7 surviving cells
 # are spatially adjacent, so under parent hashing they land in 1-2
@@ -1332,11 +1394,12 @@ def _make_union_score():
     final exact aggregation receives ≤ queries-in-task × k rows.
 
     Materialisation is late: the expanded pairs stay numeric
-    (candidate row, member row, dist) arrays through the bounded
-    doubling-compaction loop (the same idea as _score_partial), ranked
-    by _rank_keep_seg on segment codes taken once from the candidate
-    rows (the small side); query_id, k_req and image_id are gathered
-    only for the surviving pairs."""
+    (candidate row, member row, dist) tuples, SCORE_BLOCK_PAIRS at a
+    time, through _compact_topk, ranked by _rank_keep_seg on segment
+    codes taken once from the candidate rows (the small side);
+    query_id, k_req and image_id are gathered only for the surviving
+    pairs."""
+    block, floor = SCORE_BLOCK_PAIRS, TOPK_COMPACT_ROWS
 
     def score(batches):
         import numpy as np
@@ -1384,40 +1447,33 @@ def _make_union_score():
         )
         lo = np.searchsorted(mc_s, pcell, "left")
         hi = np.searchsorted(mc_s, pcell, "right")
-        counts = hi - lo
+        # chunk probe rows so Σ (hi - lo) per chunk stays ≤ block
+        cum = np.cumsum(hi - lo)
+
+        def pairs():
+            start, nprb = 0, len(pcell)
+            while start < nprb:
+                end = int(
+                    np.searchsorted(cum, (cum[start - 1] if start else 0)
+                                    + block, "left")
+                ) + 1
+                end = min(max(end, start + 1), nprb)
+                gat, cnt = _ranges_gather(lo[start:end], hi[start:end])
+                if len(gat):
+                    rep = np.repeat(np.arange(start, end), cnt)
+                    yield rep, order_m[gat], geo.haversine_m(
+                        plon[rep], plat[rep], mlon[gat], mlat[gat]
+                    )
+                start = end
 
         def compact(parts):
             row, mem, dist = (np.concatenate(a) for a in zip(*parts))
             keep = _rank_keep_seg(pcode[row], len(uniq), dist, kreq[row])
             return row[keep], mem[keep], dist[keep]
 
-        # chunk probe rows so Σ counts per chunk stays bounded
-        cum = np.cumsum(counts)
-        acc: list = []
-        rows = 0
-        last = 0
-        start = 0
-        nprb = len(pcell)
-        while start < nprb:
-            end = int(
-                np.searchsorted(cum, (cum[start - 1] if start else 0)
-                                + UNION_SCORE_CHUNK, "left")
-            ) + 1
-            end = min(max(end, start + 1), nprb)
-            gat, cnt = _ranges_gather(lo[start:end], hi[start:end])
-            if len(gat):
-                rep = np.repeat(np.arange(start, end), cnt)
-                dist = geo.haversine_m(
-                    plon[rep], plat[rep], mlon[gat], mlat[gat]
-                )
-                acc.append((rep, order_m[gat], dist))
-                rows += len(gat)
-                if rows >= max(UNION_SCORE_CHUNK, 2 * last) and len(acc) > 1:
-                    acc = [compact(acc)]
-                    last = rows = len(acc[0][0])
-            start = end
-        if acc:
-            row, mem, dist = compact(acc)
+        res = _compact_topk(pairs(), compact, floor)
+        if res is not None:
+            row, mem, dist = res
             out = pa.table(
                 {
                     "query_id": p.column("query_id").take(pa.array(row)),
@@ -1467,11 +1523,17 @@ def knn_join(
          R* cannot contain a top-k scene and is pruned. Out-of-extent
          probes therefore touch only the corpus-edge cells — there is
          no full-scan fallback.
-      4. surviving (probe, cell) pairs equi-join scenes on cell (probe
-         side broadcast — bounded by |queries| × selected cells); exact
-         haversine (the same Arrow kernel as knn_bruteforce) + (dist,
-         image_id) total-order top-k, pre-reduced per (probe, cell) so
-         no hotspot cell concentrates in a single final-agg key.
+      4. surviving (probe, cell) pairs meet the scenes of their cell
+         in one of two Arrow scoring kernels: up to
+         KNN_PROBE_BROADCAST_LIMIT probes, a join with the (broadcast)
+         pair table feeds _make_score_partial; past it, members and
+         pairs union into one cell-hashed exchange and
+         _make_union_score joins them in numpy. Both score with the
+         exact haversine of knn_bruteforce and share one reduction:
+         each task keeps a per-query rank<k_req superset
+         (_compact_topk), and one exact (dist_m, image_id) total-order
+         aggregation keeps the top k (_exact_topk), so no hotspot
+         cell's candidate list reaches a single final-agg key.
 
     1e-9-relative + 1e-14-absolute margins on both bounds absorb FP
     rounding, so the pruning never excludes a true neighbor. Stage 2's
@@ -1491,13 +1553,12 @@ def knn_join(
     # element_at/slice ordinals must be INT (queries may carry k as long)
     kcol = (F.lit(k) if k is not None else F.col("k")).cast("int")
     # ONE aggregate job over the (narrow) probe table supplies the row
-    # count (scoring-path choice), the global max k (scoring
-    # partial bound AND the auto-level k_hint) — merged so the probe
-    # table is scanned once per call, not once per consumer
+    # count (scoring-path choice) and the global max k (the auto-level
+    # k_hint) — merged so the probe table is scanned once per call
     prow = queries.agg(
         F.count("*").alias("n"), F.max(kcol).alias("gk")
     ).first()
-    probe_rows = int(prow["n"] or 0)
+    bulk = int(prow["n"] or 0) > KNN_PROBE_BROADCAST_LIMIT
     gk = int(prow["gk"] or 1)
 
     if index is None:
@@ -1543,7 +1604,7 @@ def knn_join(
         bc = spark.sparkContext.broadcast(prep)
         index.prep = (prep, bc)
     sel = q
-    if probe_rows > KNN_PROBE_BROADCAST_LIMIT:
+    if bulk:
         # bulk batches arrive in however many files the producer
         # wrote; the kernel is embarrassingly parallel over probes,
         # so spread them (narrow rows — a tiny exchange)
@@ -1609,7 +1670,7 @@ def knn_join(
             T.StructField("dist_m", T.DoubleType()),
         ]
     )
-    if probe_rows > KNN_PROBE_BROADCAST_LIMIT:
+    if bulk:
         # ---- bulk scoring, union-kernel form (r7, guide §8/§4) ----
         # The r6 bulk plan materialized the (candidate cell × cell
         # members) join in the JVM and shipped the BLOWN-UP output
@@ -1627,7 +1688,7 @@ def knn_join(
         # from |join output| to |members| + |candidates| (15.5M → 1.7M
         # at 100k probes / 1M scenes), and the per-task rank-min
         # combiner sees each cell's full population co-located, so its
-        # output is ≤ queries-in-task × gk instead of ~1 row/query/task
+        # output is ≤ queries-in-task × k instead of ~1 row/query/task
         # (the round-robin-cached corpus scattered every cell across
         # all tasks and made the combiner a no-op — measured as a
         # 15.5M-struct exchange into the final aggregation).
@@ -1669,31 +1730,11 @@ def knn_join(
             .select(
                 "query_id", "k_req", "image_id", "lon", "lat", "slon", "slat"
             )
-            .mapInArrow(_make_score_partial(gk), schema=score_schema)
+            .mapInArrow(_make_score_partial(), schema=score_schema)
         )
-    topk = pruned.groupBy("query_id").agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("dist_m"), F.col("image_id")))
-            ),
-            1,
-            F.max("k_req"),
-        ).alias("nn")
+    return _exact_topk(
+        pruned, "query_id", "dist_m", "image_id", F.max("k_req")
     )
-    return topk.select(
-        "query_id", F.posexplode("nn").alias("pos", "nn")
-    ).select(
-        "query_id",
-        (F.col("pos") + 1).cast("int").alias("rank"),
-        F.col("nn.image_id").alias("image_id"),
-        F.col("nn.dist_m").alias("dist_m"),
-    )
-
-
-# cap on the per-chunk |points| × |probes| distance-matrix cells the
-# blocked brute kernel holds in flight (≈ 32 MB of float64 per
-# temporary at 4M cells)
-BRUTE_BLOCK_CELLS = 4_000_000
 
 
 def knn_bruteforce_points(
@@ -1720,11 +1761,12 @@ def knn_bruteforce_points(
     (15k rows at sf0.1): the probe table — bounded by the same
     contract that let the old plan broadcast it — is collected once
     and closed over, each Arrow batch computes the |batch| × |probes|
-    haversine matrix in numpy (row-chunked to BRUTE_BLOCK_CELLS), and
-    a per-probe np.partition threshold keeps the rank<k superset (ties
-    retained) per task. The final exact (dist, id) total-order top-k
-    is the same JVM aggregation every kNN path ends with, so results
-    are identical row-for-row to the cross-join plan.
+    haversine matrix in numpy (row-chunked to SCORE_BLOCK_PAIRS), a
+    per-probe np.partition threshold trims each block, and the shared
+    reduction keeps the per-task rank<k superset (ties retained,
+    _compact_topk). The final exact (dist, id) total-order top-k is
+    the aggregation every production kNN path ends with (_exact_topk),
+    so results are identical row-for-row to the cross-join plan.
 
     The distance kernel is geometry.haversine_m — the proven
     oracle-exact formula (radians first, subtract after)."""
@@ -1759,58 +1801,42 @@ def knn_bruteforce_points(
     # (an int32 id collects as int64) — mapInArrow needs the exact type
     qid_type = to_arrow_type(q_fields[probe_id])
 
+    block, floor = SCORE_BLOCK_PAIRS, TOPK_COMPACT_ROWS
+
     def kern(batches):
         import pyarrow as pa
 
         ids, xs, ys = bc.value
-        nq = len(ids)
-        chunk = max(1, BRUTE_BLOCK_CELLS // nq)
-        acc: list = []
-        rows = 0
-        last = 0
+        chunk = max(1, block // len(ids))
 
-        def compact(parts):
-            t = pa.concat_tables(parts)
-            keep = _rank_keep_mask(
-                t.column("__p").to_numpy(zero_copy_only=False),
-                t.column("dist_m").to_numpy(zero_copy_only=False),
-                k,
-            )
-            return [t.filter(pa.array(keep))]
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            X = tbl.column(px).to_numpy(zero_copy_only=False)
-            Y = tbl.column(py).to_numpy(zero_copy_only=False)
-            for s in range(0, len(X), chunk):
-                e = min(s + chunk, len(X))
-                # (nq, chunk) matrix — same scalar formula per cell as
-                # the 1-D kernel (broadcasting only shapes the loops)
-                D = geo.haversine_m(
-                    xs[:, None], ys[:, None], X[None, s:e], Y[None, s:e]
-                )
-                kk = min(k, e - s)
-                kth = np.partition(D, kk - 1, axis=1)[:, kk - 1 : kk]
-                pi, ci = np.nonzero(D <= kth)
-                acc.append(
-                    pa.table(
+        def blocks():
+            for rb in batches:
+                X = rb.column(px).to_numpy(zero_copy_only=False)
+                Y = rb.column(py).to_numpy(zero_copy_only=False)
+                for s in range(0, len(X), chunk):
+                    e = min(s + chunk, len(X))
+                    # (nq, chunk) matrix — same scalar formula per cell
+                    # as the 1-D kernel (broadcasting only shapes loops)
+                    D = geo.haversine_m(
+                        xs[:, None], ys[:, None], X[None, s:e], Y[None, s:e]
+                    )
+                    kk = min(k, e - s)
+                    kth = np.partition(D, kk - 1, axis=1)[:, kk - 1 : kk]
+                    pi, ci = np.nonzero(D <= kth)
+                    yield pa.table(
                         {
                             "__p": pa.array(pi.astype(np.int64)),
-                            point_id: tbl.column(point_id).take(
+                            point_id: rb.column(point_id).take(
                                 pa.array(ci + s)
                             ),
                             "dist_m": pa.array(D[pi, ci], pa.float64()),
                         }
                     )
-                )
-                rows += len(pi)
-                if rows >= max(200_000, 2 * last) and len(acc) > 1:
-                    acc = compact(acc)
-                    last = rows = acc[0].num_rows
-        if acc:
-            t = compact(acc)[0]
+
+        t = _compact_topk(
+            blocks(), _rank_keep_tables("__p", "dist_m", k), floor
+        )
+        if t is not None:
             pidx = t.column("__p").to_numpy(zero_copy_only=False)
             out = pa.table(
                 {
@@ -1824,23 +1850,7 @@ def knn_bruteforce_points(
     pruned = points.select(point_id, px, py).mapInArrow(
         kern, schema=out_schema
     )
-    topk = pruned.groupBy(probe_id).agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("dist_m"), F.col(point_id)))
-            ),
-            1,
-            k,
-        ).alias("nn")
-    )
-    return topk.select(
-        probe_id, F.posexplode("nn").alias("pos", "nn")
-    ).select(
-        probe_id,
-        (F.col("pos") + 1).cast("int").alias("rank"),
-        F.col(f"nn.{point_id}").alias(point_id),
-        F.col("nn.dist_m").alias("dist_m"),
-    )
+    return _exact_topk(pruned, probe_id, "dist_m", point_id, k)
 
 
 @pandas_udf(T.DoubleType())

@@ -51,3 +51,26 @@ def scene_records(fixture_dir):
 @pytest.fixture(scope="session")
 def scenes_df(spark, fixture_dir):
     return spark.read.parquet(os.path.join(fixture_dir, "scenes.parquet"))
+
+
+@pytest.fixture
+def force_compaction(spark, monkeypatch):
+    """force(True) makes every top-k kernel built afterwards take its
+    compaction branch: a one-row compaction floor, 64-pair scoring
+    blocks and two-row Arrow batches, so a task holds many scored
+    parts. force(False) restores the defaults."""
+    from mosaic_engine import ops
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = (
+        ops.TOPK_COMPACT_ROWS, ops.SCORE_BLOCK_PAIRS, spark.conf.get(conf)
+    )
+
+    def force(on: bool) -> None:
+        floor, block, batch = (1, 64, "2") if on else default
+        monkeypatch.setattr(ops, "TOPK_COMPACT_ROWS", floor)
+        monkeypatch.setattr(ops, "SCORE_BLOCK_PAIRS", block)
+        spark.conf.set(conf, batch)
+
+    yield force
+    spark.conf.set(conf, default[2])

@@ -198,13 +198,16 @@ def test_knn_random_global_probes_match_brute(spark, scenes_df):
 
 
 @pytest.mark.parametrize("level", [11, 13])
-def test_knn_past_cap_refinement_matches_brute(spark, monkeypatch, level):
+def test_knn_past_cap_refinement_matches_brute(
+    spark, monkeypatch, force_compaction, level
+):
     """Past FINE_COLLECT_ROWS the cascade kernel stops at the level-9
     rollup and a second pass refines its survivors down to `level`.
     Forcing that path (a zero collect cap) on a hotspot corpus with
     pole/antimeridian edge scenes must stay exact vs brute force, for
     seeded global probes and for probes dropped next to scene
-    centroids, where the fine cells are dense."""
+    centroids, where the fine cells are dense. Both scoring paths run
+    with the default reduction and with every task compacting."""
     from pyspark.sql import Row
 
     monkeypatch.setattr(ops, "FINE_COLLECT_ROWS", 0)
@@ -234,12 +237,15 @@ def test_knn_past_cap_refinement_matches_brute(spark, monkeypatch, level):
     )
     exp = sorted(map(tuple, ops.knn_bruteforce(df, queries).collect()))
     # small-batch (broadcast join) scoring, then bulk (union kernel)
-    for limit in (ops.KNN_PROBE_BROADCAST_LIMIT, 0):
+    cases = [(lim, on) for lim in (ops.KNN_PROBE_BROADCAST_LIMIT, 0)
+             for on in (False, True)]
+    for limit, compact in cases:
         monkeypatch.setattr(ops, "KNN_PROBE_BROADCAST_LIMIT", limit)
+        force_compaction(compact)
         got = sorted(
             map(tuple, ops.knn_join(None, queries, index=idx).collect())
         )
-        assert [g[:3] for g in got] == [e[:3] for e in exp], limit
+        assert [g[:3] for g in got] == [e[:3] for e in exp], (limit, compact)
         for g, e in zip(got, exp):
             assert g[3] == pytest.approx(e[3], rel=1e-12)
 
@@ -689,6 +695,48 @@ def test_knn_index_save_generation_commit(spark, scenes_df, tmp_path):
     assert a == b
 
 
+@pytest.mark.parametrize("kind", ["knn", "ivf"])
+def test_index_resave_over_unreadable_meta_raises(
+    spark, scenes_df, tmp_path, kind
+):
+    """A save over an index whose meta cannot be read must raise and
+    leave the directory as it was. Reading such a meta as "no index
+    here" restarted at generation 0, and the post-commit GC then
+    deleted the live generation and the predecessor a loaded handle
+    still reads."""
+    from mosaic_engine import annops
+
+    if kind == "knn":
+        idx, save = ops.knn_index(scenes_df, level=5), ops.knn_index_save
+    else:
+        vecs = np.random.default_rng(5).normal(size=(64, annops.DIM))
+        emb = spark.createDataFrame(
+            [(i, [float(x) for x in v], 0) for i, v in enumerate(vecs)],
+            "vec_id long, embedding array<double>, label int",
+        )
+        idx, save = annops.ivf_index(emb), annops.ivf_index_save
+    path = str(tmp_path / kind)
+    for _ in range(3):
+        save(idx, path)
+    meta = os.path.join(path, "meta")
+    part = next(
+        os.path.join(meta, f) for f in os.listdir(meta)
+        if f.endswith(".parquet")
+    )
+    os.truncate(part, os.path.getsize(part) // 2)
+
+    def listing():
+        return sorted(
+            (os.path.relpath(d, path), sorted(fs))
+            for d, _, fs in os.walk(path)
+        )
+
+    before = listing()
+    with pytest.raises(Exception):
+        save(idx, path)
+    assert listing() == before
+
+
 @pytest.mark.parametrize("level", [6, 11])
 def test_knn_index_with_rect_stats_columns_still_serves(
     spark, scenes_df, tmp_path, monkeypatch, level
@@ -773,10 +821,11 @@ def test_knn_random_corpora_match_brute(spark, tmp_path, corpus_seed, hotspot):
         assert g[3] == pytest.approx(e[3], rel=1e-12)
 
 
-def test_knn_bruteforce_points_int32_probe_ids(spark):
+def test_knn_bruteforce_points_int32_probe_ids(spark, force_compaction):
     """knn_bruteforce_points emits probe ids in the probe column's own
     type: an int32 id column collects to an int64 numpy array, and the
-    kernel must cast it back to the declared Arrow type."""
+    kernel must cast it back to the declared Arrow type. The result is
+    the same when every task compacts its scored blocks."""
     rng = np.random.default_rng(3)
     pts = [(i, float(rng.uniform(-20, 20)), float(rng.uniform(-20, 20)))
            for i in range(300)]
@@ -784,13 +833,15 @@ def test_knn_bruteforce_points_int32_probe_ids(spark):
            for q in range(7)]
     points = spark.createDataFrame(pts, "pid long, x double, y double")
     probes = spark.createDataFrame(prb, "qid int, qx double, qy double")
-    res = ops.knn_bruteforce_points(
-        points, probes, 3, "pid", "x", "y", "qid", "qx", "qy"
-    )
-    assert dict(res.dtypes)["qid"] == "int"
-    got = sorted((r["qid"], r["rank"], r["pid"]) for r in res.collect())
     want = []
     for q, qx, qy in prb:
         near = sorted((oracle.haversine_m(qx, qy, x, y), i) for i, x, y in pts)
         want += [(q, rank + 1, i) for rank, (_, i) in enumerate(near[:3])]
-    assert got == sorted(want)
+    for compact in (False, True):
+        force_compaction(compact)
+        res = ops.knn_bruteforce_points(
+            points, probes, 3, "pid", "x", "y", "qid", "qx", "qy"
+        )
+        assert dict(res.dtypes)["qid"] == "int"
+        got = sorted((r["qid"], r["rank"], r["pid"]) for r in res.collect())
+        assert got == sorted(want), compact

@@ -267,7 +267,8 @@ def test_union_score_kernel_matches_brute(monkeypatch):
     expansion chunk (forcing the doubling compaction) its output must
     still hold every pair of each query's exact top-k_req (ties kept),
     carry the input id types, and score with geometry.haversine_m."""
-    monkeypatch.setattr(ops, "UNION_SCORE_CHUNK", 64)
+    monkeypatch.setattr(ops, "SCORE_BLOCK_PAIRS", 64)
+    monkeypatch.setattr(ops, "TOPK_COMPACT_ROWS", 64)
     rng = np.random.default_rng(11)
     for string_ids in (False, True):
         tbl, mem, cand, qids, kq, plon, plat = _union_batch(rng, string_ids)

@@ -87,12 +87,19 @@ def emb(spark):
     return spark.createDataFrame(rows)
 
 
-def test_cosine_topk_ranks_direction(spark, emb):
-    out = [
-        (r["rank"], r["neighbor_id"], r["score"])
-        for r in annops.cosine_topk(emb, n_queries=1, k=4).collect()
-    ]
-    out.sort()
+def test_cosine_topk_ranks_direction(spark, emb, force_compaction):
+    def ranked(df, k):
+        return sorted(
+            (r["rank"], r["neighbor_id"], r["score"])
+            for r in annops.cosine_topk(df, n_queries=1, k=k).collect()
+        )
+
+    want = {k: ranked(emb, k) for k in (2, 4)}
+    # one task holding every candidate, compacting at each part
+    force_compaction(True)
+    for k, rows in want.items():
+        assert ranked(emb.coalesce(1), k) == rows, k
+    out = want[4]
     # nearest: scaled copy (score ~1) then tiny-noise copy, opposite last
     assert out[0][1] in (1, 4) and out[0][2] > 0.99
     assert out[1][1] in (1, 4) and out[1][2] > 0.99
