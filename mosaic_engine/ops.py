@@ -1766,7 +1766,9 @@ def knn_bruteforce_points(
     reduction keeps the per-task rank<k superset (ties retained,
     _compact_topk). The final exact (dist, id) total-order top-k is
     the aggregation every production kNN path ends with (_exact_topk),
-    so results are identical row-for-row to the cross-join plan.
+    so results are identical row-for-row to the cross-join plan. Past
+    KNN_PROBE_BROADCAST_LIMIT probes it raises ValueError instead of
+    collecting the probe table.
 
     The distance kernel is geometry.haversine_m — the proven
     oracle-exact formula (radians first, subtract after)."""
@@ -1784,7 +1786,17 @@ def knn_bruteforce_points(
             T.StructField("dist_m", T.DoubleType()),
         ]
     )
-    prows = probes.select(probe_id, qx, qy).collect()
+    prows = (
+        probes.select(probe_id, qx, qy)
+        .limit(KNN_PROBE_BROADCAST_LIMIT + 1)
+        .collect()
+    )
+    if len(prows) > KNN_PROBE_BROADCAST_LIMIT:
+        raise ValueError(
+            f"knn_bruteforce_points: more than KNN_PROBE_BROADCAST_LIMIT="
+            f"{KNN_PROBE_BROADCAST_LIMIT} probes; the probe table is "
+            "collected to the driver — use knn_join for larger probe sets"
+        )
     if not prows:
         empty = spark.createDataFrame([], out_schema)
         return empty.select(

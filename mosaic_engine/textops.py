@@ -335,11 +335,6 @@ SIM64_BITS = 60  # stays below the signed-long sign bit
 SIM64_AB = [(1000003 * k + 7919, 104729 * k + 12345) for k in range(SIM64_BITS)]
 
 
-_PACK_SHIFT = 33  # codes < P < 2^30 shifted clear of a 33-bit count
-# field: a single token would need >8.5e9 occurrences IN ONE DOCUMENT
-# to overflow, and code<<33 stays under 2^63
-
-
 def simhash64(docs: DataFrame) -> DataFrame:
     """Wide (60-bit) SimHash over token-frequency vectors: bit k weighs
     each distinct token by count with sign = parity of an affine re-hash

@@ -236,17 +236,6 @@ def ring_to_quadkeys(
     )
 
 
-QUADKEY_BOUNDS_SCHEMA = T.StructType(
-    [
-        T.StructField("quadkey", T.StringType()),
-        T.StructField("tile_w", T.DoubleType()),
-        T.StructField("tile_s", T.DoubleType()),
-        T.StructField("tile_e", T.DoubleType()),
-        T.StructField("tile_n", T.DoubleType()),
-    ]
-)
-
-
 def quadkey_bounds(df: DataFrame, quadkey_col: str = "quadkey") -> DataFrame:
     """Append tile bounds for a quadkey column (for GeoJSON emission)."""
     src_cols = df.columns

@@ -845,3 +845,19 @@ def test_knn_bruteforce_points_int32_probe_ids(spark, force_compaction):
         assert dict(res.dtypes)["qid"] == "int"
         got = sorted((r["qid"], r["rank"], r["pid"]) for r in res.collect())
         assert got == sorted(want), compact
+
+
+def test_knn_bruteforce_points_refuses_oversized_probe_table(spark, monkeypatch):
+    """The probe table is collected to the driver, so past
+    KNN_PROBE_BROADCAST_LIMIT probes the call fails loudly instead of
+    collecting it; at the limit it still runs."""
+    points = spark.createDataFrame([(1, 0.0, 0.0)], "pid long, x double, y double")
+    probes = spark.createDataFrame(
+        [(q, 1.0, 1.0) for q in range(5)], "qid int, qx double, qy double"
+    )
+    args = (points, probes, 1, "pid", "x", "y", "qid", "qx", "qy")
+    monkeypatch.setattr(ops, "KNN_PROBE_BROADCAST_LIMIT", 4)
+    with pytest.raises(ValueError, match="KNN_PROBE_BROADCAST_LIMIT"):
+        ops.knn_bruteforce_points(*args)
+    monkeypatch.setattr(ops, "KNN_PROBE_BROADCAST_LIMIT", 5)
+    assert ops.knn_bruteforce_points(*args).count() == 5
