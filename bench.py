@@ -134,15 +134,15 @@ def main():
     # existence sentinel = the COMMIT record's _SUCCESS marker (meta is
     # written last by knn_index_save's generation scheme), so an
     # interrupted save can never wedge later runs on a partial index
-    # v5: the level pick evolved again in r6 (one-shot bump → measured
-    # rollup walk, landing this corpus at level 13 instead of 11), so
-    # earlier on-disk generations are stale; superseded knn_index_v*_
-    # dirs are GC'd so each key bump doesn't leave a multi-GB orphan in
-    # the cache forever
+    # v6: one flat index format (no storage-region partitions, no
+    # stored prep rollup; v5 and older generations now fail closed on
+    # load), so earlier on-disk indexes are stale; superseded
+    # knn_index_v*_ dirs are GC'd so each key bump doesn't leave a
+    # multi-GB orphan in the cache forever
     import glob as _glob
     import shutil as _shutil
 
-    idx_path = os.path.join(CACHE, f"knn_index_v5_{N_SCENES}")
+    idx_path = os.path.join(CACHE, f"knn_index_v6_{N_SCENES}")
     for old in _glob.glob(os.path.join(CACHE, f"knn_index_v*_{N_SCENES}")):
         if old != idx_path:
             _shutil.rmtree(old, ignore_errors=True)

@@ -522,19 +522,22 @@ def ivf_index_save(idx: IvfIndex, path: str) -> None:
     GENERATION commit (r5 review, mirrors ops.knn_index_save): data
     lands in ``path/cents_g<G>`` + ``path/corpus_g<G>`` first and ONE
     small ``path/meta`` overwrite commits the generation last, so a
-    crash mid-re-save can never serve a mixed index. Superseded
-    generations and legacy unversioned dirs are best-effort GC'd after
-    the commit, KEEPING the immediate predecessor so an index loaded
-    from it keeps serving through a re-save (r6 — VERDICT r5 #4:
-    repeated re-saves previously accumulated corpus-sized
-    ``corpus_g*`` dirs forever; growth is now bounded at two
-    generations). All I/O goes
+    crash mid-re-save can never serve a mixed index. A `path` whose
+    meta lacks a gen (the pre-generation layout) raises
+    ops.LegacyStateError before anything is written or deleted.
+    Superseded generations are best-effort GC'd after the commit,
+    KEEPING the immediate predecessor so an index loaded from it keeps
+    serving through a re-save (r6 — VERDICT r5 #4: repeated re-saves
+    previously accumulated corpus-sized ``corpus_g*`` dirs forever;
+    growth is now bounded at two generations). All I/O goes
     through Spark's Hadoop FS layer, so `path` may be local, HDFS, or
     s3a."""
-    from .ops import _gc_superseded_generations, _next_generation
+    from .ops import (
+        _commit_meta, _gc_superseded_generations, _next_generation,
+    )
 
     spark = idx.corpus.sparkSession
-    gen = _next_generation(spark, path)
+    gen = _next_generation(spark, path, ("gen",))
     spark.createDataFrame(
         [(int(c), [int(x) for x in v]) for c, v in idx.cents],
         "cid long, c array<long>",
@@ -542,25 +545,23 @@ def ivf_index_save(idx: IvfIndex, path: str) -> None:
     idx.corpus.write.mode("overwrite").partitionBy("cid").parquet(
         f"{path}/corpus_g{gen}"
     )
-    spark.createDataFrame([(int(gen),)], "gen int").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/meta")
+    _commit_meta(spark, path, gen=gen)
     _gc_superseded_generations(spark, path, ("cents", "corpus"), gen)
 
 
 def ivf_index_load(spark, path: str) -> IvfIndex:
-    """Reload an ivf_index_save'd index by following ``path/meta``
-    (legacy unversioned cents/corpus layouts load when no meta
-    exists). The partition column comes back type-inferred (int), so
-    it is re-cast to long to keep the serving join's key type
-    identical to the built-inline path. NOTE the two-generation GC
-    bound (ops._gc_superseded_generations): a loaded handle survives
-    exactly one re-save over `path`; reload after each re-save."""
-    try:
-        gen = int(spark.read.parquet(f"{path}/meta").first()["gen"])
-        sfx = f"_g{gen}"
-    except Exception:
-        sfx = ""  # legacy layout
+    """Reload an ivf_index_save'd index by following ``path/meta``. A
+    missing or unreadable meta raises its read error and a meta
+    without a gen (the pre-generation layout) raises
+    ops.LegacyStateError — no unversioned dirs are ever served. The
+    partition column comes back type-inferred (int), so it is re-cast
+    to long to keep the serving join's key type identical to the
+    built-inline path. NOTE the two-generation GC bound
+    (ops._gc_superseded_generations): a loaded handle survives exactly
+    one re-save over `path`; reload after each re-save."""
+    from .ops import _read_meta
+
+    sfx = f"_g{int(_read_meta(spark, path, ('gen',))['gen'])}"
     cents = sorted(
         (int(r["cid"]), [int(v) for v in r["c"]])
         for r in spark.read.parquet(f"{path}/cents{sfx}").collect()

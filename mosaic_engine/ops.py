@@ -294,7 +294,9 @@ class LegacyStateError(ValueError):
     the used-scene bounds columns: it was written before assignments
     carried them, and its bounds cannot be derived without rescanning
     the scenes. A streaming work_dir compacted by the pre-manifest
-    scheme (compacted_batches.json) is such state too. Rebuild it."""
+    scheme (compacted_batches.json) is such state too, and so is a
+    saved kNN or IVF index whose meta lacks a generation (or, for
+    kNN, the prep cap). Rebuild it."""
 
 
 def mosaic_bounds(scenes: DataFrame, assign: DataFrame) -> list[float]:
@@ -391,37 +393,21 @@ def knn_pick_level(n_scenes: int, k: int) -> int:
 
 @dataclass
 class KnnIndex:
-    """Reusable kNN corpus index: the banding level, the centroid table
-    keyed by packed cell (plus its coarse storage region `scell` — the
-    on-disk partition key, see knn_index_save), and the
-    localCheckpointed per-cell stats dim. Build once with knn_index,
-    serve many probe batches through knn_join(index=...) — repeated
-    batches skip the corpus-wide stats aggregation (the
+    """Reusable kNN corpus index: the banding level, the flat centroid
+    table keyed by packed cell, the per-cell stats dim (checkpointed
+    when built, a bounded parquet scan when loaded) and the cascade
+    prep built from it. Build once with knn_index, serve many probe
+    batches through knn_join(index=...) — repeated batches skip the
+    corpus-wide stats aggregation and the prep collect (the
     serving-at-scale pattern: index on ingest, query per request)."""
 
     level: int
-    cent: DataFrame  # (image_id, slon, slat, cell, scell)
-    stats: DataFrame  # (cell, n_in_cell), checkpointed
-    # lazily-filled _cascade_prep result (bounded numpy rollups/CSRs
-    # for the in-kernel coarse cascade): repeated serve batches reuse
-    # one driver-side collect instead of re-aggregating per batch
-    prep: object | None = None
-
-
-KNN_STORE_LEVELS = 4  # scell keeps at most this many levels (<=256 regions)
-
-
-def _storage_cell_col(cell: Column, level: int) -> Column:
-    """Coarse storage region of a packed (x<<30)|y cell: shift away
-    all but the top KNN_STORE_LEVELS levels (d = level -
-    KNN_STORE_LEVELS, clamped at 0 — the shift DEPENDS on level; a
-    fixed shift would blow the bound at fine levels). The partition
-    key for knn_index_save's on-disk layout — at most
-    4^KNN_STORE_LEVELS = 256 nonempty regions at any banding level."""
-    d = max(level - KNN_STORE_LEVELS, 0)
-    x = F.shiftright(cell, 30)
-    y = cell - F.shiftleft(x, 30)
-    return F.shiftleft(F.shiftright(x, d), 30) + F.shiftright(y, d)
+    cent: DataFrame  # (image_id, slon, slat, cell)
+    stats: DataFrame  # (cell, n_in_cell)
+    # (_cascade_prep dict, its broadcast): the bounded numpy rollups/
+    # CSRs of the in-kernel coarse cascade, one executor-side copy
+    # shared by every serve batch
+    prep: tuple
 
 
 def _tile_xy_cols(lon: Column, lat: Column, level: int) -> tuple[Column, Column]:
@@ -577,9 +563,10 @@ def knn_index(
             # storage
             .localCheckpoint(eager=True)
         )
-    sc = cent.withColumn("cell", key_at(level))
-    sc = sc.withColumn("scell", _storage_cell_col(F.col("cell"), level))
-    return KnnIndex(level, sc, stats)
+    return KnnIndex(
+        level, cent.withColumn("cell", key_at(level)), stats,
+        _cascade_prep(stats, level),
+    )
 
 
 def knn_index_save(idx: KnnIndex, path: str) -> None:
@@ -592,57 +579,68 @@ def knn_index_save(idx: KnnIndex, path: str) -> None:
     overwrote meta/stats/cent as three independent writes — a crash
     mid-save left a mixed-level index that knn_index_load served with
     silently wrong bounds. Now each save writes its data under
-    ``path/stats_g<G>`` + ``path/cent_g<G>`` first and commits by
-    overwriting ``path/meta`` (level + gen) LAST — the loader follows
-    meta, so a crash at any point leaves the previous generation fully
-    intact. Superseded generation dirs are best-effort GC'd on the
-    next save. All I/O goes through Spark's Hadoop FS layer — no
-    POSIX-only ops — so `path` may be local, HDFS, or s3a."""
+    ``path/stats_g<G>`` + ``path/cent_g<G>`` (two plain parquet
+    writes) first and commits by overwriting ``path/meta`` (level,
+    gen, prep_cap) LAST — the loader follows meta, so a crash at any
+    point leaves the previous generation fully intact. A generation is
+    exactly those three entries: the cascade prep is rebuilt from
+    ``stats_g<G>`` at the recorded cap, not stored. A `path` holding a
+    pre-generation layout or a meta without prep_cap raises
+    LegacyStateError before anything is written or deleted; an
+    unreadable meta raises its read error. Superseded generation dirs
+    are best-effort GC'd after the commit. All I/O goes through
+    Spark's Hadoop FS layer — no POSIX-only ops — so `path` may be
+    local, HDFS, or s3a."""
     spark = idx.cent.sparkSession
-    gen = _next_generation(spark, path)
+    gen = _next_generation(spark, path, ("level", "gen", "prep_cap"))
     idx.stats.write.mode("overwrite").parquet(f"{path}/stats_g{gen}")
-    # the (corpus-sized) centroid table is written PARTITIONED BY its
-    # coarse storage region (≤ 4^KNN_STORE_LEVELS dirs) and
-    # range-clustered on cell within each region: a served probe
-    # batch's scoring join carries scell as a join key, so Spark's
-    # dynamic partition pruning reads ONLY the regions the R*-pruned
-    # candidate cells touch — the geo twin of the IVF inverted-list
-    # layout (annops.ivf_index_save)
-    idx.cent.repartitionByRange("scell", "cell").write.mode(
-        "overwrite"
-    ).partitionBy("scell").parquet(f"{path}/cent_g{gen}")
-    # the cascade-prep rollup rides with the generation (r7 — VERDICT
-    # r6 #2): the capped (cell, n) table _cascade_prep would otherwise
-    # recount + re-collect from stats on EVERY load-then-serve;
-    # knn_index_load rebuilds the bounded numpy chains from this
-    # directly
-    cap = _prep_cap(idx.stats, idx.level)
-    _prep_rollup_df(idx.stats, idx.level, cap).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/prep_g{gen}")
-    # the COMMIT: one small overwrite, written last
-    spark.createDataFrame(
-        [(int(idx.level), int(gen), int(cap))],
-        "level int, gen int, prep_cap int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    idx.cent.write.mode("overwrite").parquet(f"{path}/cent_g{gen}")
+    _commit_meta(
+        spark, path, level=idx.level, gen=gen, prep_cap=idx.prep[0]["cap"]
+    )
     # GC superseded generations (best-effort; readers follow meta)
-    _gc_superseded_generations(spark, path, ("stats", "cent", "prep"), gen)
+    _gc_superseded_generations(spark, path, ("stats", "cent"), gen)
 
 
-def _next_generation(spark, path: str) -> int:
+def _commit_meta(spark, path: str, **fields: int) -> None:
+    """The COMMIT of a saved index generation: one small overwrite of
+    ``path/meta`` (one row of int `fields`), written last. The row is
+    built on the JVM in one partition: a createDataFrame of a Python
+    list runs one Python-worker task per core to write one row."""
+    spark.range(0, 1, 1, 1).select(
+        *[F.lit(int(v)).cast("int").alias(k) for k, v in fields.items()]
+    ).write.mode("overwrite").parquet(f"{path}/meta")
+
+
+def _read_meta(spark, path: str, fields: tuple[str, ...]) -> dict:
+    """The generation commit record ``path/meta`` of a saved kNN or IVF
+    index. A meta lacking any of `fields` is a pre-generation layout
+    (no gen) or a kNN generation saved before the prep cap was
+    recorded: it raises LegacyStateError — rebuild and re-save the
+    index. An unreadable meta raises its read error."""
+    meta = spark.read.parquet(f"{path}/meta").first().asDict()
+    missing = [f for f in fields if meta.get(f) is None]
+    if missing:
+        raise LegacyStateError(
+            f"index meta at {path} lacks {missing}: it was saved in an "
+            "older layout; rebuild and re-save the index"
+        )
+    return meta
+
+
+def _next_generation(spark, path: str, fields: tuple[str, ...]) -> int:
     """The generation a save over `path` writes, shared by
     knn_index_save and annops.ivf_index_save: 0 when ``path/meta``
-    does not exist (or is a legacy meta without a gen field), else the
-    committed gen + 1. An unreadable meta RAISES — guessing 0 would
-    write g0 and let the post-commit GC delete the live generation
-    and the predecessor a loaded handle still reads."""
+    does not exist, else the committed gen + 1 (_read_meta, so a
+    legacy or unreadable meta RAISES — guessing 0 would write g0 and
+    let the post-commit GC delete the live generation and the
+    predecessor a loaded handle still reads)."""
     from .catalog import _fs_and_path
 
     fs, jpath = _fs_and_path(spark, f"{path}/meta")
     if not fs.exists(jpath):
         return 0
-    prev = spark.read.parquet(f"{path}/meta").first().asDict()
-    return int(prev["gen"]) + 1 if "gen" in prev else 0
+    return int(_read_meta(spark, path, fields)["gen"]) + 1
 
 
 def _gc_superseded_generations(
@@ -651,10 +649,7 @@ def _gc_superseded_generations(
     """Best-effort post-commit GC shared by knn_index_save and
     annops.ivf_index_save: once generation `live_gen` is
     meta-committed, delete every ``<pfx>_g<k>`` dir EXCEPT the live
-    one and its immediate predecessor, and the bare legacy ``<pfx>``
-    dirs from the pre-generation layout once a versioned predecessor
-    exists (r6 advice — a migrated index otherwise leaked its
-    corpus-sized legacy dir forever). Keeping exactly ONE superseded
+    one and its immediate predecessor. Keeping exactly ONE superseded
     generation (r6 review) is what makes the load-then-re-save flow
     safe: ``save(load(path), path)`` writes the new generation by
     lazily READING the old one, and the loaded index object keeps
@@ -678,10 +673,7 @@ def _gc_superseded_generations(
         for st in fs.listStatus(jpath):
             name = st.getPath().getName()
             for pfx in prefixes:
-                if (name == pfx and live_gen >= 1) or (
-                    name.startswith(f"{pfx}_g")
-                    and name[len(pfx):] not in keep
-                ):
+                if name.startswith(f"{pfx}_g") and name[len(pfx):] not in keep:
                     fs.delete(st.getPath(), True)
     except Exception:
         pass
@@ -692,36 +684,18 @@ def knn_index_load(spark, path: str) -> KnnIndex:
     generation commit record — see knn_index_save). The stats dim's
     lineage is now just a bounded parquet scan (≤ 4^level rows), so no
     checkpoint is needed — knn_join(index=...) serves from it
-    directly. The scell partition column comes back type-inferred, so
-    it is re-cast to long to keep the serving join's key type
-    identical to the built-inline path. Legacy layouts (no gen field)
-    load from the unversioned stats/cent dirs."""
-    meta = spark.read.parquet(f"{path}/meta").first()
-    level = int(meta["level"])
-    if "gen" in meta.asDict():
-        sfx = f"_g{int(meta['gen'])}"
-    else:
-        sfx = ""
-    cent = spark.read.parquet(f"{path}/cent{sfx}").withColumn(
-        "scell", F.col("scell").cast("long")
+    directly. The cascade prep is rebuilt from it at the cap meta
+    records: one bounded collect, no count. A pre-generation layout or
+    a meta without prep_cap raises LegacyStateError."""
+    meta = _read_meta(spark, path, ("level", "gen", "prep_cap"))
+    level, sfx = int(meta["level"]), f"_g{int(meta['gen'])}"
+    stats = spark.read.parquet(f"{path}/stats{sfx}")
+    return KnnIndex(
+        level,
+        spark.read.parquet(f"{path}/cent{sfx}"),
+        stats,
+        _cascade_prep(stats, level, int(meta["prep_cap"])),
     )
-    idx = KnnIndex(level, cent, spark.read.parquet(f"{path}/stats{sfx}"))
-    if "prep_cap" in meta.asDict() and meta["prep_cap"] is not None:
-        # rebuild the cascade prep from the persisted capped rollup
-        # (r7 — VERDICT r6 #2): one small parquet collect + bounded
-        # numpy instead of a stats count + re-collect per serve;
-        # legacy generations (no prep_cap) fall back to the lazy
-        # in-serve _cascade_prep
-        import numpy as np
-
-        pdf = spark.read.parquet(f"{path}/prep{sfx}").toPandas()
-        prep = _prep_from_arrays(
-            pdf["cell"].to_numpy(np.int64),
-            pdf["n"].to_numpy(np.int64),
-            int(meta["prep_cap"]),
-        )
-        idx.prep = (prep, spark.sparkContext.broadcast(prep))
-    return idx
 
 
 # ---- kNN pruning math, numpy only: knn_join's cascade kernel and its
@@ -992,19 +966,9 @@ def _ranges_gather(starts, ends):
     return rep_start + (np.arange(total, dtype=np.int64) - rep_base), counts
 
 
-def _prep_cap(stats: DataFrame, level: int) -> int:
-    """Kernel descent cap: `level` itself when the fine stats dim fits
-    FINE_COLLECT_ROWS, else the 4^9-bounded level-9 rollup (at 100 TB
-    the fine dim is corpus-sized and stays distributed; the rollup is
-    bounded BY CONSTRUCTION)."""
-    n_stats = stats.count()
-    return level if n_stats <= FINE_COLLECT_ROWS else min(9, level)
-
-
 def _prep_rollup_df(stats: DataFrame, level: int, cap: int) -> DataFrame:
     """The (cell, n) stats rollup at `cap` — the bounded table the
-    cascade prep collects (and knn_index_save persists with the
-    generation)."""
+    cascade prep collects."""
     if cap == level:
         return stats.select("cell", F.col("n_in_cell").alias("n"))
     return stats.groupBy(
@@ -1012,22 +976,34 @@ def _prep_rollup_df(stats: DataFrame, level: int, cap: int) -> DataFrame:
     ).agg(F.sum("n_in_cell").alias("n"))
 
 
-def _cascade_prep(stats: DataFrame, level: int) -> dict:
-    """Driver-side prep for the in-kernel coarse cascade: ONE bounded
-    collect of the stats dim rolled to the cap (_prep_cap), then pure
-    numpy rollups/CSRs for every chain level (_prep_from_arrays).
-    Returns plain arrays — broadcast once per serve via
-    sparkContext.broadcast. A SAVED index skips this entirely:
-    knn_index_save persists the capped rollup with the generation and
-    knn_index_load rebuilds the numpy chains from it (r7 — VERDICT r6
-    #2)."""
+def _cascade_prep(stats: DataFrame, level: int, cap: int | None = None):
+    """Driver-side prep for the in-kernel coarse cascade and its
+    broadcast, as (prep, broadcast): ONE bounded collect of the stats
+    dim rolled to the cap, then pure numpy rollups/CSRs for every
+    chain level (_prep_from_arrays). The cap is `level` itself when
+    the fine stats dim fits FINE_COLLECT_ROWS, else the 4^9-bounded
+    level-9 rollup (at 100 TB the fine dim is corpus-sized and stays
+    distributed; the rollup is bounded BY CONSTRUCTION). knn_index
+    finds the cap with the collect itself (`limit(FINE_COLLECT_ROWS +
+    1)`, no count); knn_index_load passes the cap its meta records."""
     import numpy as np
 
-    cap = _prep_cap(stats, level)
-    pdf = _prep_rollup_df(stats, level, cap).toPandas()
-    return _prep_from_arrays(
-        pdf["cell"].to_numpy(np.int64), pdf["n"].to_numpy(np.int64), cap
-    )
+    def build(pdf, cap):
+        prep = _prep_from_arrays(
+            pdf["cell"].to_numpy(np.int64), pdf["n"].to_numpy(np.int64), cap
+        )
+        return prep, stats.sparkSession.sparkContext.broadcast(prep)
+
+    if cap is None:
+        fine = (
+            _prep_rollup_df(stats, level, level)
+            .limit(FINE_COLLECT_ROWS + 1)
+            .toPandas()
+        )
+        if len(fine) <= FINE_COLLECT_ROWS:
+            return build(fine, level)
+        cap = min(9, level)
+    return build(_prep_rollup_df(stats, level, cap).toPandas(), cap)
 
 
 def _prep_from_arrays(cells, ns, cap: int) -> dict:
@@ -1496,12 +1472,14 @@ def knn_join(
 ) -> DataFrame:
     """J3: exact k nearest scenes (footprint-centroid haversine) per query.
 
-    ``level=None`` (default) auto-picks the banding level from the
-    corpus size via knn_pick_level — one count() over the scenes scan
-    (parquet metadata-cheap) plus, when per-query k is used, one
-    max(k) over the small probe table. Pass a prebuilt ``index``
-    (knn_index) to serve repeated probe batches without rebuilding the
-    corpus stats; `scenes`/`level` are then ignored.
+    Without an ``index`` the call builds one inline (knn_index);
+    ``level=None`` (default) lets it pick the banding level from
+    measured corpus density, with the k hint from the same aggregate
+    over the small probe table that counts the probes. Pass a
+    prebuilt ``index`` (knn_index or knn_index_load) to serve repeated
+    probe batches without rebuilding the corpus stats or the cascade
+    prep; `scenes`/`level` are then ignored. The small-batch scoring
+    join reads the index's flat centroid table keyed on `cell`.
 
     One-pass cell-stats pruning — no iteration, no driver-side loop:
 
@@ -1546,7 +1524,8 @@ def knn_join(
     reaches a shuffle (r6; the r5 DataFrame-stage chain shuffled
     ~60 GB at 1M probes). The kernel descends to `level` itself when
     the fine stats dim fits FINE_COLLECT_ROWS, else to the 4^9-bounded
-    level-9 rollup; the survivors' fine cells then join from the
+    level-9 rollup (the cap the index's prep was built at); the
+    survivors' fine cells then join from the
     distributed stats dim and a second Arrow kernel, grouped by probe,
     runs the same pruning step at `level` (_make_fine_refine).
     """
@@ -1592,17 +1571,7 @@ def knn_join(
     # joins the distributed stats dim on pcell — the unbounded side
     # never leaves the cluster.
     spark = queries.sparkSession
-    if index.prep is not None:
-        prep, bc = index.prep
-    else:
-        # cache prep AND its broadcast on the index: a long-lived
-        # serving session re-uses one executor-side copy across
-        # batches; a one-shot call's inline index (and so its
-        # broadcast) is reclaimed when Python GC drops the result's
-        # references — PySpark's normal broadcast lifecycle
-        prep = _cascade_prep(stats, level)
-        bc = spark.sparkContext.broadcast(prep)
-        index.prep = (prep, bc)
+    prep, bc = index.prep
     sel = q
     if bulk:
         # bulk batches arrive in however many files the producer
@@ -1622,11 +1591,7 @@ def knn_join(
         ]
     )
     # k_req <= 0 probes can contribute no rows (rank <= 0 never holds)
-    # — drop them before the scoring join. Doubles as the selective
-    # predicate Spark's PartitionPruning rule needs on this side to
-    # insert the DPP subquery that prunes a stored index's scell
-    # partitions (mapInPandas output alone carries no Filter, so the
-    # rule would otherwise decline).
+    # — drop them before the scoring join
     cand = sel.mapInPandas(
         _make_cascade_prune(bc, cand_cols), schema=cand_schema
     ).filter(F.col("k_req") > 0)
@@ -1652,10 +1617,6 @@ def knn_join(
         )
 
     # ---- exact scoring over the pruned candidate cells ----
-    # scell (a pure function of cell) rides along as a join key so a
-    # partitioned on-disk index (knn_index_save) gets dynamic partition
-    # pruning: only the storage regions holding candidate cells are read
-    cand = cand.withColumn("scell", _storage_cell_col(F.col("cell"), level))
     # output schema DERIVED from the inputs (r5 review): a hardcoded
     # "query_id long" crashed mid-job for int32/string probe ids that
     # knn_bruteforce (the documented oracle twin) accepts;
@@ -1692,11 +1653,6 @@ def knn_join(
         # (the round-robin-cached corpus scattered every cell across
         # all tasks and made the combiner a no-op — measured as a
         # 15.5M-struct exchange into the final aggregation).
-        # No scell pruning here (deliberate): deriving the touched
-        # region set would re-run the cascade kernel or materialize
-        # cand, and a cluster-scale probe batch touches nearly every
-        # storage region by nature; the small-batch branch below keeps
-        # the DPP-pruned join for selective serving.
         members = sc.select(
             "cell",
             "image_id",
@@ -1723,10 +1679,9 @@ def knn_join(
     else:
         # the pruned pair table is bounded here (≤
         # KNN_PROBE_BROADCAST_LIMIT probes × a few cells), so it
-        # broadcasts; on a stored index (knn_index_save) the join's
-        # scell key then gets dynamic partition pruning
+        # broadcasts
         pruned = (
-            sc.join(F.broadcast(cand), ["scell", "cell"])
+            sc.join(F.broadcast(cand), "cell")
             .select(
                 "query_id", "k_req", "image_id", "lon", "lat", "slon", "slat"
             )

@@ -121,7 +121,7 @@ def main():
             "per-probe pruning radius R* and emit only surviving "
             "(probe, cell) pairs — no shuffle or window per cascade "
             "level. Survivors equi-join the scenes on the cell key "
-            "(broadcast, DPP-prunable against a stored index) and the "
+            "alone (the probe side broadcast) and the "
             "fused Arrow haversine scorer bounds its output at "
             "|probes|*k per task. No CartesianProduct, no iteration, "
             "nothing collected.",

@@ -217,7 +217,7 @@ def test_knn_past_cap_refinement_matches_brute(
     ).select(["image_id", "min_lon", "max_lon", "min_lat", "max_lat"])
     df = spark.createDataFrame(t.to_pandas())
     idx = ops.knn_index(df, level=level)
-    assert ops._prep_cap(idx.stats, level) == 9
+    assert idx.prep[0]["cap"] == 9
 
     rng = np.random.default_rng(level)
     n = 200
@@ -467,25 +467,22 @@ def test_knn_index_save_load_matches_built_inline(spark, scenes_df, tmp_path):
     brute = sorted(map(tuple, ops.knn_bruteforce(scenes_df, q).collect()))
     assert [g[:3] for g in got] == [b[:3] for b in brute]
 
-    # on-disk layout: the centroid table is partitioned by its coarse
-    # storage region and the served scoring join carries scell, so
-    # dynamic partition pruning reads only the candidate regions
-    import os
-
-    gen = int(
-        spark.read.parquet(os.path.join(path, "meta")).first()["gen"]
-    )
-    assert any(
-        d.startswith("scell=")
-        for d in os.listdir(os.path.join(path, f"cent_g{gen}"))
-    )
-    plan = (
-        ops.knn_join(None, q, index=loaded)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "dynamicpruning" in plan.lower()
+    # on-disk layout: one flat generation — no partition dirs under
+    # either table, and the cascade prep is not stored but rebuilt
+    # from the stats at the cap meta records, equal to the built one
+    assert sorted(os.listdir(path)) == ["cent_g0", "meta", "stats_g0"]
+    for d in ("cent_g0", "stats_g0"):
+        assert not any(
+            os.path.isdir(os.path.join(path, d, f))
+            for f in os.listdir(os.path.join(path, d))
+        )
+    built, got_prep = idx.prep[0], loaded.prep[0]
+    assert got_prep["cap"] == built["cap"]
+    assert got_prep["chain"] == built["chain"]
+    assert got_prep["levels"].keys() == built["levels"].keys()
+    for lv, (cells_, ns) in built["levels"].items():
+        np.testing.assert_array_equal(got_prep["levels"][lv][0], cells_)
+        np.testing.assert_array_equal(got_prep["levels"][lv][1], ns)
 
 
 def test_rv_join_salted_shape_on_hotspot(spark):
@@ -651,9 +648,6 @@ def test_knn_index_save_generation_commit(spark, scenes_df, tmp_path):
     )
     assert ops.knn_index_load(spark, path).level == 5  # still gen 0
 
-    # a fake legacy (pre-generation) layout dir must be GC'd too: a
-    # migrated index otherwise leaks its corpus-sized dir forever (r6)
-    os.makedirs(os.path.join(path, "cent"))
     # a full re-save at a new level commits and supersedes
     ops.knn_index_save(ops.knn_index(scenes_df, level=6), path)
     loaded1 = ops.knn_index_load(spark, path)
@@ -661,12 +655,9 @@ def test_knn_index_save_generation_commit(spark, scenes_df, tmp_path):
     # post-commit GC keeps live + immediate predecessor (r6 review:
     # save(load(path), path) lazily READS the predecessor and the
     # loaded index keeps serving from it — deleting it at commit
-    # would break the index the caller still holds); the legacy bare
-    # dir is retired once a versioned predecessor exists
+    # would break the index the caller still holds)
     assert sorted(os.listdir(path)) == [
-        "cent_g0", "cent_g1", "meta",
-        "prep_g0", "prep_g1",
-        "stats_g0", "stats_g1",
+        "cent_g0", "cent_g1", "meta", "stats_g0", "stats_g1",
     ]
     # the index loaded BEFORE the re-save must still serve (its
     # backing g0 files were kept)
@@ -680,9 +671,7 @@ def test_knn_index_save_generation_commit(spark, scenes_df, tmp_path):
     # a third save retires g0: growth stays bounded at two generations
     ops.knn_index_save(ops.knn_index(scenes_df, level=6), path)
     assert sorted(os.listdir(path)) == [
-        "cent_g1", "cent_g2", "meta",
-        "prep_g1", "prep_g2",
-        "stats_g1", "stats_g2",
+        "cent_g1", "cent_g2", "meta", "stats_g1", "stats_g2",
     ]
     # served results match a fresh index at the same level
     queries = spark.createDataFrame(
@@ -703,21 +692,46 @@ def test_index_resave_over_unreadable_meta_raises(
     leave the directory as it was. Reading such a meta as "no index
     here" restarted at generation 0, and the post-commit GC then
     deleted the live generation and the predecessor a loaded handle
-    still reads."""
-    from mosaic_engine import annops
+    still reads. A load raises too, instead of serving stale
+    unversioned dirs lying beside the meta: the IVF loader once read
+    an unreadable meta as the pre-generation layout and served them."""
+    import shutil
 
-    if kind == "knn":
-        idx, save = ops.knn_index(scenes_df, level=5), ops.knn_index_save
-    else:
-        vecs = np.random.default_rng(5).normal(size=(64, annops.DIM))
-        emb = spark.createDataFrame(
-            [(i, [float(x) for x in v], 0) for i, v in enumerate(vecs)],
-            "vec_id long, embedding array<double>, label int",
-        )
-        idx, save = annops.ivf_index(emb), annops.ivf_index_save
+    idx, save, load = _small_index(spark, scenes_df, kind)
     path = str(tmp_path / kind)
     for _ in range(3):
         save(idx, path)
+    for d in os.listdir(path):
+        if d.endswith("_g2"):
+            shutil.copytree(os.path.join(path, d), os.path.join(path, d[:-3]))
+    _truncate_meta(path)
+    before = _listing(path)
+    with pytest.raises(Exception):
+        load(spark, path)
+    with pytest.raises(Exception):
+        save(idx, path)
+    assert _listing(path) == before
+
+
+def _small_index(spark, scenes_df, kind):
+    """A small built index of `kind` with its save and load functions."""
+    from mosaic_engine import annops
+
+    if kind == "knn":
+        return (
+            ops.knn_index(scenes_df, level=5),
+            ops.knn_index_save,
+            ops.knn_index_load,
+        )
+    vecs = np.random.default_rng(5).normal(size=(64, annops.DIM))
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v], 0) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    return annops.ivf_index(emb), annops.ivf_index_save, annops.ivf_index_load
+
+
+def _truncate_meta(path):
     meta = os.path.join(path, "meta")
     part = next(
         os.path.join(meta, f) for f in os.listdir(meta)
@@ -725,16 +739,40 @@ def test_index_resave_over_unreadable_meta_raises(
     )
     os.truncate(part, os.path.getsize(part) // 2)
 
-    def listing():
-        return sorted(
-            (os.path.relpath(d, path), sorted(fs))
-            for d, _, fs in os.walk(path)
-        )
 
-    before = listing()
-    with pytest.raises(Exception):
+def _listing(path):
+    return sorted(
+        (os.path.relpath(d, path), sorted(fs)) for d, _, fs in os.walk(path)
+    )
+
+
+@pytest.mark.parametrize(
+    "kind,field", [("knn", "gen"), ("knn", "prep_cap"), ("ivf", "gen")]
+)
+def test_index_meta_without_generation_fields_raises(
+    spark, scenes_df, tmp_path, kind, field
+):
+    """A meta from a layout that predates generation commits (no gen),
+    or a kNN meta saved before the prep cap was recorded, is refused:
+    load and save raise LegacyStateError and the directory is left as
+    it was. The IVF meta holds only gen, so its gen-less meta is
+    written as a null gen, which the loaders read like a missing one."""
+    idx, save, load = _small_index(spark, scenes_df, kind)
+    path = str(tmp_path / kind)
+    save(idx, path)
+    meta = spark.read.parquet(os.path.join(path, "meta")).toPandas()
+    meta = meta.drop(columns=[field])
+    legacy = (
+        spark.createDataFrame(meta) if len(meta.columns)
+        else spark.createDataFrame([(None,)], "gen int")
+    )
+    legacy.write.mode("overwrite").parquet(os.path.join(path, "meta"))
+    before = _listing(path)
+    with pytest.raises(ops.LegacyStateError, match=field):
+        load(spark, path)
+    with pytest.raises(ops.LegacyStateError, match=field):
         save(idx, path)
-    assert listing() == before
+    assert _listing(path) == before
 
 
 @pytest.mark.parametrize("level", [6, 11])
@@ -754,6 +792,7 @@ def test_knn_index_with_rect_stats_columns_still_serves(
         level,
         fresh.cent,
         spark.createDataFrame(pdf.assign(cw=cw, cs=cs, ce=ce, cn=cn)),
+        fresh.prep,
     )
     path = str(tmp_path / "legacy_idx")
     ops.knn_index_save(legacy, path)

@@ -613,20 +613,18 @@ def test_ivf_index_save_load_serves_identically(spark, tmp_path):
             if d.startswith("cid=")]
     assert 1 <= len(dirs) <= annops.N_LIST
     # re-save commits a NEW generation; a stale partial generation dir
-    # without a meta rewrite is invisible to the loader. A fake legacy
-    # (pre-generation) corpus dir rides along to prove migration GC.
-    # The re-save goes through a LOADED index — the exact flow the GC
-    # must not break: the new generation is written by lazily reading
-    # the old one, and `reloaded` keeps serving from those kept files.
+    # without a meta rewrite is invisible to the loader. The re-save
+    # goes through a LOADED index — the exact flow the GC must not
+    # break: the new generation is written by lazily reading the old
+    # one, and `reloaded` keeps serving from those kept files.
     reloaded = annops.ivf_index_load(spark, path)
-    os.makedirs(os.path.join(path, "corpus"))
     annops.ivf_index_save(reloaded, path)
     assert int(
         spark.read.parquet(os.path.join(path, "meta")).first()["gen"]
     ) == gen + 1
     # post-commit GC (VERDICT r5 #4 + r6 review): bounded at live +
     # immediate predecessor — repeated re-saves no longer accumulate
-    # corpus-sized dirs forever, and the legacy bare dir is retired
+    # corpus-sized dirs forever
     assert sorted(os.listdir(path)) == [
         f"cents_g{gen}", f"cents_g{gen + 1}",
         f"corpus_g{gen}", f"corpus_g{gen + 1}", "meta",
