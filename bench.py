@@ -155,10 +155,11 @@ def main():
         ).count(),
     )
     # bulk serving (r5 — VERDICT r4 #5): a 100k-probe batch through the
-    # same served index — past KNN_PROBE_BROADCAST_LIMIT the scoring
-    # join drops the forced probe-side broadcast (plan-asserted in
-    # tests/test_plans.py), and the fused score+partial combiner keeps
-    # every task's output bounded at |queries|×k
+    # same served index. The 1M-scene corpus fits KNN_RESIDENT_ROWS, so
+    # the request is one mapInArrow over the probes against the members
+    # resident in the index (plan-asserted in tests/test_plans.py); the
+    # probes come from one parquet file, so knn_join spreads them over
+    # defaultParallelism partitions first (one round-robin exchange)
     qpath_bulk = os.path.join(CACHE, "knn_queries_100k.parquet")
     if not os.path.exists(qpath_bulk):
         datagen.write_parquet(

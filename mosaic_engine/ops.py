@@ -35,8 +35,8 @@ from . import geometry as geo
 from . import udfs
 
 DEFAULT_SALT_BUCKETS = 16
-# above this probe count the kNN scoring join stops force-broadcasting
-# the (probe, cell) candidate table (see knn_join)
+# cap on the probe table knn_bruteforce_points collects to the driver
+# and closes over in its kernel (three columns per probe)
 KNN_PROBE_BROADCAST_LIMIT = 50_000
 
 SEASON_MONTHS = {
@@ -396,17 +396,22 @@ class KnnIndex:
     """Reusable kNN corpus index: the banding level, the flat centroid
     table keyed by packed cell, the per-cell stats dim (checkpointed
     when built, a bounded parquet scan when loaded) and the cascade
-    prep built from it. Build once with knn_index, serve many probe
+    prep built from it. When the prep reaches `level` and the corpus
+    holds at most KNN_RESIDENT_ROWS scenes, the prep also carries the
+    corpus members (_resident_members), and knn_join serves a request
+    as one Python stage over the probes; otherwise it scores through
+    the union kernel. Build once with knn_index, serve many probe
     batches through knn_join(index=...) — repeated batches skip the
-    corpus-wide stats aggregation and the prep collect (the
-    serving-at-scale pattern: index on ingest, query per request)."""
+    corpus-wide stats aggregation, the prep collect and the member
+    collect (the serving-at-scale pattern: index on ingest, query per
+    request)."""
 
     level: int
     cent: DataFrame  # (image_id, slon, slat, cell)
     stats: DataFrame  # (cell, n_in_cell)
     # (_cascade_prep dict, its broadcast): the bounded numpy rollups/
-    # CSRs of the in-kernel coarse cascade, one executor-side copy
-    # shared by every serve batch
+    # CSRs of the in-kernel coarse cascade (and the resident members),
+    # one executor-side copy shared by every serve batch
     prep: tuple
 
 
@@ -563,10 +568,8 @@ def knn_index(
             # storage
             .localCheckpoint(eager=True)
         )
-    return KnnIndex(
-        level, cent.withColumn("cell", key_at(level)), stats,
-        _cascade_prep(stats, level),
-    )
+    cent = cent.withColumn("cell", key_at(level))
+    return KnnIndex(level, cent, stats, _cascade_prep(stats, cent, level))
 
 
 def knn_index_save(idx: KnnIndex, path: str) -> None:
@@ -663,8 +666,11 @@ def _gc_superseded_generations(
     re-save keeps reading its generation's files, which survive
     exactly ONE further save — after two consecutive saves the
     handle's files are gone and probes fail with a missing-file read
-    error, not a refusal. Long-lived serving processes must reload
-    (knn_index_load / ivf_index_load) after each re-save they observe."""
+    error, not a refusal (a kNN handle whose members are resident
+    reads no index file when it serves, so it keeps serving its own,
+    now superseded, generation). Long-lived serving processes must
+    reload (knn_index_load / ivf_index_load) after each re-save they
+    observe."""
     from .catalog import _fs_and_path
 
     keep = {f"_g{live_gen}", f"_g{live_gen - 1}"}
@@ -685,16 +691,19 @@ def knn_index_load(spark, path: str) -> KnnIndex:
     lineage is now just a bounded parquet scan (≤ 4^level rows), so no
     checkpoint is needed — knn_join(index=...) serves from it
     directly. The cascade prep is rebuilt from it at the cap meta
-    records: one bounded collect, no count. A pre-generation layout or
-    a meta without prep_cap raises LegacyStateError."""
+    records: one bounded collect, no count. When that cap is `level`
+    and the corpus fits KNN_RESIDENT_ROWS, one more collect of
+    ``cent_g<G>`` makes the members resident in the prep; a member
+    table that disagrees with the stats raises ValueError. A
+    pre-generation layout or a meta without prep_cap raises
+    LegacyStateError."""
     meta = _read_meta(spark, path, ("level", "gen", "prep_cap"))
     level, sfx = int(meta["level"]), f"_g{int(meta['gen'])}"
     stats = spark.read.parquet(f"{path}/stats{sfx}")
+    cent = spark.read.parquet(f"{path}/cent{sfx}")
     return KnnIndex(
-        level,
-        spark.read.parquet(f"{path}/cent{sfx}"),
-        stats,
-        _cascade_prep(stats, level, int(meta["prep_cap"])),
+        level, cent, stats,
+        _cascade_prep(stats, cent, level, int(meta["prep_cap"])),
     )
 
 
@@ -706,6 +715,13 @@ def knn_index_load(spark, path: str) -> KnnIndex:
 # upper bracket preserves the R* guarantee, and the margins in
 # _bounds_fast_np absorb FP rounding.
 FINE_COLLECT_ROWS = 300_000  # cap for collecting fine stats driver-side
+# cap on the corpus members the cascade prep holds resident (see
+# _resident_members): one driver collect and one copy in every Python
+# worker that serves knn_join, ~20 B per member (two float64
+# coordinates, a 4-byte id offset) plus the id's bytes — ~125 MB per
+# worker at 2M Landsat-style 41-byte ids. bench.py's 1M-scene corpus
+# stays resident; past the cap knn_join scores through the union kernel
+KNN_RESIDENT_ROWS = 2_000_000
 # in-kernel refinement step: 1 level (4 children/parent). r6 used 2
 # (16 children); the 16× expansion made the mid-chain pair tables the
 # kernel's peak cost (1.03M pairs at level 7 from 79k level-5
@@ -931,12 +947,18 @@ def _rstar_np(pid, mind, maxd, n, kreq_row):
 
 def _probe_trig(lon, lat):
     """Per-probe (lon, sinφ, cosφ, tanφ) for _bounds_fast_np (tan via
-    the quotient, so no extra transcendental)."""
+    the quotient, so no extra transcendental), lon normalized into
+    [-180, 180]: the rect lower bound tests `cw <= lon <= ce`
+    literally, so an out-of-range probe (lon=190) could report a
+    positive lower bound for the very cell it sits in, and R* pruning
+    would drop the true nearest cell. Only pruning sees the normalized
+    lon: the kernels score the probe's own lon, as knn_bruteforce
+    does (haversine is 360-periodic, but not to the last bit)."""
     import numpy as np
 
     p = np.radians(lat)
     sin_p, cos_p = np.sin(p), np.cos(p)
-    return lon, sin_p, cos_p, sin_p / cos_p
+    return (lon + 180.0) % 360.0 - 180.0, sin_p, cos_p, sin_p / cos_p
 
 
 def _prune_step(pid, trig, kreq, attrs, n):
@@ -976,7 +998,9 @@ def _prep_rollup_df(stats: DataFrame, level: int, cap: int) -> DataFrame:
     ).agg(F.sum("n_in_cell").alias("n"))
 
 
-def _cascade_prep(stats: DataFrame, level: int, cap: int | None = None):
+def _cascade_prep(
+    stats: DataFrame, cent: DataFrame, level: int, cap: int | None = None
+):
     """Driver-side prep for the in-kernel coarse cascade and its
     broadcast, as (prep, broadcast): ONE bounded collect of the stats
     dim rolled to the cap, then pure numpy rollups/CSRs for every
@@ -985,13 +1009,20 @@ def _cascade_prep(stats: DataFrame, level: int, cap: int | None = None):
     level-9 rollup (at 100 TB the fine dim is corpus-sized and stays
     distributed; the rollup is bounded BY CONSTRUCTION). knn_index
     finds the cap with the collect itself (`limit(FINE_COLLECT_ROWS +
-    1)`, no count); knn_index_load passes the cap its meta records."""
+    1)`, no count); knn_index_load passes the cap its meta records.
+    At cap == `level` the collected counts sum to the exact member
+    count, so the residency choice needs no job: a corpus of at most
+    KNN_RESIDENT_ROWS scenes gets its members (_resident_members) into
+    the prep before it is broadcast."""
     import numpy as np
 
     def build(pdf, cap):
         prep = _prep_from_arrays(
             pdf["cell"].to_numpy(np.int64), pdf["n"].to_numpy(np.int64), cap
         )
+        cells, ns = prep["levels"][cap]
+        if cap == level and int(ns.sum()) <= KNN_RESIDENT_ROWS:
+            prep["members"] = _resident_members(cent, cells, ns)
         return prep, stats.sparkSession.sparkContext.broadcast(prep)
 
     if cap is None:
@@ -1004,6 +1035,39 @@ def _cascade_prep(stats: DataFrame, level: int, cap: int | None = None):
             return build(fine, level)
         cap = min(9, level)
     return build(_prep_rollup_df(stats, level, cap).toPandas(), cap)
+
+
+def _resident_members(cent: DataFrame, cells, ns) -> dict:
+    """The corpus members for the resident kNN kernel, in CSR form over
+    the prep's sorted level cells `cells` (scene counts `ns`): member
+    coordinates and ids sorted by cell, and each cell's first member
+    ("start"; its range is start .. start + n). One collect of the
+    centroid table, with no limit (a limit plans a single-partition
+    shuffle); null-cell rows are dropped, as the union kernel's
+    equi-join drops them. The collected per-cell counts must equal
+    the stats': a mismatch means the stats and the centroid table come
+    from different corpora (an inconsistent generation), and serving
+    would be wrong, so it raises ValueError."""
+    import numpy as np
+
+    t = (
+        cent.filter(F.col("cell").isNotNull())
+        .select("cell", "slon", "slat", "image_id")
+        .toArrow()
+    )
+    t = t.take(np.argsort(np.asarray(t.column("cell")), kind="stable"))
+    if not np.array_equal(np.asarray(t.column("cell")), np.repeat(cells, ns)):
+        raise ValueError(
+            f"kNN index: the centroid table holds {t.num_rows} members, the "
+            f"stats count {int(ns.sum())} (or other cells): the generation is "
+            "inconsistent — rebuild the index"
+        )
+    return {
+        "start": np.cumsum(ns) - ns,
+        "slon": np.asarray(t.column("slon")),
+        "slat": np.asarray(t.column("slat")),
+        "image_id": t.column("image_id").combine_chunks(),
+    }
 
 
 def _prep_from_arrays(cells, ns, cap: int) -> dict:
@@ -1060,57 +1124,34 @@ def _prep_from_arrays(cells, ns, cap: int) -> dict:
     }
 
 
-def _make_cascade_prune(bc, out_cols: list[str]):
-    """mapInPandas closure running the WHOLE coarse cascade per probe
-    batch in numpy — no |probes| × |cells| table ever hits a shuffle.
-    Emits the surviving (probe, cell-at-cap) pairs (a few per probe)."""
+def _cascade_walk(prep: dict, lon, lat, kreq):
+    """The coarse-to-fine cascade over one probe batch, in numpy: every
+    probe starts paired with every cell of the chain's entry level,
+    and each chain level runs one _prune_step, then expands the
+    surviving cells into their children through the step CSRs — no
+    |probes| × |cells| table ever hits a shuffle. Returns the surviving
+    (probe index, cell-at-cap) pairs, a few per probe."""
+    import numpy as np
 
-    def prune(batches):
-        import numpy as np
-        import pandas as pd
-
-        prep = bc.value
-        chain, steps = prep["chain"], prep["steps"]
-        cells0, n0 = prep["levels"][chain[0]]
-        attrs0 = prep["entry_attrs"]
-        for pdf in batches:
-            P = len(pdf)
-            if P == 0:
-                continue
-            lon = pdf["lon"].to_numpy(np.float64)
-            lat = pdf["lat"].to_numpy(np.float64)
-            kreq = pdf["k_req"].to_numpy(np.int64)
-            trig = _probe_trig(lon, lat)
-            c0 = len(cells0)
-            pid = np.repeat(np.arange(P, dtype=np.int64), c0)
-            cell = np.tile(cells0, P)
-            nn = np.tile(n0, P)
-            # per-pair gathered cell attrs (entry: tiled level arrays)
-            attrs = tuple(np.tile(a, P) for a in attrs0)
-            for i in range(len(chain)):
-                keep = _prune_step(pid, trig, kreq, attrs, nn)
-                pid, cell = pid[keep], cell[keep]
-                if i == len(chain) - 1:
-                    break
-                st = steps[i]
-                pos = np.searchsorted(st["parents"], cell)
-                gat, counts = _ranges_gather(
-                    st["starts"][pos], st["ends"][pos]
-                )
-                pid = np.repeat(pid, counts)
-                cell = st["child_cells"][gat]
-                nn = st["child_n"][gat]
-                attrs = tuple(a[gat] for a in st["child_attrs"])
-            out = {
-                "query_id": pdf["query_id"].to_numpy()[pid],
-                "lon": lon[pid],
-                "lat": lat[pid],
-                "k_req": pdf["k_req"].to_numpy()[pid],
-                "cell": cell,
-            }
-            yield pd.DataFrame({c: out[c] for c in out_cols})
-
-    return prune
+    chain, steps = prep["chain"], prep["steps"]
+    cells0, n0 = prep["levels"][chain[0]]
+    P = len(lon)
+    trig = _probe_trig(lon, lat)
+    pid = np.repeat(np.arange(P, dtype=np.int64), len(cells0))
+    cell = np.tile(cells0, P)
+    nn = np.tile(n0, P)
+    # per-pair gathered cell attrs (entry: tiled level arrays)
+    attrs = tuple(np.tile(a, P) for a in prep["entry_attrs"])
+    for st in steps:
+        keep = _prune_step(pid, trig, kreq, attrs, nn)
+        pos = np.searchsorted(st["parents"], cell[keep])
+        gat, counts = _ranges_gather(st["starts"][pos], st["ends"][pos])
+        pid = np.repeat(pid[keep], counts)
+        cell = st["child_cells"][gat]
+        nn = st["child_n"][gat]
+        attrs = tuple(a[gat] for a in st["child_attrs"])
+    keep = _prune_step(pid, trig, kreq, attrs, nn)
+    return pid[keep], cell[keep]
 
 
 def _make_fine_refine(level: int, out_cols: list[str]):
@@ -1204,9 +1245,9 @@ def _rank_keep_mask(qid, dist, k):
     boundary ALL retained — a provable SUPERSET of the exact per-query
     top-k. Query ids (numeric or object) become dense segment codes via
     np.unique, then _rank_keep_seg ranks with one packed-key sort. The
-    Arrow-table compact (_rank_keep_tables) of the small-batch scoring,
-    brute-force point and cosine top-k kernels calls it, and the bulk
-    union-score kernel calls _rank_keep_seg on its own codes, so the
+    Arrow-table compact (_rank_keep_tables) of the brute-force point
+    and cosine top-k kernels calls it, and the resident kNN and
+    union-score kernels call _rank_keep_seg on their own codes, so the
     tie convention can never desynchronize."""
     import numpy as np
 
@@ -1223,9 +1264,35 @@ def _rank_keep_mask(qid, dist, k):
 # candidate stream
 TOPK_COMPACT_ROWS = 1_000_000
 # cap on the (probe, point) distance pairs one numpy call holds in
-# flight (≈ 32 MB of float64 per temporary) in the union-score and
-# brute-force point kernels
+# flight (≈ 32 MB of float64 per temporary) in the resident kNN,
+# union-score and brute-force point kernels
 SCORE_BLOCK_PAIRS = 4_000_000
+
+
+def _pair_blocks(lo, hi, block: int):
+    """The pairs of row i with members lo[i] .. hi[i] - 1 (CSR ranges),
+    in blocks of at most `block` pairs: yields (row index, member
+    index) arrays per block, rows ascending. A range longer than
+    `block` is split over several blocks, so no block ever holds more
+    than `block` pairs however dense a cell is."""
+    import numpy as np
+
+    rows = np.arange(len(lo), dtype=np.int64)
+    if len(lo) and int((hi - lo).max()) > block:
+        parts = np.maximum(-(-(hi - lo) // block), 1)
+        rows = np.repeat(rows, parts)
+        off = np.arange(len(rows)) - np.repeat(np.cumsum(parts) - parts, parts)
+        lo = lo[rows] + off * block
+        hi = np.minimum(lo + block, hi[rows])
+    cum = np.cumsum(hi - lo)
+    start = 0
+    while start < len(rows):
+        base = int(cum[start - 1]) if start else 0
+        end = int(np.searchsorted(cum, base + block, "right"))
+        gat, cnt = _ranges_gather(lo[start:end], hi[start:end])
+        if len(gat):
+            yield np.repeat(rows[start:end], cnt), gat
+        start = end
 
 
 def _compact_topk(parts, compact, floor: int):
@@ -1246,6 +1313,32 @@ def _compact_topk(parts, compact, floor: int):
             acc = [compact(acc)]
             last = rows = len(acc[0][0])
     return compact(acc) if acc else None
+
+
+def _scored_topk(lo, hi, plon, plat, mlon, mlat, code, k, block, floor):
+    """The exact-haversine pairs of probe row i (plon[i], plat[i]) with
+    members lo[i] .. hi[i] - 1 (mlon, mlat), in _pair_blocks of at most
+    `block` pairs, reduced through _compact_topk to each segment's
+    rank<k superset (_rank_keep_seg over the rows' dense segment
+    `code`s and per-row `k`). Returns (row, member, dist) arrays, or
+    None when there are no pairs. The resident kNN and union-score
+    kernels both score through it."""
+    import numpy as np
+
+    from . import geometry as geo
+
+    def pairs():
+        for row, mem in _pair_blocks(lo, hi, block):
+            yield row, mem, geo.haversine_m(
+                plon[row], plat[row], mlon[mem], mlat[mem]
+            )
+
+    def compact(parts):
+        row, mem, dist = (np.concatenate(a) for a in zip(*parts))
+        keep = _rank_keep_seg(code[row], int(code.max()) + 1, dist, k[row])
+        return row[keep], mem[keep], dist[keep]
+
+    return _compact_topk(pairs(), compact, floor)
 
 
 def _rank_keep_tables(key: str, value: str, k):
@@ -1295,57 +1388,6 @@ def _exact_topk(
     )
 
 
-def _make_score_partial():
-    """mapInArrow closure for knn_join's small-batch scoring: ONE Arrow
-    stage computes the exact numpy haversine (the identical
-    geometry.haversine_m kernel the brute oracle path uses —
-    bit-identical distances) over the joined (candidate, member) rows
-    AND reduces each task to its per-query rank<k_req superset
-    (_compact_topk). Properties that matter at scale:
-      * per-task OUTPUT is ≤ |queries-in-task| × k rows, so the
-        shuffle to the final merge is tiny regardless of candidate
-        fan-out — no aggregation key ever materializes a cell's whole
-        candidate list;
-      * a hot task (probe batches concentrate in few storage-region
-        file splits) streams its rows through numpy at vector speed
-        instead of building millions of per-row agg objects — the
-        measured 10k-probe GC storm came from exactly that."""
-    floor = TOPK_COMPACT_ROWS
-
-    def score_partial(batches):
-        import pyarrow as pa
-
-        from . import geometry as geo
-
-        def scored():
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                cols = {name: rb.column(name) for name in rb.schema.names}
-                dist = geo.haversine_m(
-                    cols["lon"].to_numpy(zero_copy_only=False),
-                    cols["lat"].to_numpy(zero_copy_only=False),
-                    cols["slon"].to_numpy(zero_copy_only=False),
-                    cols["slat"].to_numpy(zero_copy_only=False),
-                )
-                yield pa.table(
-                    {
-                        "query_id": cols["query_id"],
-                        "k_req": cols["k_req"],
-                        "image_id": cols["image_id"],
-                        "dist_m": pa.array(dist, pa.float64()),
-                    }
-                )
-
-        out = _compact_topk(
-            scored(), _rank_keep_tables("query_id", "dist_m", "k_req"), floor
-        )
-        if out is not None:
-            yield from out.to_batches()
-
-    return score_partial
-
-
 # the union-score exchange hashes on the PARENT cell this many levels
 # up (4^2 = 16 sibling cells per key): a probe's ~7 surviving cells
 # are spatially adjacent, so under parent hashing they land in 1-2
@@ -1359,7 +1401,7 @@ UNION_SCORE_PARENT_DROP = 2
 
 
 def _make_union_score():
-    """mapInArrow closure for knn_join's bulk scoring path: one
+    """mapInArrow closure for knn_join's union scoring path: one
     cell-hashed partition holds BOTH the corpus members (side=0: cell,
     image_id, slon, slat) and the probe candidates (side=1: cell,
     query_id, plon, plat, k_req) for its cells; the kernel equi-joins
@@ -1371,10 +1413,10 @@ def _make_union_score():
 
     Materialisation is late: the expanded pairs stay numeric
     (candidate row, member row, dist) tuples, SCORE_BLOCK_PAIRS at a
-    time, through _compact_topk, ranked by _rank_keep_seg on segment
-    codes taken once from the candidate rows (the small side);
-    query_id, k_req and image_id are gathered only for the surviving
-    pairs."""
+    time (_pair_blocks), through _compact_topk, ranked by
+    _rank_keep_seg on segment codes taken once from the candidate rows
+    (the small side); query_id, k_req and image_id are gathered only
+    for the surviving pairs."""
     block, floor = SCORE_BLOCK_PAIRS, TOPK_COMPACT_ROWS
 
     def score(batches):
@@ -1382,85 +1424,129 @@ def _make_union_score():
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from . import geometry as geo
-
-        mem_parts: list = []
-        prb_parts: list = []
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            side = tbl.column("side")
-            is_mem = pc.equal(side, 0)
-            mem_parts.append(
-                tbl.filter(is_mem).select(
-                    ["cell", "image_id", "slon", "slat"]
-                )
-            )
-            prb_parts.append(
-                tbl.filter(pc.invert(is_mem)).select(
-                    ["cell", "query_id", "plon", "plat", "k_req"]
-                )
-            )
-        if not mem_parts:
+        rbs = [rb for rb in batches if rb.num_rows]
+        if not rbs:
             return
-        m = pa.concat_tables(mem_parts)
-        p = pa.concat_tables(prb_parts)
+        t = pa.Table.from_batches(rbs)
+        is_mem = pc.equal(t.column("side"), 0)
+        m, p = t.filter(is_mem), t.filter(pc.invert(is_mem))
         if m.num_rows == 0 or p.num_rows == 0:
             return
-        mc = m.column("cell").to_numpy(zero_copy_only=False)
-        order_m = np.argsort(mc, kind="stable")
-        mc_s = mc[order_m]
-        mlon = m.column("slon").to_numpy(zero_copy_only=False)[order_m]
-        mlat = m.column("slat").to_numpy(zero_copy_only=False)[order_m]
-        pcell = p.column("cell").to_numpy(zero_copy_only=False)
-        plon = p.column("plon").to_numpy(zero_copy_only=False)
-        plat = p.column("plat").to_numpy(zero_copy_only=False)
-        kreq = p.column("k_req").to_numpy(zero_copy_only=False)
-        uniq, pcode = np.unique(
-            p.column("query_id").to_numpy(zero_copy_only=False),
-            return_inverse=True,
+        mc = np.asarray(m.column("cell"))
+        order = np.argsort(mc, kind="stable")
+        mc, pcell = mc[order], np.asarray(p.column("cell"))
+        _, pcode = np.unique(np.asarray(p.column("query_id")), return_inverse=True)
+        res = _scored_topk(
+            np.searchsorted(mc, pcell, "left"),
+            np.searchsorted(mc, pcell, "right"),
+            np.asarray(p.column("plon")),
+            np.asarray(p.column("plat")),
+            np.asarray(m.column("slon"))[order],
+            np.asarray(m.column("slat"))[order],
+            pcode, np.asarray(p.column("k_req")), block, floor,
         )
-        lo = np.searchsorted(mc_s, pcell, "left")
-        hi = np.searchsorted(mc_s, pcell, "right")
-        # chunk probe rows so Σ (hi - lo) per chunk stays ≤ block
-        cum = np.cumsum(hi - lo)
-
-        def pairs():
-            start, nprb = 0, len(pcell)
-            while start < nprb:
-                end = int(
-                    np.searchsorted(cum, (cum[start - 1] if start else 0)
-                                    + block, "left")
-                ) + 1
-                end = min(max(end, start + 1), nprb)
-                gat, cnt = _ranges_gather(lo[start:end], hi[start:end])
-                if len(gat):
-                    rep = np.repeat(np.arange(start, end), cnt)
-                    yield rep, order_m[gat], geo.haversine_m(
-                        plon[rep], plat[rep], mlon[gat], mlat[gat]
-                    )
-                start = end
-
-        def compact(parts):
-            row, mem, dist = (np.concatenate(a) for a in zip(*parts))
-            keep = _rank_keep_seg(pcode[row], len(uniq), dist, kreq[row])
-            return row[keep], mem[keep], dist[keep]
-
-        res = _compact_topk(pairs(), compact, floor)
         if res is not None:
             row, mem, dist = res
-            out = pa.table(
+            row = pa.array(row)
+            yield from pa.table(
                 {
-                    "query_id": p.column("query_id").take(pa.array(row)),
-                    "k_req": p.column("k_req").take(pa.array(row)),
-                    "image_id": m.column("image_id").take(pa.array(mem)),
-                    "dist_m": pa.array(dist, pa.float64()),
+                    "query_id": p.column("query_id").take(row),
+                    "k_req": p.column("k_req").take(row),
+                    "image_id": m.column("image_id").take(pa.array(order[mem])),
+                    "dist_m": pa.array(dist),
                 }
-            )
-            yield from out.to_batches()
+            ).to_batches()
 
     return score
+
+
+def _make_probe_kernel(bc):
+    """mapInArrow closure over knn_join's probe batches (query_id, lon,
+    lat, k_req). Per batch, the probes with k > 0 (a null k reads as
+    0) walk the cascade (_cascade_walk). Without resident members the
+    kernel emits the surviving (query_id, lon, lat, k_req, cell) pairs
+    for the union kernel. With them (_resident_members) it serves the
+    whole request in this one Python stage: each surviving cell's
+    member range is scored (_scored_topk) and the exact top k of each
+    probe's rank<k superset is emitted as (query_id, rank, image_id,
+    dist_m). The exact order is the one Spark's sort_array gives the
+    (dist_m, image_id) structs of _exact_topk and knn_bruteforce: NaN
+    last, -0.0 equal to 0.0, ties by id, strings in binary UTF-8 order
+    (Arrow's sort). A probe row is ranked on its own: rows sharing a
+    query_id are not merged."""
+    block, floor = SCORE_BLOCK_PAIRS, TOPK_COMPACT_ROWS
+
+    def kern(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        prep = bc.value
+        cells, ns = prep["levels"][prep["cap"]]
+        mem = prep.get("members")
+        for rb in batches:
+            kreq = np.nan_to_num(np.asarray(rb.column("k_req"), np.float64))
+            live = np.flatnonzero(kreq > 0)
+            kreq = kreq[live].astype(np.int64)
+            lon = np.asarray(rb.column("lon"))[live]
+            lat = np.asarray(rb.column("lat"))[live]
+            pid, cell = _cascade_walk(prep, lon, lat, kreq)
+            qid = rb.column("query_id")
+            if mem is None:
+                yield pa.RecordBatch.from_arrays(
+                    [qid.take(pa.array(live[pid])), pa.array(lon[pid]),
+                     pa.array(lat[pid]), pa.array(kreq[pid], pa.int32()),
+                     pa.array(cell)],
+                    names=["query_id", "lon", "lat", "k_req", "cell"],
+                )
+                continue
+            pos = np.searchsorted(cells, cell)
+            lo = mem["start"][pos]
+            res = _scored_topk(
+                lo, lo + ns[pos], lon[pid], lat[pid], mem["slon"],
+                mem["slat"], pid, kreq[pid], block, floor,
+            )
+            if res is None:
+                continue
+            row, m, d = res
+            ids = mem["image_id"].take(pa.array(m))
+            p = pid[row]
+            o = pc.sort_indices(
+                pa.table({"p": p, "d": d, "id": ids}),
+                sort_keys=[(c, "ascending") for c in ("p", "d", "id")],
+            ).to_numpy()
+            p, n = p[o], len(o)
+            first = np.flatnonzero(np.r_[True, p[1:] != p[:-1]])
+            rank = np.arange(1, n + 1) - np.repeat(first, np.diff(np.r_[first, n]))
+            keep = rank <= kreq[p]
+            o = o[keep]
+            yield pa.RecordBatch.from_arrays(
+                [qid.take(pa.array(live[p[keep]])),
+                 pa.array(rank[keep], pa.int32()), ids.take(pa.array(o)),
+                 pa.array(d[o], pa.float64())],
+                names=["query_id", "rank", "image_id", "dist_m"],
+            )
+
+    return kern
+
+
+def _spread_probes(df: DataFrame) -> DataFrame:
+    """`df`, round-robined over defaultParallelism partitions when its
+    input holds fewer: both kNN kernels are embarrassingly parallel
+    over probes, and a probe table read from one file would otherwise
+    run as one task. The partition count is read from the planned RDD
+    only when the plan holds no exchange and no subquery — there,
+    building the RDD runs no job; under AQE it would run the shuffle
+    stages — and a lineage holding either is left as it is (an
+    exchange already spreads its rows)."""
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    if any(t in plan for t in ("Exchange", "Subquery", "AdaptiveSparkPlan")):
+        return df
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if qe.toRdd().getNumPartitions() >= par:
+        return df
+    return df.repartition(par)
 
 
 def knn_join(
@@ -1474,12 +1560,12 @@ def knn_join(
 
     Without an ``index`` the call builds one inline (knn_index);
     ``level=None`` (default) lets it pick the banding level from
-    measured corpus density, with the k hint from the same aggregate
-    over the small probe table that counts the probes. Pass a
+    measured corpus density, with the k hint from one aggregate over
+    the small probe table (the literal `k` when given). Pass a
     prebuilt ``index`` (knn_index or knn_index_load) to serve repeated
-    probe batches without rebuilding the corpus stats or the cascade
-    prep; `scenes`/`level` are then ignored. The small-batch scoring
-    join reads the index's flat centroid table keyed on `cell`.
+    probe batches without rebuilding the corpus stats, the cascade
+    prep or the resident members; `scenes`/`level` are then ignored
+    and planning the request runs no job.
 
     One-pass cell-stats pruning — no iteration, no driver-side loop:
 
@@ -1502,99 +1588,76 @@ def knn_join(
          probes therefore touch only the corpus-edge cells — there is
          no full-scan fallback.
       4. surviving (probe, cell) pairs meet the scenes of their cell
-         in one of two Arrow scoring kernels: up to
-         KNN_PROBE_BROADCAST_LIMIT probes, a join with the (broadcast)
-         pair table feeds _make_score_partial; past it, members and
-         pairs union into one cell-hashed exchange and
-         _make_union_score joins them in numpy. Both score with the
-         exact haversine of knn_bruteforce and share one reduction:
-         each task keeps a per-query rank<k_req superset
-         (_compact_topk), and one exact (dist_m, image_id) total-order
-         aggregation keeps the top k (_exact_topk), so no hotspot
-         cell's candidate list reaches a single final-agg key.
+         and are scored with the exact haversine of knn_bruteforce.
+         When the index's prep holds the corpus members (the prep
+         reaches `level` and the corpus fits KNN_RESIDENT_ROWS), the
+         whole request is ONE mapInArrow over the probes
+         (_make_probe_kernel): walk, gather, score and exact top k per
+         batch — no exchange, no join, no JVM aggregation. Otherwise
+         members and pairs union into one cell-hashed exchange,
+         _make_union_score joins them in numpy and keeps a per-task
+         rank<k_req superset (_compact_topk), and one exact
+         (dist_m, image_id) total-order aggregation keeps the top k
+         (_exact_topk), so no hotspot cell's candidate list reaches a
+         single final-agg key. Either way a scoring block holds at most
+         SCORE_BLOCK_PAIRS pairs.
 
     1e-9-relative + 1e-14-absolute margins on both bounds absorb FP
     rounding, so the pruning never excludes a true neighbor. Stage 2's
     |probes| × |cells| pair table is the scaling knob: steps 2-3 run
     as a coarse-to-fine walk (one-level steps from KNN_MIN_LEVEL down;
-    a single step when `level` ≤ KNN_MIN_LEVEL) INSIDE one
-    Arrow-batched mapInPandas kernel over bounded rollups of the stats
-    dim — exact at every step (parent rects contain their children
-    and counts aggregate), and no |probes| × |cells| table ever
-    reaches a shuffle (r6; the r5 DataFrame-stage chain shuffled
-    ~60 GB at 1M probes). The kernel descends to `level` itself when
-    the fine stats dim fits FINE_COLLECT_ROWS, else to the 4^9-bounded
-    level-9 rollup (the cap the index's prep was built at); the
-    survivors' fine cells then join from the
-    distributed stats dim and a second Arrow kernel, grouped by probe,
-    runs the same pruning step at `level` (_make_fine_refine).
+    a single step when `level` ≤ KNN_MIN_LEVEL) INSIDE the probe
+    kernel over bounded rollups of the stats dim (_cascade_walk) —
+    exact at every step (parent rects contain their children and
+    counts aggregate), and no |probes| × |cells| table ever reaches a
+    shuffle (r6; the r5 DataFrame-stage chain shuffled ~60 GB at 1M
+    probes). The walk descends to `level` itself when the fine stats
+    dim fits FINE_COLLECT_ROWS, else to the 4^9-bounded level-9
+    rollup (the cap the index's prep was built at); the survivors'
+    fine cells then join from the distributed stats dim and a second
+    Arrow kernel, grouped by probe, runs the same pruning step at
+    `level` (_make_fine_refine) before the union kernel scores.
     """
     # element_at/slice ordinals must be INT (queries may carry k as long)
     kcol = (F.lit(k) if k is not None else F.col("k")).cast("int")
-    # ONE aggregate job over the (narrow) probe table supplies the row
-    # count (scoring-path choice) and the global max k (the auto-level
-    # k_hint) — merged so the probe table is scanned once per call
-    prow = queries.agg(
-        F.count("*").alias("n"), F.max(kcol).alias("gk")
-    ).first()
-    bulk = int(prow["n"] or 0) > KNN_PROBE_BROADCAST_LIMIT
-    gk = int(prow["gk"] or 1)
-
     if index is None:
-        if level is None:
-            index = knn_index(scenes, k_hint=gk)
-        else:
+        if level is not None:
             index = knn_index(scenes, level=level)
+        else:
+            # the auto level's k hint: the literal k, else ONE
+            # aggregate job over the (narrow) probe table
+            gk = k if k is not None else queries.agg(F.max(kcol)).first()[0]
+            index = knn_index(scenes, k_hint=int(gk or 1))
     level, sc, stats = index.level, index.cent, index.stats
-    # normalize probe lon into [-180, 180): haversine is 360-periodic
-    # (knn_bruteforce scores lon=190 correctly) but the rect lower
-    # bound (_bounds_fast_np) tests `cw <= lon <= ce` literally — an
-    # out-of-range probe could report a positive lower bound for the
-    # very cell it sits in and R* pruning would drop the true nearest
-    # cell.
-    lon_n = F.pmod(F.col("lon") + 180.0, F.lit(360.0)) - 180.0
-    q = queries.select(
-        "query_id", lon_n.alias("lon"), "lat", kcol.alias("k_req")
-    )
-    # ---- coarse-to-fine prefilter CASCADE, in-kernel: the
-    # |probes| × |cells| pair tables the cascade walks are the scaling
-    # knob (as shuffled DataFrame stages they measured ~60 GB at 1M
-    # probes). The coarse levels' rollups are BOUNDED BY CONSTRUCTION
-    # (≤ 4^9 rows at level ≤ 9, regardless of corpus size), so the
-    # walk runs inside ONE Arrow-batched mapInPandas kernel over the
-    # probe table: per batch of probes, numpy prunes level by level
-    # (_prune_step) and emits only the surviving (probe, cell) pairs —
-    # a few rows per probe, ZERO shuffles. When the FINE stats dim
-    # fits FINE_COLLECT_ROWS the kernel walks all the way to `level`;
-    # on a corpus whose fine dim is too big to collect (the 100-TB
-    # case) it stops at the level-9 rollup, and the fine refinement
-    # joins the distributed stats dim on pcell — the unbounded side
-    # never leaves the cluster.
-    spark = queries.sparkSession
     prep, bc = index.prep
-    sel = q
-    if bulk:
-        # bulk batches arrive in however many files the producer
-        # wrote; the kernel is embarrassingly parallel over probes,
-        # so spread them (narrow rows — a tiny exchange)
-        sel = sel.repartition(spark.sparkContext.defaultParallelism)
-
-    cand_cols = ["query_id", "lon", "lat", "k_req", "cell"]
-    qf = {f.name: f.dataType for f in q.schema.fields}
-    cand_schema = T.StructType(
-        [
-            T.StructField("query_id", qf["query_id"]),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("lat", T.DoubleType()),
-            T.StructField("k_req", qf["k_req"]),
-            T.StructField("cell", T.LongType()),
-        ]
+    q = _spread_probes(
+        queries.select(
+            "query_id",
+            F.col("lon").cast("double").alias("lon"),
+            F.col("lat").cast("double").alias("lat"),
+            kcol.alias("k_req"),
+        )
     )
-    # k_req <= 0 probes can contribute no rows (rank <= 0 never holds)
-    # — drop them before the scoring join
-    cand = sel.mapInPandas(
-        _make_cascade_prune(bc, cand_cols), schema=cand_schema
-    ).filter(F.col("k_req") > 0)
+    # output schemas DERIVED from the inputs (r5 review): a hardcoded
+    # "query_id long" crashed mid-job for int32/string probe ids that
+    # knn_bruteforce (the documented oracle twin) accepts
+    qid_t = q.schema["query_id"].dataType.simpleString()
+    id_t = sc.schema["image_id"].dataType.simpleString()
+    kern = _make_probe_kernel(bc)
+    if "members" in prep:
+        return q.mapInArrow(
+            kern, f"query_id {qid_t}, rank int, image_id {id_t}, dist_m double"
+        )
+
+    # ---- union path: the probe kernel emits the surviving
+    # (probe, cell-at-cap) pairs. When the FINE stats dim fits
+    # FINE_COLLECT_ROWS it walks all the way to `level`; on a corpus
+    # whose fine dim is too big to collect (the 100-TB case) it stops
+    # at the level-9 rollup, and the fine refinement joins the
+    # distributed stats dim on pcell — the unbounded side never leaves
+    # the cluster.
+    cand_schema = T.StructType(q.schema.fields + [T.StructField("cell", T.LongType())])
+    cand = q.mapInArrow(kern, cand_schema)
     if prep["cap"] < level:
         # the stats side is corpus-sized here (that is WHY the kernel
         # stopped at the rollup): no broadcast hint — AQE picks
@@ -1612,81 +1675,42 @@ def knn_join(
             .repartition("query_id")
             .sortWithinPartitions("query_id")
             .mapInArrow(
-                _make_fine_refine(level, cand_cols), schema=cand_schema
+                _make_fine_refine(level, cand_schema.names), cand_schema
             )
         )
 
-    # ---- exact scoring over the pruned candidate cells ----
-    # output schema DERIVED from the inputs (r5 review): a hardcoded
-    # "query_id long" crashed mid-job for int32/string probe ids that
-    # knn_bruteforce (the documented oracle twin) accepts;
-    # _rank_keep_seg codes object ids with np.unique (fine, just
-    # slower) — the id type is the caller's choice
-    sc_fields = {f.name: f.dataType for f in sc.schema.fields}
-    score_schema = T.StructType(
-        [
-            T.StructField("query_id", qf["query_id"]),
-            T.StructField("k_req", qf["k_req"]),
-            T.StructField("image_id", sc_fields["image_id"]),
-            T.StructField("dist_m", T.DoubleType()),
-        ]
+    # ---- union-kernel scoring (r7, guide §8/§4): ships the two INPUT
+    # tables — corpus members (one row per scene: cell, image_id,
+    # slon, slat) and probe candidates (one row per surviving
+    # (probe, cell) pair) — through one hash exchange on the parent
+    # cell into a mapInArrow kernel that equi-joins and scores them in
+    # numpy. Boundary rows are |members| + |candidates|, never the
+    # joined blow-up (15.5M → 1.7M rows at 100k probes / 1M scenes
+    # against the r6 JVM join), and the per-task rank-min combiner
+    # sees each cell's full population co-located, so its output is
+    # ≤ queries-in-task × k.
+    members = sc.select(
+        "cell", "image_id", "slon", "slat", F.lit(0).cast("tinyint").alias("side")
     )
-    if bulk:
-        # ---- bulk scoring, union-kernel form (r7, guide §8/§4) ----
-        # The r6 bulk plan materialized the (candidate cell × cell
-        # members) join in the JVM and shipped the BLOWN-UP output
-        # through Arrow to the scoring kernel: at 100k probes that is
-        # 15.5M rows (~155 per probe) and the boundary transfer alone
-        # measured 5.5-7.2 s of the 12 s lane — by far its largest
-        # cost, and it scales with |probes| × neighborhood size. The
-        # decisions only need each side ONCE (guide §8: move
-        # lightweight rows, attach the payload exactly once), so the
-        # bulk path now ships the two INPUT tables — corpus members
-        # (one row per scene: cell, image_id, slon, slat) and probe
-        # candidates (one row per surviving (probe, cell) pair) —
-        # through one hash exchange on cell into a mapInArrow kernel
-        # that equi-joins and scores them in numpy. Boundary rows drop
-        # from |join output| to |members| + |candidates| (15.5M → 1.7M
-        # at 100k probes / 1M scenes), and the per-task rank-min
-        # combiner sees each cell's full population co-located, so its
-        # output is ≤ queries-in-task × k instead of ~1 row/query/task
-        # (the round-robin-cached corpus scattered every cell across
-        # all tasks and made the combiner a no-op — measured as a
-        # 15.5M-struct exchange into the final aggregation).
-        members = sc.select(
-            "cell",
-            "image_id",
-            "slon",
-            "slat",
-            F.lit(0).cast("tinyint").alias("side"),
-        )
-        probes_u = cand.select(
-            "cell",
-            "query_id",
-            F.col("lon").alias("plon"),
-            F.col("lat").alias("plat"),
-            "k_req",
-            F.lit(1).cast("tinyint").alias("side"),
-        )
-        # each side's missing columns union in as typed nulls;
-        # keyless-column repartition: partition count comes from
-        # spark.sql.shuffle.partitions (scale it with the cluster, not
-        # a constant), and AQE may coalesce small outputs
-        both = members.unionByName(
-            probes_u, allowMissingColumns=True
-        ).repartition(_parent_cell_col(F.col("cell"), UNION_SCORE_PARENT_DROP))
-        pruned = both.mapInArrow(_make_union_score(), schema=score_schema)
-    else:
-        # the pruned pair table is bounded here (≤
-        # KNN_PROBE_BROADCAST_LIMIT probes × a few cells), so it
-        # broadcasts
-        pruned = (
-            sc.join(F.broadcast(cand), "cell")
-            .select(
-                "query_id", "k_req", "image_id", "lon", "lat", "slon", "slat"
-            )
-            .mapInArrow(_make_score_partial(), schema=score_schema)
-        )
+    probes_u = cand.select(
+        "cell",
+        "query_id",
+        F.col("lon").alias("plon"),
+        F.col("lat").alias("plat"),
+        "k_req",
+        F.lit(1).cast("tinyint").alias("side"),
+    )
+    # each side's missing columns union in as typed nulls;
+    # keyless-column repartition: partition count comes from
+    # spark.sql.shuffle.partitions (scale it with the cluster, not a
+    # constant), and AQE may coalesce small outputs
+    both = members.unionByName(
+        probes_u, allowMissingColumns=True
+    ).repartition(_parent_cell_col(F.col("cell"), UNION_SCORE_PARENT_DROP))
+    pruned = both.mapInArrow(
+        _make_union_score(),
+        f"query_id {qid_t}, k_req int, image_id {id_t}, dist_m double",
+    )
     return _exact_topk(
         pruned, "query_id", "dist_m", "image_id", F.max("k_req")
     )

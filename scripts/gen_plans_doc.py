@@ -46,13 +46,16 @@ def main():
     qpath = "/tmp/plans_knn_queries.parquet"
     if not os.path.exists(qpath):
         datagen.write_parquet(datagen.gen_knn_queries(n=60, seed=42), qpath)
-    knn = ops.knn_join(scenes, spark.read.parquet(qpath), level=5)
-    # the bulk-probe branch (r7 union-score kernel), forced by
-    # dropping the broadcast limit below this probe count
-    _saved_limit = ops.KNN_PROBE_BROADCAST_LIMIT
-    ops.KNN_PROBE_BROADCAST_LIMIT = 10
-    knn_bulk = ops.knn_join(scenes, spark.read.parquet(qpath), level=5)
-    ops.KNN_PROBE_BROADCAST_LIMIT = _saved_limit
+    # a local probe table, as a served request's: it holds
+    # defaultParallelism partitions, so knn_join does not re-spread it
+    probes = spark.createDataFrame(spark.read.parquet(qpath).toPandas())
+    knn = ops.knn_join(scenes, probes, level=5)
+    # the union-kernel path (members not resident), forced by a zero
+    # residency bound while the index is built
+    _saved_bound = ops.KNN_RESIDENT_ROWS
+    ops.KNN_RESIDENT_ROWS = 0
+    knn_union = ops.knn_join(scenes, probes, level=5)
+    ops.KNN_RESIDENT_ROWS = _saved_bound
 
     from mosaic_engine import annops, textops
 
@@ -113,32 +116,31 @@ def main():
         (
             "Cell-stats kNN (J3, one-pass exact pruning)",
             "Scene centroids key to codegen-native web-mercator cells; "
-            "the bounded per-cell stats dim rolls up to coarse levels "
-            "and the whole coarse-to-fine cascade runs inside ONE "
-            "MapInPandas kernel over the probes: numpy bounds (r7: "
-            "evaluated in haversine-argument space over per-cell "
-            "precomputed trig, single-level steps) derive the "
-            "per-probe pruning radius R* and emit only surviving "
-            "(probe, cell) pairs — no shuffle or window per cascade "
-            "level. Survivors equi-join the scenes on the cell key "
-            "alone (the probe side broadcast) and the "
-            "fused Arrow haversine scorer bounds its output at "
-            "|probes|*k per task. No CartesianProduct, no iteration, "
-            "nothing collected.",
+            "the bounded per-cell stats dim rolls up to coarse levels, "
+            "and while the corpus fits KNN_RESIDENT_ROWS the index's "
+            "broadcast cascade prep also holds the corpus members, "
+            "sorted by cell (CSR). A request is then ONE MapInArrow "
+            "stage over the probes: per batch, numpy bounds (evaluated "
+            "in haversine-argument space over per-cell precomputed "
+            "trig, single-level steps) derive each probe's pruning "
+            "radius R*, the surviving cells' members are gathered and "
+            "scored with the exact haversine, and the exact top k is "
+            "ranked in the kernel. No exchange, no join, no broadcast "
+            "exchange, no JVM aggregation, nothing collected.",
             formatted(knn),
         ),
         (
-            "Cell-stats kNN, BULK probe batches (r7 union-score kernel)",
-            "Past KNN_PROBE_BROADCAST_LIMIT there is NO JVM scoring "
-            "join at all: corpus members (one row per scene) and the "
-            "cascade's surviving probe candidates union and hash-"
-            "exchange ONCE on the parent cell, and a MapInArrow kernel "
-            "equi-joins and scores them in numpy — the Python boundary "
-            "carries each input row once instead of the joined blow-up "
-            "(15.5M → 1.7M rows at 100k probes × 1M scenes, the r6 "
-            "lane's dominant cost), and the per-task rank<k combiner "
-            "emits ~k rows per query into the final exact aggregation.",
-            formatted(knn_bulk),
+            "Cell-stats kNN, union-score kernel (members not resident)",
+            "Past KNN_RESIDENT_ROWS (or when the cascade stops at the "
+            "level-9 rollup) the members are not resident: the probe "
+            "kernel emits the surviving (probe, cell) pairs, corpus "
+            "members (one row per scene) and those pairs union and "
+            "hash-exchange ONCE on the parent cell, and a MapInArrow "
+            "kernel equi-joins and scores them in numpy — the Python "
+            "boundary carries each input row once instead of the "
+            "joined blow-up — and its per-task rank<k combiner emits "
+            "~k rows per query into the final exact aggregation.",
+            formatted(knn_union),
         ),
         (
             "Incremental dedup star-guard stats (per micro-batch)",

@@ -206,8 +206,10 @@ def test_knn_past_cap_refinement_matches_brute(
     Forcing that path (a zero collect cap) on a hotspot corpus with
     pole/antimeridian edge scenes must stay exact vs brute force, for
     seeded global probes and for probes dropped next to scene
-    centroids, where the fine cells are dense. Both scoring paths run
-    with the default reduction and with every task compacting."""
+    centroids, where the fine cells are dense. Past the cap the members
+    are never resident, whatever the residency bound: under the
+    default bound and under 0 the union kernel scores, with the
+    default reduction and with every task compacting."""
     from pyspark.sql import Row
 
     monkeypatch.setattr(ops, "FINE_COLLECT_ROWS", 0)
@@ -216,8 +218,6 @@ def test_knn_past_cap_refinement_matches_brute(
         edge_cases=True, hotspot_frac=0.7,
     ).select(["image_id", "min_lon", "max_lon", "min_lat", "max_lat"])
     df = spark.createDataFrame(t.to_pandas())
-    idx = ops.knn_index(df, level=level)
-    assert idx.prep[0]["cap"] == 9
 
     rng = np.random.default_rng(level)
     n = 200
@@ -236,16 +236,18 @@ def test_knn_past_cap_refinement_matches_brute(
          for i in range(n)]
     )
     exp = sorted(map(tuple, ops.knn_bruteforce(df, queries).collect()))
-    # small-batch (broadcast join) scoring, then bulk (union kernel)
-    cases = [(lim, on) for lim in (ops.KNN_PROBE_BROADCAST_LIMIT, 0)
+    cases = [(bound, on) for bound in (ops.KNN_RESIDENT_ROWS, 0)
              for on in (False, True)]
-    for limit, compact in cases:
-        monkeypatch.setattr(ops, "KNN_PROBE_BROADCAST_LIMIT", limit)
+    for bound, compact in cases:
+        monkeypatch.setattr(ops, "KNN_RESIDENT_ROWS", bound)
+        if not compact:
+            idx = ops.knn_index(df, level=level)
+            assert idx.prep[0]["cap"] == 9 and "members" not in idx.prep[0]
         force_compaction(compact)
         got = sorted(
             map(tuple, ops.knn_join(None, queries, index=idx).collect())
         )
-        assert [g[:3] for g in got] == [e[:3] for e in exp], (limit, compact)
+        assert [g[:3] for g in got] == [e[:3] for e in exp], (bound, compact)
         for g, e in zip(got, exp):
             assert g[3] == pytest.approx(e[3], rel=1e-12)
 
@@ -684,6 +686,26 @@ def test_knn_index_save_generation_commit(spark, scenes_df, tmp_path):
     assert a == b
 
 
+
+def test_knn_index_load_refuses_inconsistent_members(
+    spark, scenes_df, tmp_path
+):
+    """A loaded index makes its members resident only when they are the
+    corpus its stats count: a cent_g<G> from another corpus (a mixed
+    generation) raises ValueError on load instead of serving wrong
+    neighbours."""
+    import shutil
+
+    path, other = str(tmp_path / "idx"), str(tmp_path / "other")
+    ops.knn_index_save(ops.knn_index(scenes_df, level=5), path)
+    ops.knn_index_save(ops.knn_index(scenes_df.limit(10), level=5), other)
+    shutil.rmtree(os.path.join(path, "cent_g0"))
+    shutil.copytree(
+        os.path.join(other, "cent_g0"), os.path.join(path, "cent_g0")
+    )
+    with pytest.raises(ValueError, match="inconsistent"):
+        ops.knn_index_load(spark, path)
+
 @pytest.mark.parametrize("kind", ["knn", "ivf"])
 def test_index_resave_over_unreadable_meta_raises(
     spark, scenes_df, tmp_path, kind
@@ -858,6 +880,132 @@ def test_knn_random_corpora_match_brute(spark, tmp_path, corpus_seed, hotspot):
     assert [g[:3] for g in got] == [e[:3] for e in exp]
     for g, e in zip(got, exp):
         assert g[3] == pytest.approx(e[3], rel=1e-12)
+
+
+# ids whose binary UTF-8 order differs from Java's UTF-16 order (U+FF61
+# sorts before U+1F600 in UTF-8, after it in UTF-16) and from a
+# case-folded order ("B" < "a" < "é")
+_UNICODE_IDS = ["a", "B", "é", "｡", "\U0001f600", "中", "Z", "ß"]
+
+
+def _tie_corpus(rng, string_ids: bool):
+    """A corpus built for rank ties: dyadic centroids (exact after the
+    probe lon normalization), duplicated centroids, scenes mirrored
+    about lon 0 (exactly equal distances from a probe on lon 0),
+    antimeridian-crossing scenes, and two NaN-bound and two null-bound
+    scenes. Returns the scene rows, with ids int or unicode strings."""
+    def grid(lo, hi, n):
+        return [float(v) / 8.0 for v in rng.integers(lo * 8, hi * 8, n)]
+
+    lon = grid(-179, 179, 40) + [179.75, -179.75, 179.5]
+    lat = grid(-50, 50, 40) + [0.25, -0.25, 1.0]
+    dup = rng.integers(0, len(lon), 15)
+    lon += [lon[i] for i in dup]
+    lat += [lat[i] for i in dup]
+    for d, la in ((1.0, 2.0), (2.5, -1.0), (0.5, 0.5)):
+        lon += [d, -d]
+        lat += [la, la]
+    bounds = [(x - 0.25, x + 0.25, y - 0.25, y + 0.25) for x, y in zip(lon, lat)]
+    # crossing scenes (min_lon > max_lon): centroids at ±180
+    bounds += [(179.5, -179.5, 10.0, 11.0), (179.0, -179.0, 10.0, 11.0)]
+    nan, n_fin = float("nan"), len(bounds)
+    bounds += [(nan,) * 4, (nan,) * 4, (None,) * 4, (None,) * 4]
+    n = len(bounds)
+    if string_ids:
+        ids = [
+            f"{_UNICODE_IDS[i % len(_UNICODE_IDS)]}{i // len(_UNICODE_IDS)}"
+            for i in rng.permutation(n)
+        ]
+    else:
+        ids = [int(v) for v in rng.permutation(n) * 7 - 150]
+    return [(ids[i], *bounds[i]) for i in range(n)], n_fin
+
+
+@pytest.mark.parametrize("string_ids", [False, True])
+def test_knn_resident_finalizer_matches_brute(
+    spark, monkeypatch, force_compaction, string_ids
+):
+    """The resident kernel ranks in numpy and Arrow, not in Spark: its
+    rows must equal knn_bruteforce's (Spark's sort_array order over
+    (dist_m, image_id) structs) on a corpus full of exact ties —
+    duplicated and mirrored centroids — with int ids and unicode
+    string ids (binary UTF-8 order), NaN distances last and tied by
+    id, probes on lon ±180, k past the corpus size, k = 0, k < 0 and
+    null k. NaN- and null-bound scenes score as NaN. Forcing one-row
+    compaction, 64-pair blocks and two-row Arrow batches must not
+    change a row, and the union kernel (residency bound 0) must serve
+    the identical rows."""
+    import math
+
+    nan = float("nan")
+    id_type = "string" if string_ids else "long"
+    schema = (
+        f"image_id {id_type}, min_lon double, max_lon double, "
+        "min_lat double, max_lat double"
+    )
+    rng = np.random.default_rng(5)
+    rows, n_fin = _tie_corpus(rng, string_ids)
+    scenes = spark.createDataFrame(rows, schema)
+    n = len(rows)
+    probes = [
+        (float(x) / 8.0, float(y) / 8.0)
+        for x, y in zip(rng.integers(-1432, 1432, 12), rng.integers(-400, 400, 12))
+    ]
+    probes += [(0.0, 0.5), (0.0, 2.0), (0.0, -1.0), (0.0, 0.0)]  # mirrored ties
+    probes += [(180.0, 10.5), (-180.0, 10.5), (180.0, 0.0), (-180.0, -30.0)]
+    ks = [int(v) for v in rng.integers(1, 9, len(probes))]
+    # k past and at the corpus size (every scene, NaN ones last), k = 0
+    # and null k
+    ks[:3] = [n + 5, n, 0]
+    ks[3] = None
+    qschema = "query_id long, lon double, lat double, k int"
+    queries = spark.createDataFrame(
+        [(i, x, y, kk) for i, ((x, y), kk) in enumerate(zip(probes, ks))],
+        qschema,
+    )
+    # the reference order is Spark's: knn_bruteforce ranks EVERY scene
+    # per probe; its UDF turns a NaN distance into null, which
+    # sort_array puts first, so the null rows move to the end (in
+    # their id order) before each probe's first k are kept
+    ranked: dict = {}
+    for r in sorted(
+        ops.knn_bruteforce(scenes, queries, k=n).collect(),
+        key=lambda r: (r["query_id"], r["dist_m"] is None, r["rank"]),
+    ):
+        ranked.setdefault(r["query_id"], []).append(r)
+    exp = sorted(
+        (q, i + 1, r["image_id"], nan if r["dist_m"] is None else r["dist_m"])
+        for q, kk in enumerate(ks)
+        for i, r in enumerate(ranked[q][: max(kk or 0, 0)])
+    )
+    assert sum(math.isnan(e[3]) for e in exp) == 2 * (n - n_fin)
+
+    # both score the probe's own lon with geometry.haversine_m, so the
+    # distances are bit-identical
+    def same(got, want):
+        assert [g[:3] for g in got] == [w[:3] for w in want]
+        for g, w in zip(got, want):
+            assert g[3] == w[3] or math.isnan(g[3]) and math.isnan(w[3]), (g, w)
+
+    # a negative k serves no rows (knn_bruteforce's slice rejects it)
+    neg = spark.createDataFrame([(99, 1.0, 1.0, -1)], qschema)
+    served = {}
+    for bound in (ops.KNN_RESIDENT_ROWS, 0):
+        monkeypatch.setattr(ops, "KNN_RESIDENT_ROWS", bound)
+        force_compaction(False)
+        idx = ops.knn_index(scenes, level=6)
+        assert ("members" in idx.prep[0]) == (bound > 0)
+        for compact in (False, True):
+            force_compaction(compact)
+            got = sorted(
+                map(tuple, ops.knn_join(None, queries, index=idx).collect())
+            )
+            same(got, exp)
+            served[bound, compact] = got
+            assert ops.knn_join(None, neg, index=idx).count() == 0
+    # resident and union serve bit-identical rows (NaN compares unequal)
+    key = lambda rs: [(*r[:3], repr(r[3])) for r in rs]  # noqa: E731
+    assert len({repr(key(v)) for v in served.values()}) == 1
 
 
 def test_knn_bruteforce_points_int32_probe_ids(spark, force_compaction):

@@ -108,28 +108,29 @@ def test_knn_broadcasts_probe_side(spark, scenes_df, fixture_dir):
 def test_knn_join_plan_is_distributed(
     spark, scenes_df, fixture_dir, monkeypatch
 ):
-    """Cell-stats kNN: one DataFrame plan end-to-end — candidate side
-    broadcast, scenes never cartesian-joined, no driver materialization
-    (the result is lazy, unlike the old per-round collect loop)."""
+    """Cell-stats kNN: one DataFrame plan end-to-end — scenes never
+    cartesian-joined, no driver materialization (the result is lazy,
+    unlike the old per-round collect loop). Pruning runs in the
+    probe-side Arrow kernel at every level — below the cascade's entry
+    level, at `level` with the members resident, and past the driver
+    collect cap (where the cascade stops at the level-9 rollup and the
+    union kernel scores): no JVM window."""
     import os
 
     queries = spark.read.parquet(os.path.join(fixture_dir, "knn_queries.parquet"))
-    res = ops.knn_join(scenes_df, queries, level=5)
-    plan = _plan(res)
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    # scoring joins scenes↔candidates on the packed cell key
-    assert "cell" in plan
-
-    # pruning runs in the Arrow cascade kernel at every level — below
-    # the cascade's entry level and past the driver collect cap (where
-    # the kernel stops at the level-9 rollup) too: no JVM window
-    plans = [plan, _plan(ops.knn_join(scenes_df, queries, level=2))]
-    monkeypatch.setattr(ops, "FINE_COLLECT_ROWS", 0)
-    plans.append(_plan(ops.knn_join(scenes_df, queries, level=11)))
+    plans = [
+        _plan(ops.knn_join(scenes_df, queries, level=lv)) for lv in (5, 2)
+    ]
     for p in plans:
-        assert "Window" not in p
-        assert "MapInPandas" in p
+        assert "MapInArrow" in p and "MapInPandas" not in p, p
+        assert "Join" not in p, p
+    monkeypatch.setattr(ops, "FINE_COLLECT_ROWS", 0)
+    past_cap = _plan(ops.knn_join(scenes_df, queries, level=11))
+    # the probe kernel, the fine refinement and the union scoring
+    assert past_cap.count("MapInArrow") == 3, past_cap
+    for p in plans + [past_cap]:
+        assert "Window" not in p and "MapInPandas" not in p
+        assert "CartesianProduct" not in p
 
 
 def test_missing_quadkeys_uses_anti_join(spark, scenes_df, fixture_dir):
@@ -258,50 +259,86 @@ def test_ann_topk_tail_prereduces_in_kernel(spark):
     assert len(agg_exchanges) == 1, plan
 
 
-def test_knn_probe_broadcast_flips_at_scale(spark, scenes_df, fixture_dir, monkeypatch):
-    """(VERDICT r4 #5, reworked r7) While the probe batch is bounded
-    the scoring join force-broadcasts the pruned probe×cell table
-    (DPP-prunable against a stored index); past
-    KNN_PROBE_BROADCAST_LIMIT the JVM join is replaced outright by the
-    union-score kernel — members and candidates meet through ONE hash
-    exchange into a MapInArrow stage, so no join (and no joined-row
-    blow-up) ever crosses the Python boundary — and the results must
-    be identical either way."""
+def test_knn_resident_bound_flips_serving_path(
+    spark, scenes_df, fixture_dir, monkeypatch
+):
+    """The serving path is chosen by corpus size, not probe count:
+    while the corpus fits KNN_RESIDENT_ROWS the index's prep holds its
+    members and a request is ONE MapInArrow over the probes — no
+    exchange, join, broadcast, subquery or MapInPandas stage. With the
+    bound at 0 the same index serves through the union kernel (the
+    probe kernel's pairs and the members, one hash exchange into the
+    scoring MapInArrow, the exact aggregation), and the rows are
+    identical."""
     import os
 
-    queries = spark.read.parquet(
+    # a local probe table holds defaultParallelism partitions, as a
+    # served request's does, so the probes are not re-spread
+    queries = spark.createDataFrame(
+        spark.read.parquet(
+            os.path.join(fixture_dir, "knn_queries.parquet")
+        ).toPandas()
+    )
+    resident = ops.knn_index(scenes_df, level=5)
+    assert "members" in resident.prep[0]
+    monkeypatch.setattr(ops, "KNN_RESIDENT_ROWS", 0)
+    union = ops.knn_index(scenes_df, level=5)
+    assert "members" not in union.prep[0]
+
+    served = ops.knn_join(None, queries, index=resident)
+    plan = _plan(served)
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("Exchange", "Join", "Subquery", "MapInPandas", "Window"):
+        assert node not in plan, (node, plan)
+
+    big = ops.knn_join(None, queries, index=union)
+    plan_big = _plan(big)
+    assert plan_big.count("MapInArrow") == 2, plan_big
+    assert "Union" in plan_big, plan_big
+    joins = [
+        ln
+        for ln in plan_big.splitlines()
+        if ("Join" in ln and "MapIn" not in ln) or "Cartesian" in ln
+    ]
+    assert not joins, plan_big
+    a = sorted(map(tuple, served.collect()))
+    b = sorted(map(tuple, big.collect()))
+    assert a == b and len(a) > 0
+
+
+def test_knn_probe_spread_runs_no_job(spark, scenes_df, fixture_dir):
+    """knn_join spreads the probes over the cores only when their input
+    holds fewer partitions than defaultParallelism, and finds that out
+    without a Spark job: a one-file probe table gets exactly one
+    round-robin exchange, a local table none, and a lineage holding
+    an exchange is left as it is — asking its RDD for the partition
+    count would run its AQE shuffle stage, as the control shows."""
+    import os
+
+    sc = spark.sparkContext
+    idx = ops.knn_index(scenes_df, level=5)
+    one_file = spark.read.parquet(
         os.path.join(fixture_dir, "knn_queries.parquet")
     )
-    idx = ops.knn_index(scenes_df, level=5)
-
-    # disable planner auto-broadcast so the FORCED hint is the only
-    # thing that can produce a broadcast join — at test scale the
-    # candidate side is tiny and the planner would otherwise broadcast
-    # it on size statistics alone, masking the flip
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    local = spark.createDataFrame(one_file.toPandas())
+    shuffled = one_file.groupBy("query_id").agg(
+        *[F.first(c).alias(c) for c in ("lon", "lat", "k")]
+    )
+    tracker = sc.statusTracker()
+    plans = {}
     try:
-        small = ops.knn_join(None, queries, index=idx)
-        plan_small = _plan(small)
-        assert "BroadcastHashJoin" in plan_small  # hint still forces it
-
-        monkeypatch.setattr(ops, "KNN_PROBE_BROADCAST_LIMIT", 10)
-        big = ops.knn_join(None, queries, index=idx)
-        plan_big = _plan(big)
-        assert "CartesianProduct" not in plan_big
-        # bulk scoring: no JVM join at all — one union feeding one
-        # exchange feeding the in-kernel join+score MapInArrow stage
-        assert "MapInArrow" in plan_big, plan_big
-        joins = [
-            ln
-            for ln in plan_big.splitlines()
-            if ("Join" in ln and "MapInArrow" not in ln) or "Cartesian" in ln
-        ]
-        assert not joins, plan_big
-        assert "Union" in plan_big, plan_big
-        # identical output under either plan
-        a = sorted(map(tuple, small.collect()))
-        b = sorted(map(tuple, big.collect()))
-        assert a == b
+        sc.setJobGroup("knn-probe-spread", "planning only")
+        for name, df in (("file", one_file), ("local", local),
+                         ("shuffled", shuffled)):
+            plans[name] = _plan(ops.knn_join(None, df, index=idx))
+        assert list(tracker.getJobIdsForGroup("knn-probe-spread")) == []
+        sc.setJobGroup("knn-probe-control", "control")
+        shuffled.rdd.getNumPartitions()
+        assert list(tracker.getJobIdsForGroup("knn-probe-control"))
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert plans["file"].count("Exchange") == 1, plans["file"]
+    assert "RoundRobinPartitioning" in plans["file"]
+    assert "Exchange" not in plans["local"], plans["local"]
+    assert plans["shuffled"].count("Exchange") == 1, plans["shuffled"]
+    assert "RoundRobinPartitioning" not in plans["shuffled"]

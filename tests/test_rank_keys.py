@@ -301,3 +301,25 @@ def test_union_score_kernel_matches_brute(monkeypatch):
                     np.testing.assert_allclose(got[key], di, rtol=1e-12)
                 else:
                     assert key not in got, key
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    counts=st.lists(st.integers(0, 40), max_size=30),
+    block=st.integers(1, 50),
+)
+def test_pair_blocks_cover_every_pair_within_block(counts, block):
+    """_pair_blocks, the pair chunker of the resident kNN and union
+    kernels, yields every (row, member) pair of the CSR ranges exactly
+    once, rows ascending, and no block holds more than `block` pairs —
+    also when a single range is longer than a block."""
+    cnt = np.array(counts, dtype=np.int64)
+    lo = np.cumsum(cnt) - cnt + 7
+    hi = lo + cnt
+    got = []
+    for row, mem in ops._pair_blocks(lo, hi, block):
+        assert 0 < len(row) == len(mem) <= block
+        got += list(zip(row.tolist(), mem.tolist()))
+    assert got == [
+        (i, j) for i in range(len(cnt)) for j in range(lo[i], hi[i])
+    ]
