@@ -4,21 +4,24 @@ Spark-first equivalent of [ref: landsat_cogeo_mosaic/mosaic.py#
 features_to_mosaicJSON] + the `create` CLI entry
 ([ref: cli.py#create]), run as ONE Spark action: declarative filters
 (Catalyst pushdown) → fused footprint→cell explode (one Arrow stage,
-no shuffle) → salted two-phase selection aggregation whose selection
-struct also carries each scene's bbox → one bounded driver-side
-collect (≤ 4^quadkey_zoom rows) that yields both the tile map and the
-used-scene bounds → canonical JSON (SURVEY.md §7.3 byte-equality
-rules — the serializer is shared character-for-character with
-tests/oracle.py, which generates the committed goldens). Quadkey
-strings are a JVM expression over the packed cell id
-(ops.cell_quadkey_col); nothing is persisted, the scene table is read
-once, and no join looks up the used scenes.
+no shuffle) → selection aggregation (one exchange by cell uncapped;
+salted two-phase with a per-salt prune when max_assets_per_tile is
+set) whose selection struct also carries each scene's bbox → one
+bounded driver-side Arrow collect (≤ 4^quadkey_zoom rows) that yields
+both the tile map and the used-scene bounds → canonical JSON
+(SURVEY.md §7.3 byte-equality rules — the serializer is shared
+character-for-character with tests/oracle.py, which generates the
+committed goldens). Quadkey strings are a JVM expression over the
+packed cell id (ops.cell_quadkey_sql); nothing is persisted, the
+scene table is read once, and no join looks up the used scenes.
 """
 
 from __future__ import annotations
 
 import json
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from . import ops, udfs
@@ -66,11 +69,15 @@ def collect_mosaic_doc(assign: DataFrame, cfg: MosaicConfig) -> dict:
     """Assignments table → mosaicJSON document in ONE driver collect:
     the tile map and the bounds (min/max of the per-cell used-scene
     bounds ops.assignments emits) come from the same rows, bounded by
-    4^quadkey_zoom; past quadkey_zoom 10 the rows stream through
-    toLocalIterator instead. Empty table → world bounds. A table
-    without the bounds columns, or with a cell whose bounds are NULL,
-    is state written before the selection carried bounds: raises
-    ops.LegacyStateError rather than emit wrong bounds."""
+    4^quadkey_zoom. Up to quadkey_zoom 10 the table crosses as one
+    Arrow table (toArrow): the asset strings come out of the flattened
+    list column in one pass and the bounds are Arrow min/max kernels,
+    so no pickled Row crosses. Past quadkey_zoom 10 the rows
+    stream through toLocalIterator instead. Empty table → world
+    bounds. A table without the bounds columns, or with a cell whose
+    bounds are NULL, is state written before the selection carried
+    bounds: raises ops.LegacyStateError rather than emit wrong
+    bounds."""
     bcols = ["min_lon", "min_lat", "max_lon", "max_lat"]
     missing = [c for c in bcols if c not in assign.columns]
     if missing:
@@ -79,29 +86,62 @@ def collect_mosaic_doc(assign: DataFrame, cfg: MosaicConfig) -> dict:
             "— the state predates bounds in the selection; rebuild it"
         )
     sel = assign.select("quadkey", "assets", *bcols)
-    rows = sel.toLocalIterator() if cfg.quadkey_zoom > 10 else sel.collect()
+    if cfg.quadkey_zoom > 10:
+        tiles_map, bounds = _tiles_from_rows(sel.toLocalIterator())
+    else:
+        tiles_map, bounds = _tiles_from_arrow(sel.toArrow())
+    if not tiles_map:
+        bounds = [-180.0, -90.0, 180.0, 90.0]
+    return assemble_mosaic_doc(tiles_map, bounds, cfg)
+
+
+def _unbounded(qk: str) -> ops.LegacyStateError:
+    return ops.LegacyStateError(
+        f"cell {qk} has no used-scene bounds — the state "
+        "predates bounds in the selection; rebuild it"
+    )
+
+
+def _tiles_from_rows(rows) -> tuple[dict[str, list[str]], list[float]]:
     tiles_map: dict[str, list[str]] = {}
     w = s = float("inf")
     e = n = float("-inf")
     for qk, assets, cw, cs, ce, cn in rows:
         if cw is None:
-            raise ops.LegacyStateError(
-                f"cell {qk} has no used-scene bounds — the state "
-                "predates bounds in the selection; rebuild it"
-            )
+            raise _unbounded(qk)
         tiles_map[qk] = list(assets)
         w, s, e, n = min(w, cw), min(s, cs), max(e, ce), max(n, cn)
-    bounds = [w, s, e, n] if tiles_map else [-180.0, -90.0, 180.0, 90.0]
-    return assemble_mosaic_doc(tiles_map, bounds, cfg)
+    return tiles_map, [w, s, e, n]
+
+
+def _tiles_from_arrow(tbl: pa.Table) -> tuple[dict[str, list[str]], list[float]]:
+    west = tbl.column("min_lon")
+    if west.null_count:
+        first = pc.index(pc.is_null(west), True).as_py()
+        raise _unbounded(tbl.column("quadkey")[first].as_py())
+    qks = tbl.column("quadkey").to_numpy(zero_copy_only=False).tolist()
+    lists = tbl.column("assets").combine_chunks()
+    assets = lists.values.to_numpy(zero_copy_only=False).tolist()
+    offs = lists.offsets.to_numpy().tolist()
+    tiles_map = {qk: assets[offs[i]:offs[i + 1]] for i, qk in enumerate(qks)}
+    bounds = [
+        pc.min(west).as_py(),
+        pc.min(tbl.column("min_lat")).as_py(),
+        pc.max(tbl.column("max_lon")).as_py(),
+        pc.max(tbl.column("max_lat")).as_py(),
+    ]
+    return tiles_map, bounds
 
 
 def build_mosaic(scenes: DataFrame, cfg: MosaicConfig) -> tuple[dict, DataFrame]:
     """Full E1: returns (mosaicJSON document dict, assignments DataFrame).
 
     One Spark action (collect_mosaic_doc): only the final tile table
-    crosses to the driver — bounded by 4^quadkey_zoom regardless of
-    input scale. The returned assignments DataFrame is lazy; using it
-    recomputes the pipeline.
+    crosses to the driver, as one Arrow table up to quadkey_zoom 10 —
+    bounded by 4^quadkey_zoom regardless of input scale. The selection
+    is one exchange by cell unless max_assets_per_tile is set (then
+    salted two-phase; see ops.assignments). The returned assignments
+    DataFrame is lazy; using it recomputes the pipeline.
     """
     assign = quadkey_assignments(scenes, cfg)
     return collect_mosaic_doc(assign, cfg), assign

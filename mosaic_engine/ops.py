@@ -1,4 +1,4 @@
-"""DataFrame-level plan builders — filters, ranking, salted aggregation,
+"""DataFrame-level plan builders — filters, ranking, selection aggregation,
 anti-join gap detection, kNN, raster↔vector join.
 
 Design notes (scale-first, SURVEY.md §4):
@@ -9,11 +9,13 @@ Design notes (scale-first, SURVEY.md §4):
   `collect_list(struct)` give map-side partial aggregation, so the only
   shuffles are hash exchanges on fine-grained keys.
 * Skew (a few dense quadkeys holding thousands of scenes) is handled
-  explicitly by a salted two-phase aggregation
-  ([BASELINE.json:6] "explicit salted-repartition skew handling"):
-  phase 1 aggregates (quadkey, salt) — heavy keys spread across S
-  tasks, with local top-k pruning when a cap is set — phase 2 merges S
-  small partials per quadkey. AQE stays on as defense in depth.
+  explicitly when a per-tile cap is set, by a salted two-phase
+  aggregation ([BASELINE.json:6] "explicit salted-repartition skew
+  handling"): phase 1 aggregates (quadkey, salt) — heavy keys spread
+  across S tasks, each pruned to its best `cap` rows — phase 2 merges
+  ≤ S·cap rows per quadkey. Uncapped, every row reaches its cell's
+  list anyway, so the selection is one aggregation by cell (one
+  exchange). AQE stays on as defense in depth.
 * Reference semantics: filters = [ref: landsat_cogeo_mosaic/cli.py]
   options; selection = [ref: mosaic.py#features_to_mosaicJSON]
   (preference sort, optimized_selection per-(path,row) dedupe);
@@ -131,30 +133,31 @@ def filter_scenes(df: DataFrame, cfg: MosaicConfig) -> DataFrame:
     return out
 
 
-def cell_quadkey_col(cell: Column) -> Column:
-    """Packed cell id → quadkey string as a JVM expression (no Python
-    hop): a cell's quadkey is its morton code (bits 6..63, read
-    unsigned so negative level-29 ids work) in base 4, left-padded with
-    '0' to its level (bits 0..5); lpad to 0 gives level 0's ''."""
-    return F.lpad(
-        F.conv(F.shiftrightunsigned(cell, 6).cast("string"), 10, 4),
-        cell.bitwiseAND(F.lit(63)).cast("int"),
-        "0",
+def cell_quadkey_sql(cell: str) -> str:
+    """Packed cell id (the SQL expression `cell`) → quadkey string, as
+    SQL text for a JVM expression (no Python hop, and one parse instead
+    of a py4j call per operator): a cell's quadkey is its morton code
+    (bits 6..63, read unsigned so negative level-29 ids work) in base
+    4, left-padded with '0' to its level (bits 0..5); lpad to 0 gives
+    level 0's ''."""
+    return (
+        f"lpad(conv(cast(shiftrightunsigned(({cell}), 6) AS string), 10, 4), "
+        f"cast(({cell}) & 63 AS int), '0')"
     )
 
 
-def tile_quadkey_col(tx, ty, z: int) -> Column:
-    """Tile (tx, ty) at zoom `z` → quadkey string as a JVM expression:
-    pack the cell as cells.pack_cell does, then render it with
-    cell_quadkey_col. A coordinate's binary digits read as base-4
-    digits spread its bits to the even positions (the morton
+def tile_quadkey_col(tx: str, ty: str, z: int) -> Column:
+    """Tile (tx, ty) at zoom `z` (SQL expressions) → quadkey string as
+    a JVM expression: pack the cell as cells.pack_cell does, then
+    render it with cell_quadkey_sql. A coordinate's binary digits read
+    as base-4 digits spread its bits to the even positions (the morton
     interleave). tx and ty must lie in [0, 2^z)."""
 
-    def spread(c):
-        return F.conv(F.bin(c), 4, 10).cast("long")
+    def spread(c: str) -> str:
+        return f"cast(conv(bin({c}), 4, 10) AS bigint)"
 
-    cell = F.shiftleft(spread(tx) + 2 * spread(ty), 6) + F.lit(z)
-    return cell_quadkey_col(cell)
+    cell = f"shiftleft({spread(tx)} + 2 * {spread(ty)}, 6) + {int(z)}"
+    return F.expr(cell_quadkey_sql(cell))
 
 
 # ---------------------------------------------------------------- ranking
@@ -220,9 +223,13 @@ def optimized_dedupe(tiles: DataFrame, cfg: MosaicConfig) -> DataFrame:
 def assignments(tiles: DataFrame, cfg: MosaicConfig) -> DataFrame:
     """A1+A2(+A6): per-quadkey rank-ordered asset lists.
 
-    Salted two-phase aggregation (§4.3): phase-1 collects per
-    (quadkey, salt) with optional local top-k prune; phase-2 merges the
-    ≤S partial lists per quadkey and finalizes order. Returns
+    Uncapped, the selection is ONE aggregation by cell: every row of a
+    cell must reach the final list anyway, so one exchange carries the
+    partial collects and the merge sorts them once. Capped, it is the
+    salted two-phase aggregation (§4.3): phase 1 collects per
+    (cell, salt) and prunes each partial to its best `cap` rows
+    (A6 local top-k), so a hot cell's rows spread over `salt_buckets`
+    tasks and phase 2 merges ≤ S·cap rows per cell. Returns
     (cell, quadkey, assets array<string>, n_assets int, min_lon,
     min_lat, max_lon, max_lat): the last four are the cell's min/max
     over the bboxes of the scenes it selected (after any cap or
@@ -241,43 +248,38 @@ def assignments(tiles: DataFrame, cfg: MosaicConfig) -> DataFrame:
         keyed = optimized_dedupe(tiles, cfg)
     else:
         keyed = tiles.select("cell", _sel_struct(cfg))
-    salted = keyed.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col("sel.image_id")), F.lit(cfg.salt_buckets))
-    )
     # `is not None`, never truthiness: a (rejected-above) cap of 0 must
-    # not silently flip to "unlimited". The phase-1 sort only EARNS
-    # its O(n log n) when a cap prunes on it (A6 local top-k); with no
-    # cap the merge phase re-sorts the flattened whole anyway, so
-    # sorting partials too is pure waste over every assignment row
-    # (r7) — the final order (and the goldens) are identical either
-    # way.
-    if cap is not None:
-        part = F.slice(
-            F.sort_array(F.collect_list("sel")), 1, cap
-        ).alias("part")
+    # not silently flip to "unlimited"
+    if cap is None:
+        merged = keyed.groupBy("cell").agg(
+            F.sort_array(F.collect_list("sel")).alias("sels")
+        )
     else:
-        part = F.collect_list("sel").alias("part")
-    phase1 = salted.groupBy("cell", "salt").agg(part)
-    merged = phase1.groupBy("cell").agg(
-        F.sort_array(F.flatten(F.collect_list("part"))).alias("sels")
-    )
-    sels = F.slice("sels", 1, cap) if cap is not None else F.col("sels")
-    unbounded = F.exists(sels, lambda s: s["min_lon"].isNull())
-
-    def reduce_field(name, agg):
-        vals = F.transform(sels, lambda s: s[name])
-        return F.when(~unbounded, agg(vals)).alias(name)
-
-    # quadkey strings only materialize here — bounded by 4^quadkey_zoom
-    return merged.select(
+        salt = F.pmod(F.xxhash64("sel.image_id"), F.lit(cfg.salt_buckets))
+        part = F.slice(F.sort_array(F.collect_list("sel")), 1, cap)
+        sels = F.sort_array(F.flatten(F.collect_list("part")))
+        merged = (
+            keyed.groupBy("cell", salt.alias("salt"))
+            .agg(part.alias("part"))
+            .groupBy("cell")
+            .agg(F.slice(sels, 1, cap).alias("sels"))
+        )
+    # per-cell outputs are struct-field extractions on the sorted
+    # selection, in one projection of SQL text; quadkey strings only
+    # materialize here — bounded by 4^quadkey_zoom
+    bounded = "NOT exists(sels.min_lon, x -> x IS NULL)"
+    return merged.selectExpr(
         "cell",
-        cell_quadkey_col(F.col("cell")).alias("quadkey"),
-        F.transform(sels, lambda s: s["image_id"]).alias("assets"),
-        F.size(sels).alias("n_assets"),
-        reduce_field("min_lon", F.array_min),
-        reduce_field("min_lat", F.array_min),
-        reduce_field("max_lon", F.array_max),
-        reduce_field("max_lat", F.array_max),
+        f"{cell_quadkey_sql('cell')} AS quadkey",
+        "sels.image_id AS assets",
+        "size(sels) AS n_assets",
+        *(
+            f"CASE WHEN {bounded} THEN array_{agg}(sels.{name}) END AS {name}"
+            for name, agg in (
+                ("min_lon", "min"), ("min_lat", "min"),
+                ("max_lon", "max"), ("max_lat", "max"),
+            )
+        ),
     )
 
 
@@ -353,7 +355,7 @@ def missing_quadkeys(
         "cell"
     ).distinct()
     miss = land_qk.join(assign.select("cell"), "cell", "left_anti")
-    return miss.select(cell_quadkey_col(F.col("cell")).alias("quadkey"))
+    return miss.selectExpr(f"{cell_quadkey_sql('cell')} AS quadkey")
 
 
 def coverage_quadkeys(
@@ -1927,10 +1929,8 @@ def raster_vector_join(
         ).alias("salt"),
     )
     joined = s_qk.join(v_qk, ["cell", "salt"])
-    return joined.select(
-        cell_quadkey_col(F.col("cell")).alias("quadkey"),
-        "image_id",
-        "feature_id",
+    return joined.selectExpr(
+        f"{cell_quadkey_sql('cell')} AS quadkey", "image_id", "feature_id"
     )
 
 
@@ -2049,7 +2049,7 @@ def assets_for_tiles(
     if z >= quadkey_zoom:
         shift = z - quadkey_zoom
         qk = tile_quadkey_col(
-            F.shiftright("tx", shift), F.shiftright("ty", shift), quadkey_zoom
+            f"shiftright(tx, {shift})", f"shiftright(ty, {shift})", quadkey_zoom
         )
         keyed = req.withColumn("quadkey", qk)
         # outer joins can only broadcast the NON-preserved side, so a

@@ -61,7 +61,7 @@ def _explode_flat(
     quadkey string: at z10 a 1M-scene batch set emits ~67M rows, and
     allocating that many Python string objects dominated the kernel
     (~40% wall). Strings appear only at bounded output edges
-    (ops.cell_quadkey_col over the aggregated tiles)."""
+    (ops.cell_quadkey_sql over the aggregated tiles)."""
     n = len(pdf)
     if n == 0:
         return np.empty(0, np.int64), np.empty(0, np.int64)

@@ -12,7 +12,12 @@ in the same region, then measures the per-task time distribution of:
      inside the hotspot — evidence that the r5 fused score+partial
      combiner keeps per-task work vectorized and per-task OUTPUT
      bounded (≤ queries×k), so a hot storage region degrades
-     throughput linearly, not catastrophically.
+     throughput linearly, not catastrophically;
+  3. a capped build_mosaic (max_assets_per_tile=CAP) over the same
+     corpus — the one selection that keeps the salted two-phase
+     aggregation, whose per-salt top-CAP prune spreads each hot cell
+     over salt_buckets tasks (walls of 3 warm builds, and the hottest
+     stage's task spread).
 
 Run: python scripts/bench_skew.py   (env: SPARK_GRAFT_CPUS, default 32)
 Prints one JSON line; the measured numbers live in BENCH/BASELINE.md.
@@ -31,13 +36,14 @@ import pyarrow as pa
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mosaic_engine import datagen, ops  # noqa: E402
+from mosaic_engine import datagen, mosaic, ops  # noqa: E402
 from mosaic_engine.job import make_session  # noqa: E402
 
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_SCENES = 100_000
 N_VECTORS = 6_000
 HOT_FRAC = 0.8
+CAP = 5
 
 
 def _hot_center() -> tuple[float, float]:
@@ -242,8 +248,26 @@ def main():
         "hot_stage": hot,
     }
 
+    results["capped_build"] = capped_build(spark, scenes)
+
     print(json.dumps(results))
     spark.stop()
+
+
+def capped_build(spark, scenes) -> dict:
+    """Walls of 3 capped builds (after one warm-up) and the hottest
+    stage of the last one."""
+    cfg = ops.MosaicConfig(quadkey_zoom=8, max_assets_per_tile=CAP)
+    mosaic.build_mosaic(scenes, cfg)  # warm
+    walls = []
+    for _ in range(3):
+        before = max_stage_id(spark)
+        t0 = time.time()
+        mosaic.build_mosaic(scenes, cfg)
+        walls.append(round(time.time() - t0, 2))
+    stages = stage_metrics(spark, before)
+    hot = max(stages, key=lambda s: s["runTime_s"])
+    return {"walls": walls, "hot_stage": hot}
 
 
 if __name__ == "__main__":

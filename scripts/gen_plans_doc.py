@@ -100,17 +100,22 @@ def main():
             formatted(tiles),
         ),
         (
-            "Selection aggregation (A1–A3, salted two-phase)",
+            "Selection aggregation (A1–A3, one exchange uncapped)",
             "Shuffle keys are int64 cells. Stage 1: per-(cell,path,row) "
             "best scene via min(struct) with map-side partial_min — "
             "dense quadkeys never concentrate before reduction. Stage 2: "
-            "per-(cell,salt) partial collect, stage 3: per-cell merge of "
-            "≤S small sorted lists. Quadkey strings materialize only in "
-            "the final bounded projection, as a JVM expression over the "
-            "packed cell (no ArrowEvalPython), next to the per-cell "
-            "min/max of the selected scenes' bboxes the selection "
-            "struct carries — the mosaic bounds reduce from the same "
-            "rows the build collects.",
+            "ONE per-cell collect (map-side partial collect_list, one "
+            "exchange, one sort): uncapped, every row reaches its "
+            "cell's list anyway. A build with max_assets_per_tile "
+            "instead runs the salted two phases — per-(cell,salt) "
+            "collect pruned to the best cap rows, then a per-cell merge "
+            "of ≤S·cap rows. The per-cell outputs are struct-field "
+            "extractions on the sorted array (sels.image_id, "
+            "array_min(sels.min_lon), …) in one projection; quadkey "
+            "strings materialize only there, as a JVM expression over "
+            "the packed cell (no ArrowEvalPython), next to the per-cell "
+            "min/max of the selected scenes' bboxes — the mosaic bounds "
+            "reduce from the same rows the build collects (as Arrow).",
             formatted(assign),
         ),
         (

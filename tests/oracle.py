@@ -246,6 +246,8 @@ def rank_key(scene: dict, preference: str, closest_date=None):
     """Canonical total-order rank key (SURVEY.md §2.5 A2).
 
     (preference key, cloud_cover asc, image_id asc) — fully deterministic.
+    A null cloud_cover ranks as 101, below any measured value (the
+    twin of ops._sel_struct's coalesce).
     """
     dt = scene["acquisition_date"]
     if preference == "newest":
@@ -256,7 +258,8 @@ def rank_key(scene: dict, preference: str, closest_date=None):
         pref = abs((dt - closest_date).total_seconds())
     else:
         raise ValueError(preference)
-    return (pref, scene["cloud_cover"], scene["image_id"])
+    cloud = scene["cloud_cover"]
+    return (pref, 101.0 if cloud is None else cloud, scene["image_id"])
 
 
 SEASON_MONTHS = {
@@ -283,7 +286,13 @@ def features_to_mosaic(
     tier_only: bool = False,
 ) -> dict:
     """Pure-Python mirror of [ref: mosaic.py#features_to_mosaicJSON]."""
-    kept = [s for s in scenes if s["cloud_cover"] <= max_cloud]
+    # no cloud filter (max_cloud >= 100) keeps null cloud metadata; an
+    # explicit one excludes it (mirrors ops.filter_scenes)
+    kept = [
+        s for s in scenes
+        if (s["cloud_cover"] is None and max_cloud >= 100.0)
+        or (s["cloud_cover"] is not None and s["cloud_cover"] <= max_cloud)
+    ]
     if seasons:
         months = {m for sn in seasons for m in SEASON_MONTHS[sn]}
         kept = [s for s in kept if s["acquisition_date"].month in months]

@@ -287,6 +287,67 @@ def test_salt_buckets_invariance_on_hotspot(spark, scenes_df, scene_records):
     assert docs[0] == docs[1] == docs[2]
 
 
+@pytest.mark.parametrize(
+    "salt,optimized", [(1, False), (16, False), (16, True)]
+)
+def test_capped_build_at_full_cap_equals_uncapped(spark, scenes_df, salt, optimized):
+    """The capped (salted two-phase) and uncapped (one aggregation)
+    selections are one semantics: with a cap no cell's scene count
+    exceeds, the capped doc is byte-equal to the uncapped one, for a
+    degenerate and a wide salt fan-out."""
+    base, _ = mz.build_mosaic(
+        scenes_df, MosaicConfig(quadkey_zoom=7, optimized_selection=optimized)
+    )
+    cap = max(len(v) for v in base["tiles"].values())
+    assert cap > 1
+    cfg = MosaicConfig(
+        quadkey_zoom=7, optimized_selection=optimized,
+        max_assets_per_tile=cap, salt_buckets=salt,
+    )
+    doc, _ = mz.build_mosaic(scenes_df, cfg)
+    assert mz.canonical_json(doc) == mz.canonical_json(base)
+
+
+def test_arrow_collect_round_trips_awkward_scenes(spark, fixture_dir, tmp_path):
+    """The tile table's Arrow collect keeps every asset string exact:
+    non-ASCII and 400+-character image_ids, scenes with null
+    cloud_cover (ranked below any measured value) and antimeridian
+    crossing scenes give a doc byte-equal to the oracle's."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(os.path.join(fixture_dir, "scenes.parquet"))
+    ids = tbl.column("image_id").to_pylist()
+    cloud = tbl.column("cloud_cover").to_pylist()
+    for i in range(len(ids)):
+        if i % 3 == 0:
+            ids[i] = f"{ids[i]}_场景_ü_é_\U0001f600"
+        elif i % 3 == 1:
+            ids[i] = f"{ids[i]}_{'x' * 400}"
+        if i % 5 == 0:
+            cloud[i] = None
+    for name, vals in (("image_id", ids), ("cloud_cover", cloud)):
+        at = tbl.schema.get_field_index(name)
+        tbl = tbl.set_column(at, name, pa.array(vals, tbl.schema.field(name).type))
+    path = str(tmp_path / "awkward.parquet")
+    pq.write_table(tbl, path)
+    recs = tbl.to_pylist()
+    for r in recs:
+        r["acquisition_date"] = pd.Timestamp(r["acquisition_date"])
+
+    cfg = MosaicConfig(quadkey_zoom=7)
+    doc, _ = mz.build_mosaic(spark.read.parquet(path), cfg)
+    assert mz.canonical_json(doc) == oracle.canonical_json(_oracle_doc(recs, cfg))
+    by_id = {r["image_id"]: r for r in recs}
+    used = {a for assets in doc["tiles"].values() for a in assets}
+    assert any(not a.isascii() for a in used)
+    assert any(len(a) > 400 for a in used)
+    assert any(by_id[a]["cloud_cover"] is None for a in used)
+    assert any(by_id[a]["min_lon"] > by_id[a]["max_lon"] for a in used)
+
+
 def test_validate_mosaic(spark, scenes_df):
     cfg = MosaicConfig(quadkey_zoom=7, minzoom=7)
     doc, _ = mz.build_mosaic(scenes_df, cfg)

@@ -51,25 +51,43 @@ def test_assignments_shuffles_only_on_cell_keys(spark, scenes_df):
     cfg = MosaicConfig(quadkey_zoom=7, optimized_selection=True)
     assign = mz.quadkey_assignments(scenes_df, cfg)
     plan = _plan(assign)
-    # exactly the expected exchanges: (cell,path,row) dedupe,
-    # (cell,salt) phase-1, (cell) phase-2 — no range/global sorts.
-    # (min(struct) plans as SortAggregate — partial map-side + per-task
-    # sort on fine keys; that's the spill-safe shape, asserted below.)
+    # exactly the expected exchanges for an uncapped build: the
+    # (cell,path,row) dedupe and the one (cell) selection aggregation —
+    # no range/global sorts. (min(struct) plans as SortAggregate —
+    # partial map-side + per-task sort on fine keys; that's the
+    # spill-safe shape, asserted below.)
     n_exch = plan.count("Exchange hashpartitioning")
-    assert 1 <= n_exch <= 3, plan
+    assert n_exch == 2, plan
     assert "rangepartitioning" not in plan
     assert "partial_min" in plan, "dedupe must pre-aggregate map-side"
 
 
+def test_uncapped_selection_is_one_exchange(spark, scenes_df):
+    """An uncapped selection aggregates once by cell: one hash exchange
+    and no salt hash. A capped one keeps the salted two phases, whose
+    per-salt prune needs the (cell, salt) exchange and then (cell)."""
+    uncapped = _plan(mz.quadkey_assignments(scenes_df, MosaicConfig(quadkey_zoom=7)))
+    assert uncapped.count("Exchange hashpartitioning") == 1, uncapped
+    assert "xxhash64" not in uncapped, uncapped
+    capped = _plan(
+        mz.quadkey_assignments(
+            scenes_df, MosaicConfig(quadkey_zoom=7, max_assets_per_tile=3)
+        )
+    )
+    assert capped.count("Exchange hashpartitioning") == 2, capped
+    assert "xxhash64" in capped, capped
+
+
 def test_build_is_one_action_with_jvm_quadkeys(spark, scenes_df, monkeypatch):
-    """build_mosaic runs ONE DataFrame action over a plan with no
-    Python quadkey hop (ArrowEvalPython) and no used-scene semi join,
-    and persists nothing."""
+    """build_mosaic runs ONE DataFrame action — the Arrow collect of
+    the tile table — over a plan with no Python quadkey hop
+    (ArrowEvalPython) and no used-scene semi join, and persists
+    nothing."""
     cfg = MosaicConfig(quadkey_zoom=7, max_assets_per_tile=3)
     DataFrame = type(scenes_df)
     calls = []
-    for name in ("collect", "toLocalIterator", "first", "count", "take",
-                 "toPandas", "persist", "cache"):
+    for name in ("collect", "toLocalIterator", "toArrow", "first", "count",
+                 "take", "toPandas", "persist", "cache"):
         real = getattr(DataFrame, name)
 
         def spy(self, *a, _real=real, _name=name, **kw):
@@ -82,7 +100,7 @@ def test_build_is_one_action_with_jvm_quadkeys(spark, scenes_df, monkeypatch):
     doc, _ = mz.build_mosaic(scenes_df, cfg)
     monkeypatch.undo()
     assert doc["tiles"]
-    assert [c[0] for c in calls] == ["collect"], [c[0] for c in calls]
+    assert [c[0] for c in calls] == ["toArrow"], [c[0] for c in calls]
     assert "LeftSemi" not in calls[0][1], calls[0][1]
     assert "ArrowEvalPython" not in calls[0][1], calls[0][1]
     assert jsc.getPersistentRDDs().size() == n_persisted

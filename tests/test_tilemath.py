@@ -126,7 +126,7 @@ def test_parent_tile():
 
 
 def test_jvm_cell_quadkey_matches_tilemath(spark):
-    """ops.cell_quadkey_col (the JVM quadkey of a packed cell) and
+    """ops.cell_quadkey_sql (the JVM quadkey of a packed cell) and
     ops.tile_quadkey_col (the JVM quadkey of a tile) equal
     tilemath.tile_to_quadkey: every tile at z <= 8, and the corner and
     sampled tiles at the edge levels, including level 29, whose high
@@ -162,7 +162,7 @@ def test_jvm_cell_quadkey_matches_tilemath(spark):
         [(i, *r) for i, r in enumerate(rows)],
         "i long, cell long, tx long, ty long, z int",
     )
-    got = df.select("i", ops.cell_quadkey_col(F.col("cell")).alias("qk")).collect()
+    got = df.selectExpr("i", f"{ops.cell_quadkey_sql('cell')} AS qk").collect()
     assert [r["qk"] for r in sorted(got)] == want
     for z in (12, 28, 29):
         got = (
