@@ -1632,7 +1632,7 @@ def sql_events_sessions():
 
 # ------------------------------------------------- flagship engine paths
 # The mosaic/rv/knn/gap queries run the REAL engine pipeline (filters →
-# fused explode kernel → salted selection → relational output) over
+# fused explode kernel → one-exchange selection → relational output) over
 # RECTANGULAR footprints derived from driver tables with integer-key
 # arithmetic, so every float is bit-identical in Spark and DuckDB and
 # the whole pipeline gets an exact SQL twin (cover = generate_series
@@ -1809,8 +1809,8 @@ def _cover_cte_sql(src_cte: str, id_cols: str, z: int) -> str:
 
 def q_mosaic_assignments(spark, sf_dir):
     """E1 flagship mosaic pipeline over part-derived footprints: filter
-    → fused explode (exact polygon∩tile on the rect ring) → salted
-    two-phase newest-first selection → (quadkey, asset, rank)."""
+    → fused explode (exact polygon∩tile on the rect ring) → one-exchange
+    newest-first selection → (quadkey, asset, rank)."""
     from mosaic_engine import mosaic as mz
 
     cfg = ops.MosaicConfig(

@@ -10,8 +10,8 @@ as an idiomatic Spark engine:
   replacing mercantile + supermercado + shapely.prepared
 - Arrow-batched UDF bindings (udfs.py) — zero per-row Python
 - DataFrame-level plan builders (ops.py): fused footprint→quadkey
-  explode, window ranking, optimized-selection dedupe, salted two-phase
-  aggregation, anti-join missing-quadkeys, cell-banded kNN
+  explode, window ranking, optimized-selection dedupe, one-exchange
+  selection aggregation, anti-join missing-quadkeys, cell-banded kNN
 - canonical mosaicJSON assembly (mosaic.py)
 - image payload lane (imageops.py): raw/ppm/png codecs, PSNR, phash
 - checkpoint/resume manifests (checkpoint.py)

@@ -58,7 +58,7 @@ def make_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # min(struct)/collect_list use ObjectHashAggregate; the default
         # 128-key fallback degrades to an external SORT of every row —
-        # pathological for our (quadkey, salt) group counts
+        # pathological for our per-cell group counts
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
     )
     # single-node shuffle: RAM-backed local dirs avoid 32-way disk

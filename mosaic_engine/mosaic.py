@@ -4,9 +4,9 @@ Spark-first equivalent of [ref: landsat_cogeo_mosaic/mosaic.py#
 features_to_mosaicJSON] + the `create` CLI entry
 ([ref: cli.py#create]), run as ONE Spark action: declarative filters
 (Catalyst pushdown) → fused footprint→cell explode (one Arrow stage,
-no shuffle) → selection aggregation (one exchange by cell uncapped;
-salted two-phase with a per-salt prune when max_assets_per_tile is
-set) whose selection struct also carries each scene's bbox → one
+no shuffle) → selection aggregation (one exchange by cell; a
+max_assets_per_tile cap slices each cell's sorted list) whose
+selection struct also carries each scene's bbox → one
 bounded driver-side Arrow collect (≤ 4^quadkey_zoom rows) that yields
 both the tile map and the used-scene bounds → canonical JSON
 (SURVEY.md §7.3 byte-equality rules — the serializer is shared
@@ -139,8 +139,8 @@ def build_mosaic(scenes: DataFrame, cfg: MosaicConfig) -> tuple[dict, DataFrame]
     One Spark action (collect_mosaic_doc): only the final tile table
     crosses to the driver, as one Arrow table up to quadkey_zoom 10 —
     bounded by 4^quadkey_zoom regardless of input scale. The selection
-    is one exchange by cell unless max_assets_per_tile is set (then
-    salted two-phase; see ops.assignments). The returned assignments
+    is one exchange by cell, capped or not (see ops.assignments). The
+    returned assignments
     DataFrame is lazy; using it recomputes the pipeline.
     """
     assign = quadkey_assignments(scenes, cfg)

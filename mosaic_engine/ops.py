@@ -8,14 +8,13 @@ Design notes (scale-first, SURVEY.md §4):
   ``(pref_key, cloud_cover, image_id)``; `min(struct)` / sorted
   `collect_list(struct)` give map-side partial aggregation, so the only
   shuffles are hash exchanges on fine-grained keys.
-* Skew (a few dense quadkeys holding thousands of scenes) is handled
-  explicitly when a per-tile cap is set, by a salted two-phase
-  aggregation ([BASELINE.json:6] "explicit salted-repartition skew
-  handling"): phase 1 aggregates (quadkey, salt) — heavy keys spread
-  across S tasks, each pruned to its best `cap` rows — phase 2 merges
-  ≤ S·cap rows per quadkey. Uncapped, every row reaches its cell's
-  list anyway, so the selection is one aggregation by cell (one
-  exchange). AQE stays on as defense in depth.
+* Skew (a few dense quadkeys holding thousands of scenes) is left to
+  the map-side partial aggregation: each task collects its share of a
+  hot cell before the one exchange by cell, so the merge task sorts
+  pre-grouped partials. A salted two-phase aggregation with a per-salt
+  top-`cap` prune was measured against this one level on a hotspot
+  corpus and was not faster by more than the noise, so it is gone
+  (ROADMAP item 4). AQE stays on as defense in depth.
 * Reference semantics: filters = [ref: landsat_cogeo_mosaic/cli.py]
   options; selection = [ref: mosaic.py#features_to_mosaicJSON]
   (preference sort, optimized_selection per-(path,row) dedupe);
@@ -223,13 +222,9 @@ def optimized_dedupe(tiles: DataFrame, cfg: MosaicConfig) -> DataFrame:
 def assignments(tiles: DataFrame, cfg: MosaicConfig) -> DataFrame:
     """A1+A2(+A6): per-quadkey rank-ordered asset lists.
 
-    Uncapped, the selection is ONE aggregation by cell: every row of a
-    cell must reach the final list anyway, so one exchange carries the
-    partial collects and the merge sorts them once. Capped, it is the
-    salted two-phase aggregation (§4.3): phase 1 collects per
-    (cell, salt) and prunes each partial to its best `cap` rows
-    (A6 local top-k), so a hot cell's rows spread over `salt_buckets`
-    tasks and phase 2 merges ≤ S·cap rows per cell. Returns
+    The selection is ONE aggregation by cell: the partial collects
+    cross one exchange, the merge sorts each cell's rows once and a
+    cap (A6) slices the sorted list to its best `cap` rows. Returns
     (cell, quadkey, assets array<string>, n_assets int, min_lon,
     min_lat, max_lon, max_lat): the last four are the cell's min/max
     over the bboxes of the scenes it selected (after any cap or
@@ -248,22 +243,12 @@ def assignments(tiles: DataFrame, cfg: MosaicConfig) -> DataFrame:
         keyed = optimized_dedupe(tiles, cfg)
     else:
         keyed = tiles.select("cell", _sel_struct(cfg))
+    sels = F.sort_array(F.collect_list("sel"))
     # `is not None`, never truthiness: a (rejected-above) cap of 0 must
     # not silently flip to "unlimited"
-    if cap is None:
-        merged = keyed.groupBy("cell").agg(
-            F.sort_array(F.collect_list("sel")).alias("sels")
-        )
-    else:
-        salt = F.pmod(F.xxhash64("sel.image_id"), F.lit(cfg.salt_buckets))
-        part = F.slice(F.sort_array(F.collect_list("sel")), 1, cap)
-        sels = F.sort_array(F.flatten(F.collect_list("part")))
-        merged = (
-            keyed.groupBy("cell", salt.alias("salt"))
-            .agg(part.alias("part"))
-            .groupBy("cell")
-            .agg(F.slice(sels, 1, cap).alias("sels"))
-        )
+    if cap is not None:
+        sels = F.slice(sels, 1, cap)
+    merged = keyed.groupBy("cell").agg(sels.alias("sels"))
     # per-cell outputs are struct-field extractions on the sorted
     # selection, in one projection of SQL text; quadkey strings only
     # materialize here — bounded by 4^quadkey_zoom

@@ -5,7 +5,7 @@ scenes keep arriving, keep the mosaic current". Shape:
 
   scene files → file stream → per micro-batch: fused explode (the
   expensive spatial work, done ONCE per arriving scene) → append-only
-  tiles log → finalize: salted selection aggregation over the log →
+  tiles log → finalize: selection aggregation over the log →
   mosaicJSON.
 
 The micro-batch sink is at-least-once: a batch that fails mid-write is

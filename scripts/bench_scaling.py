@@ -175,7 +175,7 @@ North rule: ≥ 0.8 throughput scaling efficiency between N and 4N
 executors. No real cluster exists in this sandbox (SURVEY.md §0), so
 the evidence is the SAME job (the full north-rule pipeline: per-row
 image-payload invariant verification (decode + phash recompute) + fused
-footprint→quadkey explode + salted selection aggregation) on the SAME
+footprint→quadkey explode + selection aggregation) on the SAME
 input at multiple parallelism levels AND multiple input sizes, measured
 {_t.strftime("%Y-%m-%d")} (fresh JVM per level, input cached in memory, one untimed
 warm pass, best of 3 timed trials per level — best of 2 at
@@ -217,8 +217,8 @@ conf.
 
 Engine properties backing the at-scale claim (verified by tests):
 - explode stage is shuffle-free (map-only Arrow stage)
-- selection aggregation is salted two-phase with map-side partial
-  min(struct) — no windows, no global sorts, no driver collect except
+- selection aggregation is one exchange by cell with map-side partial
+  min(struct)/collect_list — no windows, no global sorts, no driver collect except
   the ≤4^quadkey_zoom final tile table
 - shuffle keys are int64 cell ids; quadkey strings materialize only at
   bounded output edges

@@ -14,10 +14,9 @@ in the same region, then measures the per-task time distribution of:
      bounded (≤ queries×k), so a hot storage region degrades
      throughput linearly, not catastrophically;
   3. a capped build_mosaic (max_assets_per_tile=CAP) over the same
-     corpus — the one selection that keeps the salted two-phase
-     aggregation, whose per-salt top-CAP prune spreads each hot cell
-     over salt_buckets tasks (walls of 3 warm builds, and the hottest
-     stage's task spread).
+     corpus — the selection's skew case: each hot cell's rows meet in
+     one merge task after the map-side partial collect (walls of 3 warm
+     builds, and the hottest stage's task spread).
 
 Run: python scripts/bench_skew.py   (env: SPARK_GRAFT_CPUS, default 32)
 Prints one JSON line; the measured numbers live in BENCH/BASELINE.md.

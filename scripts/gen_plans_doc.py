@@ -100,17 +100,14 @@ def main():
             formatted(tiles),
         ),
         (
-            "Selection aggregation (A1–A3, one exchange uncapped)",
+            "Selection aggregation (A1–A3, one exchange)",
             "Shuffle keys are int64 cells. Stage 1: per-(cell,path,row) "
             "best scene via min(struct) with map-side partial_min — "
             "dense quadkeys never concentrate before reduction. Stage 2: "
             "ONE per-cell collect (map-side partial collect_list, one "
-            "exchange, one sort): uncapped, every row reaches its "
-            "cell's list anyway. A build with max_assets_per_tile "
-            "instead runs the salted two phases — per-(cell,salt) "
-            "collect pruned to the best cap rows, then a per-cell merge "
-            "of ≤S·cap rows. The per-cell outputs are struct-field "
-            "extractions on the sorted array (sels.image_id, "
+            "exchange, one sort; max_assets_per_tile slices the sorted "
+            "list to its best cap rows). The per-cell outputs are "
+            "struct-field extractions on the sorted array (sels.image_id, "
             "array_min(sels.min_lon), …) in one projection; quadkey "
             "strings materialize only there, as a JVM expression over "
             "the packed cell (no ArrowEvalPython), next to the per-cell "

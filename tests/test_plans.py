@@ -48,34 +48,23 @@ def test_explode_stage_has_no_shuffle(spark, scenes_df):
 
 
 def test_assignments_shuffles_only_on_cell_keys(spark, scenes_df):
-    cfg = MosaicConfig(quadkey_zoom=7, optimized_selection=True)
-    assign = mz.quadkey_assignments(scenes_df, cfg)
-    plan = _plan(assign)
-    # exactly the expected exchanges for an uncapped build: the
-    # (cell,path,row) dedupe and the one (cell) selection aggregation —
-    # no range/global sorts. (min(struct) plans as SortAggregate —
-    # partial map-side + per-task sort on fine keys; that's the
-    # spill-safe shape, asserted below.)
-    n_exch = plan.count("Exchange hashpartitioning")
-    assert n_exch == 2, plan
-    assert "rangepartitioning" not in plan
-    assert "partial_min" in plan, "dedupe must pre-aggregate map-side"
-
-
-def test_uncapped_selection_is_one_exchange(spark, scenes_df):
-    """An uncapped selection aggregates once by cell: one hash exchange
-    and no salt hash. A capped one keeps the salted two phases, whose
-    per-salt prune needs the (cell, salt) exchange and then (cell)."""
-    uncapped = _plan(mz.quadkey_assignments(scenes_df, MosaicConfig(quadkey_zoom=7)))
-    assert uncapped.count("Exchange hashpartitioning") == 1, uncapped
-    assert "xxhash64" not in uncapped, uncapped
-    capped = _plan(
-        mz.quadkey_assignments(
-            scenes_df, MosaicConfig(quadkey_zoom=7, max_assets_per_tile=3)
-        )
-    )
-    assert capped.count("Exchange hashpartitioning") == 2, capped
-    assert "xxhash64" in capped, capped
+    # exactly the expected exchanges: the (cell,path,row) dedupe when
+    # optimized_selection is on, and the one (cell) selection
+    # aggregation, capped or not — no salt hash, no range/global sorts.
+    # (min(struct) plans as SortAggregate — partial map-side + per-task
+    # sort on fine keys; that's the spill-safe shape, asserted below.)
+    for opts, n_exch in (
+        (dict(optimized_selection=True), 2),
+        (dict(), 1),
+        (dict(max_assets_per_tile=3), 1),
+    ):
+        cfg = MosaicConfig(quadkey_zoom=7, **opts)
+        plan = _plan(mz.quadkey_assignments(scenes_df, cfg))
+        assert plan.count("Exchange hashpartitioning") == n_exch, (opts, plan)
+        assert "xxhash64" not in plan, (opts, plan)
+        assert "rangepartitioning" not in plan, (opts, plan)
+        if cfg.optimized_selection:
+            assert "partial_min" in plan, "dedupe must pre-aggregate map-side"
 
 
 def test_build_is_one_action_with_jvm_quadkeys(spark, scenes_df, monkeypatch):
