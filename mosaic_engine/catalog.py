@@ -49,31 +49,6 @@ def read_table(
     raise ValueError(f"unknown format {fmt!r}")
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed parquet table (hash-bucketed by `bucket_cols`): two
-    tables bucketed the same way join WITHOUT an Exchange — the
-    co-located-join layout for repeated joins on the same key (e.g.
-    assignments ⋈ vector tiles on the packed cell). `path` makes the
-    table external, so no warehouse directory is involved."""
-    w = (
-        df.write.mode(mode)
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
-
-
 def write_table(
     df: DataFrame,
     location: str,

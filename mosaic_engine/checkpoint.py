@@ -275,9 +275,11 @@ def build_with_checkpoint(
     )
     try:
         # range-cluster output files by quadkey so each prefix dir holds
-        # sorted, spatially-local runs (checkpointable ranges, §4.3.4)
+        # sorted, spatially-local runs (checkpointable ranges, §4.3.4);
+        # the range count is spark.sql.shuffle.partitions (AQE may
+        # coalesce it)
         (
-            todo.repartitionByRange(cfg.salt_buckets, "quadkey")
+            todo.repartitionByRange("quadkey")
             .sortWithinPartitions("quadkey")
             .write.mode("overwrite")
             .partitionBy("qk_prefix")

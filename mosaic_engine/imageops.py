@@ -222,11 +222,6 @@ def phash64(pixels: np.ndarray) -> int:
     return int(val.astype(np.int64))
 
 
-def hamming64(a: int, b: int) -> int:
-    """Hamming distance between two 64-bit hashes stored as signed int64."""
-    return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
-
-
 def resize_block_mean(pixels: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     """Deterministic box-downsample via integer block means (the phash
     grid generalized to any target size). Upsampling uses nearest."""

@@ -104,7 +104,6 @@ def _add_cfg_args(p: argparse.ArgumentParser):
     p.add_argument("--season", action="append", default=[])
     p.add_argument("--tier-only", action="store_true")
     p.add_argument("--max-assets-per-tile", type=int, default=None)
-    p.add_argument("--salt-buckets", type=int, default=16)
 
 
 def _cfg_from_args(a) -> "MosaicConfig":
@@ -125,7 +124,6 @@ def _cfg_from_args(a) -> "MosaicConfig":
         seasons=tuple(a.season),
         tier_only=a.tier_only,
         max_assets_per_tile=a.max_assets_per_tile,
-        salt_buckets=a.salt_buckets,
     )
 
 

@@ -35,7 +35,6 @@ from pyspark.sql.functions import pandas_udf
 from . import geometry as geo
 from . import udfs
 
-DEFAULT_SALT_BUCKETS = 16
 # cap on the probe table knn_bruteforce_points collects to the driver
 # and closes over in its kernel (three columns per probe)
 KNN_PROBE_BROADCAST_LIMIT = 50_000
@@ -67,7 +66,6 @@ class MosaicConfig:
     seasons: tuple[str, ...] = ()
     tier_only: bool = False  # require _T1 products
     max_assets_per_tile: int | None = None
-    salt_buckets: int = DEFAULT_SALT_BUCKETS
     name: str = "mosaic"
     description: str | None = None
     version: str = "1.0.0"
@@ -341,13 +339,6 @@ def missing_quadkeys(
     ).distinct()
     miss = land_qk.join(assign.select("cell"), "cell", "left_anti")
     return miss.selectExpr(f"{cell_quadkey_sql('cell')} AS quadkey")
-
-
-def coverage_quadkeys(
-    probe: DataFrame, assign: DataFrame
-) -> DataFrame:
-    """J6: left_semi membership — which probe quadkeys are covered."""
-    return probe.join(assign.select("quadkey"), "quadkey", "left_semi")
 
 
 # ------------------------------------------------------------------- kNN
@@ -1919,107 +1910,25 @@ def raster_vector_join(
     )
 
 
-# ------------------------------------------------------------------ stats
-def dedup_scenes(df: DataFrame) -> DataFrame:
-    """F7: drop duplicate product ids (multi-page search results)."""
-    return df.dropDuplicates(["image_id"])
-
-
-def mosaic_stats(assign: DataFrame) -> DataFrame:
-    """A5: assets-per-tile histogram over the assignments table."""
-    return (
-        assign.groupBy("n_assets")
-        .agg(F.count("*").alias("n_tiles"))
-        .orderBy("n_assets")
-    )
-
-
-def mosaic_rollup(tiles: DataFrame, levels: int = 4) -> DataFrame:
-    """A8: per-zoom-prefix rollup metrics (grouping sets on the packed
-    cell's parents) — per-region tile/scene counts for reporting.
-
-    The region key is a VALID packed parent cell (the Spark-column twin
-    of cells.cell_parent: drop `levels` morton pairs, decrement the
-    level field), so it decodes back to a region/quadkey downstream."""
-    lvl = F.col("cell").bitwiseAND(F.lit(63))
-    parent = F.shiftleft(
-        F.shiftright("cell", 6 + 2 * levels), 6
-    ) + (lvl - levels)
-    # fail-loud twin of cells.cell_parent: a cell shallower than
-    # `levels` has no such parent — without the guard the negative
-    # level field would silently corrupt the region key (ADVICE r3)
-    guarded = F.when(
-        F.assert_true(
-            lvl >= levels,
-            f"mosaic_rollup: cell level below levels={levels} has no "
-            "parent at that depth",
-        ).isNull(),
-        parent,
-    )
-    lv1 = tiles.select(guarded.alias("cell_r4"), "image_id")
-    return lv1.rollup("cell_r4").agg(
-        F.count("*").alias("n_rows"),
-        F.countDistinct("image_id").alias("n_scenes"),
-    )
-
-
-def assets_for_tile(
-    assign: DataFrame, tx: int, ty: int, z: int, quadkey_zoom: int
-) -> list[str]:
-    """Tile-read path (the mosaicJSON consumer contract, as in the
-    public cogeo-mosaic backend's get_assets): a request at z >
-    quadkey_zoom resolves to its ANCESTOR quadkey; at z < quadkey_zoom
-    it unions its DESCENDANT quadkeys, preserving per-quadkey rank order
-    and de-duplicating assets on first appearance."""
-    from . import tilemath as tm
-
-    n = 1 << z
-    if not (0 <= tx < n and 0 <= ty < n):
-        raise ValueError(
-            f"assets_for_tile: tile ({tx}, {ty}) is outside the zoom-{z} "
-            f"grid [0, {n})"
-        )
-    if z >= quadkey_zoom:
-        px, py, _ = tm.parent_tile([tx], [ty], z, z - quadkey_zoom)
-        qk = tm.tile_to_quadkey(px, py, quadkey_zoom)[0]
-        rows = assign.filter(F.col("quadkey") == qk).select("assets").collect()
-        return list(rows[0]["assets"]) if rows else []
-    prefix = tm.tile_to_quadkey([tx], [ty], z)[0] if z > 0 else ""
-    rows = (
-        assign.filter(F.col("quadkey").startswith(prefix))
-        .select("quadkey", "assets")
-        .orderBy("quadkey")
-        .collect()
-    )
-    out: list[str] = []
-    seen = set()
-    for r in rows:
-        for a in r["assets"]:
-            if a not in seen:
-                seen.add(a)
-                out.append(a)
-    return out
-
-
 def assets_for_tiles(
     assign: DataFrame, requests: DataFrame, z: int, quadkey_zoom: int
 ) -> DataFrame:
     """Batched tile-read path: a requests table (tx, ty) at zoom `z` →
     (tx, ty, assets) via joins against the assignments table — the
     tiler-at-scale shape (one DataFrame plan, no per-request driver
-    round trip; complements the scalar assets_for_tile convenience).
+    round trip).
 
-    Same semantics as assets_for_tile: z ≥ quadkey_zoom resolves each
-    request to its ANCESTOR quadkey; z < quadkey_zoom unions DESCENDANT
-    quadkeys in quadkey order, de-duplicating assets on first
-    appearance (sort_array of (quadkey, assets) structs → flatten →
+    The mosaicJSON consumer contract, as in the public cogeo-mosaic
+    backend's get_assets: z ≥ quadkey_zoom resolves each request to its
+    ANCESTOR quadkey; z < quadkey_zoom unions DESCENDANT quadkeys in
+    quadkey order, de-duplicating assets on first appearance (sort_array of (quadkey, assets) structs → flatten →
     array_distinct, which keeps first occurrences). Requests with no
     coverage get an empty asset list. One zoom level per call — the
     batch-render contract — so every join is a broadcast equi-join."""
     n = 1 << z
     in_grid = F.col("tx").between(0, n - 1) & F.col("ty").between(0, n - 1)
     # a tile outside the grid would alias onto a real tile once its
-    # bits are packed, so fail loudly (the mosaic_rollup guard idiom)
+    # bits are packed, so fail loudly
     req = requests.select(
         F.when(
             F.assert_true(

@@ -554,66 +554,62 @@ def compact_tiles_log(
 
 # storage buckets for the COMPACTED band state (r7 — VERDICT r6 #1):
 # the compacted generation is written partitioned by
-# pmod(xxhash64(band, key), P), so a micro-batch's new-vs-all join
-# and star-guard stats semi READ only the partitions whose buckets
-# the batch touches instead of scanning the full corpus band state.
-# The r6 layout was shuffle-bounded but scan-unbounded: every batch's
-# equi-join read O(corpus) band rows from disk (map-side filtered
-# after the fact). P is chosen at compaction time from the state size
+# _bucket = pmod(xxhash64(band, key), P), so a micro-batch's
+# new-vs-all join and star-guard stats semi READ only the partitions
+# whose buckets the batch touches instead of scanning the full corpus
+# band state. P is chosen at compaction time from the state size
 # (≈ DEDUP_BAND_BUCKET_ROWS rows per bucket, floor/cap below) and
-# recorded in the manifest next to the generation it describes — a
-# hash layout prunes only when the batch's distinct-key count is
-# small relative to P (hash keys spray uniformly), so P must GROW
-# with the state for the trickle/late-file case to stay O(batch
-# keys × bucket rows); a batch whose key count exceeds P touches
-# every bucket and degrades gracefully to the r6 full scan.
-DEDUP_BAND_BUCKETS = 64  # floor (also the legacy default)
+# recorded in the manifest as band_buckets next to the generation it
+# describes. A hash layout prunes only when the batch's distinct-key
+# count is small relative to P (hash keys spray uniformly), so P must
+# GROW with the state for the trickle/late-file case to stay
+# O(batch keys × bucket rows); a batch whose key count exceeds P
+# touches every bucket and reads the whole generation. A generation
+# without band_buckets was compacted flat, before this layout, and
+# fails closed (_band_buckets).
+DEDUP_BAND_BUCKETS = 64  # floor
 DEDUP_BAND_BUCKET_ROWS = 1 << 20  # target rows/bucket (~tens of MB files)
 DEDUP_BAND_BUCKETS_MAX = 1 << 16  # file-count ceiling per generation
-# above this many touched buckets, prune with a broadcast join on the
-# partition column instead of an isin literal list
-_DEDUP_ISIN_MAX = 4096
 
 
 def _band_bucket_col(p: int):
     return F.pmod(F.xxhash64("band", "key"), F.lit(p)).cast("int")
 
 
+def _band_buckets(work_dir: str, man: dict) -> int | None:
+    """The bucket count of the manifest's compacted band generation
+    (None before the first compaction). A generation compacted before
+    the bucket layout raises ops.LegacyStateError."""
+    if man["gen"] is None:
+        return None
+    if "band_buckets" not in man:
+        raise ops.LegacyStateError(
+            f"work_dir {work_dir} holds a band generation compacted "
+            "before the bucket layout (no band_buckets in its manifest) "
+            "— rebuild it in a fresh work_dir"
+        )
+    return int(man["band_buckets"])
+
+
 def _read_prev_bands(spark, work_dir, fs, before_batch, nb):
     """The batch handler's view of the previously persisted band state
-    (compacted generation + earlier non-folded batch partitions),
-    PRUNED to the storage buckets this batch touches when the
-    compacted generation is bucket-partitioned (legacy flat
-    generations read whole — detected by the absence of the _bucket
-    partition column, so pre-r7 work_dirs keep working). Returns None
-    when no previous state exists."""
+    (compacted generation + earlier non-folded batch partitions). The
+    compacted generation's scan is PRUNED to the storage buckets this
+    batch touches by ONE partition filter, `_bucket IN (...)` written
+    as SQL text: it reaches the scan as a PartitionFilter (INSET past
+    ten values) for any touched-set size and plans in milliseconds,
+    where a Column isin pays one py4j call per value. Returns None when
+    no previous state exists."""
     man = _read_manifest(work_dir, fs)
+    p = _band_buckets(work_dir, man)
     paths = _log_paths(work_dir, "bands", fs, before_batch)
     parts = []
-    if man["gen"] is not None:
+    if p is not None:
+        touched = nb.select(_band_bucket_col(p).alias("b")).distinct()
+        # an empty batch touches no bucket: IN (NULL) keeps no row
+        in_list = ",".join(str(r["b"]) for r in touched.collect()) or "NULL"
         comp = spark.read.parquet(paths.pop(0))
-        if "_bucket" in comp.columns:
-            p = int(man.get("band_buckets") or DEDUP_BAND_BUCKETS)
-            buckets = nb.select(_band_bucket_col(p).alias("_bucket"))
-            touched = sorted(
-                r["_bucket"] for r in buckets.distinct().collect()
-            )
-            if len(touched) >= p:
-                pass  # every bucket touched — pruning is a no-op
-            elif len(touched) <= _DEDUP_ISIN_MAX:
-                comp = comp.filter(F.col("_bucket").isin(touched))
-            else:
-                comp = comp.join(
-                    F.broadcast(
-                        spark.createDataFrame(
-                            [(int(b),) for b in touched], "_bucket int"
-                        )
-                    ),
-                    "_bucket",
-                    "leftsemi",
-                )
-            comp = comp.drop("_bucket")
-        parts.append(comp)
+        parts.append(comp.filter(f"_bucket IN ({in_list})").drop("_bucket"))
     if paths:
         parts.append(spark.read.parquet(*paths))
     return functools.reduce(DataFrame.unionByName, parts) if parts else None
@@ -726,6 +722,8 @@ def run_incremental_dedup(
     fs = fs or LOCAL_FS
 
     def check_config():
+        # a flat (pre-bucket) band generation fails closed
+        _band_buckets(work_dir, _read_manifest(work_dir, fs))
         # the band state and pairs log are max_bucket-specific (r6
         # review): batches appended under a different cap would make
         # the pairs log batch-equivalent to NO single one-shot run.
@@ -836,10 +834,14 @@ def compact_dedup_logs(
     an O(batches) listing+read on every new batch's cross join.
 
     Contract: run between run_incremental_dedup invocations. Returns
-    the number of live batch partitions folded (0 = nothing to do)."""
+    the number of live batch partitions folded (0 = nothing to do). A
+    band generation compacted before the bucket layout raises
+    ops.LegacyStateError before anything is deleted or written, as
+    run_incremental_dedup does before its stream starts."""
     fs = fs or LOCAL_FS
     logs = ("bands", "pairs")
     man = _read_manifest(work_dir, fs)
+    prev_buckets = _band_buckets(work_dir, man)
     _gc_dead_state(work_dir, man, logs, fs)
     fold = _foldable(work_dir, man, logs, fs)
     live = _gen_and_batch_paths(work_dir, "bands", man, fold)
@@ -862,14 +864,12 @@ def compact_dedup_logs(
         DEDUP_BAND_BUCKETS_MAX,
         max(DEDUP_BAND_BUCKETS, -(-bands.count() // max(bucket_rows, 1))),
     )
-    if not fold and "_bucket" in frames[0].columns and (
-        man.get("band_buckets") == band_buckets
-    ):
+    if not fold and prev_buckets == band_buckets:
         # nothing new to fold and the bucket layout still fits. A stale
-        # layout (a legacy flat generation, or a bucket_rows target that
-        # now yields a different bucket count for the grown state) is
-        # rewritten even with nothing to fold: resizing the bucketing
-        # is exactly compaction's job (r7).
+        # layout (a bucket_rows target that now yields a different
+        # bucket count for the grown state) is rewritten even with
+        # nothing to fold: resizing the bucketing is exactly
+        # compaction's job (r7).
         return 0
     new_gen = _next_gen(man)
     # repartitioning BY the bucket column keeps it ~one file per

@@ -53,7 +53,7 @@ EXPLODE_GEOM_COLS = [
 
 
 def _explode_flat(
-    pdf: pd.DataFrame, zoom: int, exact: bool
+    pdf: pd.DataFrame, zoom: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """One Arrow batch of scenes → flat (scene_index, cell) pair arrays.
 
@@ -74,9 +74,7 @@ def _explode_flat(
     # of the antimeridian with a wrapped max) is NOT a crossing scene —
     # rotate it into plain [-180, 180) form, else the split below would
     # fabricate a degenerate western box that cover_ranges clamps into
-    # the last tile column and an over-wide eastern box (r5 review;
-    # exact=True happened to filter the spurious tiles, exact=False
-    # emitted them)
+    # the last tile column and an over-wide eastern box
     east_whole = min_lon >= 180.0
     min_lon = np.where(east_whole, min_lon - 360.0, min_lon)
 
@@ -109,21 +107,18 @@ def _explode_flat(
     ty = y0[box_of] + within % ny[box_of]
     scene_of = sidx[box_of]
 
-    if exact:
-        tb_w, tb_s, tb_e, tb_n = tm.tile_bounds(tx, ty, zoom)
-        sh = shift[box_of]
-        RX, RY, nv = geo.pad_rings(
-            pdf["fp_xs"].to_numpy(), pdf["fp_ys"].to_numpy()
-        )
-        keep = geo.polys_intersect_boxes(
-            RX, RY, nv, scene_of, tb_w + sh, tb_s, tb_e + sh, tb_n
-        )
-        tx, ty, scene_of = tx[keep], ty[keep], scene_of[keep]
+    tb_w, tb_s, tb_e, tb_n = tm.tile_bounds(tx, ty, zoom)
+    sh = shift[box_of]
+    RX, RY, nv = geo.pad_rings(pdf["fp_xs"].to_numpy(), pdf["fp_ys"].to_numpy())
+    keep = geo.polys_intersect_boxes(
+        RX, RY, nv, scene_of, tb_w + sh, tb_s, tb_e + sh, tb_n
+    )
+    tx, ty, scene_of = tx[keep], ty[keep], scene_of[keep]
 
     return scene_of, cl.pack_cell(tx, ty, zoom)
 
 
-def _explode_arrow_kernel(passthrough: list[str], zoom: int, exact: bool):
+def _explode_arrow_kernel(passthrough: list[str], zoom: int):
     """mapInArrow closure: scenes batch → one row per INPUT scene with
     a packed-cell ARRAY column (r7, guide §4.1). The previous kernel
     emitted one OUTPUT row per (scene, cell) pair with every
@@ -143,7 +138,7 @@ def _explode_arrow_kernel(passthrough: list[str], zoom: int, exact: bool):
             pdf = pa.Table.from_batches([rb]).select(
                 EXPLODE_GEOM_COLS
             ).to_pandas()
-            scene_of, cells = _explode_flat(pdf, zoom, exact)
+            scene_of, cells = _explode_flat(pdf, zoom)
             order = np.argsort(scene_of, kind="stable")
             cnt = np.bincount(scene_of, minlength=len(pdf))
             offsets = np.concatenate(
@@ -164,7 +159,6 @@ def explode_to_quadkeys(
     df: DataFrame,
     zoom: int,
     passthrough: list[str] | None = None,
-    exact: bool = True,
 ) -> DataFrame:
     """Scenes → one row per (scene, intersecting quadkey) at `zoom`.
 
@@ -182,7 +176,7 @@ def explode_to_quadkeys(
         fields + [T.StructField("cells", T.ArrayType(T.LongType()))]
     )
     arr = src.mapInArrow(
-        _explode_arrow_kernel(passthrough, zoom, exact), schema=arr_schema
+        _explode_arrow_kernel(passthrough, zoom), schema=arr_schema
     )
     # pair expansion in the JVM (codegen Generate — scenes covering no
     # tile carry an empty array and vanish here, same as before)
@@ -216,7 +210,7 @@ def ring_to_quadkeys(
         [src.schema[id_col]]
         + [T.StructField("cells", T.ArrayType(T.LongType()))]
     )
-    inner = _explode_arrow_kernel([id_col], zoom, exact=True)
+    inner = _explode_arrow_kernel([id_col], zoom)
 
     def run(batches):
         import pyarrow as pa

@@ -376,6 +376,23 @@ def features_to_mosaic(
     return doc
 
 
+def assets_for_tile(doc: dict, tx: int, ty: int, z: int) -> list[str]:
+    """Tile read over a mosaicJSON dict (cogeo-mosaic's get_assets
+    contract): a tile at z >= quadkey_zoom reads its ANCESTOR quadkey;
+    one at z < quadkey_zoom unions its DESCENDANT quadkeys in quadkey
+    order, keeping each asset's first appearance."""
+    if not (0 <= tx < 2**z and 0 <= ty < 2**z):
+        raise ValueError(f"tile ({tx}, {ty}) is outside the zoom-{z} grid")
+    qz = doc["quadkey_zoom"]
+    if z >= qz:
+        return list(doc["tiles"].get(quadkey(tx >> (z - qz), ty >> (z - qz), qz), []))
+    prefix = quadkey(tx, ty, z)
+    out: list[str] = []
+    for qk in sorted(k for k in doc["tiles"] if k.startswith(prefix)):
+        out.extend(a for a in doc["tiles"][qk] if a not in out)
+    return out
+
+
 def canonical_json(doc: dict) -> str:
     """The single serializer both oracle and engine use (SURVEY.md §7.3)."""
     return json.dumps(doc, sort_keys=True, separators=(",", ":"))

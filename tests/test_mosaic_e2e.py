@@ -201,17 +201,15 @@ def test_sliver_scene_bbox_vs_exact(scene_records):
 
 
 def test_parallelism_invariance(spark, scenes_df, scene_records):
-    """Same bytes at different partitioning / salt settings (§5.2)."""
+    """Same bytes at different input partitionings (§5.2)."""
     cfg = MosaicConfig(quadkey_zoom=7, optimized_selection=True)
     base, _ = mz.build_mosaic(scenes_df, cfg)
-    doc37, _ = mz.build_mosaic(scenes_df.repartition(37), cfg)
-    doc1, _ = mz.build_mosaic(scenes_df.coalesce(1), cfg)
-    cfg4 = MosaicConfig(quadkey_zoom=7, optimized_selection=True, salt_buckets=4)
-    docs4, _ = mz.build_mosaic(scenes_df.repartition(11), cfg4)
     a = mz.canonical_json(base)
-    assert mz.canonical_json(doc37) == a
-    assert mz.canonical_json(doc1) == a
-    assert mz.canonical_json(docs4) == a
+    for df in (
+        scenes_df.coalesce(1), scenes_df.repartition(11), scenes_df.repartition(37)
+    ):
+        doc, _ = mz.build_mosaic(df, cfg)
+        assert mz.canonical_json(doc) == a
 
 
 def test_assignments_relational_rank(spark, scenes_df, scene_records):
@@ -274,24 +272,19 @@ def test_image_invariants_spark(spark, scenes_df):
         assert r["psnr_db"] == float("inf"), r["image_id"]
 
 
-def test_salt_buckets_invariance_on_hotspot(spark, scenes_df, scene_records):
+def test_capped_build_on_hotspot(spark, scenes_df, scene_records):
     """Skew handling: a cap below the hotspot cells' (FIXTURES §1) scene
-    count prunes their sorted lists to the oracle's top-`cap`, and the
-    doc is the same bytes for any salt_buckets, including the
-    degenerate salt=1."""
+    count prunes their sorted lists to the oracle's top-`cap`."""
     hot = [r for r in scene_records if "hotspot" in r["caption"]]
     assert len(hot) >= 20, "fixtures must include the density hotspot"
     full, _ = mz.build_mosaic(scenes_df, MosaicConfig(quadkey_zoom=7))
     cap = max(len(v) for v in full["tiles"].values()) // 2
     assert cap >= 1
-    docs = []
-    for s in (1, 7, 64):
-        cfg = MosaicConfig(quadkey_zoom=7, salt_buckets=s, max_assets_per_tile=cap)
-        doc, _ = mz.build_mosaic(scenes_df, cfg)
-        docs.append(mz.canonical_json(doc))
-    assert docs[0] == docs[1] == docs[2]
-    assert docs[0] == oracle.canonical_json(_oracle_doc(scene_records, cfg))
-    assert docs[0] != mz.canonical_json(full), "the cap must drop rows"
+    cfg = MosaicConfig(quadkey_zoom=7, max_assets_per_tile=cap)
+    doc, _ = mz.build_mosaic(scenes_df, cfg)
+    got = mz.canonical_json(doc)
+    assert got == oracle.canonical_json(_oracle_doc(scene_records, cfg))
+    assert got != mz.canonical_json(full), "the cap must drop rows"
 
 
 @pytest.mark.parametrize("optimized", [False, True])

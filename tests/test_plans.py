@@ -165,39 +165,6 @@ def test_whole_stage_codegen_covers_relational_ops(spark, sf001_dir=None):
     assert "HashAggregate" in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, scenes_df, tmp_path):
-    """Co-located join layout: scene tiles and vector tiles bucketed by
-    the packed cell join WITHOUT any Exchange (and the bucketed scan
-    pair shuffles nothing at 100x the data either)."""
-    from mosaic_engine import catalog
-
-    s_qk = udfs.explode_to_quadkeys(scenes_df, 7, passthrough=["image_id"])
-    v_qk = s_qk.select(F.col("cell"), (F.crc32(F.col("image_id")) % 50).alias("feature_id"))
-    catalog.write_bucketed(
-        s_qk, "b_scene_tiles", str(tmp_path / "st"), ["cell"], 8, ["cell"]
-    )
-    catalog.write_bucketed(
-        v_qk, "b_vec_tiles", str(tmp_path / "vt"), ["cell"], 8, ["cell"]
-    )
-    # small fixtures would broadcast (also shuffle-free, but that hides
-    # the bucketing): force the big-table plan shape the layout targets
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("b_scene_tiles").join(
-            spark.table("b_vec_tiles"), "cell"
-        )
-        joined.collect()  # AQE finalizes the plan
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        for t in ("b_scene_tiles", "b_vec_tiles"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_partition_pruning_reaches_scan(spark, scenes_df, tmp_path):
     """S3 indexed-scan story: a scenes table partitioned by WRS path
     prunes partitions at the scan (PartitionFilters), the parquet-side

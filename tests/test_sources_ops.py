@@ -179,33 +179,6 @@ def test_gzip_mosaic_sink(tmp_path):
     assert open(p2).read() == doc
 
 
-def test_mosaic_stats_and_rollup(spark, scenes_df):
-    cfg = MosaicConfig(quadkey_zoom=7)
-    assign = mz.quadkey_assignments(scenes_df, cfg)
-    hist = {r["n_assets"]: r["n_tiles"] for r in ops.mosaic_stats(assign).collect()}
-    doc, _ = mz.build_mosaic(scenes_df, cfg)
-    exp: dict[int, int] = {}
-    for assets in doc["tiles"].values():
-        exp[len(assets)] = exp.get(len(assets), 0) + 1
-    assert hist == exp
-    tiles = udfs.explode_to_quadkeys(scenes_df, 7)
-    roll = ops.mosaic_rollup(tiles).collect()
-    total = [r for r in roll if r["cell_r4"] is None]
-    assert len(total) == 1 and total[0]["n_rows"] == tiles.count()
-    # (review r3) the region key is a VALID packed parent cell: it
-    # decodes to level 3 (= 7 - 4) and matches cells.cell_parent
-    from mosaic_engine import cells as cl
-
-    keys = np.array(
-        [r["cell_r4"] for r in roll if r["cell_r4"] is not None], np.int64
-    )
-    xs, ys, lv = cl.unpack_cell(keys)
-    assert (lv == 3).all()
-    some = np.array([r["cell"] for r in tiles.limit(50).collect()], np.int64)
-    exp_parents = set(cl.cell_parent(some, 4).tolist())
-    assert exp_parents <= set(keys.tolist())
-
-
 def test_image_features_lane(spark, scenes_df):
     out = udfs.image_features(scenes_df).collect()
     assert len(out) == scenes_df.count()
@@ -289,42 +262,6 @@ def test_create_from_db_path_e2e(spark, scenes_df, scene_records):
     assert mz.canonical_json(doc) == oracle.canonical_json(odoc)
 
 
-def test_assets_for_tile_lookup(spark, scenes_df, scene_records):
-    from tests import oracle
-
-    cfg = MosaicConfig(quadkey_zoom=7)
-    doc, assign = mz.build_mosaic(scenes_df, cfg)
-    # child tile at z=9 resolves to its z=7 ancestor's assets
-    some_qk = sorted(doc["tiles"])[3]
-    tx, ty, _ = oracle.quadkey_to_tile(some_qk)
-    got = ops.assets_for_tile(assign, tx * 4 + 1, ty * 4 + 2, 9, 7)
-    assert got == doc["tiles"][some_qk]
-    # parent tile at z=5 unions the rank-ordered children, deduped
-    p5 = some_qk[:5]
-    px, py, _ = oracle.quadkey_to_tile(p5)
-    got = ops.assets_for_tile(assign, px, py, 5, 7)
-    exp, seen = [], set()
-    for qk in sorted(k for k in doc["tiles"] if k.startswith(p5)):
-        for a in doc["tiles"][qk]:
-            if a not in seen:
-                seen.add(a)
-                exp.append(a)
-    assert got == exp
-    # miss → empty
-    assert ops.assets_for_tile(assign, 0, 0, 9, 7) == []
-
-
-def test_coverage_quadkeys_semi_join(spark, scenes_df):
-    cfg = MosaicConfig(quadkey_zoom=7)
-    _, assign = mz.build_mosaic(scenes_df, cfg)
-    qks = [r["quadkey"] for r in assign.select("quadkey").limit(3).collect()]
-    probe = spark.createDataFrame(
-        [(q,) for q in qks] + [("0000000",)], ["quadkey"]
-    )
-    got = {r["quadkey"] for r in ops.coverage_quadkeys(probe, assign).collect()}
-    assert got == set(qks)
-
-
 def test_checkpoint_hash_tracks_content_rewrite(spark, tmp_path):
     """Rewriting a source file in place (same path, new bytes) must
     change the lineage hash so resume doesn't reuse stale prefixes."""
@@ -343,35 +280,43 @@ def test_checkpoint_hash_tracks_content_rewrite(spark, tmp_path):
 
 
 def test_assets_for_tiles_batched_matches_scalar(spark, scenes_df):
-    """Batched tile-read ≡ the scalar path at z above/at/below
-    quadkey_zoom, including uncovered (empty) tiles; single lazy plan
-    with broadcast equi-joins (no per-request collect)."""
+    """Batched tile-read ≡ the scalar reference (tests/oracle.py, pure
+    Python over the mosaicJSON dict) at z above/at/below quadkey_zoom,
+    including uncovered (empty) tiles; single lazy plan with broadcast
+    equi-joins (no per-request collect)."""
     from pyspark.sql import Row
 
-    cfg = MosaicConfig(quadkey_zoom=7)
-    assign = mz.quadkey_assignments(scenes_df, cfg)
-    assign.cache().count()
-    from mosaic_engine import tilemath as tm
+    from tests import oracle
 
-    covered = [r["quadkey"] for r in assign.select("quadkey").collect()]
+    cfg = MosaicConfig(quadkey_zoom=7)
+    doc, assign = mz.build_mosaic(scenes_df, cfg)
+    assign.cache().count()
+    covered = sorted(doc["tiles"])
+    some_qk = covered[3]
+    sx, sy, _ = oracle.quadkey_to_tile(some_qk)
+    # a z=9 child reads its z=7 ancestor's assets verbatim
+    assert oracle.assets_for_tile(doc, sx * 4 + 1, sy * 4 + 2, 9) == (
+        doc["tiles"][some_qk]
+    )
     for z in (9, 7, 5, 0):
-        reqs = set()
+        reqs = {(0, 0)}  # far corner: likely uncovered at deep zooms
         for qk in covered[:6]:
-            x, y, _ = tm.quadkey_to_tile([qk])
+            x, y, _ = oracle.quadkey_to_tile(qk)
             if z >= 7:
-                reqs.add((int(x[0]) << (z - 7), int(y[0]) << (z - 7)))
+                reqs.add((x << (z - 7), y << (z - 7)))
             else:
-                reqs.add((int(x[0]) >> (7 - z), int(y[0]) >> (7 - z)))
-        reqs.add((0, 0))  # far corner: likely uncovered at deep zooms
+                reqs.add((x >> (7 - z), y >> (7 - z)))
+        if z == 9:
+            reqs.add((sx * 4 + 1, sy * 4 + 2))
         req_df = spark.createDataFrame([Row(tx=a, ty=b) for a, b in reqs])
         got = {
             (r["tx"], r["ty"]): list(r["assets"])
             for r in ops.assets_for_tiles(assign, req_df, z, 7).collect()
         }
-        exp = {
-            (a, b): ops.assets_for_tile(assign, a, b, z, 7) for a, b in reqs
-        }
+        exp = {(a, b): oracle.assets_for_tile(doc, a, b, z) for a, b in reqs}
         assert got == exp, f"z={z}"
+        if z == 9:
+            assert exp[(0, 0)] == []  # a miss reads an empty list
     for z in (9, 5):
         plan = ops.assets_for_tiles(
             assign, spark.createDataFrame([Row(tx=1, ty=1)]), z, 7
@@ -383,7 +328,7 @@ def test_assets_for_tiles_batched_matches_scalar(spark, scenes_df):
 def test_tile_requests_outside_grid_fail_loudly(spark, scenes_df):
     """A tile outside [0, 2^z) must not alias onto a real tile (packing
     drops its high bits, so (131, 5, 7) would read tile (3, 5, 7) and
-    tx = -1 the far-east tile): both tile-read paths check the
+    tx = -1 the far-east tile): the tile-read path checks the
     request's own zoom, above and below quadkey_zoom."""
     from pyspark.errors import SparkRuntimeException
     from pyspark.sql import Row
@@ -392,8 +337,6 @@ def test_tile_requests_outside_grid_fail_loudly(spark, scenes_df):
     for tx, ty, z in (
         (131, 5, 7), (-1, 5, 7), (5, 512, 9), (3, -2, 9), (32, 0, 5), (0, -1, 5),
     ):
-        with pytest.raises(ValueError, match=f"zoom-{z} grid"):
-            ops.assets_for_tile(assign, tx, ty, z, 7)
         req = spark.createDataFrame([Row(tx=1, ty=1), Row(tx=tx, ty=ty)])
         with pytest.raises(SparkRuntimeException, match=f"zoom-{z} grid"):
             ops.assets_for_tiles(assign, req, z, 7).collect()
@@ -546,21 +489,6 @@ def test_attach_wrs2_bbox_fallback_and_drop(spark):
     assert n > 0
 
 
-def test_mosaic_rollup_rejects_shallow_cells(spark):
-    """ADVICE r3: a cell whose packed level is below `levels` has no
-    parent at that depth — mosaic_rollup must fail loudly (matching
-    cells.cell_parent) instead of emitting a corrupted region key."""
-    from pyspark.errors import SparkRuntimeException
-    from pyspark.sql import Row
-
-    from mosaic_engine import cells as cl
-
-    shallow = int(cl.pack_cell(1, 1, 2))  # level 2 < default 4
-    df = spark.createDataFrame([Row(cell=shallow, image_id="X")])
-    with pytest.raises(SparkRuntimeException, match="mosaic_rollup"):
-        ops.mosaic_rollup(df).collect()
-
-
 def test_gen_scenes_small_n_keeps_edge_cases():
     """ADVICE r3: trimming an over-produced build must drop grid (then
     hotspot) rows, never the adversarial edge-case scenes appended at
@@ -635,7 +563,7 @@ def test_explode_wholly_east_of_antimeridian_scene(spark):
     """(r5 review) A scene whose ring lies ENTIRELY east of 180 (bbox
     in the degenerate min_lon >= 180 'crossing' form) must emit exactly
     the tiles of its rotated [-180,180) box — no last-column phantom
-    tiles from the clamped western split, in BOTH exact modes."""
+    tiles from the clamped western split."""
     from pyspark.sql import Row
 
     from mosaic_engine import cells as cl
@@ -649,18 +577,15 @@ def test_explode_wholly_east_of_antimeridian_scene(spark):
         fp_ys=[10.0, 10.0, 14.0, 14.0, 10.0],
     )
     df = spark.createDataFrame([scene])
-    for exact in (True, False):
-        tiles = udfs.explode_to_quadkeys(
-            df, 5, passthrough=["image_id"], exact=exact
-        )
-        got = np.array([t["cell"] for t in tiles.collect()], np.int64)
-        assert len(got) > 0, exact
-        xs, ys, _ = cl.unpack_cell(got)
-        w, s, e, n = tm.tile_bounds(xs, ys, 5)
-        # every tile overlaps the true rotated box [-175, -170]
-        assert (e > -175.0 - 1e-9).all() and (w < -170.0 + 1e-9).all(), (
-            exact, sorted(set(w.tolist())),
-        )
+    tiles = udfs.explode_to_quadkeys(df, 5, passthrough=["image_id"])
+    got = np.array([t["cell"] for t in tiles.collect()], np.int64)
+    assert len(got) > 0
+    xs, ys, _ = cl.unpack_cell(got)
+    w, s, e, n = tm.tile_bounds(xs, ys, 5)
+    # every tile overlaps the true rotated box [-175, -170]
+    assert (e > -175.0 - 1e-9).all() and (w < -170.0 + 1e-9).all(), sorted(
+        set(w.tolist())
+    )
 
 
 def test_attach_wrs2_derives_bbox_from_own_ring(spark):

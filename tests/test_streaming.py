@@ -1042,6 +1042,17 @@ def test_bucket_stats_semi_join_broadcasts_and_is_exact(spark, tmp_path):
     assert got0 == {(0, 11): (2, 100), (0, 22): (1, 102), (1, 33): (1, 100)}
 
 
+def _assert_bucket_partition_filter(prev):
+    """The band-state scan of `prev` prunes by a _bucket IN/INSET
+    PartitionFilter (isnotnull(_bucket) alone prunes nothing)."""
+    import re
+
+    plan = prev._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [" in plan, plan
+    seg = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert re.search(r"_bucket#\d+ (IN|INSET) ", seg), seg
+
+
 def test_incremental_dedup_bucketed_state_prunes_scan(spark, tmp_path):
     """(r7 — VERDICT r6 #1) The compacted band generation is written
     PARTITIONED BY pmod(xxhash64(band, key), DEDUP_BAND_BUCKETS), and
@@ -1083,8 +1094,7 @@ def test_incremental_dedup_bucketed_state_prunes_scan(spark, tmp_path):
             streaming.LOCAL_FS.read_text(
                 os.path.join(work, "tiles_manifest.json")
             )
-        ).get("band_buckets")
-        or streaming.DEDUP_BAND_BUCKETS
+        )["band_buckets"]
     )
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     nb = textops.minhash_banded(docs.limit(3))
@@ -1099,8 +1109,7 @@ def test_incremental_dedup_bucketed_state_prunes_scan(spark, tmp_path):
     prev = streaming._read_prev_bands(
         spark, work, streaming.LOCAL_FS, 10**6, nb
     )
-    plan = prev._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "_bucket" in plan, plan
+    _assert_bucket_partition_filter(prev)
 
     full = spark.read.parquet(gen_dir)
     want = sorted(
@@ -1112,6 +1121,91 @@ def test_incremental_dedup_bucketed_state_prunes_scan(spark, tmp_path):
         )
     )
     assert sorted(map(tuple, prev.collect())) == want and len(want) > 0
+
+
+def test_dedup_prev_bands_prunes_past_4096_touched_buckets(spark, tmp_path):
+    """A batch touching thousands of storage buckets still reads the
+    compacted band state through the _bucket partition filter, and gets
+    exactly the touched buckets' rows."""
+    p = 1 << 14
+    work = str(tmp_path / "dedup_work_wide")
+    state = spark.range(120).selectExpr(
+        "id AS doc_id", "CAST(id % 4 AS INT) AS band", "CAST(id AS STRING) AS key"
+    ).withColumn("_bucket", streaming._band_bucket_col(p))
+    state.write.partitionBy("_bucket").parquet(
+        streaming._gen_dir(work, "bands", 0)
+    )
+    streaming._write_manifest(
+        work, {"gen": 0, "folded": [], "chk_id": None, "band_buckets": p}
+    )
+    # the batch shares the state's first 60 keys and brings 20k new ones
+    nb = spark.range(20_060).selectExpr(
+        "id + 1000000 AS doc_id",
+        "CAST(id % 4 AS INT) AS band",
+        "CAST(IF(id < 60, id, id + 1000) AS STRING) AS key",
+    )
+    touched = {
+        r["b"]
+        for r in nb.select(streaming._band_bucket_col(p).alias("b"))
+        .distinct()
+        .collect()
+    }
+    assert 4096 < len(touched) < p
+
+    prev = streaming._read_prev_bands(
+        spark, work, streaming.LOCAL_FS, 10**6, nb
+    )
+    _assert_bucket_partition_filter(prev)
+    want = sorted(
+        (r["doc_id"], r["band"], r["key"])
+        for r in state.collect()
+        if r["_bucket"] in touched
+    )
+    got = sorted(tuple(r) for r in prev.select("doc_id", "band", "key").collect())
+    assert got == want
+    assert 60 <= len(want) < 120  # shared keys kept, some others pruned
+
+
+def test_flat_band_generation_fails_closed(spark, tmp_path):
+    """A dedup manifest with a generation but no band_buckets was
+    compacted flat, before the bucket layout. Both dedup entries raise
+    LegacyStateError and leave the work_dir's listing unchanged."""
+    import json
+
+    import pyarrow.compute as pc
+
+    from mosaic_engine import ops
+
+    t = pq.read_table("/root/testdata/sf0.001/documents.parquet")
+    half = pc.equal(pc.bit_wise_and(t["doc_id"], 1), 0)
+    sdir = str(tmp_path / "docs_stream_flat")
+    os.makedirs(sdir)
+    work = str(tmp_path / "dedup_work_flat")
+    datagen.write_parquet(t.filter(half), os.path.join(sdir, "p1.parquet"))
+    streaming.run_incremental_dedup(spark, sdir, work)
+    assert streaming.compact_dedup_logs(spark, work, target_partitions=2) == 1
+    man_path = os.path.join(work, "tiles_manifest.json")
+    with open(man_path) as f:
+        man = json.load(f)
+    del man["band_buckets"]
+    with open(man_path, "w") as f:
+        json.dump(man, f)
+    # a new file: without the refusal the stream would write a batch
+    datagen.write_parquet(
+        t.filter(pc.invert(half)), os.path.join(sdir, "p2.parquet")
+    )
+
+    def listing():
+        return sorted((d, sorted(fs)) for d, _, fs in os.walk(work))
+
+    before = listing()
+    for call in (
+        lambda: streaming.run_incremental_dedup(spark, sdir, work),
+        lambda: streaming.compact_dedup_logs(spark, work),
+    ):
+        with pytest.raises(ops.LegacyStateError, match="fresh work_dir"):
+            call()
+    assert listing() == before
 
 
 def test_incremental_dedup_refuses_unrecorded_guard_regime(spark, tmp_path):
