@@ -23,7 +23,6 @@ import numpy as np
 __all__ = [
     "pack_cell",
     "unpack_cell",
-    "cell_parent",
 ]
 
 
@@ -59,7 +58,7 @@ def pack_cell(xs, ys, level: int) -> np.ndarray:
     # 30 bits, so an out-of-range coord would silently alias to a
     # wrong-but-well-formed cell id (x = 2^30 + 1 packs like x = 1) and
     # downstream joins would mismatch without a trace — the same
-    # convention as lonlat_to_tile's NaN raise and cell_parent's guard
+    # convention as lonlat_to_tile's NaN raise
     n = np.int64(1) << np.int64(level)
     if xs.size and (
         (xs < 0).any() or (xs >= n).any() or (ys < 0).any() or (ys >= n).any()
@@ -81,14 +80,3 @@ def unpack_cell(cells) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     ys = _unpart1by1(morton >> np.uint64(1)).astype(np.int64)
     return xs, ys, level
 
-
-def cell_parent(cells, levels: int = 1) -> np.ndarray:
-    c = np.asarray(cells, dtype=np.int64).astype(np.uint64)
-    level = (c & np.uint64(0x3F)).astype(np.int64) - levels
-    if (level < 0).any():
-        raise ValueError(
-            "cell_parent: levels exceeds a cell's own level (the level "
-            "field would wrap)"
-        )
-    morton = (c >> np.uint64(6)) >> np.uint64(2 * levels)
-    return ((morton << np.uint64(6)) | level.astype(np.uint64)).astype(np.int64)

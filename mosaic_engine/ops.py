@@ -376,9 +376,11 @@ class KnnIndex:
     when built, a bounded parquet scan when loaded) and the cascade
     prep built from it. When the prep reaches `level` and the corpus
     holds at most KNN_RESIDENT_ROWS scenes, the prep also carries the
-    corpus members (_resident_members), and knn_join serves a request
-    as one Python stage over the probes; otherwise it scores through
-    the union kernel. Build once with knn_index, serve many probe
+    corpus members (_resident_members), prunes each cell against the
+    bounding box of its member centroids instead of its tile rect, and
+    knn_join serves a request as one Python stage over the probes;
+    otherwise it prunes against tile rects and scores through the
+    union kernel. Build once with knn_index, serve many probe
     batches through knn_join(index=...) — repeated batches skip the
     corpus-wide stats aggregation, the prep collect and the member
     collect (the serving-at-scale pattern: index on ingest, query per
@@ -418,12 +420,21 @@ def _scene_centroids(scenes: DataFrame) -> DataFrame:
     (min_lon > max_lon = crossing scene, as produced by datagen and
     handled by filter_scenes): the naive midpoint of a crossing scene
     lands ~180° away from the true center, so rotate it by 180° and
-    wrap into [-180, 180)."""
+    wrap into [-180, 180). A scene stored unwrapped wholly past the
+    antimeridian (min_lon < max_lon, midpoint beyond ±180) has its
+    midpoint shifted by ∓360 into [-180, 180], or the kNN tile key
+    would clamp it into an edge column whose rect does not contain
+    it; in-range midpoints are left bit-identical."""
     raw = (F.col("min_lon") + F.col("max_lon")) / 2
-    slon = F.when(
-        F.col("min_lon") > F.col("max_lon"),
-        F.pmod(raw + 360.0, F.lit(360.0)) - 180.0,
-    ).otherwise(raw)
+    slon = (
+        F.when(
+            F.col("min_lon") > F.col("max_lon"),
+            F.pmod(raw + 360.0, F.lit(360.0)) - 180.0,
+        )
+        .when(raw > 180.0, raw - 360.0)
+        .when(raw < -180.0, raw + 360.0)
+        .otherwise(raw)
+    )
     return scenes.select(
         "image_id",
         slon.alias("slon"),
@@ -688,7 +699,7 @@ def knn_index_load(spark, path: str) -> KnnIndex:
 # ---- kNN pruning math, numpy only: knn_join's cascade kernel and its
 # fine refinement both prune (probe, cell) pairs with _prune_step —
 # the rect bounds of _bounds_fast_np (the bracket pytest's subject)
-# over per-cell trig from _cell_attrs_np, then the per-probe R* rule
+# over per-rect trig from _rect_attrs_np, then the per-probe R* rule
 # of _rstar_np. Pruning EXACTNESS needs only valid bounds: any lower/
 # upper bracket preserves the R* guarantee, and the margins in
 # _bounds_fast_np absorb FP rounding.
@@ -719,12 +730,15 @@ def _parent_np(cells: "np.ndarray", drop: int) -> "np.ndarray":
 
 
 def _cell_rect_np(cells: "np.ndarray", level: int):
-    """(cw, cs, ce, cn) degree rects of packed (x<<30)|y keys at
+    """(cw, cs, ce, cn) degree tile rects of packed (x<<30)|y keys at
     `level` via the mercator gudermannian. The top/bottom tile rows
     also receive centroids beyond the mercator clamp (±85.05..), so
-    their rects stretch to the poles — every point mapped into a cell
-    must lie INSIDE its rect or the upper bound is invalid and pruning
-    goes wrong."""
+    their rects stretch to the poles. Every member of a cell must lie
+    INSIDE the rect its pruning bounds use, or the upper bound is
+    invalid and pruning goes wrong: a resident cell's prune rect is its
+    member box only where that box lies inside this tile rect
+    (_prep_from_arrays), and _scene_centroids keeps every finite
+    centroid lon in [-180, 180] so its tile column contains it."""
     import math
 
     import numpy as np
@@ -744,16 +758,15 @@ def _cell_rect_np(cells: "np.ndarray", level: int):
     return cw, cs, ce, cn
 
 
-def _cell_attrs_np(cells: "np.ndarray", level: int):
-    """Per-cell trig attributes for the fast a-space bounds
+def _rect_attrs_np(cw, cs, ce, cn):
+    """Per-rect trig attributes for the fast a-space bounds
     (_bounds_fast_np): lon edges in degrees plus sin/cos of the
-    latitude edges. Computed ONCE per unique cell in _cascade_prep —
-    the r6 kernel recomputed the rect AND ~40 transcendentals per
+    latitude edges. Computed ONCE per unique cell in _prep_from_arrays
+    — the r6 kernel recomputed the rect AND ~40 transcendentals per
     (probe, cell) PAIR per level, measured as ~85% of the kernel's
     13.4 s single-core wall at 100k probes."""
     import numpy as np
 
-    cw, cs, ce, cn = _cell_rect_np(cells, level)
     s_r = np.radians(cs)
     n_r = np.radians(cn)
     return (
@@ -764,6 +777,11 @@ def _cell_attrs_np(cells: "np.ndarray", level: int):
         np.sin(n_r),
         np.cos(n_r),
     )
+
+
+def _cell_attrs_np(cells: "np.ndarray", level: int):
+    """_rect_attrs_np of the cells' tile rects (_cell_rect_np)."""
+    return _rect_attrs_np(*_cell_rect_np(cells, level))
 
 
 def _bounds_fast_np(lon, sin_p, cos_p, tan_p, attrs):
@@ -943,7 +961,7 @@ def _prune_step(pid, trig, kreq, attrs, n):
     """One pruning step over (probe, cell) pairs: _bounds_fast_np of
     each pair's probe against its cell rect, then the per-probe R*
     rule (_rstar_np). `pid` holds dense probe codes into the per-probe
-    `trig` (_probe_trig) and `kreq`; `attrs` (_cell_attrs_np) and the
+    `trig` (_probe_trig) and `kreq`; `attrs` (_rect_attrs_np) and the
     scene counts `n` are per pair. Returns the surviving pair indices,
     ascending."""
     lon, sin_p, cos_p, tan_p = trig
@@ -990,17 +1008,19 @@ def _cascade_prep(
     1)`, no count); knn_index_load passes the cap its meta records.
     At cap == `level` the collected counts sum to the exact member
     count, so the residency choice needs no job: a corpus of at most
-    KNN_RESIDENT_ROWS scenes gets its members (_resident_members) into
-    the prep before it is broadcast."""
+    KNN_RESIDENT_ROWS scenes has its members collected
+    (_resident_members) before the prep is built, which holds them and
+    prunes against their per-cell boxes."""
     import numpy as np
 
     def build(pdf, cap):
-        prep = _prep_from_arrays(
-            pdf["cell"].to_numpy(np.int64), pdf["n"].to_numpy(np.int64), cap
-        )
-        cells, ns = prep["levels"][cap]
+        cells = pdf["cell"].to_numpy(np.int64)
+        order = np.argsort(cells)
+        cells, ns = cells[order], pdf["n"].to_numpy(np.int64)[order]
+        members = None
         if cap == level and int(ns.sum()) <= KNN_RESIDENT_ROWS:
-            prep["members"] = _resident_members(cent, cells, ns)
+            members = _resident_members(cent, cells, ns)
+        prep = _prep_from_arrays(cells, ns, cap, members)
         return prep, stats.sparkSession.sparkContext.broadcast(prep)
 
     if cap is None:
@@ -1048,27 +1068,53 @@ def _resident_members(cent: DataFrame, cells, ns) -> dict:
     }
 
 
-def _prep_from_arrays(cells, ns, cap: int) -> dict:
-    """Build the cascade prep dict (chain, per-level rollups, CSR
-    steps, per-cell trig attrs) from the capped (cell, n) arrays —
-    pure numpy, shared by the inline and saved-index paths."""
+def _prep_from_arrays(cells, ns, cap: int, members: dict | None = None) -> dict:
+    """Build the cascade prep dict (chain, per-level rollups and prune
+    rects, CSR steps, per-cell trig attrs) from the capped (cell, n)
+    arrays, `cells` sorted ascending — pure numpy. With resident
+    `members` (_resident_members, a CSR over `cells`) the prep holds
+    them, and a cap cell's prune rect is the bounding box of its member
+    centroids when that box is finite and lies inside the tile rect;
+    otherwise (a NaN or null centroid, or no members) it is the tile
+    rect. A coarser cell's rect is the box of its non-empty children's
+    rects, so every rect contains every member under it and the
+    bounds stay valid at each chain level."""
     import numpy as np
-
-    order = np.argsort(cells)
-    cells, ns = cells[order], ns[order]
 
     chain = [cap]
     while chain[0] - CASCADE_STEP >= KNN_MIN_LEVEL:
         chain.insert(0, chain[0] - CASCADE_STEP)
 
+    # rects are (cw, cs, ce, cn): boxes reduce by min, min, max, max
+    mm = (np.minimum, np.minimum, np.maximum, np.maximum)
+    rect = _cell_rect_np(cells, cap)
+    if members is not None:
+        st = members["start"]
+        box = [
+            f.reduceat(members[c], st)
+            for f, c in zip(mm, ("slon", "slat", "slon", "slat"))
+        ]
+        fit = (
+            np.isfinite(box).all(axis=0)
+            & (box[0] >= rect[0]) & (box[1] >= rect[1])
+            & (box[2] <= rect[2]) & (box[3] <= rect[3])
+        )
+        rect = tuple(np.where(fit, b, r) for b, r in zip(box, rect))
     levels: dict[int, tuple] = {cap: (cells, ns)}
+    rects: dict[int, tuple] = {cap: rect}
     for lv in reversed(chain[:-1]):
         fcells, fns = levels[lv + CASCADE_STEP]
         anc = _parent_np(fcells, CASCADE_STEP)
-        uniq, inv = np.unique(anc, return_inverse=True)
+        uniq, first, inv = np.unique(
+            anc, return_index=True, return_inverse=True
+        )
         agg = np.zeros(len(uniq), dtype=np.int64)
         np.add.at(agg, inv, fns)
         levels[lv] = (uniq, agg)
+        frects = rects[lv + CASCADE_STEP]
+        rects[lv] = tuple(r[first] for r in frects)
+        for f, out, r in zip(mm, rects[lv], frects):
+            f.at(out, inv, r)
 
     steps = []  # per chain step i: CSR from chain[i] parents → chain[i+1]
     for lc, lf in zip(chain[:-1], chain[1:]):
@@ -1088,18 +1134,21 @@ def _prep_from_arrays(cells, ns, cap: int) -> dict:
                 # per-cell trig for the fast bounds, aligned with
                 # child_cells (precomputed once here instead of ~40
                 # transcendentals per pair in the kernel)
-                "child_attrs": _cell_attrs_np(fcells[o], lf),
+                "child_attrs": _rect_attrs_np(*(r[o] for r in rects[lf])),
             }
         )
-    # entry-level attrs (steps carry the rest)
-    entry_attrs = _cell_attrs_np(levels[chain[0]][0], chain[0])
-    return {
+    prep = {
         "chain": chain,
         "cap": cap,
         "levels": levels,
+        "rects": rects,
         "steps": steps,
-        "entry_attrs": entry_attrs,
+        # entry-level attrs (steps carry the rest)
+        "entry_attrs": _rect_attrs_np(*rects[chain[0]]),
     }
+    if members is not None:
+        prep["members"] = members
+    return prep
 
 
 def _cascade_walk(prep: dict, lon, lat, kreq):
@@ -1550,15 +1599,21 @@ def knn_join(
       1. Scene centroids key to web-mercator cells at ``level``; a tiny
          per-cell stats dim (cell, scene count) is derived with one
          groupBy. Nonempty cells are bounded by corpus geometry
-         (≤ 4^level); the cell rects derive from the key alone.
+         (≤ 4^level). Each cell's prune rect is the bounding box of its
+         member centroids when the members are resident, else its tile
+         rect, which derives from the key alone; a coarser cell's rect
+         is the box of its children's (_prep_from_arrays).
       2. per (probe, cell) pair, a provable LOWER bound on the
-         distance from the probe to anywhere in the cell rect (wrapped
-         lon clamp; the candidate latitudes on a meridian edge are its
-         endpoints plus the stationary point atan(tan(lat)/cos(Δλ)) —
-         the min over those is the exact point-to-spherical-rect
-         distance) and an UPPER bound (the max over the same
-         candidates at the largest lon gap), both in haversine-argument
-         space (_bounds_fast_np).
+         distance from the probe to anywhere in the cell's prune rect
+         (wrapped lon clamp; the candidate latitudes on a meridian edge
+         are its endpoints plus the stationary point
+         atan(tan(lat)/cos(Δλ)) — the min over those is the exact
+         point-to-spherical-rect distance) and an UPPER bound (the max
+         over the same candidates at the largest lon gap), both in
+         haversine-argument space (_bounds_fast_np). Every member lies
+         in its cell's rect, so both bound every member's distance;
+         the member box is ~2 % of a level-8 tile on a clustered
+         Landsat-style corpus, so its bounds are much tighter.
       3. per probe, R* = the smallest upper bound whose running scene
          count reaches k (cells ordered by upper bound): ≥ k scenes
          provably lie within R*, so any cell whose lower bound exceeds
@@ -1586,7 +1641,7 @@ def knn_join(
     as a coarse-to-fine walk (one-level steps from KNN_MIN_LEVEL down;
     a single step when `level` ≤ KNN_MIN_LEVEL) INSIDE the probe
     kernel over bounded rollups of the stats dim (_cascade_walk) —
-    exact at every step (parent rects contain their children and
+    exact at every step (parent rects contain their children's and
     counts aggregate), and no |probes| × |cells| table ever reaches a
     shuffle (r6; the r5 DataFrame-stage chain shuffled ~60 GB at 1M
     probes). The walk descends to `level` itself when the fine stats

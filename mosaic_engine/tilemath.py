@@ -33,7 +33,6 @@ __all__ = [
     "tile_ul",
     "tile_bounds",
     "cover_ranges",
-    "parent_tile",
     "truncate_lonlat",
 ]
 
@@ -181,9 +180,3 @@ def cover_ranges(west, south, east, north, zoom: int):
     x1, y1 = lonlat_to_tile(e - LL_EPSILON, s + LL_EPSILON, zoom)
     return x0, x1, y0, y1
 
-
-def parent_tile(xs, ys, zoom: int, levels: int = 1):
-    """Parent tile `levels` up the quadtree."""
-    xs = np.asarray(xs, dtype=np.int64)
-    ys = np.asarray(ys, dtype=np.int64)
-    return xs >> levels, ys >> levels, zoom - levels

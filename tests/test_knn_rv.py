@@ -51,11 +51,6 @@ def test_cells_roundtrip_and_parent():
         packed = cells.pack_cell(xs, ys, level)
         rx, ry, rl = cells.unpack_cell(packed)
         assert (rx == xs).all() and (ry == ys).all() and (rl == level).all()
-        if level:
-            par = cells.cell_parent(packed)
-            px, py, pl = cells.unpack_cell(par)
-            assert (px == xs >> 1).all() and (py == ys >> 1).all()
-            assert (pl == level - 1).all()
 
 
 @pytest.mark.parametrize("mode", ["banded", "brute"])
@@ -252,7 +247,7 @@ def test_knn_past_cap_refinement_matches_brute(
             assert g[3] == pytest.approx(e[3], rel=1e-12)
 
 
-@pytest.mark.parametrize("level", [6, 9])
+@pytest.mark.parametrize("level", [6, 8, 9])
 def test_knn_scene_beyond_mercator_clamp_stays_exact(spark, level):
     """A scene centroid poleward of the mercator clamp (±85.05°) maps
     into the edge tile row but physically sits up to ~550 km OUTSIDE
@@ -261,8 +256,30 @@ def test_knn_scene_beyond_mercator_clamp_stays_exact(spark, level):
     the TRUE nearest scene's cell gets pruned and the distant polar
     scene is returned (code-review r2 finding): probe just south of the
     top row, polar decoy at 544 km, true neighbor at ~300 km in a cell
-    whose lower bound exceeds the broken R* of ~90 km."""
+    whose lower bound exceeds the broken R* of ~90 km.
+
+    The same holds past the antimeridian: a scene stored unwrapped
+    wholly east of 180° (min_lon < max_lon, centroid lon 183) must
+    key into the tile column that holds its wrapped centroid (-177),
+    not the clamped last column, or R* prunes it in favour of a scene
+    109 km away (level 8). The reference is oracle.haversine_m over
+    the raw centroids."""
     from pyspark.sql import Row
+
+    east = spark.createDataFrame(
+        [("east", 181.0, 185.0, 10.0, 11.0), ("near", -176.5, -175.5, 10.0, 11.0)],
+        "image_id string, min_lon double, max_lon double, "
+        "min_lat double, max_lat double",
+    )
+    probe = spark.createDataFrame([Row(query_id=0, lon=-177.0, lat=10.5, k=1)])
+    ref = min(
+        (oracle.haversine_m(-177.0, 10.5, (w + e) / 2, 10.5), iid)
+        for iid, w, e in (("east", 181.0, 185.0), ("near", -176.5, -175.5))
+    )
+    assert ref[1] == "east"  # the construction is adversarial
+    got = ops.knn_join(east, probe, level=level).collect()
+    assert [(r["rank"], r["image_id"]) for r in got] == [(1, "east")]
+    assert got[0]["dist_m"] == pytest.approx(ref[0], abs=1e-6)
 
     scenes = spark.createDataFrame(
         [
@@ -343,12 +360,13 @@ def test_knn_pick_level_heuristic_shape():
 
 def test_knn_rect_bounds_bracket_sampled_distances():
     """The cascade kernel's bounds (_bounds_fast_np over the per-cell
-    attributes of _cell_attrs_np) must bracket the haversine argument
-    a = sin²(d/2R) from the probe to ANY point of the cell rect — the
-    R* pruning rule is exact only under that invariant (a is monotone
-    in distance). Adversarial probe modes: uniform, near the cell's
-    antipodal meridian (Δλ_max = 180 interior case), inside the cell,
-    and near-polar."""
+    attributes of _cell_attrs_np / _rect_attrs_np) must bracket the
+    haversine argument a = sin²(d/2R) from the probe to ANY point of
+    the cell rect, and to every member of a member-box rect — the R*
+    pruning rule is exact only under that invariant (a is monotone in
+    distance). Adversarial probe modes: uniform, near the cell's
+    antipodal meridian (Δλ_max = 180 interior case), inside the cell
+    (on a member, for boxes), and near-polar."""
     rng = np.random.default_rng(1234)
     for trial in range(200):
         level = int(rng.integers(1, 14))
@@ -393,6 +411,63 @@ def test_knn_rect_bounds_bracket_sampled_distances():
         )
         assert a_lo[0] <= a.min() + 1e-15, (level, x, y, lon, lat)
         assert a_hi[0] >= a.max() - 1e-15, (level, x, y, lon, lat)
+
+    # member-box rects (_prep_from_arrays prunes resident cells against
+    # the box of their members, which lie ON its edges): 1..N points in
+    # a random tile — single points, zero-width boxes, boxes on the
+    # ±180 edges and in the polar rows — and the bounds from their box
+    # must bracket a at every member
+    for trial in range(300):
+        level = int(rng.integers(1, 14))
+        nmax = (1 << level) - 1
+        shape = trial % 5
+        x = int(rng.integers(0, nmax + 1))
+        y = int(rng.integers(0, nmax + 1))
+        if shape == 3:
+            x = int(rng.choice([0, nmax]))
+        if shape == 4:
+            y = int(rng.choice([0, nmax]))
+        cell = np.array([(x << 30) + y], dtype=np.int64)
+        cw, cs, ce, cn = (v[0] for v in ops._cell_rect_np(cell, level))
+        m = 1 if shape == 0 else int(rng.integers(2, 9))
+        mlon = rng.uniform(cw, ce, m)
+        mlat = rng.uniform(cs, cn, m)
+        if shape == 1:
+            mlon[:] = mlon[0]  # zero-width box
+        elif shape == 2:
+            mlat[:] = mlat[0]  # zero-height box
+        elif shape == 3:
+            mlon[0] = cw if x == 0 else ce  # on the ±180 edge
+        elif shape == 4:
+            mlat[0] = cn if y == 0 else cs  # at the pole
+        attrs = ops._rect_attrs_np(
+            *(np.array([v]) for v in (mlon.min(), mlat.min(), mlon.max(), mlat.max()))
+        )
+        for mode in range(4):
+            if mode == 0:
+                lon = float(rng.uniform(-180, 180))
+                lat = float(rng.uniform(-89.9, 89.9))
+            elif mode == 1:
+                lon = float((mlon.mean() + rng.uniform(-2, 2) + 360) % 360 - 180)
+                lat = float(rng.uniform(-89.9, 89.9))
+            elif mode == 2:
+                lon, lat = float(mlon[-1]), float(mlat[-1])  # on a member
+            else:
+                lon = float(rng.uniform(-180, 180))
+                lat = float(rng.choice([-89.95, 89.95]))
+            p = np.radians(lat)
+            a_lo, a_hi = ops._bounds_fast_np(
+                np.array([lon]), np.array([np.sin(p)]), np.array([np.cos(p)]),
+                np.array([np.tan(p)]), attrs,
+            )
+            p2 = np.radians(mlat)
+            a = (
+                np.sin((p2 - p) / 2.0) ** 2
+                + np.cos(p) * np.cos(p2) * np.sin(np.radians(mlon - lon) / 2.0) ** 2
+            )
+            ctx = (level, x, y, shape, mode, lon, lat)
+            assert a_lo[0] <= a.min() + 1e-15, ctx
+            assert a_hi[0] >= a.max() - 1e-15, ctx
 
 
 def test_knn_index_reuse_matches_brute(spark, scenes_df):
@@ -1048,3 +1123,53 @@ def test_knn_bruteforce_points_refuses_oversized_probe_table(spark, monkeypatch)
         ops.knn_bruteforce_points(*args)
     monkeypatch.setattr(ops, "KNN_PROBE_BROADCAST_LIMIT", 5)
     assert ops.knn_bruteforce_points(*args).count() == 5
+
+
+def test_knn_prep_member_box_rects(spark, monkeypatch):
+    """The resident prep prunes each cap cell against the bounding box
+    of its member centroids (_prep_from_arrays): a cell holding a NaN
+    or null centroid keeps exactly its tile rect, every other cell's
+    rect lies inside its tile rect and contains its members, and every
+    coarser cell's rect contains its children's rects. Without resident
+    members (the union path) the cap rects are the tile rects."""
+    level = 6
+    rows, _ = _tie_corpus(np.random.default_rng(5), string_ids=False)
+    scenes = spark.createDataFrame(
+        rows + [(10_000, 181.0, 185.0, 10.0, 11.0)],
+        "image_id long, min_lon double, max_lon double, "
+        "min_lat double, max_lat double",
+    )
+    prep = ops.knn_index(scenes, level=level).prep[0]
+    cells, ns = prep["levels"][level]
+    mem = prep["members"]
+    tile = ops._cell_rect_np(cells, level)
+    rect = prep["rects"][level]
+    n_box = n_tile = 0
+    for i, (lo, n) in enumerate(zip(mem["start"], ns)):
+        mlon, mlat = mem["slon"][lo:lo + n], mem["slat"][lo:lo + n]
+        got = [r[i] for r in rect]
+        if not (np.isfinite(mlon).all() and np.isfinite(mlat).all()):
+            assert got == [t[i] for t in tile], cells[i]
+            n_tile += 1
+            continue
+        w, s, e, nn = got
+        assert tile[0][i] <= w and tile[1][i] <= s, cells[i]
+        assert e <= tile[2][i] and nn <= tile[3][i], cells[i]
+        assert (w <= mlon).all() and (mlon <= e).all(), cells[i]
+        assert (s <= mlat).all() and (mlat <= nn).all(), cells[i]
+        n_box += (e - w) < (tile[2][i] - tile[0][i])
+    assert n_tile >= 1 and n_box >= 1
+    chain = prep["chain"]
+    for lc, lf in zip(chain[:-1], chain[1:]):
+        pc = prep["levels"][lc][0]
+        pos = np.searchsorted(pc, ops._parent_np(prep["levels"][lf][0], lf - lc))
+        (pw, ps, pe, pn), (cw, cs, ce, cn) = prep["rects"][lc], prep["rects"][lf]
+        assert (pw[pos] <= cw).all() and (ps[pos] <= cs).all(), lc
+        assert (ce <= pe[pos]).all() and (cn <= pn[pos]).all(), lc
+
+    monkeypatch.setattr(ops, "KNN_RESIDENT_ROWS", 0)
+    union = ops.knn_index(scenes, level=level).prep[0]
+    assert "members" not in union
+    cells_u = union["levels"][level][0]
+    for r, t in zip(union["rects"][level], ops._cell_rect_np(cells_u, level)):
+        assert np.array_equal(r, t)

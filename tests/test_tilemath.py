@@ -120,11 +120,6 @@ def test_cover_ranges_clamped_poles():
     assert got == exp
 
 
-def test_parent_tile():
-    xs, ys, z = tm.parent_tile([655], [1583], 12, 4)
-    assert (xs[0], ys[0], z) == (655 >> 4, 1583 >> 4, 8)
-
-
 def test_jvm_cell_quadkey_matches_tilemath(spark):
     """ops.cell_quadkey_sql (the JVM quadkey of a packed cell) and
     ops.tile_quadkey_col (the JVM quadkey of a tile) equal
